@@ -195,6 +195,58 @@ def test_embed_column_with_local_embedder(spark):
     assert len(out[0]["embedding"]) == 16
 
 
+def test_run_pipeline_embeds_each_changed_note_once(spark, fake_server, tmp_path):
+    # The reference sends each changed note to the embedding API once
+    # (vectrekker/main.py:180-185). run_pipeline's indexed count and merge
+    # actions each read the embedded delta, so it must be materialized
+    # once; and no run — the empty-delta short-circuit included — may leave
+    # a cached frame behind in the long-lived session.
+    import os
+
+    from vectrekker_spark.operators.delta import read_partitioned_table
+    from vectrekker_spark.pipeline import PipelineConfig, run_pipeline
+
+    server, url = fake_server
+    content = tmp_path / "content"
+    content.mkdir()
+    notes = {content / f"n{i}.md": f"note {i} " * (i + 1) for i in range(4)}
+    for p, text in notes.items():
+        p.write_text(text)
+    cfg = PipelineConfig(
+        content_dir=str(content),
+        state_path=str(tmp_path / "state.parquet"),
+        index_path=str(tmp_path / "index.parquet"),
+        embedder_factory=lambda: HttpEmbedder(f"{url}/embeddings", dim=DIM),
+    )
+    jsc = spark.sparkContext._jsc
+
+    def run() -> tuple[int, list[str]]:
+        # compared as ids, not a count: an unrelated RDD that an earlier test
+        # dropped may be cleaned up mid-run
+        cached_before = set(jsc.getPersistentRDDs().keySet())
+        server.embed_requests.clear()
+        counts = run_pipeline(spark, cfg)
+        assert set(jsc.getPersistentRDDs().keySet()) <= cached_before
+        index = read_partitioned_table(spark, cfg.index_path).collect()
+        assert sorted(r["id"] for r in index) == sorted(str(p) for p in notes)
+        for r in index:
+            text = notes[content / os.path.basename(r["id"])]
+            assert r["embedding"] == [(len(text) + j) / 100.0 for j in range(DIM)]
+        texts = sorted(t for req in server.embed_requests for t in req)
+        return counts["changed"], texts
+
+    assert run() == (4, sorted(notes.values()))  # cold build
+
+    edited = content / "n2.md"
+    mtime = edited.stat().st_mtime
+    notes[edited] = "note two, edited"
+    edited.write_text(notes[edited])
+    os.utime(edited, (mtime + 10, mtime + 10))  # strictly later whole second
+    assert run() == (1, ["note two, edited"])
+
+    assert run() == (0, [])  # no-op rerun
+
+
 def test_foreach_partition_sink(spark, fake_server):
     state, url = fake_server
     sink = HttpVectorSink(url)

@@ -271,7 +271,12 @@ def merge_upsert_delta_grouped(
     Same at-least-once posture as the rest of the pipeline — state commits
     only after the index write, so a crash re-processes those docs on the
     next run; readers needing isolation snapshot the pre-merge version
-    (Delta time travel). Raises ImportError when delta-spark is absent."""
+    (Delta time travel). Raises ImportError when delta-spark is absent.
+
+    ``new_rows`` is read by both transactions (as the group set, then as
+    the appended rows), so an expensive lineage such as an embedding stage
+    runs once per read: pass a materialized (persisted and counted) frame,
+    as ``pipeline.run_pipeline`` does."""
     from delta.tables import DeltaTable  # noqa: PLC0415
 
     groups = new_rows.select(group_col).distinct()
@@ -327,6 +332,13 @@ def merge_upsert_partitioned(
     re-processed document must retire ALL its previous chunks, including ids
     the new version no longer produces (plain upsert would leave them
     stale). Buckets are hashed on the group so a group always co-locates.
+
+    ``updates`` is read by several actions: the touched-bucket collect and
+    the staging write, which reads it twice (as the anti-join's group set
+    and as the inserted rows); on a new table, the first write and the
+    bucket collect. An expensive lineage such as an embedding stage runs
+    once per read, so pass a materialized (persisted and counted) frame,
+    as ``pipeline.run_pipeline`` does.
 
     Returns the list of rewritten buckets.
     """

@@ -6,6 +6,9 @@
 Reference semantics preserved (`vectrekker/main.py`):
 - incremental: only files with mtime strictly greater than cached (or new)
   are re-embedded (`:143-147`)
+- each changed file is embedded once per run, one request per note in the
+  reference (`:180-185`): the embedded delta is persisted, because the
+  indexed count and the index merge each read it
 - empty-delta short-circuit (`:149-151`)
 - over-long docs don't crash the job (the reference asserts and dies,
   `:178`); they are routed to a quarantine path — or chunked (the
@@ -181,110 +184,120 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
             .repartition(spark.sparkContext.defaultParallelism)
         )
     changed = changed.cache()
-    n_changed = changed.count()
-    if n_changed == 0:  # reference's empty short-circuit (main.py:149-151)
-        return {"scanned": n_scanned, "changed": 0, "indexed": 0, "quarantined": 0}
+    new_rows = None
+    try:
+        n_changed = changed.count()
+        if n_changed == 0:  # reference's empty short-circuit (main.py:149-151)
+            return {"scanned": n_scanned, "changed": 0, "indexed": 0, "quarantined": 0}
 
-    # BPE-magnitude token gate (tiktoken → bpe-like fallback): the 8191 limit
-    # is a BPE limit; gating on whitespace tokens would let over-limit docs
-    # through to be embedded whole.
-    with_tokens = changed.withColumn("n_tokens", gate_token_count(F.col("text")))
-    ok = with_tokens.filter(F.col("n_tokens") < cfg.max_tokens)
-    too_long = with_tokens.filter(F.col("n_tokens") >= cfg.max_tokens)
+        # BPE-magnitude token gate (tiktoken → bpe-like fallback): the 8191 limit
+        # is a BPE limit; gating on whitespace tokens would let over-limit docs
+        # through to be embedded whole.
+        with_tokens = changed.withColumn("n_tokens", gate_token_count(F.col("text")))
+        ok = with_tokens.filter(F.col("n_tokens") < cfg.max_tokens)
+        too_long = with_tokens.filter(F.col("n_tokens") >= cfg.max_tokens)
 
-    n_quarantined = 0
-    ok_docs = ok.select("path", F.col("path").alias("doc_path"), "text")
-    quarantined_paths = None
-    if cfg.chunk_size > 0:
-        chunks = chunk_text(
-            too_long, text_col="text", id_col="path",
-            size=cfg.chunk_size, overlap=cfg.chunk_overlap,
-        ).select(
-            F.concat_ws("#", F.col("path"), F.col("chunk_id")).alias("path"),
-            F.col("path").alias("doc_path"),
-            F.col("chunk_text").alias("text"),
-        )
-        # Re-gate the chunks: chunk windows are CHARACTER-sized while the
-        # limit is in TOKENS, and dense text (symbols, CJK, emoji under real
-        # tiktoken) can pack >1 token per character — a chunk can itself
-        # exceed the embed limit. Over-limit chunks are quarantined; a doc
-        # whose chunks ALL fail has no surviving rows, so its old index rows
-        # are retired via delete_groups like the unchunked quarantine path.
-        gated = chunks.withColumn("n_tokens", gate_token_count(F.col("text")))
-        good = gated.filter(F.col("n_tokens") < cfg.max_tokens).drop("n_tokens")
-        bad = gated.filter(F.col("n_tokens") >= cfg.max_tokens)
-        n_quarantined = bad.count()
-        if n_quarantined:
-            if cfg.quarantine_path:
-                bad.select("path", "n_tokens").write.mode("append").parquet(
-                    cfg.quarantine_path
-                )
-            quarantined_paths = bad.select("doc_path").subtract(
-                good.select("doc_path")
+        n_quarantined = 0
+        ok_docs = ok.select("path", F.col("path").alias("doc_path"), "text")
+        quarantined_paths = None
+        if cfg.chunk_size > 0:
+            chunks = chunk_text(
+                too_long, text_col="text", id_col="path",
+                size=cfg.chunk_size, overlap=cfg.chunk_overlap,
+            ).select(
+                F.concat_ws("#", F.col("path"), F.col("chunk_id")).alias("path"),
+                F.col("path").alias("doc_path"),
+                F.col("chunk_text").alias("text"),
             )
-        ok = ok_docs.unionByName(good)
-    else:
-        ok = ok_docs
-        n_quarantined = too_long.count()
-        if n_quarantined:
-            # a doc that GREW past the limit must also retire its old rows
-            quarantined_paths = too_long.select(F.col("path").alias("doc_path"))
-            if cfg.quarantine_path:
-                too_long.select("path", "n_tokens").write.mode("append").parquet(
-                    cfg.quarantine_path
+            # Re-gate the chunks: chunk windows are CHARACTER-sized while the
+            # limit is in TOKENS, and dense text (symbols, CJK, emoji under real
+            # tiktoken) can pack >1 token per character — a chunk can itself
+            # exceed the embed limit. Over-limit chunks are quarantined; a doc
+            # whose chunks ALL fail has no surviving rows, so its old index rows
+            # are retired via delete_groups like the unchunked quarantine path.
+            gated = chunks.withColumn("n_tokens", gate_token_count(F.col("text")))
+            good = gated.filter(F.col("n_tokens") < cfg.max_tokens).drop("n_tokens")
+            bad = gated.filter(F.col("n_tokens") >= cfg.max_tokens)
+            n_quarantined = bad.count()
+            if n_quarantined:
+                if cfg.quarantine_path:
+                    bad.select("path", "n_tokens").write.mode("append").parquet(
+                        cfg.quarantine_path
+                    )
+                quarantined_paths = bad.select("doc_path").subtract(
+                    good.select("doc_path")
                 )
+            ok = ok_docs.unionByName(good)
+        else:
+            ok = ok_docs
+            n_quarantined = too_long.count()
+            if n_quarantined:
+                # a doc that GREW past the limit must also retire its old rows
+                quarantined_paths = too_long.select(F.col("path").alias("doc_path"))
+                if cfg.quarantine_path:
+                    too_long.select("path", "n_tokens").write.mode("append").parquet(
+                        cfg.quarantine_path
+                    )
 
-    if cfg.embedder_factory is not None:
-        from vectrekker_spark.embedder import embed_column
+        if cfg.embedder_factory is not None:
+            from vectrekker_spark.embedder import embed_column
 
-        new_rows = embed_column(ok, cfg.embedder_factory).select(
-            F.col("path").alias("id"),
-            F.col("doc_path"),
-            "embedding",
-            F.create_map().cast("map<string,string>").alias("metadata"),
+            new_rows = embed_column(ok, cfg.embedder_factory).select(
+                F.col("path").alias("id"),
+                F.col("doc_path"),
+                "embedding",
+                F.create_map().cast("map<string,string>").alias("metadata"),
+            )
+        else:
+            embed = F.pandas_udf(lambda s: hash_embed_batch(s), "array<double>")
+            new_rows = ok.select(
+                F.col("path").alias("id"),
+                F.col("doc_path"),
+                embed(F.col("text")).alias("embedding"),
+                F.create_map().cast("map<string,string>").alias("metadata"),
+            )
+        # Embed once per run: the count and the merge's collect and write(s)
+        # all read new_rows; each read of an uncached embed stage re-embeds.
+        new_rows = new_rows.persist()
+        n_indexed = new_rows.count()  # materializes the persisted rows
+        # REPLACE-GROUP merge keyed on the source document: a re-processed doc
+        # retires ALL its previous index rows (chunk ids the new version no
+        # longer produces would otherwise linger as stale hits); cost ∝ delta
+        # size, not index size. parquet → hash-bucket pruning + stage-then-swap
+        # commit; delta → delete-matched-groups MERGE + append (data skipping
+        # on doc_path, snapshot-isolated readers).
+        if cfg.index_format == "delta":
+            from vectrekker_spark.operators.delta import merge_upsert_delta_grouped
+
+            _ensure_delta_index(spark, cfg.index_path)
+            merge_upsert_delta_grouped(
+                spark, cfg.index_path, new_rows, group_col="doc_path",
+                delete_groups=quarantined_paths,
+            )
+        else:  # "parquet" — validated at run start
+            from vectrekker_spark.operators.delta import merge_upsert_partitioned
+
+            merge_upsert_partitioned(
+                spark, cfg.index_path, new_rows, key="id", group_col="doc_path",
+                delete_groups=quarantined_paths,
+            )
+
+        # State commit strictly AFTER the index write (at-least-once ordering).
+        new_state = changed.select(
+            "path",
+            F.col("mtime").alias("last_edit_time"),
+            (
+                F.lit(cfg.embed_version) if cfg.embed_version else F.lit(None)
+            ).cast("string").alias("embed_version"),
         )
-    else:
-        embed = F.pandas_udf(lambda s: hash_embed_batch(s), "array<double>")
-        new_rows = ok.select(
-            F.col("path").alias("id"),
-            F.col("doc_path"),
-            embed(F.col("text")).alias("embedding"),
-            F.create_map().cast("map<string,string>").alias("metadata"),
-        )
-    # REPLACE-GROUP merge keyed on the source document: a re-processed doc
-    # retires ALL its previous index rows (chunk ids the new version no
-    # longer produces would otherwise linger as stale hits); cost ∝ delta
-    # size, not index size. parquet → hash-bucket pruning + stage-then-swap
-    # commit; delta → delete-matched-groups MERGE + append (data skipping on
-    # doc_path, snapshot-isolated readers).
-    n_indexed = new_rows.count()
-    if cfg.index_format == "delta":
-        from vectrekker_spark.operators.delta import merge_upsert_delta_grouped
-
-        _ensure_delta_index(spark, cfg.index_path)
-        merge_upsert_delta_grouped(
-            spark, cfg.index_path, new_rows, group_col="doc_path",
-            delete_groups=quarantined_paths,
-        )
-    else:  # "parquet" — validated at run start
-        from vectrekker_spark.operators.delta import merge_upsert_partitioned
-
-        merge_upsert_partitioned(
-            spark, cfg.index_path, new_rows, key="id", group_col="doc_path",
-            delete_groups=quarantined_paths,
-        )
-
-    # State commit strictly AFTER the index write (at-least-once ordering).
-    new_state = changed.select(
-        "path",
-        F.col("mtime").alias("last_edit_time"),
-        (
-            F.lit(cfg.embed_version) if cfg.embed_version else F.lit(None)
-        ).cast("string").alias("embed_version"),
-    )
-    merged_state = merge_upsert(state, new_state, key="path")
-    _atomic_replace(merged_state, cfg.state_path)
-    changed.unpersist()
+        merged_state = merge_upsert(state, new_state, key="path")
+        _atomic_replace(merged_state, cfg.state_path)
+    finally:
+        # also on the empty-delta return and on failure: no run may pin a
+        # cached frame in a long-lived session (hourly cron, notebook)
+        if new_rows is not None:
+            new_rows.unpersist()
+        changed.unpersist()
 
     return {
         "scanned": n_scanned,

@@ -63,12 +63,15 @@ def get_spark(
         # set/clear (3-4 py4j round trips) plus a Python stack walk, purely
         # to enrich error messages with the user-code call site. Profiled
         # at ~1,800 extra py4j round trips for one registered-query
-        # construction (d24: 0.41 s → 0.18 s build with this off); across
+        # construction (d24: 0.41 s → 0.15 s build with this off); across
         # the 50-query bench, construction was ~7 s of the ~21 s total.
         # Scale-independent driver-CPU cost — a real cluster's driver pays
         # the same tax. Error BEHAVIOR is unchanged (same exceptions, same
         # classes); only the optional call-site annotation is dropped.
-        # Static conf: must be set at session build.
+        # Not a static conf, but PySpark reads it once per PROCESS and caches
+        # it: the session active at the first DataFrame API call decides. If
+        # that is another session (e.g. a plain getOrCreate() one, default true),
+        # this setting has no effect for the rest of the process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # quieter logs for test runs
         .config("spark.ui.enabled", "false")
