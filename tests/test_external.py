@@ -247,6 +247,60 @@ def test_run_pipeline_embeds_each_changed_note_once(spark, fake_server, tmp_path
     assert run() == (0, [])  # no-op rerun
 
 
+# Spark jobs one incremental run may take to re-index 1 note of 100; the
+# pipeline takes 15. A listing of every index bucket dir, a footer read for
+# the state's schema, a separate count of the over-long docs or a count job
+# probing the state merge's strategy would each push it past the budget.
+REINDEX_JOB_BUDGET = 15
+
+
+def test_run_pipeline_incremental_job_budget(spark, fake_server, tmp_path):
+    # vectrekker's hourly cron touches only what changed
+    # (vectrekker/main.py:143-147): re-indexing one note must not pay for
+    # a listing of the whole index or for redundant plan-build jobs. 100
+    # notes fill ~52 of the 64 buckets — past Spark's 32-path threshold for
+    # a parallel (job-launching) listing of the whole table.
+    import os
+    import uuid
+
+    from vectrekker_spark.operators.delta import read_partitioned_table
+    from vectrekker_spark.pipeline import PipelineConfig, run_pipeline
+
+    server, url = fake_server
+    content = tmp_path / "content"
+    content.mkdir()
+    for i in range(100):
+        (content / f"n{i}.md").write_text(f"note {i}")
+    cfg = PipelineConfig(
+        content_dir=str(content),
+        state_path=str(tmp_path / "state.parquet"),
+        index_path=str(tmp_path / "index.parquet"),
+        embedder_factory=lambda: HttpEmbedder(f"{url}/embeddings", dim=DIM),
+    )
+    assert run_pipeline(spark, cfg)["indexed"] == 100  # cold build
+
+    edited = content / "n7.md"
+    mtime = edited.stat().st_mtime
+    edited.write_text("note seven, edited")
+    os.utime(edited, (mtime + 10, mtime + 10))  # strictly later whole second
+    server.embed_requests.clear()
+    sc = spark.sparkContext
+    group = f"reindex-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "1-note re-index")
+    try:
+        counts = run_pipeline(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert counts["changed"] == counts["indexed"] == 1
+    assert server.embed_requests == [["note seven, edited"]]
+    assert len(jobs) <= REINDEX_JOB_BUDGET, len(jobs)
+    index = read_partitioned_table(spark, cfg.index_path)
+    assert index.count() == 100
+    row = index.filter(F.col("id") == str(edited)).first()
+    assert row["embedding"] == [(len("note seven, edited") + j) / 100.0 for j in range(DIM)]
+
+
 def test_foreach_partition_sink(spark, fake_server):
     state, url = fake_server
     sink = HttpVectorSink(url)

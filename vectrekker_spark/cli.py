@@ -55,12 +55,8 @@ def cmd_index(args: argparse.Namespace) -> int:
     spark = _spark()
     if args.dry_run:
         # list the delta and STOP — no side effects (unlike the reference)
-        from pyspark.sql import functions as F
-
         scan = scan_directory(spark, content_dir, pattern=regex)
         state = _read_or_empty(spark, args.state, STATE_SCHEMA)
-        if "embed_version" not in state.columns:
-            state = state.withColumn("embed_version", F.lit(None).cast("string"))
         changed = (
             detect_changes_versioned(scan, state, args.embed_version, key="path")
             .select("path")

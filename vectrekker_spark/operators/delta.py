@@ -318,7 +318,8 @@ def merge_upsert_partitioned(
     The table lives partitioned by `__bucket = pmod(xxhash64(key), n_buckets)`.
     A merge then:
       1. computes the buckets the updates touch (distinct over the delta),
-      2. reads ONLY those partitions of the base (partition pruning),
+      2. has Spark list and read ONLY those buckets' live directories, so
+         the read's cost does not grow with the table's bucket count,
       3. merges last-writer-wins within them,
       4. rewrites ONLY those partition directories (dynamic partition
          overwrite) — untouched buckets are never read or written.
@@ -385,7 +386,24 @@ def merge_upsert_partitioned(
     buckets = [int(r[0]) for r in bucket_src.distinct().collect()]
     if not buckets:
         return []
-    base_subset = spark.read.parquet(path).filter(F.col("__bucket").isin(buckets))
+    # Read only the touched buckets' live dirs, never the whole table: its
+    # listing is a parallel job once past 32 dirs. The schema is inferred
+    # from the dirs read (one small footer job), so a stored schema that
+    # differs from the updates still fails the union below; with no touched
+    # bucket live yet, any one live dir supplies the schema and no rows.
+    live = sorted(d for d in os.listdir(path) if d.startswith("__bucket="))
+    touched = {f"__bucket={b}" for b in buckets}
+    read = [os.path.join(path, d) for d in live if d in touched]
+    if read:
+        base_subset = spark.read.option("basePath", path).parquet(*read)
+    elif live:
+        base_subset = (
+            spark.read.option("basePath", path)
+            .parquet(os.path.join(path, live[0]))
+            .limit(0)
+        )
+    else:
+        base_subset = spark.createDataFrame([], upd.schema)
     if group_col:
         merged = base_subset.join(groups, group_col, "left_anti").unionByName(upd)
     else:

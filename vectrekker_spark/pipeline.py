@@ -9,6 +9,8 @@ Reference semantics preserved (`vectrekker/main.py`):
 - each changed file is embedded once per run, one request per note in the
   reference (`:180-185`): the embedded delta is persisted, because the
   indexed count and the index merge each read it
+- each changed doc is tokenized once: the token count is cached with the
+  delta, and one aggregate yields both the changed and over-long counts
 - empty-delta short-circuit (`:149-151`)
 - over-long docs don't crash the job (the reference asserts and dies,
   `:178`); they are routed to a quarantine path — or chunked (the
@@ -120,7 +122,9 @@ def _heal_swap(path: str) -> None:
 def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     _heal_swap(path)
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        # the known schema skips the footer-inference job and null-fills
+        # columns an older table lacks (a pre-versioning state's embed_version)
+        return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
 
 
@@ -169,8 +173,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
     n_scanned = scan.count()
 
     state = _read_or_empty(spark, cfg.state_path, STATE_SCHEMA)
-    if "embed_version" not in state.columns:  # pre-versioning state table
-        state = state.withColumn("embed_version", F.lit(None).cast("string"))
     changed = detect_changes_versioned(scan, state, cfg.embed_version, key="path")
     if cfg.max_changed > 0:
         # bounded slice in deterministic path order: a huge backlog (bulk
@@ -183,21 +185,23 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
             .limit(cfg.max_changed)
             .repartition(spark.sparkContext.defaultParallelism)
         )
-    changed = changed.cache()
+    # BPE-magnitude token gate (tiktoken → bpe-like fallback): the 8191 limit
+    # is a BPE limit; gating on whitespace tokens would let over-limit docs
+    # through to be embedded whole. Computed before the cache, so the gate
+    # runs once per changed doc.
+    changed = changed.withColumn("n_tokens", gate_token_count(F.col("text"))).cache()
     new_rows = None
     try:
-        n_changed = changed.count()
+        n_changed, n_too_long = changed.agg(
+            F.count(F.lit(1)),
+            F.count(F.when(F.col("n_tokens") >= cfg.max_tokens, True)),
+        ).first()
         if n_changed == 0:  # reference's empty short-circuit (main.py:149-151)
             return {"scanned": n_scanned, "changed": 0, "indexed": 0, "quarantined": 0}
 
-        # BPE-magnitude token gate (tiktoken → bpe-like fallback): the 8191 limit
-        # is a BPE limit; gating on whitespace tokens would let over-limit docs
-        # through to be embedded whole.
-        with_tokens = changed.withColumn("n_tokens", gate_token_count(F.col("text")))
-        ok = with_tokens.filter(F.col("n_tokens") < cfg.max_tokens)
-        too_long = with_tokens.filter(F.col("n_tokens") >= cfg.max_tokens)
+        ok = changed.filter(F.col("n_tokens") < cfg.max_tokens)
+        too_long = changed.filter(F.col("n_tokens") >= cfg.max_tokens)
 
-        n_quarantined = 0
         ok_docs = ok.select("path", F.col("path").alias("doc_path"), "text")
         quarantined_paths = None
         if cfg.chunk_size > 0:
@@ -230,7 +234,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
             ok = ok_docs.unionByName(good)
         else:
             ok = ok_docs
-            n_quarantined = too_long.count()
+            n_quarantined = n_too_long
             if n_quarantined:
                 # a doc that GREW past the limit must also retire its old rows
                 quarantined_paths = too_long.select(F.col("path").alias("doc_path"))
@@ -290,7 +294,14 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:
                 F.lit(cfg.embed_version) if cfg.embed_version else F.lit(None)
             ).cast("string").alias("embed_version"),
         )
-        merged_state = merge_upsert(state, new_state, key="path")
+        # Strategy passed explicitly: "auto" would spend a LIMIT-count job
+        # learning what n_changed already says (1_000_000 is merge_upsert's
+        # broadcast_rows), and a scan's paths are unique.
+        merged_state = merge_upsert(
+            state, new_state, key="path",
+            strategy="anti" if n_changed <= 1_000_000 else "window",
+            updates_unique=True,
+        )
         _atomic_replace(merged_state, cfg.state_path)
     finally:
         # also on the empty-delta return and on failure: no run may pin a
