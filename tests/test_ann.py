@@ -91,10 +91,17 @@ def test_ivf_assignment_covers_corpus(spark, em):
 
 
 @pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_ivf_multi_assignment_shape_and_recall_gain(spark, em):
+def test_ivf_multi_assignment_shape_and_recall_gain(spark, em, tmp_path):
     # assign_k=2 indexes every vector into exactly 2 distinct cells, and at a
     # comparable candidate budget beats single assignment (the bench setting:
     # 25 cells / assign 2 / probe 8).
+    from vectrekker_spark.operators.ann import (
+        assign_centroids,
+        ivf_load,
+        ivf_save,
+        ivf_search_cells,
+    )
+
     exact = _exact(spark, em)
     centroids, assign2 = ivf_build(em, n_centroids=10, assign_k=2)
     n = em.count()
@@ -108,6 +115,31 @@ def test_ivf_multi_assignment_shape_and_recall_gain(spark, em):
     recall1 = _recall(approx1, exact)
     assert recall2 >= 0.8, f"multi-assign IVF recall@{K} = {recall2}"
     assert recall2 >= recall1, (recall2, recall1)
+
+    # the saved index over the same centroids: a query that probes both
+    # cells of a vector sees it twice, and the ranking window must keep one
+    path = str(tmp_path / "ivf2")
+    ivf_save(centroids, assign2, em, path, assign_k=2)
+    lc, cells = ivf_load(spark, path)
+    probed = {
+        (r["qid"], r["cid"])
+        for r in assign_centroids(
+            _queries(em), centroids, assign_k=4, id_col="qid", vec_col="qvec"
+        ).collect()
+    }
+    cells_of: dict[int, set[int]] = {}
+    for r in assign2.collect():
+        cells_of.setdefault(r["vec_id"], set()).add(r["cid"])
+    qids = {q_ for q_, _ in probed}
+    assert any(
+        all((q_, c) in probed for c in cs) for cs in cells_of.values() for q_ in qids
+    ), "no query probes both cells of any vector; the dedupe is not exercised"
+    got = ivf_search_cells(_queries(em), lc, cells, k=K, n_probe=4).collect()
+    for q_ in qids:
+        mine = [r for r in got if r["qid"] == q_]
+        assert len({r["vec_id"] for r in mine}) == len(mine) == K, q_
+        assert sorted(r["rank"] for r in mine) == list(range(1, K + 1)), q_
+    assert sorted(map(tuple, got)) == sorted(map(tuple, approx))
 
 
 def test_assign_centroids_ties_and_guard(spark):
@@ -135,6 +167,34 @@ def test_assign_centroids_ties_and_guard(spark):
     # centroid-side guard trips instead of collecting an unbounded side
     with pytest.raises(ValueError, match="max_centroids"):
         assign_centroids(corpus, cents, max_centroids=2)
+
+
+def test_ivf_search_cells_plan_is_jvm_single_exchange(spark, tmp_path):
+    # Probe, cell join, dedupe and ranking all run in the JVM, and the
+    # multi-assignment dedupe is folded into the ranking window: the only
+    # exchanges are keyed by qid alone, none by (qid, id).
+    from vectrekker_spark.operators.ann import ivf_load, ivf_save, ivf_search_cells
+
+    corpus = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id"), F.lit(0.5)).alias("embedding"),
+    )
+    centroids, assign = ivf_build(corpus, n_centroids=4, method="stride", assign_k=2)
+    path = str(tmp_path / "ivf")
+    ivf_save(centroids, assign, corpus, path, assign_k=2)
+    lc, cells = ivf_load(spark, path)
+    q = spark.createDataFrame([(0, [1.0, 0.0, 0.5])], "qid long, qvec array<double>")
+    res = ivf_search_cells(q, lc, cells, k=3, n_probe=2)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert not [n for n in ("InPandas", "Python", "InArrow") if n in plan], plan
+    keys = [
+        l.split("hashpartitioning(")[1].split(")")[0].split(", ")[:-1]
+        for l in plan.splitlines()
+        if "Exchange hashpartitioning(" in l
+    ]
+    assert keys and all(len(k_) == 1 and k_[0].startswith("qid#") for k_ in keys), plan
+    got = sorted((r["rank"], r["vec_id"]) for r in res.collect())
+    assert [r for r, _ in got] == [1, 2, 3] and len({v for _, v in got}) == 3
 
 
 def test_assign_centroids_byte_budget(spark):

@@ -56,6 +56,84 @@ def test_knn_join_self_match_first(spark, sf_dir):
     assert all(abs(r["score"] - 1.0) < 1e-9 for r in res)
 
 
+# a NULL embedding scores NULL under both metrics; the zero vector scores
+# NULL under cosine (0/0) and a real distance under l2
+_NULLISH = [
+    [1.0, 2.0, 0.0, 1.0], [0.0, 0.0, 0.0, 0.0], None, [3.0, -1.0, 2.0, 0.0],
+    [2.0, 2.0, 2.0, 2.0], None, [-1.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, 3.0],
+]
+_NULLISH_Q = {0: [1.0, 0.0, 2.0, 1.0], 1: [0.0, -1.0, 1.0, 2.0]}
+
+
+def _brute_topk(metric, k):
+    """numpy brute force: round-6 score, NULL scores after every real one,
+    ties by id ascending."""
+    import numpy as np
+
+    out = []
+    for qid, qv in _NULLISH_Q.items():
+        q = np.asarray(qv)
+        scored = []
+        for vid, v in enumerate(_NULLISH):
+            s = None
+            if v is not None:
+                v = np.asarray(v)
+                if metric == "l2":
+                    s = float(np.sqrt(((v - q) ** 2).sum()))
+                elif np.linalg.norm(v) > 0:
+                    s = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
+            scored.append((s is None, (s if metric == "l2" else -s) if s is not None else 0.0, vid, s))
+        for rank, (_, _, vid, s) in enumerate(sorted(scored)[:k], 1):
+            out.append((qid, vid, None if s is None else round(s, 6), rank))
+    return sorted(out)
+
+
+def test_knn_join_ranks_null_scores_last(spark):
+    # 2 rows per partition, so a NULL score survives every partition's
+    # local top-k and reaches the final ranking
+    corpus = spark.createDataFrame(
+        list(enumerate(_NULLISH)), "vec_id long, embedding array<double>"
+    ).repartition(4)
+    q = spark.createDataFrame(list(_NULLISH_Q.items()), "qid long, qvec array<double>")
+    for metric in ("cosine", "l2"):
+        for k in (3, 6, len(_NULLISH)):
+            got = sorted(
+                (r["qid"], r["vec_id"], r["score"], r["rank"])
+                for r in knn_join(q, corpus, k=k, metric=metric).collect()
+            )
+            want = _brute_topk(metric, k)
+            assert [g[:2] + g[3:] for g in got] == [w[:2] + w[3:] for w in want], (metric, k)
+            for g, w in zip(got, want):
+                assert (g[2] is None) == (w[2] is None), (metric, k, g, w)
+                assert g[2] is None or abs(g[2] - w[2]) <= 1e-6, (metric, k, g, w)
+    # the single-query operator shares the order (its dim probe reads row 0)
+    unsplit = spark.createDataFrame(list(enumerate(_NULLISH)), "vec_id long, embedding array<double>")
+    top = topk_nn(unsplit, _NULLISH_Q[0], k=len(_NULLISH), metric="l2").collect()
+    want = sorted((w[3], w[1]) for w in _brute_topk("l2", len(_NULLISH)) if w[0] == 0)
+    assert [r["vec_id"] for r in top] == [vid for _, vid in want]
+
+
+_PYTHON_NODE = ("InPandas", "Python", "InArrow")
+
+
+def test_knn_join_plan_is_jvm_two_phase_topk(spark):
+    # The top-k runs in the JVM: no Python node anywhere, and every map task
+    # keeps its per-query top-k BEFORE the shuffle (WindowGroupLimit in
+    # Partial mode below the Exchange), so P·N·k rows cross it, not N·M.
+    corpus = spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    ).repartition(4)
+    q = spark.createDataFrame([("q", [1.0, 0.5])], "qid string, qvec array<double>")
+    plan = knn_join(q, corpus, k=5)._jdf.queryExecution().executedPlan().toString()
+    assert not [n for n in _PYTHON_NODE if n in plan], plan
+    lines = plan.splitlines()
+    partial = [i for i, l in enumerate(lines) if "WindowGroupLimit" in l and "Partial" in l]
+    exchange = [i for i, l in enumerate(lines) if "Exchange" in l]
+    assert partial and exchange, plan
+    assert max(partial) > min(exchange), plan  # deeper = below the exchange
+
+
 def test_similarity_join_ordering_and_threshold(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [0.0, 1.0])],

@@ -20,6 +20,32 @@ from pyspark.sql import functions as F
 from vectrekker_spark.functions.vector import l2_normalize
 from vectrekker_spark.operators.knn import knn_join
 
+_MAX_CENTROIDS = 200_000
+_MAX_CENTROID_BYTES = 512 * 1024 * 1024
+
+
+def _centroid_cap(
+    dim: int,
+    max_centroids: int = _MAX_CENTROIDS,
+    max_centroid_bytes: int = _MAX_CENTROID_BYTES,
+    n: int = 0,
+) -> int:
+    """Row allowance ``min(max_centroids, max_centroid_bytes // (dim × 8))``
+    for a collected or broadcast centroid table (assign_centroids,
+    ivf_search_cells); raises when ``n`` centroids exceed it."""
+    by_bytes = max_centroid_bytes // (max(dim, 1) * 8)
+    cap = min(max_centroids, max(1, by_bytes))
+    if n > cap:
+        raise ValueError(
+            f"assign_centroids: more than {cap} centroids at dim={dim} "
+            f"(caps: max_centroids={max_centroids}, max_centroid_bytes="
+            f"{max_centroid_bytes} ≈ {by_bytes} "
+            "rows of float64); that is no longer a broadcastable coarse "
+            "quantizer — reduce n_centroids (√N rule) or raise the caps "
+            "deliberately."
+        )
+    return cap
+
 
 def assign_centroids(
     corpus: DataFrame,
@@ -27,8 +53,8 @@ def assign_centroids(
     assign_k: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_centroids: int = 200_000,
-    max_centroid_bytes: int = 512 * 1024 * 1024,
+    max_centroids: int = _MAX_CENTROIDS,
+    max_centroid_bytes: int = _MAX_CENTROID_BYTES,
     carry_vec: bool = False,
 ) -> DataFrame:
     """(id, cid) for every corpus vector: its ``assign_k`` nearest centroids
@@ -68,7 +94,7 @@ def assign_centroids(
     if not probe:
         return corpus.sparkSession.createDataFrame([], out_schema)
     dim = len(probe[0][1])
-    cap = min(max_centroids, max(1, max_centroid_bytes // (max(dim, 1) * 8)))
+    cap = _centroid_cap(dim, max_centroids, max_centroid_bytes)
     # the probe above skips NULL cvec rows — the collect must too, or one
     # null row in a user-persisted centroids table crashes np.asarray below
     rows = (
@@ -77,15 +103,7 @@ def assign_centroids(
         .limit(cap + 1)
         .collect()
     )
-    if len(rows) > cap:
-        raise ValueError(
-            f"assign_centroids: more than {cap} centroids at dim={dim} "
-            f"(caps: max_centroids={max_centroids}, max_centroid_bytes="
-            f"{max_centroid_bytes} ≈ {max_centroid_bytes // (max(dim, 1) * 8)} "
-            "rows of float64); that is no longer a broadcastable coarse "
-            "quantizer — reduce n_centroids (√N rule) or raise the caps "
-            "deliberately."
-        )
+    _centroid_cap(dim, max_centroids, max_centroid_bytes, n=len(rows))
     return assign_from_rows(
         corpus, rows, assign_k=assign_k,
         id_col=id_col, vec_col=vec_col, carry_vec=carry_vec,
@@ -366,11 +384,15 @@ def _lloyd_fit(X, k: int, max_iter: int = 20, tol: float = 1e-4, seed: int = 42)
     return C
 
 
-def _topk_by_score(cands: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+def _topk_by_score(
+    cands: DataFrame, k: int, id_col: str, vec_col: str, dedupe: bool = False
+) -> DataFrame:
     """Shared final stage of every candidate-set search here: round-6 cosine
     against qvec, rank per query with the (score desc, id asc) tie-break the
     d10 oracle depends on bit-for-bit, keep top-k. One definition so the
-    contract can't drift between the search paths."""
+    contract can't drift between the search paths. ``dedupe=True`` drops the
+    copies of a multi-assigned vector in the same window: they tie on (score,
+    id), so ``dense_rank`` counts them once and ``lag(id)`` keeps the first."""
     from pyspark.sql import Window
 
     from vectrekker_spark.functions.vector import cosine_sim
@@ -381,10 +403,34 @@ def _topk_by_score(cands: DataFrame, k: int, id_col: str, vec_col: str) -> DataF
         F.round(cosine_sim(vec_col, "qvec"), 6).alias("score"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col(id_col).asc())
+    rank = F.dense_rank() if dedupe else F.row_number()
+    scored = scored.withColumn("rank", rank.over(w).cast("long"))
+    keep = F.col("rank") <= k
+    if dedupe:
+        scored = scored.withColumn("__prev", F.lag(id_col).over(w))
+        keep &= ~F.col("__prev").eqNullSafe(F.col(id_col))
+    return scored.filter(keep).select("qid", id_col, "score", "rank")
+
+
+def _probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
+    """(qid, qvec, cid): each query's ``n_probe`` nearest centroids by a
+    broadcast crossJoin and one per-qid ``row_number() <= n_probe`` window,
+    in the JVM, with assign_centroids' contract (round-6 cosine, cid asc on
+    ties, NULLs dropped, a zero vector scores 0). Carrying qvec spares the
+    caller a join back to the queries."""
+    from pyspark.sql import Window
+
+    from vectrekker_spark.functions.vector import cosine_sim
+
+    # a zero norm makes the cosine NULL; assign_centroids scores it 0
+    s = F.coalesce(F.round(cosine_sim("cvec", "qvec"), 6), F.lit(0.0))
+    w = Window.partitionBy("qid").orderBy(s.desc(), F.col("cid").asc())
+    cents = F.broadcast(centroids.select("cid", "cvec").where(F.col("cvec").isNotNull()))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", id_col, "score", "rank")
+        queries.select("qid", "qvec").where(F.col("qvec").isNotNull()).crossJoin(cents)
+        .select("qid", "qvec", "cid", F.row_number().over(w).alias("__rn"))
+        .where(F.col("__rn") <= n_probe)
+        .drop("__rn")
     )
 
 
@@ -416,27 +462,16 @@ def ivf_search(
     (same round-6/cid-asc tie contract as knn_join), so an arbitrarily
     large query batch streams against the broadcast centroids instead of
     being broadcast itself — the scale path for bulk kNN-join workloads.
-    probe_via="expr": probe selection as a pure-JVM broadcast crossJoin +
-    window over the centroids (identical tie contract) — no Python worker
-    round-trip and no driver collect, which is faster for SMALL interactive
-    query batches (a handful of vectors per call: the reference's `search`
-    CLI shape, vectrekker/main.py:162-167). The amplification is
-    |queries| × |centroids| rows through one per-qid window, so keep it to
-    small batches; bulk joins want "blas"."""
+    probe_via="expr": ``_probe_cells``, the pure-JVM broadcast crossJoin +
+    window ivf_search_cells probes with (identical tie contract) — no Python
+    worker round-trip and no driver collect, faster for SMALL interactive
+    query batches (the reference's `search` CLI shape,
+    vectrekker/main.py:162-167). A partial WindowGroupLimit keeps each map
+    partition's top n_probe per qid before the shuffle, but the
+    |queries| × |centroids| scoring grows with the batch: bulk joins want
+    "blas"."""
     if probe_via == "expr":
-        from pyspark.sql import Window
-
-        from vectrekker_spark.functions.vector import cosine_sim
-
-        w = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("cid"))
-        probes = (
-            queries.filter(F.col("qvec").isNotNull())  # parity with blas path
-            .crossJoin(F.broadcast(centroids))
-            .withColumn("s", F.round(cosine_sim("cvec", "qvec"), 6))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n_probe)
-            .select("qid", "cid")
-        )
+        probes = _probe_cells(queries, centroids, n_probe).select("qid", "cid")
     else:
         probes = assign_centroids(
             queries, centroids, assign_k=n_probe, id_col="qid", vec_col="qvec"
@@ -1324,40 +1359,37 @@ def ivf_search_cells(
     returned scores are exact — the FAISS-style IVF-SQ8 shape where the 4×
     probe-I/O cut pays for a k·factor-row join.
 
+    Runs in the JVM: ``_probe_cells`` picks the cells against the broadcast
+    centroids, checked first against ``_centroid_cap`` by one aggregate.
     When the distinct probed cids fit under ``prune_max_cells`` they are
     collected and applied as an ``isin`` filter, so the cell scan statically
-    prunes to exactly the probed partitions (asserted in test_plans). Past
-    the cap (a huge query batch probing most cells) the filter is skipped —
-    the per-query cid equi-join still restricts candidates, and AQE/dynamic
-    partition pruning govern the scan. Probe assignment is a narrow
-    broadcast-BLAS map, so computing it once more for the cid collect is a
-    second cheap pass over the query batch, never over the corpus."""
+    prunes to exactly the probed partitions (asserted in test_plans); past
+    the cap every cell is read and the cid equi-join restricts candidates.
+    The probes carry qvec, so the queries are not joined back, and the
+    ranking window drops the copies of a vector multi-assigned to two probed
+    cells (no dedupe exchange)."""
     data_cols = [c for c in cells.columns if c != "cid"]
     quantized = _cells_quantized(cells)
     id_col = id_col or data_cols[0]
-    probes = assign_centroids(
-        queries, centroids, assign_k=n_probe, id_col="qid", vec_col="qvec"
-    )
+    n, dim = centroids.where(F.col("cvec").isNotNull()).select(
+        F.count(F.lit(1)), F.max(F.size("cvec"))
+    ).first()
+    _centroid_cap(dim or 0, n=n)
+    probes = _probe_cells(queries, centroids, n_probe)
     probed = [
         r[0]
         for r in probes.select("cid").distinct().limit(prune_max_cells + 1).collect()
     ]
     if len(probed) <= prune_max_cells:
         cells = cells.filter(F.col("cid").isin(probed))
-    # dropDuplicates: a vector multi-assigned to two probed cells is one
-    # candidate, not two (duplicate rows carry identical vectors)
-    cands = (
-        probes.join(cells, "cid")
-        .dropDuplicates(["qid", id_col])
-        .join(queries, "qid")
-    )
+    cands = probes.join(cells, "cid")  # (cid, qid, qvec, id, vector...)
     if not quantized:
-        return _topk_by_score(cands, k, id_col, vec_col or data_cols[1])
+        return _topk_by_score(cands, k, id_col, vec_col or data_cols[1], dedupe=True)
     from vectrekker_spark.operators.quantize import dequantize_int8
 
     deq = dequantize_int8(cands, qvec_col=data_cols[1], out_col="__deq")
     if corpus is None:
-        return _topk_by_score(deq, k, id_col, "__deq")
+        return _topk_by_score(deq, k, id_col, "__deq", dedupe=True)
     if vec_col is None:
         # quantized cells carry codes, not the original column name — take
         # the corpus's (unique) non-id array column instead of guessing
@@ -1370,9 +1402,9 @@ def ivf_search_cells(
                 f"{len(arrays)} candidate array columns: {arrays}"
             )
         vec_col = arrays[0]
-    coarse = _topk_by_score(deq, k * rerank_factor, id_col, "__deq").select(
-        "qid", id_col
-    )
+    coarse = _topk_by_score(
+        deq, k * rerank_factor, id_col, "__deq", dedupe=True
+    ).select("qid", id_col)
     return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
 
 
@@ -1398,11 +1430,10 @@ def ivf_recall_estimate(
     Cost is bounded and corpus-shaped, not quadratic: the sampled queries
     are a broadcast-crossJoin side, so the SCORING is one streaming pass
     over the cells table against ≤``sample`` queries — the same shape as
-    any exact-knn batch. The top-k selection behind it is NOT free,
-    though: ``_topk_by_score``'s per-qid window shuffles all
-    sample × n_vectors scored rows through one exchange before ranking,
-    so on a huge index run this canary deliberately (maintenance cadence,
-    smaller ``sample``), not casually per query. A quantized index is measured
+    any exact-knn batch (a partial WindowGroupLimit ships only each
+    partition's per-qid top-k to the ranking window). On a huge index
+    that pass is still sample × n_vectors scores, so run this canary
+    deliberately (maintenance cadence, smaller ``sample``). A quantized index is measured
     in its own dequantized space (index-vs-index, the drift signal we
     want), so no full-precision corpus is needed.
 

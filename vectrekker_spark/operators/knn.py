@@ -10,11 +10,12 @@ Scale design (SURVEY.md §4.2 "kNN: avoid naive crossJoin blowup"):
   the corpus, ever. Survives 100 TB.
 
 * ``knn_join`` (N queries × M corpus): broadcast the query side (queries are
-  the small side by construction), score map-side, then a **two-phase top-k**:
-  local per-partition top-k via ``mapInPandas`` (heap over Arrow batches, no
-  shuffle) followed by a global window over only P·N·k survivor rows. The
-  naive alternative (window straight over N×M scored rows) shuffles the whole
-  cross product — that is the plan we explicitly avoid.
+  the small side by construction), score map-side, then a **two-phase top-k**
+  from one ``row_number() <= k`` window, all in the JVM: Spark plans a
+  Partial WindowGroupLimit that keeps each map partition's per-query top-k
+  before the exchange, and a Final one over the P·N·k survivors. Above
+  ``spark.sql.optimizer.windowGroupLimitThreshold`` (k > 1000) the partial
+  limit is not planned and the whole cross product is shuffled.
 """
 
 from __future__ import annotations
@@ -49,6 +50,13 @@ def _score(metric: str, a, b):
     return _METRICS[metric](a, b)
 
 
+def _best_first(metric: str, id_col: str) -> list:
+    """Ranking order: best score first (smallest l2 distance), a NULL score
+    after every real one, ties by id ascending."""
+    s = F.col("score")
+    return [s.asc_nulls_last() if metric == "l2" else s.desc_nulls_last(), F.col(id_col).asc()]
+
+
 def topk_nn(
     corpus: DataFrame,
     query_vec: Sequence[float],
@@ -69,28 +77,11 @@ def topk_nn(
             f"query vector dim {len(query_vec)} != corpus dim {probe[0]['d']}"
         )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    ascending = metric == "l2"  # distance: smaller is better
     scored = corpus.select(
         F.col(id_col),
         F.round(_score(metric, F.col(vec_col), q), 6).alias("score"),
     )
-    order = [F.col("score").asc() if ascending else F.col("score").desc(), F.col(id_col).asc()]
-    return scored.orderBy(*order).limit(k)
-
-
-def _local_topk_gen(k: int, ascending: bool):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            both = pdf if best is None else pd.concat([best, pdf])
-            both = both.sort_values(
-                ["qid", "score", "vec_id"], ascending=[True, ascending, True]
-            )
-            best = both.groupby("qid", sort=False).head(k)
-        if best is not None:
-            yield best
-
-    return gen
+    return scored.orderBy(*_best_first(metric, id_col)).limit(k)
 
 
 def knn_join(
@@ -106,56 +97,25 @@ def knn_join(
     """Batch kNN join: for every query row, the k nearest corpus rows.
 
     Returns (qid, vec_id, score, rank). Deterministic: ties broken by corpus
-    id ascending. For cosine, per-side norms are computed ONCE before the
-    join (O(N+M) instead of O(N·M) norm work); the final
-    dot/(‖a‖·‖b‖) matches the naive per-pair form bit-exactly because the
-    operand order is identical.
+    id ascending, and a NULL score (NULL or zero-norm vector) ranks after
+    every real one in both directions. For cosine, per-side norms are
+    computed ONCE before the join (O(N+M) instead of O(N·M) norm work); the
+    final dot/(‖a‖·‖b‖) matches the naive per-pair form bit-exactly because
+    the operand order is identical. Ranking is one window (no pandas heap);
+    its per-partition partial top-k is lost for k > 1000 (module docstring).
     """
-    ascending = metric == "l2"
+    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
+    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec"))
     if metric == "cosine":
-        c = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("emb"),
-            norm(vec_col).alias("__cn"),
-        )
-        q = F.broadcast(
-            queries.select(
-                F.col(qid_col).alias("qid"),
-                F.col(qvec_col).alias("qvec"),
-                norm(qvec_col).alias("__qn"),
-            )
-        )
-        scored = c.join(q).select(
-            "qid",
-            "vec_id",
-            F.round(
-                dot(F.col("emb"), F.col("qvec")) / (F.col("__cn") * F.col("__qn")), 6
-            ).alias("score"),
-        )
+        c, q = c.withColumn("__cn", norm("emb")), q.withColumn("__qn", norm("qvec"))
+        score = dot(F.col("emb"), F.col("qvec")) / (F.col("__cn") * F.col("__qn"))
     else:
-        q = F.broadcast(
-            queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec"))
-        )
-        scored = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb")).join(
-            q  # broadcast nested-loop over the small query side, map-side only
-        ).select(
-            "qid",
-            "vec_id",
-            F.round(_score(metric, F.col("emb"), F.col("qvec")), 6).alias("score"),
-        )
-    # Phase 1: per-partition top-k (no shuffle; Arrow-batched heap).
-    # id columns keep their source types (bigint vec ids, string paths, ...).
-    qid_t = dict(queries.dtypes)[qid_col]
-    id_t = dict(corpus.dtypes)[id_col]
-    local = scored.mapInPandas(
-        _local_topk_gen(k, ascending),
-        schema=f"qid {qid_t}, vec_id {id_t}, score double",
-    )
-    # Phase 2: global top-k over the P·N·k survivors only.
-    order = [F.col("score").asc() if ascending else F.col("score").desc(), F.col("vec_id").asc()]
-    w = Window.partitionBy("qid").orderBy(*order)
+        score = _score(metric, F.col("emb"), F.col("qvec"))
+    # broadcast nested-loop over the small query side, map-side only
+    scored = c.join(F.broadcast(q)).select("qid", "vec_id", F.round(score, 6).alias("score"))
+    w = Window.partitionBy("qid").orderBy(*_best_first(metric, "vec_id"))
     return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("qid", "vec_id", "score", "rank")
     )
