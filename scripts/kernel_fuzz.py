@@ -581,115 +581,6 @@ ORDER BY score {asc}, vec_id ASC LIMIT {params['topk']}
 """
 
 
-# --- image-hash families (r13: the imagedup band/popcount SQL mirror) ------
-
-
-def _valid_bands(rng, mh: int) -> int:
-    return rng.choice([b for b in (1, 2, 4, 8, 16, 32, 64) if b > mh])
-
-
-def _banded_sql(table: str, bands: int) -> str:
-    width, mask = 64 // bands, (1 << (64 // bands)) - 1
-    return " UNION ALL ".join(
-        f"SELECT media_id, dhash, {b} AS band_idx, "
-        f"(dhash >> {b * width}) & {mask} AS band_val FROM {table}"
-        for b in range(bands)
-    )
-
-
-class ImagePairs:
-    """dhash_dedup_pairs vs the arithmetic-shift band + popcount mirror —
-    negative BIGINT hashes included (bit 63), NULL hashes included."""
-
-    name = "image_pairs"
-    uses_hashes = True
-
-    @staticmethod
-    def draw(rng):
-        mh = rng.randint(0, 12)
-        return {"mh": mh, "bands": _valid_bands(rng, mh)}
-
-    @staticmethod
-    def spark(spark, sfd, params):
-        from vectrekker_spark.operators.imagedup import dhash_dedup_pairs
-
-        h = spark.read.parquet(f"{sfd}/hashes.parquet")
-        return dhash_dedup_pairs(
-            h, max_hamming=params["mh"], bands=params["bands"]
-        )
-
-    @staticmethod
-    def sql(params):
-        mh, bands = params["mh"], params["bands"]
-        return f"""
-WITH h AS (SELECT media_id, dhash FROM hashes WHERE dhash IS NOT NULL),
-banded AS ({_banded_sql('h', bands)}),
-cand AS (
-  SELECT DISTINCT l.media_id AS l_id, r.media_id AS r_id,
-         l.dhash AS lh, r.dhash AS rh
-  FROM banded l JOIN banded r
-    ON l.band_idx = r.band_idx AND l.band_val = r.band_val
-   AND l.media_id < r.media_id)
-SELECT l_id, r_id, bit_count(xor(lh, rh)) AS hamming
-FROM cand WHERE bit_count(xor(lh, rh)) <= {mh}
-"""
-
-
-class ImageAgainst:
-    """dhash_dup_against (the incremental batch-vs-index form, both
-    broadcast and shuffle variants) vs the same mirror split by id."""
-
-    name = "image_against"
-    uses_hashes = True
-
-    @staticmethod
-    def draw(rng):
-        mh = rng.randint(0, 12)
-        return {
-            "mh": mh,
-            "bands": _valid_bands(rng, mh),
-            "mod": rng.choice([3, 4, 7]),
-            "broadcast": rng.random() < 0.5,
-        }
-
-    @staticmethod
-    def spark(spark, sfd, params):
-        from pyspark.sql import functions as F
-
-        from vectrekker_spark.operators.imagedup import (
-            dhash_band_index,
-            dhash_dup_against,
-        )
-
-        h = spark.read.parquet(f"{sfd}/hashes.parquet")
-        m = params["mod"]
-        corpus = h.filter(F.col("media_id") % m != 0)
-        new = h.filter(F.col("media_id") % m == 0)
-        return dhash_dup_against(
-            new,
-            dhash_band_index(corpus, bands=params["bands"]),
-            max_hamming=params["mh"],
-            bands=params["bands"],
-            broadcast_new=params["broadcast"],
-        )
-
-    @staticmethod
-    def sql(params):
-        mh, bands, m = params["mh"], params["bands"], params["mod"]
-        return f"""
-WITH h AS (SELECT media_id, dhash FROM hashes WHERE dhash IS NOT NULL),
-banded AS ({_banded_sql('h', bands)}),
-cand AS (
-  SELECT DISTINCT n.media_id AS new_id, c.media_id AS dup_id,
-         n.dhash AS nh, c.dhash AS ch
-  FROM banded n JOIN banded c
-    ON n.band_idx = c.band_idx AND n.band_val = c.band_val
-  WHERE n.media_id % {m} = 0 AND c.media_id % {m} <> 0)
-SELECT new_id, dup_id, bit_count(xor(nh, ch)) AS hamming
-FROM cand WHERE bit_count(xor(nh, ch)) <= {mh}
-"""
-
-
 class Decontam:
     """The d19 shingle-overlap path with drawn shingle k / bench modulus,
     alternating the PLAIN join and the r13 DEDUP-FIRST composition against
@@ -1109,11 +1000,9 @@ def _write_langid_texts(dirpath: str, rng, n: int):
 TEXT_FAMILIES = [Chunk, WordShingles, CharShingles, Minhash, Simhash, Winnow, Bloom,
                  Split, Decontam, ParaDedup, SentenceSplit, DsirKey]
 VEC_FAMILIES = [VecMetrics, ThresholdJoin, TopK]
-HASH_FAMILIES = [ImagePairs, ImageAgainst]
 URL_FAMILIES = [UrlNorm]
 MODEL_FAMILIES = [LangIdPredict]
-FAMILIES = (TEXT_FAMILIES + VEC_FAMILIES + HASH_FAMILIES + URL_FAMILIES
-            + MODEL_FAMILIES)
+FAMILIES = TEXT_FAMILIES + VEC_FAMILIES + URL_FAMILIES + MODEL_FAMILIES
 
 
 # --------------------------------------------------------------------------
@@ -1133,34 +1022,6 @@ def _write_embeddings(dirpath: str, rng: random.Random, dim: int, n: int):
         "embedding": pa.array(vecs.tolist(), pa.list_(pa.float64())),
     })
     pq.write_table(tbl, os.path.join(dirpath, "embeddings.parquet"))
-
-
-def _write_hashes(dirpath: str, rng: random.Random, n: int):
-    """Synthetic 64-bit signed dhash fixture: uniform random hashes (bit
-    63 exercised), planted near-dup clusters (≤ 14 flipped bits so every
-    drawn max_hamming has true pairs), and NULL hashes (undecodable-image
-    rows — must never pair)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ids, hs = [], []
-    base = [rng.getrandbits(64) for _ in range(max(n // 3, 1))]
-    for i in range(n):
-        if rng.random() < 0.08:
-            h = None  # undecodable
-        elif rng.random() < 0.55:
-            h = rng.choice(base)
-            for _ in range(rng.randint(0, 14)):
-                h ^= 1 << rng.randrange(64)  # flip UNSIGNED, convert after
-        else:
-            h = rng.getrandbits(64)
-        ids.append(i)
-        hs.append(h - (1 << 64) if h is not None and h >= (1 << 63) else h)
-    pq.write_table(
-        pa.table({"media_id": pa.array(ids, pa.int64()),
-                  "dhash": pa.array(hs, pa.int64())}),
-        os.path.join(dirpath, "hashes.parquet"),
-    )
 
 
 def _write_urls(dirpath: str, rng: random.Random, n: int):
@@ -1231,10 +1092,9 @@ def run_trial(spark, con, fam, params, sfd):
 
 def minimize(spark, con, fam, params, sfd, status0):
     """Shrink the doc bound by bisection while the disagreement persists
-    (text families only — vector/hash fixtures are already tiny)."""
+    (text families only — vector/url/langid fixtures are already tiny)."""
     if (
         getattr(fam, "uses_embeddings", False)
-        or getattr(fam, "uses_hashes", False)
         or getattr(fam, "uses_urls", False)
         or getattr(fam, "uses_langid", False)
     ):
@@ -1279,15 +1139,6 @@ def fuzz(spark, con, sfd, n, seed, keep_going, out_dir):
             )
             trial_sfd = lid_dir
             params["dir"] = lid_dir
-            params["bound"] = None
-        elif getattr(fam, "uses_hashes", False):
-            hash_dir = tempfile.mkdtemp(prefix="kfuzz_hash_")
-            _write_hashes(hash_dir, rng, rng.randint(40, 200))
-            con.execute(
-                "CREATE OR REPLACE VIEW hashes AS SELECT * FROM "
-                f"read_parquet('{hash_dir}/hashes.parquet')"
-            )
-            trial_sfd = hash_dir
             params["bound"] = None
         elif getattr(fam, "uses_embeddings", False):
             key = (params["dim"],)

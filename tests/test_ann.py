@@ -1181,6 +1181,38 @@ def test_ivf_lloyd_layout_invariant_and_deterministic(spark, em):
     assert key(a) == key(b) == key(c)
 
 
+def test_ivf_lloyd_sample_is_byte_budgeted(spark, monkeypatch):
+    """The Lloyd sample obeys the module's driver-collect byte budget:
+    ``_centroid_cap(dim)`` rows with the lowest xxhash64(id), fitted in id
+    order — not every row of a corpus that fits a fixed row cap."""
+    import numpy as np
+
+    from vectrekker_spark.operators import ann
+
+    dim, n, budget_rows, k = 8, 120, 40, 4
+    g = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in g.standard_normal(dim)]) for i in range(n)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(ann, "_MAX_CENTROID_BYTES", budget_rows * dim * 8)
+
+    got = sorted(
+        (r.cid, list(r.cvec)) for r in ann.ivf_centroids(df, n_centroids=k).collect()
+    )
+    prefix = sorted(
+        r.vec_id
+        for r in df.orderBy(F.xxhash64("vec_id"), "vec_id").limit(budget_rows).collect()
+    )
+    want = [
+        (cid, [float(x) for x in c])
+        for cid, c in enumerate(ann._lloyd_fit([rows[i][1] for i in prefix], k))
+    ]
+    assert len(prefix) == budget_rows
+    assert got == want
+    # the budget is what shaped the fit: the whole corpus fits elsewhere
+    full = ann._lloyd_fit([v for _, v in rows], k)
+    assert [c for _, c in want] != [[float(x) for x in c] for c in full]
+
+
 def test_ivf_lloyd_clamps_k_to_sample_size(spark):
     from vectrekker_spark.operators.ann import ivf_centroids
 

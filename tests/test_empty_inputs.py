@@ -123,16 +123,3 @@ def test_kernels_survive_null_text(spark):
 
     vecs = hash_embed_batch(pd.Series(["some text", None, ""]))
     assert len(vecs[1]) == 64 and sum(vecs[1]) == 0.0  # null → zero vector
-
-
-def test_multimodal_on_empty(spark):
-    from vectrekker_spark.operators.multimodal import (
-        extract_features,
-        pcm_window_features,
-        resize_images,
-    )
-
-    media = spark.createDataFrame([], "media_id long, content binary")
-    assert extract_features(media).count() == 0
-    assert resize_images(media).count() == 0
-    assert pcm_window_features(media).count() == 0

@@ -180,8 +180,6 @@ def test_engine_span_dedup_sugar(spark, sf_dir):
 
 
 def test_engine_profiling_and_sketch_sugar(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     eng = Engine(spark, sf_dir)
     docs = eng.table("documents")
     prof = eng.profile(docs, columns=["doc_id", "text"])
@@ -190,12 +188,6 @@ def test_engine_profiling_and_sketch_sugar(spark, sf_dir):
     assert all(r["status"] == "ok" for r in diff.collect())
     top = eng.top_tokens(docs, k=3)
     assert len(top) == 3 and all(c > 0 for _, c in top)
-    media = docs.limit(5).select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("content"),
-    )
-    assert eng.image_meta(media).count() == 5
-    assert eng.audio_meta(media).count() == 5
 
 
 def test_engine_semdedup_and_quality_sugar(spark, sf_dir):
@@ -232,52 +224,6 @@ def test_engine_ngram_lm_sugar(spark, sf_dir):
     assert scored.where(F.col("perplexity").isNotNull()).count() == nonnull
     kept = eng.perplexity_filter(docs, lm, max_ppl=1e12)
     assert kept.count() == nonnull
-
-
-def test_engine_multimodal_sugar(spark, sf_dir):
-    """r10 facades: the whole multimodal surface reachable from Engine."""
-    import numpy as np
-
-    from vectrekker_spark.functions.imagecodec import encode_png
-    from vectrekker_spark.functions.jpegcodec import encode_jpeg
-    from vectrekker_spark.functions.videocodec import encode_y4m
-
-    eng = Engine(spark, sf_dir)
-    yy, xx = np.mgrid[0:16, 0:16]
-    img = np.stack([yy * 16, xx * 16, (yy + xx) * 8], axis=2).astype(np.uint8)
-    pcm = (np.sin(np.arange(4096) / 5) * 20000).astype("<i2").tobytes()
-    vid = encode_y4m(
-        [img, img[:, :, ::-1].copy()], fps=(5, 1), colorspace="444"
-    )
-    media = spark.createDataFrame(
-        [
-            (1, encode_png(img)),
-            (2, encode_jpeg(img, quality=90)),
-            (3, pcm),
-            (4, vid),
-        ],
-        "media_id long, content binary",
-    )
-    feats = {r.media_id: r for r in eng.media_features(media).collect()}
-    assert feats[1].decoded and feats[2].decoded and not feats[3].decoded
-
-    vmeta = {r.media_id: r for r in eng.video_meta(media).collect()}
-    assert vmeta[4].vid_frames == 2 and vmeta[1].vid_format is None
-
-    vf = eng.video_frame_features(media, every_n=1).collect()
-    assert {r.frame_no for r in vf if r.media_id == 4} == {0, 1}
-
-    audio = eng.audio_features(media.where("media_id = 3"), window=1024)
-    spect = eng.spectral_features(media.where("media_id = 3"), window=1024)
-    assert audio.count() == 4 and spect.count() == 4  # 4096 samples / 1024
-    assert all(r.sample_rate is None for r in spect.collect())  # raw PCM16
-
-    # r12 facades: perceptual image hash + near-dedup (png/jpeg of the
-    # SAME pixels hash within a few bits -> the jpeg copy is dropped)
-    hashes = {r.media_id: r.dhash for r in eng.image_dhash(media).collect()}
-    assert hashes[1] is not None and hashes[3] is None
-    kept = sorted(r.media_id for r in eng.image_near_dedup(media).collect())
-    assert kept == [1, 3, 4]
 
 
 def test_engine_crawl_and_pq_surface(spark, sf_dir, tmp_path):

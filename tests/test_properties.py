@@ -1,5 +1,5 @@
 """Hypothesis property tests over the pure-python reference implementations
-of engine kernels (chunking geometry, hashing embedder, byte features) —
+of engine kernels (chunking geometry, hashing embedder, token counts) —
 fast invariants that complement the Spark-vs-DuckDB oracle."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from vectrekker_spark.operators.multimodal import byte_histogram_features
 from vectrekker_spark.queries.vector import hash_embed_batch
 
 TEXT = st.text(
@@ -34,17 +33,6 @@ def test_hash_embed_deterministic_and_whitespace_insensitive(text):
     a = hash_embed_batch(pd.Series([text]))[0]
     b = hash_embed_batch(pd.Series([f"  {text}  "]))[0]  # trim-invariant
     assert a == b
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.binary(min_size=0, max_size=2000))
-def test_byte_histogram_is_distribution(payload):
-    h = byte_histogram_features(payload)
-    assert len(h) == 16 and all(x >= 0 for x in h)
-    if payload:
-        assert abs(sum(h) - 1.0) < 1e-9
-    else:
-        assert sum(h) == 0.0
 
 
 @settings(max_examples=30, deadline=None)
@@ -120,52 +108,3 @@ def test_regexp_count_tokens_equals_split_semantics(text):
     split_form = 0 if stripped == "" else len(re.split(r"\s+", stripped))
     count_form = len(re.findall(r"\S+", stripped))
     assert count_form == split_form
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(1, 12),
-    st.integers(1, 12),
-    st.sampled_from([1, 2, 3, 4]),
-    st.integers(0, 2**32 - 1),
-)
-def test_png_roundtrip_property(h, w, c, seed):
-    import numpy as np
-
-    from vectrekker_spark.functions.imagecodec import decode_png, encode_png
-
-    arr = np.random.RandomState(seed % 2**31).randint(
-        0, 256, size=(h, w, c), dtype=np.uint8
-    )
-    assert np.array_equal(decode_png(encode_png(arr)), arr)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.integers(1, 200), st.sampled_from([1, 2, 3]), st.integers(0, 2**32 - 1))
-def test_wav_roundtrip_property(frames, channels, seed):
-    import numpy as np
-
-    from test_audiocodec import make_wav
-    from vectrekker_spark.functions.audiocodec import parse_wav
-
-    s = np.random.RandomState(seed % 2**31).randint(
-        -32768, 32767, size=(frames, channels), dtype=np.int16
-    )
-    rate, ch, out = parse_wav(make_wav(s, rate=22050))
-    assert (rate, ch) == (22050, channels)
-    assert np.array_equal(out, s)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.binary(min_size=0, max_size=400))
-def test_arbitrary_bytes_never_crash_the_decoders(payload):
-    # classification contract: random bytes (including ones that happen to
-    # start with a magic prefix) either decode or return None — never raise
-    from vectrekker_spark.functions.audiocodec import wav_mono_f64
-    from vectrekker_spark.functions.imagecodec import decode_image_array
-
-    decode_image_array(payload)
-    decode_image_array(b"\x89PNG\r\n\x1a\n" + payload)
-    decode_image_array(b"P6" + payload)
-    wav_mono_f64(payload)
-    wav_mono_f64(b"RIFF" + payload[:4].ljust(4, b"\0") + b"WAVE" + payload)

@@ -1,6 +1,6 @@
 """Regression tests for code-review findings: l2 similarity-join semantics,
-stale derived rows on re-index, winnowing tiny-doc oracle parity, phantom
-frame-0, BLAS join edge cases."""
+stale derived rows on re-index, winnowing tiny-doc oracle parity, BLAS join
+edge cases."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from vectrekker_spark.operators.knn import similarity_join, similarity_join_blas
-from vectrekker_spark.operators.multimodal import frame_sample_plan
 from vectrekker_spark.pipeline import PipelineConfig, run_pipeline
 
 
@@ -55,11 +54,6 @@ def test_blas_join_empty_right_and_string_ids(spark):
         left_id="id", left_vec="embedding", right_id="id", right_vec="embedding",
     ).collect()
     assert {(r["l_id"], r["r_id"]) for r in out} == {("a", "b")}
-
-
-def test_frame_sample_no_phantom_frame(spark):
-    df = spark.createDataFrame([(1, b"short"), (2, None)], "media_id long, content binary")
-    assert frame_sample_plan(df, every_n=1, frame_size=1024).count() == 0
 
 
 def test_reindex_retires_stale_chunks(spark, tmp_path):

@@ -166,72 +166,6 @@ class Engine:
 
         return top_tokens(df, k=k, **kw)
 
-    def image_meta(self, df: DataFrame, **kw) -> DataFrame:
-        """Header-cost image inventory columns
-        (operators/multimodal.image_meta)."""
-        from vectrekker_spark.operators.multimodal import image_meta
-
-        return image_meta(df, **kw)
-
-    def audio_meta(self, df: DataFrame, **kw) -> DataFrame:
-        """Header-cost WAV inventory columns
-        (operators/multimodal.audio_meta)."""
-        from vectrekker_spark.operators.multimodal import audio_meta
-
-        return audio_meta(df, **kw)
-
-    def video_meta(self, df: DataFrame, **kw) -> DataFrame:
-        """Header-cost Y4M inventory columns — dims/fps/frames/duration
-        (operators/multimodal.video_meta)."""
-        from vectrekker_spark.operators.multimodal import video_meta
-
-        return video_meta(df, **kw)
-
-    def media_features(self, df: DataFrame, **kw) -> DataFrame:
-        """Real-decode image features over binary payloads, byte-level
-        fallback (operators/multimodal.extract_features)."""
-        from vectrekker_spark.operators.multimodal import extract_features
-
-        return extract_features(df, **kw)
-
-    def video_frame_features(self, df: DataFrame, **kw) -> DataFrame:
-        """Real Y4M frame sampling + per-frame luminance features
-        (operators/multimodal.video_frame_features)."""
-        from vectrekker_spark.operators.multimodal import video_frame_features
-
-        return video_frame_features(df, **kw)
-
-    def audio_features(self, df: DataFrame, **kw) -> DataFrame:
-        """Per-window RMS/ZCR over WAV or raw-PCM16 payloads
-        (operators/multimodal.pcm_window_features)."""
-        from vectrekker_spark.operators.multimodal import pcm_window_features
-
-        return pcm_window_features(df, **kw)
-
-    def spectral_features(self, df: DataFrame, **kw) -> DataFrame:
-        """Per-window spectral centroid/rolloff/flatness
-        (operators/multimodal.spectral_window_features)."""
-        from vectrekker_spark.operators.multimodal import (
-            spectral_window_features,
-        )
-
-        return spectral_window_features(df, **kw)
-
-    def image_dhash(self, df: DataFrame, **kw) -> DataFrame:
-        """64-bit perceptual difference hash per image, NULL for
-        undecodable payloads (operators/imagedup.image_dhash)."""
-        from vectrekker_spark.operators.imagedup import image_dhash
-
-        return image_dhash(df, **kw)
-
-    def image_near_dedup(self, df: DataFrame, **kw) -> DataFrame:
-        """Drop perceptual near-duplicate images via dHash + the
-        pigeonhole-banded Hamming join
-        (operators/imagedup.image_near_dedup)."""
-        from vectrekker_spark.operators.imagedup import image_near_dedup
-
-        return image_near_dedup(df, **kw)
-
     def benchmark_bloom(self, bench: DataFrame, **kw):
         """Compress a benchmark set's shingles into a broadcastable
         BloomFilter (operators/decontaminate.benchmark_bloom); persist it

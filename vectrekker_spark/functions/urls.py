@@ -333,7 +333,7 @@ def dedup_by_url(
     """URL-level exact dedup after normalization: smallest id per
     normalized URL survives (the engine-wide keeper policy). NULL urls
     are never 'duplicate NULL content' — they all survive (the
-    imagedup/exact-dedup NULL rule). One narrow string shuffle."""
+    exact-dedup NULL rule). One narrow string shuffle."""
     from pyspark.sql import Window
 
     norm = docs.withColumn("__nurl", normalized_url(url_col))

@@ -27,12 +27,16 @@ _MAX_CENTROID_BYTES = 512 * 1024 * 1024
 def _centroid_cap(
     dim: int,
     max_centroids: int = _MAX_CENTROIDS,
-    max_centroid_bytes: int = _MAX_CENTROID_BYTES,
+    max_centroid_bytes: int | None = None,
     n: int = 0,
 ) -> int:
     """Row allowance ``min(max_centroids, max_centroid_bytes // (dim × 8))``
-    for a collected or broadcast centroid table (assign_centroids,
-    ivf_search_cells); raises when ``n`` centroids exceed it."""
+    for a collected or broadcast table of dim-wide vectors (assign_centroids,
+    ivf_search_cells, the Lloyd sample of ivf_centroids); raises when ``n``
+    centroids exceed it. ``max_centroid_bytes`` defaults to the module's
+    ``_MAX_CENTROID_BYTES`` as it reads at call time."""
+    if max_centroid_bytes is None:
+        max_centroid_bytes = _MAX_CENTROID_BYTES
     by_bytes = max_centroid_bytes // (max(dim, 1) * 8)
     cap = min(max_centroids, max(1, by_bytes))
     if n > cap:
@@ -221,7 +225,6 @@ def ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     method: str = "lloyd",
-    sample_cap: int = 200_000,
 ) -> DataFrame:
     """Just the (cid, cvec) centroids of ivf_build, no assignment pass —
     for consumers that run their own assignment (operators/semdedup.py) and
@@ -231,11 +234,14 @@ def ivf_centroids(
     method="lloyd" (default, r15 optimization — guide §5: the coarse
     quantizer is √N-small BY CONSTRUCTION, so fitting it is driver-scale
     work; MLlib's distributed fit was ~25 scheduler-bound jobs for ~0.2 s
-    of numpy): ONE TakeOrdered job collects a deterministic sample — the
-    ``sample_cap`` scorable rows with the lowest ``xxhash64(id)``, i.e.
-    every row when the corpus fits under the cap — then seeded k-means++
-    init + Lloyd iterations run in numpy on the driver over the
-    id-sorted sample. The fit is a pure function of the sampled (id, vec)
+    of numpy): a LIMIT-1 probe reads the vector dimension, then ONE
+    TakeOrdered job collects a deterministic sample — the scorable rows
+    with the lowest ``xxhash64(id)``, as many as ``_centroid_cap(dim)``
+    allows (the same 512 MiB byte budget as every other driver collect in
+    this module: 43,690 rows at dim 1536, 200k at dim ≤ 335), i.e. every
+    row when the corpus fits under the cap — then seeded k-means++ init +
+    Lloyd iterations run in numpy on the driver over the id-sorted
+    sample. The fit is a pure function of the sampled (id, vec)
     SET: partition-layout-invariant (tested), unlike MLlib k-means||,
     whose per-partition init moves cell boundaries under a re-layout.
     ``n_centroids`` is clamped to the sample size (k ≤ n points).
@@ -254,20 +260,21 @@ def ivf_centroids(
     if method == "lloyd":
         import numpy as np
 
-        # one job: deterministic capped sample (lowest xxhash64(id) —
-        # TakeOrdered, never a full sort), Arrow transfer. Under the cap
-        # this is simply every scorable row.
-        sample = (
-            corpus.where(F.col(vec_col).isNotNull())
-            .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
-            .orderBy(F.xxhash64(F.col("__id")), F.col("__id"))
-            .limit(sample_cap)
-            .toPandas()
-        )
-        if sample.empty:
+        scorable = corpus.where(F.col(vec_col).isNotNull())
+        probe = scorable.select(vec_col).limit(1).collect()
+        if not probe:
             raise ValueError(
                 "ivf_centroids: no rows with a non-null vector to fit on"
             )
+        # one job: deterministic byte-capped sample (lowest xxhash64(id) —
+        # TakeOrdered, never a full sort), Arrow transfer. Under the cap
+        # this is simply every scorable row.
+        sample = (
+            scorable.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
+            .orderBy(F.xxhash64(F.col("__id")), F.col("__id"))
+            .limit(_centroid_cap(len(probe[0][0])))
+            .toPandas()
+        )
         # id-ascending order makes the fit independent of partition layout
         sample = sample.sort_values("__id", kind="stable")
         X = np.asarray(list(sample["__vec"]), dtype=np.float64)

@@ -318,8 +318,8 @@ def bpe_stats(
 
 
 def bpe_save(model: BPEModel, path: str) -> None:
-    """Atomic single-file JSON save (temp + os.replace — the bands_meta
-    idiom): a torn write can never read back as a truncated merge list."""
+    """Atomic single-file JSON save (temp + os.replace): a torn write can
+    never read back as a truncated merge list."""
     payload = {
         "version": model.version,
         "pattern": model.pattern,

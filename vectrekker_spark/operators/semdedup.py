@@ -165,7 +165,8 @@ def semantic_dedup_decisions(
     given fixed centroids, decisions are partition-layout-invariant
     (tested); the auto path (seeded driver-side Lloyd since r15) is also
     layout-invariant as long as the scorable corpus fits the fit's sample
-    cap (200k rows) — past the cap the sampled SET is still deterministic,
+    cap (ann._centroid_cap: 512 MiB of float64 vectors, at most 200k rows)
+    — past the cap the sampled SET is still deterministic,
     so decisions remain a pure function of the (id, vec) set either way.
     Single assignment only: each
     vector must land in exactly ONE cell or keep/drop votes would conflict

@@ -1,7 +1,7 @@
 """Text-analysis / dedup / chunking queries over the documents corpus
 (SURVEY.md §2.2 L1–L6 + north-star training-data ops: language-ID, quality
-scoring, fingerprinting, SimHash, MinHash, n-gram Jaccard, multimodal
-metadata plumbing).
+scoring, fingerprinting, SimHash, MinHash, n-gram Jaccard, binary-column
+fingerprint metadata).
 """
 
 from __future__ import annotations
@@ -334,9 +334,8 @@ def d12_bpe_tokens(spark: SparkSession, sf: str) -> DataFrame:
     # (its slot went to d25_sample_mixture): both rows were single-scan
     # per-doc projections over documents, so the fingerprint columns
     # (binary-column plumbing: octet_length over the encoded bytes, content
-    # md5, whitespace-normalized fingerprint — the multimodal metadata
-    # surface) ride the same scan as the token counts. Semantics retained
-    # column-for-column; the decode side lives in operators/multimodal.py.
+    # md5, whitespace-normalized fingerprint) ride the same scan as the
+    # token counts. Semantics retained column-for-column.
     # r11: former d16_map_fns merged here the same way (its slot went to
     # d27_bloom_decontam) — the map-function surface (create_map,
     # element_at lookups, map_keys/map_values) is another single-scan

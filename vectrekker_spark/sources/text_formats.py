@@ -147,9 +147,9 @@ def read_text_lines(
 # tasks are the honest granularity; at 100 TB the job is ~90k independent
 # tasks, each a bounded single-pass walk.
 #
-# Hostile-input discipline (the mp4 _iter_boxes rule): every length field
-# is bounds-checked against the remaining bytes, every walk is budgeted,
-# and malformed input CLASSIFIES (records-so-far + a status string) —
+# Hostile-input discipline: every length field is bounds-checked against
+# the remaining bytes, every walk is budgeted, and malformed input
+# CLASSIFIES (records-so-far + a status string) —
 # never raises, never loops, never yields a partial record. Fuzz-tested
 # under truncation at every offset and random byte flips.
 

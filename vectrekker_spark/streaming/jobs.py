@@ -489,144 +489,6 @@ def foreach_batch_near_dedup(
     )
 
 
-def foreach_batch_image_dedup(
-    stream: DataFrame,
-    corpus_path: str,
-    checkpoint: str,
-    max_hamming: int = 6,
-    bands: int = 8,
-    content_col: str = "content",
-    id_col: str = "media_id",
-):
-    """Streaming ingestion with PERCEPTUAL image dedup against all
-    history — ST7's image-side twin (operators/imagedup composed with
-    ST5): each micro-batch is (1) dHashed ONCE (one Arrow decode pass),
-    (2) near-deduped within itself (every verified pair's larger id
-    loses, the ST7 policy), (3) checked against the corpus via the
-    PERSISTED band index at ``{corpus_path}/bands`` — history is never
-    re-decoded or re-banded — and (4) the survivors are appended to
-    ``{corpus_path}/docs`` with their band rows appended to the index.
-
-    NULL-hash (undecodable) payloads always survive and carry no band
-    rows (the NULL-content rule), so a REDELIVERED undecodable row
-    re-appends; scorable redelivered rows meet their appended twin at
-    hamming 0 and drop. Reclaim id-duplicates with
-    ``compact_near_dedup_corpus`` — its docs-id-distinct +
-    bands-distinct rewrite is table-shape-generic and applies verbatim
-    to this corpus layout. Scale shape per batch: the batch's hash/band
-    tables are small, so both joins broadcast the batch side and stream
-    the corpus-sized band index; pixels never shuffle (only 8-byte
-    hashes move). Returns the started query.
-    """
-    import json
-    import os
-
-    from vectrekker_spark.operators.imagedup import (
-        _validate_banding,
-        dhash_band_index,
-        dhash_dedup_pairs,
-        dhash_dup_against,
-        image_dhash,
-    )
-
-    # fail at call time, not inside the first micro-batch's query thread
-    _validate_banding(max_hamming, bands)
-
-    docs_path = os.path.join(corpus_path, "docs")
-    bands_path = os.path.join(corpus_path, "bands")
-    meta_path = os.path.join(corpus_path, "bands_meta.json")
-
-    def _check_or_pin_bands() -> None:
-        # the band WIDTH is baked into every persisted band_val: an index
-        # built at bands=8 silently stops matching history if a restarted
-        # stream banded at 16 — pin the geometry in a meta file (written
-        # BEFORE the first bands append) and refuse mismatched restarts.
-        # The write goes through temp + os.replace so a crash mid-write
-        # can never leave a torn file that exists-but-unparses (which
-        # would wedge every later micro-batch in json.load); crash before
-        # the replace leaves nothing, and redelivery re-pins identically.
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                try:
-                    saved = json.load(f)["bands"]
-                except (json.JSONDecodeError, KeyError) as exc:
-                    raise ValueError(
-                        f"band geometry file {meta_path} is corrupt "
-                        f"({exc}); delete it to re-pin the CURRENT bands="
-                        f"{bands} (only safe if that matches the value "
-                        "the persisted index was built with)"
-                    ) from exc
-            if saved != bands:
-                raise ValueError(
-                    f"band index at {bands_path} was built with bands="
-                    f"{saved}; restarting with bands={bands} would stop "
-                    "matching history — pass the original value"
-                )
-        else:
-            os.makedirs(corpus_path, exist_ok=True)
-            tmp_path = meta_path + ".tmp"
-            with open(tmp_path, "w") as f:
-                json.dump({"bands": bands}, f)
-            os.replace(tmp_path, meta_path)
-
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        _check_or_pin_bands()
-        spark = batch_df.sparkSession
-        batch = batch_df.persist()
-        # hash the batch ONCE: the persisted hash table feeds the
-        # self-dedup, the history check, and the survivor index append
-        hashes = image_dhash(batch, content_col=content_col, id_col=id_col).persist()
-        try:
-            pairs = dhash_dedup_pairs(
-                hashes, max_hamming=max_hamming, bands=bands, id_col=id_col
-            )
-            losers = pairs.select(F.col("r_id").alias(id_col)).distinct()
-            fresh_ids = hashes.select(id_col, "dhash").join(
-                losers, id_col, "left_anti"
-            )
-            # _parquet_has_data, not os.path.exists: a crash during the
-            # FIRST bands append leaves only _temporary/ and the reader
-            # must treat it as absent, or redelivery wedges on schema
-            # inference forever (the quota-job lesson)
-            if _parquet_has_data(bands_path):
-                dup = dhash_dup_against(
-                    fresh_ids,
-                    spark.read.parquet(bands_path),
-                    max_hamming=max_hamming,
-                    bands=bands,
-                    id_col=id_col,
-                )
-                fresh_ids = fresh_ids.join(
-                    dup.select(F.col("new_id").alias(id_col)).distinct(),
-                    id_col,
-                    "left_anti",
-                )
-            fresh_ids = fresh_ids.persist()
-            try:
-                _refuse_if_compacting(corpus_path)
-                batch.join(
-                    fresh_ids.select(id_col), id_col, "left_semi"
-                ).write.mode("append").parquet(docs_path)
-                dhash_band_index(
-                    fresh_ids, bands=bands, id_col=id_col
-                ).write.mode("append").parquet(bands_path)
-            finally:
-                fresh_ids.unpersist()
-        finally:
-            hashes.unpersist()
-            batch.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def compact_near_dedup_corpus(
     spark: SparkSession, corpus_path: str, id_col: str = "doc_id"
 ) -> dict[str, int]:
