@@ -84,6 +84,20 @@ def test_lsh_recall_meets_declared_bar(spark, em):
     assert recall >= 0.8, f"LSH recall@{K} = {recall}"
 
 
+@pytest.mark.slow
+def test_full_probe_and_exact_scan_find_the_self_match(spark, em):
+    # probing every cell makes IVF exhaustive → it must find the self-match
+    # the exact scan ranks first
+    qvec = em.filter(F.col("vec_id") == 0).first()["embedding"]
+    assert topk_nn(em, qvec, k=5).first()["vec_id"] == 0
+    centroids, assign = ivf_build(em, n_centroids=4, assign_k=2)
+    q = em.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    top = ivf_search(q, em, centroids, assign, k=5, n_probe=4).collect()
+    assert top[0]["vec_id"] == 0 and top[0]["rank"] == 1
+
+
 def test_ivf_assignment_covers_corpus(spark, em):
     _, assign = ivf_build(em, n_centroids=10, method="stride")
     assert assign.count() == em.count()
@@ -393,51 +407,29 @@ def test_ivf_search_cells_infers_columns_from_schema(spark, tmp_path):
     assert res and res[0]["id"] == "doc0" and res[0]["rank"] == 1
 
 
-def _make_legacy_layout(path):
-    """Convert a freshly saved (versioned) index into the pre-versioning
-    on-disk layout: bare {path}/cells and {path}/centroids, no CURRENT
-    pointer, no versioned dirs."""
+def test_ivf_load_rejects_pre_versioning_layouts(spark, tmp_path):
+    """Every writer commits a three-token CURRENT-v* pointer; bare
+    cells/centroids dirs and a two-token pointer are older layouts that
+    ivf_load rejects instead of reading."""
     import os
-    import re
-    import shutil
 
-    from vectrekker_spark.operators.ann import cells_dirname
+    from vectrekker_spark.operators.ann import ivf_load
 
-    shutil.move(os.path.join(path, cells_dirname(path)), os.path.join(path, "cells"))
-    for d in os.listdir(path):
-        if re.fullmatch(r"centroids-v(\d+)", d):
-            shutil.move(os.path.join(path, d), os.path.join(path, "centroids"))
-    for d in os.listdir(path):
-        if d == "CURRENT" or re.fullmatch(r"CURRENT-v(\d+)", d):
-            os.remove(os.path.join(path, d))
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_ivf_load_heals_crashed_legacy_compact_swap(spark, em, tmp_path):
-    # Back-compat: a PRE-versioning index mid-crashed by the old two-rename
-    # compact still heals on load. Versioned indexes never enter this path.
-    import os
-    import shutil
-
-    from vectrekker_spark.operators.ann import ivf_load, ivf_save
-
-    centroids, assign = ivf_build(em, n_centroids=4, method="stride")
-    path = str(tmp_path / "ivf")
-    ivf_save(centroids, assign, em, path)
-    _make_legacy_layout(path)
-    n = em.count()
-
-    # crash window 1: cells renamed away, staging complete → promote staging
-    shutil.copytree(f"{path}/cells", f"{path}/.cells.compact")
-    shutil.move(f"{path}/cells", f"{path}/.cells.trash")
-    _, cells = ivf_load(spark, path)
-    assert cells.count() == n and os.path.exists(f"{path}/cells")
-    assert not os.path.exists(f"{path}/.cells.trash")  # cleanup finished too
-
-    # crash window 2: cells renamed away, no staging → roll back from trash
-    shutil.move(f"{path}/cells", f"{path}/.cells.trash")
-    _, cells2 = ivf_load(spark, path)
-    assert cells2.count() == n and os.path.exists(f"{path}/cells")
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "cid long, cvec array<double>"
+    )
+    cells = spark.createDataFrame(
+        [(0, 7, [1.0, 0.0])], "cid long, vec_id long, embedding array<double>"
+    )
+    bare, two = str(tmp_path / "bare"), str(tmp_path / "two")
+    for path, suffix in ((bare, ""), (two, "-v0")):
+        centroids.write.parquet(f"{path}/centroids{suffix}")
+        cells.write.partitionBy("cid").parquet(f"{path}/cells{suffix}")
+    with open(os.path.join(two, "CURRENT-v0"), "w") as f:
+        f.write("cells-v0 centroids-v0\n")
+    for path in (bare, two):
+        with pytest.raises(ValueError, match="rebuild the index with ivf_save"):
+            ivf_load(spark, path)
 
 
 @pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
@@ -474,28 +466,6 @@ def test_ivf_compact_keeps_old_version_readable(spark, em, tmp_path):
     # next rewrite prunes the grace copy (bounded retention)
     ivf_compact(spark, path)
     assert not os.path.exists(os.path.join(path, old_name))
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_ivf_compact_upgrades_legacy_layout(spark, em, tmp_path):
-    from vectrekker_spark.operators.ann import (
-        cells_dirname,
-        ivf_append,
-        ivf_compact,
-        ivf_load,
-        ivf_save,
-    )
-
-    n = em.count()
-    centroids, assign = ivf_build(em, n_centroids=4, method="stride")
-    path = str(tmp_path / "ivf")
-    ivf_save(centroids, assign, em, path)
-    _make_legacy_layout(path)
-    ivf_append(em.filter(F.col("vec_id") < 10), path)
-    assert ivf_compact(spark, path) == 10
-    assert cells_dirname(path).startswith("cells-v")  # upgraded
-    _, cells = ivf_load(spark, path)
-    assert cells.count() == n
 
 
 @pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
@@ -883,9 +853,7 @@ def test_index_lifecycle_is_rename_free(spark, em, tmp_path, monkeypatch):
     """The whole pointer lifecycle — save, load, search, append, delete,
     compact — must never rename or overwrite-in-place (os.replace/os.rename
     banned for the duration): the protocol that makes it safe on an object
-    store, where immutable PUT + LIST-highest is all you get. (The only
-    sanctioned rename lives in the LEGACY pre-versioning healing path,
-    which versioned indexes never enter.)"""
+    store, where immutable PUT + LIST-highest is all you get."""
     import os
 
     from pyspark.sql import functions as F
@@ -926,48 +894,6 @@ def test_index_lifecycle_is_rename_free(spark, em, tmp_path, monkeypatch):
     pointers = sorted(d for d in os.listdir(path) if d.startswith("CURRENT"))
     assert "CURRENT" not in pointers
     assert 1 <= len(pointers) <= 2, pointers
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_legacy_current_file_reads_and_upgrades(spark, em, tmp_path):
-    """An index whose pointer is the legacy single rewritten CURRENT file
-    stays readable, and its first rewrite upgrades it to the versioned
-    highest-wins protocol (removing the shadowed legacy file)."""
-    import os
-    import re
-
-    from pyspark.sql import functions as F
-
-    from vectrekker_spark.operators.ann import (
-        _pointer_tokens,
-        ivf_compact,
-        ivf_load,
-        ivf_save,
-    )
-
-    sub = em.filter(F.col("vec_id") < 50)
-    path = str(tmp_path / "legacyptr")
-    centroids, assign = ivf_build(sub, n_centroids=2, method="stride")
-    ivf_save(centroids, assign, sub, path)
-    tokens = _pointer_tokens(path)
-    # demote to the legacy layout: one rewritten CURRENT file, no versions
-    with open(os.path.join(path, "CURRENT"), "w") as f:
-        f.write(" ".join(tokens) + "\n")
-    for d in os.listdir(path):
-        if re.fullmatch(r"CURRENT-v(\d+)", d):
-            os.remove(os.path.join(path, d))
-
-    assert _pointer_tokens(path) == tokens  # legacy fallback read
-    _, cells = ivf_load(spark, path)
-    assert cells.count() == sub.count()
-
-    ivf_compact(spark, path)  # first rewrite upgrades the pointer
-    assert not os.path.exists(os.path.join(path, "CURRENT"))
-    assert any(
-        re.fullmatch(r"CURRENT-v(\d+)", d) for d in os.listdir(path)
-    )
-    _, cells = ivf_load(spark, path)
-    assert cells.count() == sub.count()
 
 
 @pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)

@@ -28,6 +28,16 @@ def test_load_table_memoizes_and_invalidates(spark, tmp_path):
     assert d3 is not d1
     assert sorted(r["v"] for r in d3.collect()) == ["b", "c"]
 
+
+def test_register_views_match_load_tables(spark, sf_dir):
+    # SQL over the registered views and the DataFrame catalog read the
+    # same table
+    from vectrekker_spark.catalog import load_tables, register_views
+
+    register_views(spark, sf_dir)
+    via_sql = spark.sql("SELECT COUNT(*) AS n FROM embeddings").first()["n"]
+    assert via_sql == load_tables(spark, sf_dir)["embeddings"].count() > 0
+
 import pytest  # noqa: E402  (slow marker below)
 
 # QA tail: excluded from the default run (see pytest.ini header)

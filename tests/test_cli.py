@@ -205,6 +205,7 @@ def test_index_with_embed_endpoint(tmp_path, capsys, spark):
         assert "rows=2 dim=8..8" in capsys.readouterr().out
     finally:
         srv.shutdown()
+        srv.server_close()
 
 
 def test_search_text_dim_mismatch_errors(tmp_path, capsys, spark):

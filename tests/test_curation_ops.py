@@ -338,6 +338,20 @@ def test_keep_content_lines_duckdb_parity(spark):
     assert got[8][0].startswith("foo\tbar")  # tabs separate words
 
 
+def test_boilerplate_knobs_out_of_range_raise(spark):
+    # an alpha outside [0, 1] would blank every document and a negative
+    # min_words would keep the nav chrome: both helpers refuse them
+    from vectrekker_spark.functions.text import (
+        boilerplate_fraction,
+        keep_content_lines,
+    )
+
+    with pytest.raises(ValueError, match="min_alpha"):
+        keep_content_lines("text", min_alpha=1.5)
+    with pytest.raises(ValueError, match="min_words"):
+        boilerplate_fraction("text", min_words=-1)
+
+
 def test_curate_boilerplate_stage(spark):
     """The opt-in stage runs FIRST (cleaned text feeds exact dedup: two
     docs identical after stripping collapse), drops now-empty docs,

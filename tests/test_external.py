@@ -121,6 +121,7 @@ def fake_server():
     srv = _serve(state, "HTTP/1.0")  # closes after every response
     yield state, f"http://127.0.0.1:{srv.server_port}"
     srv.shutdown()
+    srv.server_close()
 
 
 @pytest.fixture()
@@ -129,6 +130,7 @@ def fake_server_keepalive():
     srv = _serve(state, "HTTP/1.1")  # persistent connections
     yield state, f"http://127.0.0.1:{srv.server_port}"
     srv.shutdown()
+    srv.server_close()
 
 
 def test_hashing_embedder_satisfies_protocol_and_matches_udf():
@@ -141,37 +143,49 @@ def test_hashing_embedder_satisfies_protocol_and_matches_udf():
 def test_http_embedder_batches_and_values(fake_server):
     state, url = fake_server
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, batch_size=3)
-    texts = [f"t{i}" * (i + 1) for i in range(7)]  # lengths 2,4,6,...
-    vecs = emb.embed_batch(texts)
-    assert len(vecs) == 7
-    assert vecs[0] == [(2 + j) / 100.0 for j in range(DIM)]
-    # 7 texts at batch_size 3 → exactly 3 requests of sizes 3,3,1
-    assert [len(r) for r in state.embed_requests] == [3, 3, 1]
+    try:
+        texts = [f"t{i}" * (i + 1) for i in range(7)]  # lengths 2,4,6,...
+        vecs = emb.embed_batch(texts)
+        assert len(vecs) == 7
+        assert vecs[0] == [(2 + j) / 100.0 for j in range(DIM)]
+        # 7 texts at batch_size 3 → exactly 3 requests of sizes 3,3,1
+        assert [len(r) for r in state.embed_requests] == [3, 3, 1]
+    finally:
+        emb.close()
 
 
 def test_http_embedder_retries_transient_errors(fake_server):
     state, url = fake_server
     state.fail_next = 2  # two 503s, then success
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, backoff_s=0.01)
-    vecs = emb.embed_batch(["abc"])
-    assert len(vecs) == 1 and vecs[0][0] == 3 / 100.0
+    try:
+        vecs = emb.embed_batch(["abc"])
+        assert len(vecs) == 1 and vecs[0][0] == 3 / 100.0
+    finally:
+        emb.close()
 
 
 def test_http_embedder_gives_up_after_max_retries(fake_server):
     state, url = fake_server
     state.fail_next = 10
-    emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, max_retries=1, backoff_s=0.01)
     import urllib.error
 
-    with pytest.raises(urllib.error.HTTPError):
-        emb.embed_batch(["abc"])
+    emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, max_retries=1, backoff_s=0.01)
+    try:
+        with pytest.raises(urllib.error.HTTPError):
+            emb.embed_batch(["abc"])
+    finally:
+        emb.close()
 
 
 def test_http_embedder_rejects_wrong_dim(fake_server):
     _, url = fake_server
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM + 1)
-    with pytest.raises(ValueError, match="dim"):
-        emb.embed_batch(["abc"])
+    try:
+        with pytest.raises(ValueError, match="dim"):
+            emb.embed_batch(["abc"])
+    finally:
+        emb.close()
 
 
 def test_embed_column_mapinpandas(spark, fake_server):
@@ -193,6 +207,13 @@ def test_embed_column_with_local_embedder(spark):
     df = spark.createDataFrame([(1, "alpha beta gamma")], "id long, text string")
     out = embed_column(df, lambda: HashingEmbedder(dim=16)).collect()
     assert len(out[0]["embedding"]) == 16
+
+
+@pytest.mark.slow
+def test_embed_column_hashing_default_dim(spark):
+    df = spark.createDataFrame([(1, "alpha beta gamma")], "id long, text string")
+    out = embed_column(df, HashingEmbedder).collect()
+    assert len(out[0]["embedding"]) == 64
 
 
 def test_run_pipeline_embeds_each_changed_note_once(spark, fake_server, tmp_path):
@@ -304,24 +325,30 @@ def test_run_pipeline_incremental_job_budget(spark, fake_server, tmp_path):
 def test_foreach_partition_sink(spark, fake_server):
     state, url = fake_server
     sink = HttpVectorSink(url)
-    sink.create_index_if_absent("docs", DIM, "cosine")
-    assert state.indexes == [{"name": "docs", "dimension": DIM, "metric": "cosine"}]
+    try:
+        sink.create_index_if_absent("docs", DIM, "cosine")
+        assert state.indexes == [{"name": "docs", "dimension": DIM, "metric": "cosine"}]
 
-    df = spark.createDataFrame(
-        [(f"id{i}", [float(i)] * DIM, {"k": str(i)}) for i in range(50)],
-        "id string, embedding array<double>, metadata map<string,string>",
-    ).repartition(4)
-    write_to_sink(df, lambda: HttpVectorSink(url), batch_size=8)
-    assert len(state.upserts) == 50
-    assert state.upserts["id7"] == [7.0] * DIM
+        df = spark.createDataFrame(
+            [(f"id{i}", [float(i)] * DIM, {"k": str(i)}) for i in range(50)],
+            "id string, embedding array<double>, metadata map<string,string>",
+        ).repartition(4)
+        write_to_sink(df, lambda: HttpVectorSink(url), batch_size=8)
+        assert len(state.upserts) == 50
+        assert state.upserts["id7"] == [7.0] * DIM
+    finally:
+        sink.close()
 
 
 def test_sink_retries_transient_errors(fake_server):
     state, url = fake_server
     state.fail_next = 1
     sink = HttpVectorSink(url, backoff_s=0.01)
-    sink.upsert([("a", [1.0] * DIM, {})])
-    assert state.upserts["a"] == [1.0] * DIM
+    try:
+        sink.upsert([("a", [1.0] * DIM, {})])
+        assert state.upserts["a"] == [1.0] * DIM
+    finally:
+        sink.close()
 
 
 def test_retry_delay_pure():
@@ -358,30 +385,38 @@ def test_http_embedder_honors_retry_after(fake_server):
     state, url = fake_server
     state.fail_next, state.fail_code, state.retry_after = 1, 429, 0.4
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, backoff_s=0.001)
-    t0 = time.perf_counter()
-    vecs = emb.embed_batch(["abc"])
-    elapsed = time.perf_counter() - t0
-    assert len(vecs) == 1
-    assert elapsed >= 0.4  # waited the server's budget, not the 1ms backoff
-    assert len(state.embed_requests) == 1  # exactly one retry succeeded
+    try:
+        t0 = time.perf_counter()
+        vecs = emb.embed_batch(["abc"])
+        elapsed = time.perf_counter() - t0
+        assert len(vecs) == 1
+        assert elapsed >= 0.4  # waited the server's budget, not the 1ms backoff
+        assert len(state.embed_requests) == 1  # exactly one retry succeeded
+    finally:
+        emb.close()
 
 
 def test_http_embedder_retries_connection_reset(fake_server):
     state, url = fake_server
     state.reset_next = 2  # two dropped connections, then success
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, backoff_s=0.01)
-    vecs = emb.embed_batch(["abc"])
-    assert len(vecs) == 1 and vecs[0][0] == 3 / 100.0
+    try:
+        vecs = emb.embed_batch(["abc"])
+        assert len(vecs) == 1 and vecs[0][0] == 3 / 100.0
+    finally:
+        emb.close()
 
 
 def test_pooled_client_reuses_keepalive_connection(fake_server_keepalive):
     state, url = fake_server_keepalive
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, batch_size=1)
-    vecs = emb.embed_batch(["a", "bb", "ccc"])  # 3 requests at batch_size 1
-    emb.close()  # release the keep-alive socket (unblocks server teardown)
-    assert len(vecs) == 3
-    assert [len(r) for r in state.embed_requests] == [1, 1, 1]
-    assert state.connections == 1  # all three rode one pooled connection
+    try:
+        vecs = emb.embed_batch(["a", "bb", "ccc"])  # 3 requests at batch_size 1
+        assert len(vecs) == 3
+        assert [len(r) for r in state.embed_requests] == [1, 1, 1]
+        assert state.connections == 1  # all three rode one pooled connection
+    finally:
+        emb.close()
 
 
 def test_pooled_client_non_idempotent_never_replays(fake_server_keepalive):
@@ -418,9 +453,12 @@ def test_pooled_client_degrades_on_http10_server(fake_server):
     # transparently re-dial instead of failing on the stale socket
     state, url = fake_server
     emb = HttpEmbedder(f"{url}/embeddings", dim=DIM, batch_size=1)
-    vecs = emb.embed_batch(["a", "bb", "ccc"])
-    assert len(vecs) == 3
-    assert state.connections == 3  # one connection per request, no errors
+    try:
+        vecs = emb.embed_batch(["a", "bb", "ccc"])
+        assert len(vecs) == 3
+        assert state.connections == 3  # one connection per request, no errors
+    finally:
+        emb.close()
 
 
 def test_breaker_opens_and_fails_fast(fake_server):
@@ -436,11 +474,14 @@ def test_breaker_opens_and_fails_fast(fake_server):
         breaker_threshold=2,
         breaker_cooldown_s=60.0,
     )
-    with pytest.raises(CircuitOpenError):
-        emb.embed_batch(["abc"])
-    # the circuit opened after exactly `threshold` requests — the remaining
-    # retry budget never hit the server
-    assert state.fail_next == 8
+    try:
+        with pytest.raises(CircuitOpenError):
+            emb.embed_batch(["abc"])
+        # the circuit opened after exactly `threshold` requests — the remaining
+        # retry budget never hit the server
+        assert state.fail_next == 8
+    finally:
+        emb.close()
 
 
 def test_sink_breaker_opens_and_fails_fast(fake_server):
@@ -455,9 +496,12 @@ def test_sink_breaker_opens_and_fails_fast(fake_server):
         breaker_threshold=3,
         breaker_cooldown_s=60.0,
     )
-    with pytest.raises(CircuitOpenError):
-        sink.upsert([("a", [1.0] * DIM, {})])
-    assert state.fail_next == 7
+    try:
+        with pytest.raises(CircuitOpenError):
+            sink.upsert([("a", [1.0] * DIM, {})])
+        assert state.fail_next == 7
+    finally:
+        sink.close()
 
 
 def test_breaker_half_open_recovery():
@@ -502,15 +546,18 @@ def test_sink_retries_connection_reset_and_retry_after(fake_server):
     state, url = fake_server
     state.reset_next = 1
     sink = HttpVectorSink(url, backoff_s=0.01)
-    sink.upsert([("a", [1.0] * DIM, {})])
-    assert "a" in state.upserts
-    state.fail_next, state.fail_code, state.retry_after = 1, 429, 0.2
-    import time
+    try:
+        sink.upsert([("a", [1.0] * DIM, {})])
+        assert "a" in state.upserts
+        state.fail_next, state.fail_code, state.retry_after = 1, 429, 0.2
+        import time
 
-    t0 = time.perf_counter()
-    sink.upsert([("b", [2.0] * DIM, {})])
-    assert time.perf_counter() - t0 >= 0.2
-    assert "b" in state.upserts
+        t0 = time.perf_counter()
+        sink.upsert([("b", [2.0] * DIM, {})])
+        assert time.perf_counter() - t0 >= 0.2
+        assert "b" in state.upserts
+    finally:
+        sink.close()
 
 
 def test_http_embedder_preserves_query_string(fake_server):
@@ -518,9 +565,12 @@ def test_http_embedder_preserves_query_string(fake_server):
     # server with every request
     state, url = fake_server
     emb = HttpEmbedder(f"{url}/embeddings?api-version=2024-02-01", dim=DIM)
-    vecs = emb.embed_batch(["abc"])
-    assert len(vecs) == 1
-    assert state.paths == ["/embeddings?api-version=2024-02-01"]
+    try:
+        vecs = emb.embed_batch(["abc"])
+        assert len(vecs) == 1
+        assert state.paths == ["/embeddings?api-version=2024-02-01"]
+    finally:
+        emb.close()
 
 
 def test_breaker_trip_skips_backoff_sleep(fake_server):
@@ -540,11 +590,14 @@ def test_breaker_trip_skips_backoff_sleep(fake_server):
         breaker_threshold=1,  # first failure trips it
         breaker_cooldown_s=60.0,
     )
-    t0 = time.perf_counter()
-    with pytest.raises(CircuitOpenError):
-        emb.embed_batch(["abc"])
-    assert time.perf_counter() - t0 < 5.0  # no 30 s Retry-After sleep
-    assert state.fail_next == 9  # exactly one request hit the server
+    try:
+        t0 = time.perf_counter()
+        with pytest.raises(CircuitOpenError):
+            emb.embed_batch(["abc"])
+        assert time.perf_counter() - t0 < 5.0  # no 30 s Retry-After sleep
+        assert state.fail_next == 9  # exactly one request hit the server
+    finally:
+        emb.close()
 
 
 def test_breaker_unrecorded_trial_expires():
@@ -570,10 +623,13 @@ def test_http_embedder_honors_proxy_env(fake_server, monkeypatch):
     monkeypatch.setenv("http_proxy", url)
     monkeypatch.delenv("no_proxy", raising=False)
     emb = HttpEmbedder("http://upstream.invalid/embeddings", dim=DIM)
-    vecs = emb.embed_batch(["abc"])
-    assert len(vecs) == 1
-    # the request reached the PROXY (our fake) carrying the absolute URI
-    assert state.paths == ["http://upstream.invalid/embeddings"]
+    try:
+        vecs = emb.embed_batch(["abc"])
+        assert len(vecs) == 1
+        # the request reached the PROXY (our fake) carrying the absolute URI
+        assert state.paths == ["http://upstream.invalid/embeddings"]
+    finally:
+        emb.close()
 
 
 def test_breaker_liveness_property():

@@ -160,9 +160,15 @@ def test_pq_save_load_roundtrip_and_guards(spark, em, pq, tmp_path):
     b = sorted(map(tuple, pq_search(q, codes2, cb2, k=5).collect()))
     assert a == b
 
-    # torn meta → loud remediation; absent meta → reads as no index
+    # torn or version-less meta → loud remediation; absent meta → reads
+    # as no index
+    import json
     import os
 
+    with open(f"{path}/pq_meta.json", "w") as f:
+        json.dump({k: v for k, v in meta.items() if k != "version"}, f)
+    with pytest.raises(ValueError, match="no artifact version"):
+        pq_load(spark, path)
     with open(f"{path}/pq_meta.json", "w") as f:
         f.write('{"m": 16')
     with pytest.raises(ValueError, match="re-run\\s+pq_save"):

@@ -114,6 +114,17 @@ def test_train_then_apply_separates(spark):
     assert kept.columns == df.columns
 
 
+@pytest.mark.slow
+def test_quality_filter_drops_null_text(spark):
+    # zero weights score every non-NULL doc sigmoid(0) = 0.5, the empty one
+    # included; NULL text scores NULL and drops
+    df = spark.createDataFrame(
+        [(1, "a b"), (2, None), (3, "")], "doc_id long, text string"
+    )
+    kept = quality_filter(df, np.zeros(16), min_score=0.4)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
+
+
 def test_fit_deterministic_and_layout_invariant(spark):
     df = _labeled_corpus(spark, seed=11)
     w1, b1 = fit_linear_quality(df.repartition(2), n_features=1 << 10, iters=50)

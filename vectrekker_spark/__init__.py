@@ -16,7 +16,6 @@ Design rules (SURVEY.md §4.2):
 
 from vectrekker_spark.session import get_spark
 from vectrekker_spark.catalog import TABLES, load_tables, register_views
-from vectrekker_spark.engine import Engine
 
-__all__ = ["get_spark", "TABLES", "load_tables", "register_views", "Engine"]
+__all__ = ["get_spark", "TABLES", "load_tables", "register_views"]
 __version__ = "0.1.0"

@@ -52,7 +52,7 @@ def avg_word_len(text: Column | str) -> Column:
 
 
 def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are not alphanumeric/space — one of the
+    r"""Fraction of characters that are not alphanumeric/space — one of the
     classic quality heuristics for LLM corpus filtering. Unicode classes
     (``\p{L}\p{N}`` — supported identically by Java and RE2): the old
     ASCII ``[A-Za-z0-9]`` counted every non-Latin LETTER as punctuation,
@@ -189,7 +189,7 @@ def dup_line_fraction(text: Column | str) -> Column:
 
 
 def _is_content_line(line: Column, min_words: int, min_alpha: float) -> Column:
-    """Keep rule for one line: at least ``min_words`` words CONTAINING A
+    r"""Keep rule for one line: at least ``min_words`` words CONTAINING A
     LETTER (symbol-only tokens like '»' or '|' never count — nav bars are
     full of them) and a letter-character ratio of at least ``min_alpha``
     (rules out separator/number/punctuation lines).
@@ -199,7 +199,15 @@ def _is_content_line(line: Column, min_words: int, min_alpha: float) -> Column:
     script document as 100% boilerplate (r10 review finding). Words split
     on \s+, the engine-wide tokens() rule; NBSP-separated words still
     read as one token — the same documented limitation tokens() carries
-    (Java/RE2 \s is ASCII whitespace)."""
+    (Java/RE2 \s is ASCII whitespace).
+
+    Out-of-range knobs raise ValueError: an alpha outside [0, 1] silently
+    blanks every document and a negative min_words keeps the nav chrome
+    the caller asked to strip."""
+    if min_words < 0:
+        raise ValueError(f"min_words must be >= 0, got {min_words}")
+    if not 0.0 <= min_alpha <= 1.0:
+        raise ValueError(f"min_alpha must be in [0, 1], got {min_alpha}")
     words = F.filter(
         F.split(F.trim(line), r"\s+"), lambda w: w.rlike(r"\p{L}")
     )

@@ -553,8 +553,8 @@ def ivf_save(
 ) -> None:
     """Persist an IVF index as the classic inverted-list layout:
 
-    - ``{path}/centroids``: (cid, cvec) — tiny, one file.
-    - ``{path}/cells-v{N}`` + ``{path}/CURRENT`` pointer: (id, vector)
+    - ``{path}/centroids-v{N}``: (cid, cvec) — tiny, one file.
+    - ``{path}/cells-v{N}`` + ``{path}/CURRENT-v{K}`` pointer: (id, vector)
       **partitioned by cid** — each probed cell is its own parquet
       directory, so a search reads ONLY the probed cells' files (the
       partition-pruning promise in the module docstring, made real). The
@@ -563,7 +563,8 @@ def ivf_save(
       land in a NEW version and atomically flip CURRENT (see the
       versioned-layout note), so concurrent readers never see a missing
       table.
-    - ``{path}/meta``: one JSON row (id_col, vec_col, assign_k, quantized)
+    - ``{path}/meta-v{N}.json``: (id_col, vec_col, assign_k, quantized,
+      cells_schema)
       so append / search consumers recover the build parameters instead of
       guessing — pass ``assign_k`` when the assignments were multi-assigned
       so appends keep the same boundary-recall contract.
@@ -597,7 +598,7 @@ def ivf_save(
     # centroids version the rebuild INTRODUCES is written under the same
     # version number — never in place over the live centroids, which a
     # reader's in-flight plan (or its old-cells grace copy) still pairs with.
-    prev = _current_names(path) if index_exists(path) else None
+    prev = _pointer_tokens(path)
     version = _next_version(path)
     new_cells, new_centroids = f"cells-v{version}", f"centroids-v{version}"
     new_meta = f"meta-v{version}.json"
@@ -625,10 +626,7 @@ def ivf_save(
         new_meta,
     )
     _flip_current(path, new_cells, new_centroids, new_meta)
-    keep = {new_cells, new_centroids, new_meta}
-    if prev:
-        keep |= {n for n in prev if n}
-    _prune_versions(path, keep)
+    _prune_versions(path, {new_cells, new_centroids, new_meta, *prev})
 
 
 def _cell_rows(
@@ -659,56 +657,21 @@ def _cell_rows(
 
 def ivf_meta(spark, path: str) -> dict:
     """The saved build parameters ({id_col, vec_col, assign_k, quantized,
-    cells_schema}); empty dict for a pre-metadata index directory. The
-    CURRENT pointer names the live version's meta file (so metadata can
-    never be a crash ahead of or behind the tables it describes); pointers
-    written before meta versioning fall back to the unversioned
-    ``meta.json``, then the legacy Spark-written ``meta`` directory."""
-    tokens = _pointer_tokens(path)
-    return _meta_named(spark, path, tokens[2] if len(tokens) > 2 else None)
+    cells_schema}) of the live version. The CURRENT pointer names the
+    version's meta file, so metadata can never be a crash ahead of or
+    behind the tables it describes. Raises ValueError when ``path`` holds
+    no committed index (see _current_names)."""
+    return _meta_named(path, _current_names(path)[2])
 
 
-def _meta_named(spark, path: str, meta_name: str | None) -> dict:
-    """Metadata resolution given an already-read pointer token. A
-    POINTER-NAMED meta file that is missing raises — falling back to the
-    stale unversioned copies would silently mis-describe the live tables
-    (the metadata analog of a vanished cells dir, which also fails loudly).
-    Only nameless pointers use the unversioned fallbacks."""
+def _meta_named(path: str, meta_name: str) -> dict:
+    """The meta file an already-read pointer names. A missing file raises
+    (OSError) — the metadata analog of a vanished cells dir."""
     import json as _json
     import os
 
-    if meta_name:
-        with open(os.path.join(path, meta_name)) as f:  # OSError propagates
-            return {k: v for k, v in _json.load(f).items() if v is not None}
-    try:
-        with open(os.path.join(path, "meta.json")) as f:
-            return {k: v for k, v in _json.load(f).items() if v is not None}
-    except (OSError, ValueError):
-        pass
-    try:
-        row = spark.read.json(f"{path}/meta").collect()
-    except Exception:
-        return {}
-    return {k: v for k, v in row[0].asDict().items() if v is not None} if row else {}
-
-
-def _upgrade_meta_schema(
-    path: str, meta: dict, cells: DataFrame, version: int, meta_name: str | None
-) -> str | None:
-    """Backfill ``cells_schema`` into the metadata of an index saved before
-    the schema sidecar existed — delete/compact rewrites hold the full
-    cells table in hand, so the one rewrite that could empty the table also
-    makes it recoverable. ``meta`` is the caller's already-resolved live
-    metadata (one pointer read per operation). Returns the meta filename
-    the new pointer should reference: the upgraded ``meta-v{version}.json``
-    when a backfill was needed, else the incoming name unchanged."""
-    if meta.get("cells_schema"):
-        return meta_name
-    read_order = [c for c in cells.columns if c != "cid"] + ["cid"]
-    meta = {**meta, "cells_schema": cells.select(read_order).schema.json()}
-    new_name = f"meta-v{version}.json"
-    _write_meta(path, meta, new_name)
-    return new_name
+    with open(os.path.join(path, meta_name)) as f:
+        return {k: v for k, v in _json.load(f).items() if v is not None}
 
 
 def _write_meta(path: str, meta: dict, filename: str) -> None:
@@ -724,31 +687,6 @@ def _write_meta(path: str, meta: dict, filename: str) -> None:
 
     with open(os.path.join(path, filename), "w") as f:
         _json.dump(meta, f)
-
-
-def _recover_cells(path: str) -> None:
-    """Heal a crashed LEGACY (pre-versioning) ivf_compact swap: if the
-    unversioned ``cells`` dir is missing and no CURRENT pointer exists,
-    promote the completed staging dir, else roll back the trash copy. Both
-    are full tables, so either outcome is readable. Versioned indexes never
-    need healing — an unflipped new version is unreferenced garbage that
-    the next rewrite prunes."""
-    import os
-
-    import shutil
-
-    if _pointer_tokens(path):
-        return
-    live = os.path.join(path, "cells")
-    if os.path.exists(live):
-        return
-    staging = os.path.join(path, ".cells.compact")
-    trash = os.path.join(path, ".cells.trash")
-    if os.path.exists(staging):
-        os.rename(staging, live)  # staging was fully written before the swap
-        shutil.rmtree(trash, ignore_errors=True)  # finish the crashed cleanup
-    elif os.path.exists(trash):
-        os.rename(trash, live)  # roll back
 
 
 # --- versioned cells layout ------------------------------------------------
@@ -769,13 +707,9 @@ def _recover_cells(path: str) -> None:
 # an aborted rebuild's orphan artifacts can never be mispaired with a later
 # cells version and metadata can never be a crash ahead of or behind the
 # tables it describes (orphans are unreferenced garbage pruned by the next
-# successful rewrite). Shorter pointers written by earlier versions of this
-# module degrade gracefully: two tokens resolve meta from the unversioned
-# meta.json / legacy meta dir; one token resolves centroids from the
-# highest centroids-vM ≤ N, else the legacy unversioned dir. Pre-versioning
-# indexes (bare {path}/cells + {path}/centroids, no pointer, or the legacy
-# single rewritten CURRENT file) stay readable and upgrade on their first
-# rewrite. The pointer protocol itself is object-store safe (immutable PUTs
+# successful rewrite). Any other layout — no pointer, or a pointer with
+# fewer than three tokens — is rejected (_current_names). The pointer
+# protocol itself is object-store safe (immutable PUTs
 # + LIST-highest; no rename anywhere in the live path) — but for the DATA
 # rewrites prefer the lakehouse's own OPTIMIZE/DELETE on an object store.
 
@@ -808,9 +742,7 @@ def _pointer_tokens(path: str) -> list[str]:
     the highest K. A trailing newline is the commit marker: a file without
     it is a torn local write (object stores PUT atomically, so this only
     guards plain filesystems) and the reader falls back to the next-lower
-    version, which still names a live-or-grace artifact set. The legacy
-    single rewritten ``CURRENT`` file is honored when no versioned pointer
-    exists, so pre-upgrade indexes stay readable."""
+    version, which still names a live-or-grace artifact set."""
     for v in _pointer_versions(path):
         try:
             with open(f"{path}/CURRENT-v{v}") as f:
@@ -819,34 +751,28 @@ def _pointer_tokens(path: str) -> list[str]:
             continue  # pruned between the listing and the read: try older
         if raw.endswith("\n") and raw.split():
             return raw.split()
-    try:
-        with open(f"{path}/CURRENT") as f:
-            return f.read().split()
-    except OSError:
-        return []
+    return []
 
 
-def _current_names(path: str) -> tuple[str, str, str | None]:
-    """(cells_dirname, centroids_dirname, meta_filename|None) of the live
+def _current_names(path: str) -> tuple[str, str, str]:
+    """(cells_dirname, centroids_dirname, meta_filename) of the live
     version — ONE pointer read, so the tables and their metadata can never
-    come from different versions. Pointer forms: "cells-vN centroids-vM
-    meta-vN.json" (current), two tokens (meta resolved from the unversioned
-    fallbacks), one token (centroids via the ≤-version heuristic), absent
-    (pre-versioning legacy dirs)."""
+    come from different versions. Every writer commits a three-token
+    pointer ("cells-vN centroids-vM meta-vK.json"); a path without one is
+    no index, or one laid out by an older release, and raises ValueError."""
     tokens = _pointer_tokens(path)
-    cells_name = tokens[0] if tokens else "cells"
-    centroids_name = (
-        tokens[1] if len(tokens) > 1 else _centroids_heuristic(path, cells_name)
-    )
-    return cells_name, centroids_name, tokens[2] if len(tokens) > 2 else None
+    if len(tokens) < 3:
+        raise ValueError(
+            f"no IVF index at {path}: expected a committed CURRENT-v* pointer "
+            f"naming cells, centroids and meta, found {tokens or 'none'}; "
+            "rebuild the index with ivf_save (CLI: ann-build)"
+        )
+    return tokens[0], tokens[1], tokens[2]
 
 
 def index_exists(path: str) -> bool:
-    """True when a saved index lives at ``path`` — a live pointer (any
-    protocol generation) or a legacy unversioned cells dir."""
-    import os
-
-    return bool(_pointer_tokens(path)) or os.path.exists(f"{path}/cells")
+    """True when a committed pointer lives at ``path``."""
+    return bool(_pointer_tokens(path))
 
 
 def current_pair(path: str) -> tuple[str, str]:
@@ -855,48 +781,13 @@ def current_pair(path: str) -> tuple[str, str]:
 
 
 def cells_dirname(path: str) -> str:
-    """Live cells directory name: the CURRENT pointer's target, else the
-    legacy unversioned ``cells``."""
+    """Live cells directory name: the CURRENT pointer's target."""
     return current_pair(path)[0]
 
 
 def cells_location(path: str) -> str:
     """Full path of the live cells table (what spark.read should scan)."""
     return f"{path}/{cells_dirname(path)}"
-
-
-def _centroids_heuristic(path: str, cells_name: str) -> str:
-    """Centroids dir NAME for a cells version when the pointer predates
-    pair recording: the highest ``centroids-vM`` with M ≤ the cells version
-    (only full rebuilds introduce centroids versions), else the legacy
-    unversioned ``centroids``. Single-name pointers were only ever written
-    by module versions whose rebuilds wrote centroids in place, so no
-    orphan centroids version can exist beside them."""
-    import os
-    import re
-
-    m = re.fullmatch(r"cells-v(\d+)", cells_name)
-    if m:
-        n = int(m.group(1))
-        try:
-            versions = [
-                int(v.group(1))
-                for v in (
-                    re.fullmatch(r"centroids-v(\d+)", d) for d in os.listdir(path)
-                )
-                if v
-            ]
-        except OSError:
-            versions = []
-        eligible = [v for v in versions if v <= n]
-        if eligible:
-            return f"centroids-v{max(eligible)}"
-    return "centroids"
-
-
-def centroids_location(path: str) -> str:
-    """Full path of the centroids table paired with the LIVE cells version."""
-    return f"{path}/{current_pair(path)[1]}"
 
 
 def _next_version(path: str) -> int:
@@ -918,7 +809,7 @@ def _next_version(path: str) -> int:
 
 
 def _flip_current(
-    path: str, cells_name: str, centroids_name: str, meta_name: str | None
+    path: str, cells_name: str, centroids_name: str, meta_name: str
 ) -> None:
     """Atomically point the index at the (cells, centroids, meta) triple.
 
@@ -931,21 +822,16 @@ def _flip_current(
     last-writer-wins, exactly the semantics the old os.replace flip had.
     After a successful flip the previous-but-one pointers are pruned (the
     immediately-previous one is kept as the grace pointer, matching the
-    grace artifact set) and a legacy ``CURRENT`` file, now shadowed, is
-    removed so it can never dangle at pruned artifacts. Pruning never
+    grace artifact set). Pruning never
     touches versions ABOVE this flip's own K: a concurrent flip that
     claimed a higher version may have committed (deleting its pointer
     would roll the index back) or may still be mid-write (its file looks
     torn only because the racer hasn't finished) — either way it is the
     racer's, not ours. A genuinely torn higher version from a crash is
-    cleaned by the NEXT flip, whose K lands above it.
-
-    ``meta_name`` None (an index whose metadata still lives in the
-    unversioned fallbacks) writes the two-token form."""
+    cleaned by the NEXT flip, whose K lands above it."""
     import os
 
-    suffix = f" {meta_name}" if meta_name else ""
-    content = f"{cells_name} {centroids_name}{suffix}\n"
+    content = f"{cells_name} {centroids_name} {meta_name}\n"
     versions = _pointer_versions(path)
     k = (versions[0] + 1) if versions else 0
     for _ in range(1000):  # bounded: concurrent flips each bump K once
@@ -958,8 +844,8 @@ def _flip_current(
     else:
         raise OSError(
             f"could not claim a pointer version under {path}; the already-"
-            f"written artifact set ({cells_name}, {centroids_name}"
-            f"{', ' + meta_name if meta_name else ''}) is left unreferenced "
+            f"written artifact set ({cells_name}, {centroids_name}, "
+            f"{meta_name}) is left unreferenced "
             f"and will be reclaimed by the next successful rewrite's prune"
         )
     _prune_pointers(path, k)
@@ -993,10 +879,6 @@ def _prune_pointers(path: str, k: int) -> None:
             os.remove(os.path.join(path, f"CURRENT-v{old}"))
         except OSError:
             pass
-    try:
-        os.remove(os.path.join(path, "CURRENT"))  # shadowed legacy pointer
-    except OSError:
-        pass
 
 
 def _pointer_committed(path: str, version: int) -> bool:
@@ -1011,8 +893,8 @@ def _pointer_committed(path: str, version: int) -> bool:
 
 
 def _referenced_names(path: str) -> set[str]:
-    """Artifact names referenced by EVERY committed pointer still present
-    (versioned and legacy). Prune keep-sets union this in so a concurrent
+    """Artifact names referenced by EVERY committed pointer still present.
+    Prune keep-sets union this in so a concurrent
     flip that committed a HIGHER pointer version between our flip and our
     prune keeps its cells/centroids/meta dirs — without it, the slower
     writer's explicit live+grace keep-set would reclaim the faster
@@ -1035,23 +917,16 @@ def _referenced_names(path: str) -> set[str]:
                     names.update(f.read().split())
             except OSError:
                 pass
-    try:
-        with open(f"{path}/CURRENT") as f:
-            names.update(f.read().split())
-    except OSError:
-        pass
     return names
 
 
 def _prune_versions(path: str, keep: set[str]) -> None:
-    """Remove managed artifacts (cells/centroids dirs and versioned meta
-    files, versioned or legacy) not in ``keep``. Callers pass the EXPLICIT
+    """Remove managed artifacts (versioned cells/centroids dirs and meta
+    files) not in ``keep``. Callers pass the EXPLICIT
     set of names the live and grace versions reference, so an aborted
     rebuild's orphan tables are reclaimed here and a kept cells version
     always keeps its paired centroids and metadata; every pointer still on
-    disk is additionally honored via ``_referenced_names`` (racer safety).
-    The unversioned ``meta.json``/``meta`` fallbacks are never pruned —
-    two-token pointers still resolve through them."""
+    disk is additionally honored via ``_referenced_names`` (racer safety)."""
     keep = keep | _referenced_names(path)
     import os
     import re
@@ -1060,11 +935,7 @@ def _prune_versions(path: str, keep: set[str]) -> None:
     for d in os.listdir(path):
         if d in keep:
             continue
-        if (
-            d == "cells"
-            or d == "centroids"
-            or re.fullmatch(r"(cells|centroids)-v(\d+)", d)
-        ):
+        if re.fullmatch(r"(cells|centroids)-v(\d+)", d):
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
         elif re.fullmatch(r"meta-v(\d+)\.json", d):
             try:
@@ -1132,26 +1003,21 @@ def _read_cells(spark, location: str, schema_json: str | None) -> DataFrame:
         except OSError:
             truly_empty = False  # non-local path: can't verify, so don't mask
         if not truly_empty or not schema_json:
-            raise  # corruption/pre-sidecar index: surface the original error
+            raise  # corruption: surface the original error
         return spark.createDataFrame(
             [], StructType.fromJson(_json.loads(schema_json))
         )
 
 
 def ivf_load(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load a saved IVF index → (centroids, cells); heals a half-finished
-    LEGACY compact swap first (versioned indexes need no healing).
+    """Load a saved IVF index → (centroids, cells).
 
     Partition discovery types the ``cid`` directory values as int; cast back
     to long so loaded plans match in-memory ones schema-for-schema."""
-    try:
-        _recover_cells(path)
-    except OSError:
-        pass  # non-local path (s3://...): nothing to heal with os primitives
     # one pointer read for both tables AND the metadata: a rebuild flipping
     # CURRENT mid-load must not mix artifacts from two versions
     cells_name, centroids_name, meta_name = _current_names(path)
-    schema_json = _meta_named(spark, path, meta_name).get("cells_schema")
+    schema_json = _meta_named(path, meta_name).get("cells_schema")
     centroids = spark.read.parquet(f"{path}/{centroids_name}")
     cells = _read_cells(spark, f"{path}/{cells_name}", schema_json).withColumn(
         "cid", F.col("cid").cast("long")
@@ -1188,7 +1054,7 @@ def ivf_append(
     # one pointer read: the centroids used for assignment, the metadata,
     # and the cells dir appended into must all belong to the same version
     name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(spark, path, meta_name)
+    meta = _meta_named(path, meta_name)
     id_col = id_col or meta.get("id_col", "vec_id")
     vec_col = vec_col or meta.get("vec_col", "embedding")
     assign_k = assign_k or meta.get("assign_k") or 1
@@ -1234,9 +1100,8 @@ def ivf_delete(spark, path: str, ids: DataFrame) -> int:
     Same single-writer contract as ivf_compact: don't run concurrently with
     ivf_append, and on an object store prefer the lakehouse's own
     DELETE/MERGE. Returns rows removed."""
-    _recover_cells(path)
     live_name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(spark, path, meta_name)
+    meta = _meta_named(path, meta_name)
     cells = _read_cells(
         spark, f"{path}/{live_name}", meta.get("cells_schema")
     ).withColumn("cid", F.col("cid").cast("long"))
@@ -1260,13 +1125,9 @@ def ivf_delete(spark, path: str, ids: DataFrame) -> int:
     _link_partitions(
         f"{path}/{live_name}", f"{path}/{new_name}", skip_cids=affected
     )
-    meta_name = _upgrade_meta_schema(path, meta, cells, version, meta_name)
     # centroids/meta are untouched: the flip carries the live names forward
     _flip_current(path, new_name, centroids_name, meta_name)
-    keep = {new_name, live_name, centroids_name}
-    if meta_name:
-        keep.add(meta_name)
-    _prune_versions(path, keep)
+    _prune_versions(path, {new_name, live_name, centroids_name, meta_name})
     return removed
 
 
@@ -1310,9 +1171,8 @@ def ivf_compact(spark, path: str) -> int:
     run concurrently with ivf_append — an append landing between the
     staging read and the flip would be silently discarded. Serialize them
     (e.g. compact from the same scheduler that owns the append cadence)."""
-    _recover_cells(path)
     live_name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(spark, path, meta_name)
+    meta = _meta_named(path, meta_name)
     cells = _read_cells(
         spark, f"{path}/{live_name}", meta.get("cells_schema")
     ).withColumn("cid", F.col("cid").cast("long"))
@@ -1325,16 +1185,12 @@ def ivf_compact(spark, path: str) -> int:
     deduped.repartition(F.col("cid")).write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(f"{path}/{new_name}")
-    meta_name = _upgrade_meta_schema(path, meta, cells, version, meta_name)
     # explicit-schema read: verifies the persisted rows without parquet
     # inference, so a compact that EMPTIES the table (data-less dir) still
     # verifies cleanly — and does so independent of the pointer state
     after = spark.read.schema(cells.schema).parquet(f"{path}/{new_name}").count()
     _flip_current(path, new_name, centroids_name, meta_name)
-    keep = {new_name, live_name, centroids_name}
-    if meta_name:
-        keep.add(meta_name)
-    _prune_versions(path, keep)
+    _prune_versions(path, {new_name, live_name, centroids_name, meta_name})
     return before - after
 
 

@@ -423,7 +423,7 @@ def pq_save(
         except (json.JSONDecodeError, OSError):
             prev_committed = None  # torn meta: nothing committed to keep
     # next version from the artifact LISTING (never repeats even after a
-    # torn save); legacy unversioned artifacts count as no versions
+    # torn save)
     versions = [
         int(mm.group(2))
         for d in os.listdir(path)
@@ -472,11 +472,6 @@ def pq_save(
         mm = re.fullmatch(r"(codes|codebooks|rotation)-v(\d+)\.parquet", d)
         if mm and int(mm.group(2)) not in keep:
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    if prev_committed is not None:
-        # the previous commit was already versioned, so any legacy
-        # unversioned artifacts are ≥ two saves old — safe to sweep
-        for legacy in ("codebooks.parquet", "codes.parquet", "rotation.parquet"):
-            shutil.rmtree(os.path.join(path, legacy), ignore_errors=True)
     return meta
 
 
@@ -501,10 +496,13 @@ def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
                 f"PQ meta at {meta_path} is corrupt ({exc}); re-run "
                 "pq_save to rewrite the index atomically"
             ) from exc
-    # versioned artifact names (r14s3 re-save atomicity fix); metas
-    # written before the fix carry no version and use the legacy names
     v = meta.get("version")
-    suffix = f"-v{v}" if v is not None else ""
+    if v is None:
+        raise ValueError(
+            f"PQ meta at {meta_path} names no artifact version (an index "
+            "saved by an older release); re-run pq_save to rebuild it"
+        )
+    suffix = f"-v{v}"
     codebooks = spark.read.parquet(
         os.path.join(path, f"codebooks{suffix}.parquet")
     )
