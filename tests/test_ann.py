@@ -211,6 +211,71 @@ def test_ivf_search_cells_plan_is_jvm_single_exchange(spark, tmp_path):
     assert [r for r, _ in got] == [1, 2, 3] and len({v for _, v in got}) == 3
 
 
+def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path):
+    # A Python-RDD query frame (what createDataFrame(list) plans) costs a
+    # Python task per read: the probes are materialized once, so the cid
+    # collect and the final plan do not re-read the queries. The
+    # materialized probes are released with the returned frame.
+    import gc
+    import time
+
+    from vectrekker_spark.operators.ann import (
+        _probe_cells,
+        _topk_by_score,
+        ivf_load,
+        ivf_save,
+        ivf_search_cells,
+    )
+
+    corpus = spark.range(60).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id"), F.lit(0.5)).alias("embedding"),
+    )
+    centroids, assign = ivf_build(corpus, n_centroids=6, method="stride", assign_k=2)
+    path = str(tmp_path / "ivf")
+    ivf_save(centroids, assign, corpus, path, assign_k=2)
+    lc, cells = ivf_load(spark, path)
+    rows = [(i, [float(i % 3) - 1.0, 1.0 - i / 7, 0.5]) for i in range(7)]
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def bump(r):
+        reads.add(1)
+        return r
+
+    q = spark.createDataFrame(
+        sc.parallelize(rows, 2).map(bump), "qid long, qvec array<double>"
+    )
+    jsc = spark._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keySet().toArray())
+    cache_was_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    res = ivf_search_cells(q, lc, cells, k=4, n_probe=2)
+    got = sorted(tuple(r) for r in res.collect())
+    assert reads.value == len(rows)
+
+    # the two-pass plan (probes read by the cid collect and again by the join)
+    probes = _probe_cells(q, lc, 2)
+    probed = [r[0] for r in probes.select("cid").distinct().collect()]
+    cands = probes.join(cells.filter(F.col("cid").isin(probed)), "cid")
+    want = sorted(
+        tuple(r) for r in _topk_by_score(cands, 4, "vec_id", "embedding", dedupe=True).collect()
+    )
+    assert got == want and len({r[0] for r in got}) == len(rows)
+
+    del res
+    new = None
+    for _ in range(100):
+        gc.collect()
+        spark._jvm.System.gc()
+        new = set(jsc.getPersistentRDDs().keySet().toArray()) - persisted_before
+        if not new:
+            break
+        time.sleep(0.1)
+    assert not new, new
+    if cache_was_empty:
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_assign_centroids_byte_budget(spark):
     """The collect guard is a BYTE budget, not just a row count: a high-dim
     quantizer trips at rows × dim × 8 bytes even when the row cap would

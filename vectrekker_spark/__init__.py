@@ -14,8 +14,19 @@ Design rules (SURVEY.md §4.2):
   materialization at scale
 """
 
-from vectrekker_spark.session import get_spark
-from vectrekker_spark.catalog import TABLES, load_tables, register_views
-
 __all__ = ["get_spark", "TABLES", "load_tables", "register_views"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # Resolved on first use, so importing a submodule does not pull in
+    # pyspark.sql: the Python worker daemon (worker_daemon) starts from here.
+    if name == "get_spark":
+        from vectrekker_spark.session import get_spark
+
+        return get_spark
+    if name in ("TABLES", "load_tables", "register_views"):
+        from vectrekker_spark import catalog
+
+        return getattr(catalog, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

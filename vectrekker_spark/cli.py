@@ -112,6 +112,7 @@ def cmd_search(args: argparse.Namespace) -> int:
 
     from vectrekker_spark.operators.knn import knn_join
     from vectrekker_spark.queries.vector import hash_embed_batch
+    from vectrekker_spark.session import local_frame
 
     spark = _spark()
     index = spark.read.parquet(args.index)
@@ -138,9 +139,8 @@ def cmd_search(args: argparse.Namespace) -> int:
                 "Use --query-id, or re-index with the local embedder."
             )
             return 2
-        q = spark.createDataFrame(
-            [("query", vec)], "qid string, qvec array<double>"
-        )
+        # a LocalRelation: no read of the query runs a Python task
+        q = local_frame(spark, [("query", vec)], "qid string, qvec array<double>")
     if getattr(args, "pq", None):
         # persisted PQ index (pq-build verb): ADC scan over m-byte codes
         # with an exact rerank against the full-precision index — the

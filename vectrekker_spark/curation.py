@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from vectrekker_spark.functions.text import quality_score, token_count
 from vectrekker_spark.operators.chunk import chunk_text
 from vectrekker_spark.operators.dedup import exact_dedup_map, minhash_dedup_pairs
+from vectrekker_spark.session import truncate_lineage
 
 
 @dataclass
@@ -195,26 +196,17 @@ def _materialize_truncated(
     §3.3/§5: .cache() keeps the full tree, so every later action re-plans
     it — measured ~20 s of driver planning per action on the sf1 funnel).
 
-    Fault-tolerance gate (advisor r14): localCheckpoint truncates LINEAGE,
-    so on a real cluster an executor loss makes every downstream action
-    fail where cache() would recompute. Local mode has no such failure
-    mode (driver and executors share the process), so:
-    - local master       → localCheckpoint (fast, truncates the plan);
-    - cluster + configured checkpoint dir → reliable checkpoint (truncates
-      the plan AND survives executor loss; data in the checkpoint dir);
-    - cluster, no checkpoint dir → cache() (keeps the re-planning tax but
-      never turns an executor loss into a funnel abort).
-    The returned frame is appended to the matching release list."""
-    sc = docs.sparkSession.sparkContext
-    if sc.master.startswith("local"):
-        out = docs.localCheckpoint()
+    Deployment policy (executor-loss safety) is ``session.truncate_lineage``'s;
+    where it declines (cluster, no checkpoint dir) the funnel falls back to
+    cache(), which keeps the re-planning tax but never turns an executor
+    loss into a funnel abort — the funnel releases it in unpersist(). The
+    returned frame is appended to the matching release list."""
+    out = truncate_lineage(docs)
+    if out is not None:
         checkpoints.append(out)
-    elif sc.getCheckpointDir() is not None:
-        out = docs.checkpoint()
-        checkpoints.append(out)
-    else:
-        out = docs.cache()
-        caches.append(out)
+        return out
+    out = docs.cache()
+    caches.append(out)
     return out
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from vectrekker_spark.functions.vector import l2_normalize
 from vectrekker_spark.operators.knn import knn_join
+from vectrekker_spark.session import local_frame, truncate_lineage
 
 _MAX_CENTROIDS = 200_000
 _MAX_CENTROID_BYTES = 512 * 1024 * 1024
@@ -280,9 +281,7 @@ def ivf_centroids(
         X = np.asarray(list(sample["__vec"]), dtype=np.float64)
         C = _lloyd_fit(X, n_centroids)
         rows = [(i, [float(x) for x in c]) for i, c in enumerate(C)]
-        return corpus.sparkSession.createDataFrame(
-            rows, "cid long, cvec array<double>"
-        )
+        return local_frame(corpus.sparkSession, rows, "cid long, cvec array<double>")
     if method == "kmeans":
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -298,9 +297,7 @@ def ivf_centroids(
         rows = [
             (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
         ]
-        return corpus.sparkSession.createDataFrame(
-            rows, "cid long, cvec array<double>"
-        )
+        return local_frame(corpus.sparkSession, rows, "cid long, cvec array<double>")
     n = corpus.count()
     stride = max(n // n_centroids, 1)
     return (
@@ -1224,10 +1221,14 @@ def ivf_search_cells(
 
     Runs in the JVM: ``_probe_cells`` picks the cells against the broadcast
     centroids, checked first against ``_centroid_cap`` by one aggregate.
-    When the distinct probed cids fit under ``prune_max_cells`` they are
-    collected and applied as an ``isin`` filter, so the cell scan statically
-    prunes to exactly the probed partitions (asserted in test_plans); past
-    the cap every cell is read and the cid equi-join restricts candidates.
+    The query side is evaluated once: the probes are materialized
+    (``session.truncate_lineage``; on a cluster without a checkpoint dir
+    they stay a plan and the queries are read twice), and both the cid
+    collect and the cell join read that result. When the distinct probed
+    cids fit under ``prune_max_cells`` they are collected and applied as
+    an ``isin`` filter, so the cell scan statically prunes to exactly the
+    probed partitions (asserted in test_plans); past the cap every cell is
+    read and the cid equi-join restricts candidates.
     The probes carry qvec, so the queries are not joined back, and the
     ranking window drops the copies of a vector multi-assigned to two probed
     cells (no dedupe exchange)."""
@@ -1239,6 +1240,12 @@ def ivf_search_cells(
     ).first()
     _centroid_cap(dim or 0, n=n)
     probes = _probe_cells(queries, centroids, n_probe)
+    # one query-side pass: the cid collect and the final plan both read the
+    # materialized probes instead of re-evaluating the queries (a Python-RDD
+    # query frame costs a Python task per read)
+    materialized = truncate_lineage(probes)
+    if materialized is not None:
+        probes = materialized
     probed = [
         r[0]
         for r in probes.select("cid").distinct().limit(prune_max_cells + 1).collect()

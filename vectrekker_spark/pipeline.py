@@ -39,6 +39,7 @@ from vectrekker_spark.functions.tokenize import gate_token_count
 from vectrekker_spark.operators.chunk import chunk_text
 from vectrekker_spark.operators.delta import detect_changes_versioned, merge_upsert
 from vectrekker_spark.queries.vector import hash_embed_batch
+from vectrekker_spark.session import local_frame
 from vectrekker_spark.sources.files import scan_directory
 
 INDEX_SCHEMA = T.StructType(
@@ -125,7 +126,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> Data
         # the known schema skips the footer-inference job and null-fills
         # columns an older table lacks (a pre-versioning state's embed_version)
         return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _atomic_replace(df: DataFrame, path: str) -> None:

@@ -4,14 +4,19 @@ Tuned for correctness-vs-DuckDB parity (UTC session timezone, ANSI off so
 Spark matches DuckDB's permissive casts) and for 100 TB-scale habits that
 also hold on local[32]: AQE on (runtime re-plan, skew-join splitting,
 partition coalescing), Arrow for every pandas interchange, bounded shuffle
-partitions.
+partitions. Also the two frame helpers whose choice depends on the
+session: ``local_frame`` (small driver data as a LocalRelation) and
+``truncate_lineage`` (materialize a frame the way the deployment allows).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -73,6 +78,18 @@ def get_spark(
         # that is another session (e.g. a plain getOrCreate() one, default true),
         # this setting has no effect for the rest of the process.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Every Python task (UDF, mapInPandas, a createDataFrame(list) scan)
+        # starts with importlib.invalidate_caches(), which makes each
+        # zipimporter re-read its archive's central directory — pyspark.zip's
+        # 1,328 entries, 16 reads per task, CPU-bound. Profiled at 35-190 ms
+        # of a ~100 ms one-row Python task; the worker_daemon wrapper re-reads
+        # an archive only when its (mtime, size, inode) changed (one-row
+        # Python job 100 → 67 ms, 282 → 95 ms on a slower 4-core box).
+        # Imports resolve exactly as before. The daemon module must be
+        # importable by the workers whatever the driver's cwd, hence the
+        # package root on the executor PYTHONPATH (merged with Spark's own).
+        .config("spark.python.daemon.module", "vectrekker_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # quieter logs for test runs
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -82,3 +99,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """Small driver-side rows as a DataFrame whose plan is a LocalRelation.
+
+    ``spark.createDataFrame(list)`` plans a LogicalRDD over a Python RDD, so
+    every action that reads it runs Python-worker tasks — four even for an
+    empty list. An Arrow table goes to the JVM whole and, under
+    ``spark.sql.execution.arrow.localRelationThreshold``, becomes a
+    LocalRelation that no Python task reads (one-row 1536-dim query: 503 →
+    44 ms to collect on a 4-core box). The Arrow-table path has no silent
+    fallback to the Python RDD. ``schema`` fixes the column types exactly
+    (DDL string or StructType)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def truncate_lineage(df: DataFrame) -> DataFrame | None:
+    """Materialize ``df`` and return a frame that reads the result, not the
+    plan, or None where the deployment offers no safe way to.
+
+    - local master → ``localCheckpoint()``: driver and executors share the
+      process, so no executor loss can lose the blocks; they are freed with
+      their RDD once the returned frame is dropped and collected;
+    - a configured checkpoint dir → reliable ``checkpoint()``: survives an
+      executor loss, data in the checkpoint dir;
+    - otherwise None. ``localCheckpoint`` truncates lineage, so on a
+      cluster an executor loss would fail every later action where
+      recomputing would have succeeded. Callers that can release what they
+      hold fall back to ``cache()``; the others keep their plan as is — a
+      ``cache()`` nobody unpersists leaks one cache entry per call."""
+    sc = df.sparkSession.sparkContext
+    if sc.master.startswith("local"):
+        return df.localCheckpoint()
+    if sc.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return None
