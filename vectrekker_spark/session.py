@@ -81,10 +81,10 @@ def get_spark(
         # Every Python task (UDF, mapInPandas, a createDataFrame(list) scan)
         # starts with importlib.invalidate_caches(), which makes each
         # zipimporter re-read its archive's central directory — pyspark.zip's
-        # 1,328 entries, 16 reads per task, CPU-bound. Profiled at 35-190 ms
-        # of a ~100 ms one-row Python task; the worker_daemon wrapper re-reads
-        # an archive only when its (mtime, size, inode) changed (one-row
-        # Python job 100 → 67 ms, 282 → 95 ms on a slower 4-core box).
+        # 1,328 entries, 16 reads per task, CPU-bound: profiled at 35-190 ms
+        # per task. The worker_daemon wrapper re-reads an archive only when
+        # its (mtime, size, inode) changed: a one-row Python RDD job fell
+        # 309 → 98 ms on a 4-core box (JVM one-row job: ~90 ms).
         # Imports resolve exactly as before. The daemon module must be
         # importable by the workers whatever the driver's cwd, hence the
         # package root on the executor PYTHONPATH (merged with Spark's own).
