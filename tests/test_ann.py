@@ -1,11 +1,11 @@
-"""Approximate-NN recall properties (SURVEY.md §2.2 V5, §5.2): IVF and MLlib
-LSH vs the exact brute-force result.
+"""Approximate-NN recall properties (SURVEY.md §2.2 V5, §5.2): IVF vs the
+exact brute-force result.
 
-Bars: LSH ≥ 0.8 (measured 1.0 at the tuned defaults) and default (kmeans)
-IVF ≥ 0.8 at n_probe=5/10 cells. The fixtures are near-uniform random 64-dim
-vectors — the hardest case for cell-based ANN since true neighbors spread
-across cells; the measured ceiling at lower probe counts is ~0.67 (n_probe=3)
-/ ~0.79 (n_probe=4), which is why the 0.8-bar assertion probes 5. The stride
+Bar: default IVF ≥ 0.8 at n_probe=5/10 cells. The fixtures are
+near-uniform random 64-dim vectors — the hardest case for cell-based ANN
+since true neighbors spread across cells; the measured ceiling at lower
+probe counts is ~0.67 (n_probe=3) / ~0.79 (n_probe=4), which is why the
+0.8-bar assertion probes 5. The stride
 build keeps a lower sanity bar: it exists for cross-version determinism, not
 recall.
 """
@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vectrekker_spark.operators.ann import ivf_build, ivf_search, lsh_model, lsh_nn
+from vectrekker_spark.operators.ann import ivf_build, ivf_search
 from vectrekker_spark.operators.knn import knn_join, topk_nn
 
 K = 10
@@ -73,15 +73,6 @@ def test_ivf_stride_sanity_recall(spark, em):
     approx = ivf_search(_queries(em), em, centroids, assign, k=K, n_probe=3).collect()
     recall = _recall(approx, exact)
     assert recall >= 0.5, f"stride-IVF recall@{K} = {recall}"
-
-
-def test_lsh_recall_meets_declared_bar(spark, em):
-    qvec = em.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    exact_ids = {r["vec_id"] for r in topk_nn(em, qvec, k=K).collect()}
-    model, prepared = lsh_model(em)  # tuned defaults
-    approx_ids = {r["vec_id"] for r in lsh_nn(model, prepared, qvec, k=K).collect()}
-    recall = len(exact_ids & approx_ids) / K
-    assert recall >= 0.8, f"LSH recall@{K} = {recall}"
 
 
 @pytest.mark.slow
@@ -970,19 +961,20 @@ def test_torn_pointer_write_falls_back_to_previous_version(spark, em, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from vectrekker_spark.operators.ann import _pointer_tokens, ivf_load, ivf_save
+    from vectrekker_spark.commit import pointer_tokens
+    from vectrekker_spark.operators.ann import ivf_load, ivf_save
 
     sub = em.filter(F.col("vec_id") < 50)
     path = str(tmp_path / "tornptr")
     centroids, assign = ivf_build(sub, n_centroids=2, method="stride")
     ivf_save(centroids, assign, sub, path)
-    good = _pointer_tokens(path)
+    good = pointer_tokens(path)
     top = max(
         int(d.split("-v")[1]) for d in os.listdir(path) if d.startswith("CURRENT-v")
     )
     with open(os.path.join(path, f"CURRENT-v{top + 1}"), "w") as f:
         f.write("cells-v999 centroids-v999")  # no newline: uncommitted
-    assert _pointer_tokens(path) == good
+    assert pointer_tokens(path) == good
     _, cells = ivf_load(spark, path)
     assert cells.count() == sub.count()
 
@@ -999,12 +991,8 @@ def test_prune_after_torn_pointer_keeps_committed_grace(spark, em, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from vectrekker_spark.operators.ann import (
-        _pointer_tokens,
-        ivf_compact,
-        ivf_load,
-        ivf_save,
-    )
+    from vectrekker_spark.commit import pointer_tokens
+    from vectrekker_spark.operators.ann import ivf_compact, ivf_load, ivf_save
 
     sub = em.filter(F.col("vec_id") < 50)
     path = str(tmp_path / "tornprune")
@@ -1028,7 +1016,7 @@ def test_prune_after_torn_pointer_keeps_committed_grace(spark, em, tmp_path):
     committed = sorted(pointers.values())
     # new live pointer + the committed grace pointer both present
     assert len(committed) == 2 and committed[0] == top, pointers
-    assert _pointer_tokens(path)  # and the index still resolves
+    assert pointer_tokens(path)  # and the index still resolves
     _, cells = ivf_load(spark, path)
     assert cells.count() == sub.count()
 
@@ -1055,95 +1043,6 @@ def test_similarity_join_rejects_zero_dim_vectors(spark):
         )
     with pytest.raises(ValueError, match="zero-dimension"):
         similarity_join_self_auto(df, 0.5, "vec_id", "embedding")
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_pointer_prune_never_deletes_newer_committed_pointer(tmp_path):
-    """Two racing flips: the slow writer wins the create-exclusive on v1
-    but stalls; the fast writer bumps to v2, commits, and prunes first.
-    When the slow writer (k=1) then runs ITS prune, it must not remove
-    the racer's newer committed
-    CURRENT-v2 (advisor r8 finding: highest-wins means the newest
-    committed pointer is the index — deleting it rolls the index back,
-    possibly to artifacts the racer's own prune already reclaimed)."""
-    import os
-
-    from vectrekker_spark.operators.ann import (
-        _pointer_tokens,
-        _prune_pointers,
-    )
-
-    path = str(tmp_path / "race")
-    os.makedirs(path)
-    # committed history: v0 (old), v1 (slow writer A's flip), v2 (fast
-    # writer B's flip — already committed AND pruned: B kept v2 + grace v1)
-    for v, tokens in [(0, "cells-v0 centroids-v0"),
-                      (1, "cells-v1 centroids-v1"),
-                      (2, "cells-v2 centroids-v2")]:
-        with open(os.path.join(path, f"CURRENT-v{v}"), "w") as f:
-            f.write(tokens + "\n")
-
-    _prune_pointers(path, 1)  # slow writer A finishes second with k=1
-
-    survivors = sorted(
-        d for d in os.listdir(path) if d.startswith("CURRENT-v")
-    )
-    assert "CURRENT-v2" in survivors, survivors  # racer's pointer intact
-    assert "CURRENT-v1" in survivors, survivors  # A's own pointer intact
-    # highest-wins read still resolves to the racer's (newest) version
-    assert _pointer_tokens(path) == ["cells-v2", "centroids-v2"]
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_pointer_prune_leaves_midwrite_higher_version_alone(tmp_path):
-    """A higher version WITHOUT a commit marker may be a racer mid-write,
-    not a torn crash — the lower-k prune must leave it; only a LATER flip
-    (whose k lands above it) may reclaim it."""
-    import os
-
-    from vectrekker_spark.operators.ann import _prune_pointers
-
-    path = str(tmp_path / "midwrite")
-    os.makedirs(path)
-    with open(os.path.join(path, "CURRENT-v0"), "w") as f:
-        f.write("cells-v0 centroids-v0\n")
-    with open(os.path.join(path, "CURRENT-v1"), "w") as f:
-        f.write("cells-v1 centroids-v1")  # no newline: still being written
-
-    _prune_pointers(path, 0)
-
-    assert os.path.exists(os.path.join(path, "CURRENT-v1"))
-    assert os.path.exists(os.path.join(path, "CURRENT-v0"))
-
-
-@pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)
-def test_artifact_prune_keeps_every_pointed_version(tmp_path):
-    """_prune_versions honors EVERY committed pointer on disk, not just the
-    caller's explicit keep-set: a racer that committed a higher pointer
-    between our flip and our prune keeps its cells/centroids dirs (advisor
-    r8: without this, the slow writer's keep-set reclaims the fast
-    writer's committed artifacts and its surviving pointer dangles)."""
-    import os
-
-    from vectrekker_spark.operators.ann import _prune_versions
-
-    path = str(tmp_path / "artifacts")
-    os.makedirs(path)
-    for d in ["cells-v0", "centroids-v0", "cells-v7", "centroids-v7",
-              "cells-v3", "centroids-v3"]:
-        os.makedirs(os.path.join(path, d))
-        with open(os.path.join(path, d, "part-0.parquet"), "w") as f:
-            f.write("x")
-    # racer's committed pointer references the v7 pair
-    with open(os.path.join(path, "CURRENT-v5"), "w") as f:
-        f.write("cells-v7 centroids-v7\n")
-
-    # our keep-set only knows our own live pair (v0); v3 is a true orphan
-    _prune_versions(path, {"cells-v0", "centroids-v0"})
-
-    left = set(os.listdir(path))
-    assert {"cells-v0", "centroids-v0", "cells-v7", "centroids-v7"} <= left
-    assert "cells-v3" not in left and "centroids-v3" not in left
 
 
 # --- method="lloyd": the r15 driver-side quantizer fit ---------------------

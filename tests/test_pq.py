@@ -160,21 +160,31 @@ def test_pq_save_load_roundtrip_and_guards(spark, em, pq, tmp_path):
     b = sorted(map(tuple, pq_search(q, codes2, cb2, k=5).collect()))
     assert a == b
 
-    # torn or version-less meta → loud remediation; absent meta → reads
-    # as no index
-    import json
+    # a torn (newline-less) top pointer → the previous committed version;
+    # a corrupt meta the pointer names → loud error; no pointer → reads
+    # as no index, naming the rebuild verb
     import os
 
-    with open(f"{path}/pq_meta.json", "w") as f:
-        json.dump({k: v for k, v in meta.items() if k != "version"}, f)
-    with pytest.raises(ValueError, match="no artifact version"):
-        pq_load(spark, path)
-    with open(f"{path}/pq_meta.json", "w") as f:
+    from vectrekker_spark.commit import pointer_tokens
+
+    live = pointer_tokens(path)
+    with open(f"{path}/CURRENT-v1", "w") as f:
+        f.write("codebooks-v9 codes-v9 meta-v9.json")
+    _, codes3, meta3 = pq_load(spark, path)
+    assert meta3 == meta and codes3.count() == codes.count()
+    meta_file = next(t for t in live if t.startswith("meta-"))
+    with open(f"{path}/{meta_file}") as f:
+        good = f.read()
+    with open(f"{path}/{meta_file}", "w") as f:
         f.write('{"m": 16')
-    with pytest.raises(ValueError, match="re-run\\s+pq_save"):
+    with pytest.raises(ValueError):
         pq_load(spark, path)
-    os.remove(f"{path}/pq_meta.json")
-    with pytest.raises(ValueError, match="absent"):
+    with open(f"{path}/{meta_file}", "w") as f:
+        f.write(good)
+    for d in os.listdir(path):
+        if d.startswith("CURRENT-v"):
+            os.remove(f"{path}/{d}")
+    with pytest.raises(ValueError, match=r"no index at .*CLI: pq-build"):
         pq_load(spark, path)
 
 
@@ -395,18 +405,19 @@ def test_ivfpq_persistence_guards(spark, em, pq, tmp_path):
     cb, codes = pq
     centroids, assign = ivf_build(em, n_centroids=5, assign_k=1)
     path = str(tmp_path / "g")
-    # no committed meta → absent
+    # no committed pointer → no index, naming the rebuild verb
     os.makedirs(path, exist_ok=True)
-    with pytest.raises(ValueError, match="absent"):
+    with pytest.raises(ValueError, match=r"no index at .*CLI: ivfpq-build"):
         ivfpq_load(spark, path)
     ivfpq_save(path, cb, centroids, assign, codes)
-    # torn meta refuses loudly
-    with open(os.path.join(path, "ivfpq_meta.json"), "w") as f:
-        f.write('{"version": 0, "m":')
-    with pytest.raises(ValueError, match="corrupt"):
-        ivfpq_load(spark, path)
-    ivfpq_save2 = ivfpq_save(path, cb, centroids, assign, codes)  # heal
-    del ivfpq_save2
+    # a torn (newline-less) top pointer → the committed version still loads
+    with open(os.path.join(path, "CURRENT-v1"), "w") as f:
+        f.write("codebooks-v9 centroids-v9 codes-v9")
+    assert ivfpq_load(spark, path)[3]["version"] == 0
+    # the next save flips past the torn pointer and reclaims it
+    assert ivfpq_save(path, cb, centroids, assign, codes)["version"] == 1
+    assert not os.path.exists(os.path.join(path, "CURRENT-v1"))
+    assert ivfpq_load(spark, path)[3]["version"] == 1
     # wrong-dim append refuses before writing anything
     bad = em.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
     with pytest.raises(ValueError, match="dim 32"):
@@ -717,8 +728,8 @@ def test_flat_pq_rotated_save_load_search(spark, tmp_path):
 
 def test_ivfpq_compact_reclaims_duplicates(spark, em, pq, tmp_path):
     """Re-appended batches leave (cid, id) duplicates; compact reclaims
-    them in a NEW version (meta flips, grace kept), and search results
-    are identical before and after."""
+    them in a NEW codes version (pointer flips, grace kept), and search
+    results are identical before and after."""
     import os
 
     from vectrekker_spark.operators.ann import assign_centroids, ivf_build
@@ -801,8 +812,8 @@ def test_pq_resave_is_versioned_and_prunes_with_grace(spark, pq, tmp_path):
     assert (m0["version"], m1["version"], m2["version"]) == (0, 1, 2)
     listing = sorted(os.listdir(path))
     # v2 (live) + v1 (grace) survive; v0 pruned
-    assert f"codes-v2.parquet" in listing and f"codes-v1.parquet" in listing
-    assert "codes-v0.parquet" not in listing
+    assert "codes-v2" in listing and "codes-v1" in listing
+    assert "codes-v0" not in listing
     _, codes2, meta2 = pq_load(spark, path)
     assert meta2["version"] == 2 and codes2.count() == 5
 
@@ -821,7 +832,8 @@ def test_ivfpq_save_grace_protects_committed_not_torn(spark, pq, tmp_path):
     path = str(tmp_path / "ivfpq")
     m0 = ivfpq_save(path, cb, centroids, assign, codes)
     assert m0["version"] == 0
-    # simulate a TORN later save: artifacts for v1 exist, meta still v0
+    # simulate a TORN later save: artifacts for v1 exist, the pointer
+    # still names v0
     os.makedirs(os.path.join(path, "codes-v1"), exist_ok=True)
     open(os.path.join(path, "codes-v1", "part-junk"), "w").write("x")
     m2 = ivfpq_save(path, cb, centroids, assign, codes.limit(10))

@@ -224,7 +224,7 @@ def cmd_pq_build(args: argparse.Namespace) -> int:
     """Persisted product-quantization index over the vector index
     (operators/pq): train codebooks, encode to m-byte codes, save with
     geometry-pinned meta. Search with `search --pq DIR`."""
-    from vectrekker_spark.operators.pq import pq_encode, pq_save, pq_train
+    from vectrekker_spark.operators.pq import pq_encode, pq_load, pq_save, pq_train
 
     spark = _spark()
     index = spark.read.parquet(args.index).select("id", "embedding")
@@ -248,9 +248,7 @@ def cmd_pq_build(args: argparse.Namespace) -> int:
         return 2
     codes = pq_encode(enc_src, cb, id_col="id")
     meta = pq_save(cb, codes, args.out, id_col="id", rotation=rotation)
-    n = spark.read.parquet(
-        f"{args.out}/codes-v{meta['version']}.parquet"
-    ).count()
+    n = pq_load(spark, args.out)[1].count()
     print(
         f"pq index at {args.out}: {n} vectors, m={meta['m']} x "
         f"2^{meta['nbits']} codebooks, dim {meta['dim']} "
@@ -267,8 +265,7 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
     --incremental and an existing index, only vectors NOT yet coded are
     assigned + encoded under the PINNED codebooks (ivfpq_append — the
     reference's changed-only semantics applied to the code table)."""
-    import os
-
+    from vectrekker_spark.commit import index_exists
     from vectrekker_spark.operators.pq import (
         ivfpq_append,
         ivfpq_load,
@@ -279,9 +276,7 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
 
     spark = _spark()
     index = spark.read.parquet(args.index).select("id", "embedding")
-    if args.incremental and os.path.exists(
-        os.path.join(args.out, "ivfpq_meta.json")
-    ):
+    if args.incremental and index_exists(args.out):
         _, _, codes, meta = ivfpq_load(spark, args.out)
         new = index.join(codes.select("id"), "id", "left_anti")
         n_new = new.count()
@@ -337,16 +332,10 @@ def cmd_ann_build(args: argparse.Namespace) -> int:
     vector index table — the reference's create-if-absent + changed-only
     semantics (`vectrekker/main.py:143-147,162-167`) applied to the ANN
     structure itself."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from vectrekker_spark.operators.ann import (
-        index_exists,
-        ivf_append,
-        ivf_build,
-        ivf_save,
-    )
+    from vectrekker_spark.commit import index_exists
+    from vectrekker_spark.operators.ann import ivf_append, ivf_build, ivf_save
 
     spark = _spark()
     index = spark.read.parquet(args.index).select("id", "embedding")

@@ -2,14 +2,12 @@
 for the reference's top-k cosine query when brute force (operators/knn.py)
 is too expensive.
 
-Two strategies:
-- IVF (inverted-file): deterministic coarse centroids → assign every corpus
-  vector to its nearest centroid (one kNN join against ~√N centroids) →
-  at query time probe only the n_probe nearest cells. The partition-pruning
-  idea applied to vector search: at 100 TB the assignment table is written
-  partitioned by centroid_id, so a probe reads only its cells' files.
-- LSH via Spark MLlib BucketedRandomProjectionLSH on L2-normalized vectors
-  (cosine ≡ euclidean on the unit sphere): hash-bucket join, no training.
+IVF (inverted-file): deterministic coarse centroids → assign every corpus
+vector to its nearest centroid (one kNN join against ~√N centroids) → at
+query time probe only the n_probe nearest cells. The partition-pruning idea
+applied to vector search: at 100 TB the assignment table is written
+partitioned by centroid_id, so a probe reads only its cells' files. A saved
+index commits through commit.py's versioned pointer.
 """
 
 from __future__ import annotations
@@ -17,6 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectrekker_spark.commit import (
+    index_exists,  # noqa: F401  (part of this module's index API)
+    next_version,
+    publish,
+    read_meta,
+    resolve,
+    write_meta,
+)
 from vectrekker_spark.functions.vector import l2_normalize
 from vectrekker_spark.operators.knn import knn_join
 from vectrekker_spark.session import local_frame, truncate_lineage
@@ -538,6 +544,12 @@ def _exact_rerank(
     return _topk_by_score(cands, k, id_col, vec_col)
 
 
+# IVF artifacts: cells-v{N} (partitioned by cid), centroids-v{N} and
+# meta-v{N}.json, committed through commit.py's versioned pointer (see the
+# versioned-layout note there) as "cells-vN centroids-vM meta-vK.json".
+_KINDS = ("cells", "centroids", "meta")
+
+
 def ivf_save(
     centroids: DataFrame,
     assignments: DataFrame,
@@ -557,9 +569,9 @@ def ivf_save(
       partition-pruning promise in the module docstring, made real). The
       cell rows carry the vectors themselves (inverted lists), so
       probe-time search never joins back to the corpus table. Rewrites
-      land in a NEW version and atomically flip CURRENT (see the
-      versioned-layout note), so concurrent readers never see a missing
-      table.
+      land in a NEW version and atomically flip CURRENT (the
+      versioned-layout note in commit.py), so concurrent readers never
+      see a missing table.
     - ``{path}/meta-v{N}.json``: (id_col, vec_col, assign_k, quantized,
       cells_schema)
       so append / search consumers recover the build parameters instead of
@@ -578,25 +590,18 @@ def ivf_save(
     file per cell instead of n_tasks × n_cells small files; a skewed hot
     cell becomes one large (still splittable) parquet file.
 
-    Single-writer contract (same as ivf_append/ivf_compact): index
-    REWRITES must be serialized — two concurrent rebuilds can be handed
-    the same artifact version by _next_version, and an unflipped writer's
-    artifact dirs are not protected from the other's prune. Readers are
-    always safe; a contract violation degrades to pointer-level
-    last-writer-wins (committed pointers and their artifacts are never
-    deleted by a racer — see _prune_pointers/_referenced_names), not to a
-    broken index.
+    Single-writer contract (same as ivf_append/ivf_compact, stated in
+    commit.py): index REWRITES must be serialized; readers are always
+    safe.
     """
-    spark = centroids.sparkSession
     cells = _cell_rows(assignments, corpus, id_col, vec_col, quantize)
     # versioned write + pointer flip: a REBUILD over an existing index keeps
-    # the old cells version readable for in-flight searches (see the
-    # versioned-layout note below) instead of overwriting under them. The
-    # centroids version the rebuild INTRODUCES is written under the same
-    # version number — never in place over the live centroids, which a
-    # reader's in-flight plan (or its old-cells grace copy) still pairs with.
-    prev = _pointer_tokens(path)
-    version = _next_version(path)
+    # the old version readable for in-flight searches (commit.py's
+    # versioned-layout note) instead of overwriting under them. The
+    # centroids and meta the rebuild INTRODUCES share the new version
+    # number — never in place over the live ones, which a reader's
+    # in-flight plan (or its old-cells grace copy) still pairs with.
+    version = next_version(path, _KINDS)
     new_cells, new_centroids = f"cells-v{version}", f"centroids-v{version}"
     new_meta = f"meta-v{version}.json"
     centroids.write.mode("overwrite").parquet(f"{path}/{new_centroids}")
@@ -611,8 +616,9 @@ def ivf_save(
     # order (data columns first, partition col cid last) so the fallback
     # table matches a normal partitioned read column-for-column.
     read_order = [c for c in cells.columns if c != "cid"] + ["cid"]
-    _write_meta(
+    write_meta(
         path,
+        new_meta,
         {
             "id_col": id_col,
             "vec_col": vec_col,
@@ -620,10 +626,8 @@ def ivf_save(
             "quantized": quantize,
             "cells_schema": cells.select(read_order).schema.json(),
         },
-        new_meta,
     )
-    _flip_current(path, new_cells, new_centroids, new_meta)
-    _prune_versions(path, {new_cells, new_centroids, new_meta, *prev})
+    publish(path, [new_cells, new_centroids, new_meta], _KINDS)
 
 
 def _cell_rows(
@@ -658,118 +662,17 @@ def ivf_meta(spark, path: str) -> dict:
     version's meta file, so metadata can never be a crash ahead of or
     behind the tables it describes. Raises ValueError when ``path`` holds
     no committed index (see _current_names)."""
-    return _meta_named(path, _current_names(path)[2])
-
-
-def _meta_named(path: str, meta_name: str) -> dict:
-    """The meta file an already-read pointer names. A missing file raises
-    (OSError) — the metadata analog of a vanished cells dir."""
-    import json as _json
-    import os
-
-    with open(os.path.join(path, meta_name)) as f:
-        return {k: v for k, v in _json.load(f).items() if v is not None}
-
-
-def _write_meta(path: str, meta: dict, filename: str) -> None:
-    """Write an index meta sidecar file. Rename-free on purpose (object
-    stores have no rename): versioned filenames (meta-v{N}.json) become
-    live ONLY when a later pointer flip references them, so no reader can
-    observe the file mid-write — a crash before the flip leaves an
-    unreferenced orphan that the next rewrite prunes. Version numbers never
-    repeat (the paired cells-v{N} dir exists before this is called, so
-    _next_version always advances past N), hence no torn-overwrite risk."""
-    import json as _json
-    import os
-
-    with open(os.path.join(path, filename), "w") as f:
-        _json.dump(meta, f)
-
-
-# --- versioned cells layout ------------------------------------------------
-# The cells table lives in {path}/cells-v{N}; the highest {path}/CURRENT-v{K}
-# pointer file names the live version (immutable create-exclusive writes,
-# highest-wins reads — rename-free, see _flip_current/_pointer_tokens for the
-# object-store mapping). Rewrites (compact, delete, full rebuild)
-# write a complete NEW version and flip the pointer, so concurrent READERS
-# never observe a missing table: a plan that resolved the old directory keeps
-# reading its files — the previous version is retained as a grace copy until
-# the NEXT rewrite prunes it. Reader staleness is therefore bounded at one
-# rewrite; a session holding a plan across two rewrites must re-ivf_load.
-# Centroids and metadata version the same way: a full REBUILD writes
-# {path}/centroids-v{N} and {path}/meta-v{N}.json beside cells-v{N} (never
-# in place over the live artifacts), and the pointer records the TRIPLE
-# explicitly ("cells-vN centroids-vM meta-vK.json" in one atomic file) —
-# compact/delete flips carry the unchanged centroids/meta names forward, so
-# an aborted rebuild's orphan artifacts can never be mispaired with a later
-# cells version and metadata can never be a crash ahead of or behind the
-# tables it describes (orphans are unreferenced garbage pruned by the next
-# successful rewrite). Any other layout — no pointer, or a pointer with
-# fewer than three tokens — is rejected (_current_names). The pointer
-# protocol itself is object-store safe (immutable PUTs
-# + LIST-highest; no rename anywhere in the live path) — but for the DATA
-# rewrites prefer the lakehouse's own OPTIMIZE/DELETE on an object store.
-
-
-def _pointer_versions(path: str) -> list[int]:
-    """Versions of every ``CURRENT-v{K}`` pointer file, descending."""
-    import os
-    import re
-
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return []
-    return sorted(
-        (
-            int(m.group(1))
-            for m in (re.fullmatch(r"CURRENT-v(\d+)", n) for n in names)
-            if m
-        ),
-        reverse=True,
-    )
-
-
-def _pointer_tokens(path: str) -> list[str]:
-    """Live pointer tokens (one logical read); [] when absent.
-
-    Rename-free highest-wins protocol (object-store safe): each flip writes
-    an immutable ``CURRENT-v{K}`` file with a monotonically increasing K —
-    never overwriting or renaming — and readers LIST the directory and read
-    the highest K. A trailing newline is the commit marker: a file without
-    it is a torn local write (object stores PUT atomically, so this only
-    guards plain filesystems) and the reader falls back to the next-lower
-    version, which still names a live-or-grace artifact set."""
-    for v in _pointer_versions(path):
-        try:
-            with open(f"{path}/CURRENT-v{v}") as f:
-                raw = f.read()
-        except OSError:
-            continue  # pruned between the listing and the read: try older
-        if raw.endswith("\n") and raw.split():
-            return raw.split()
-    return []
+    return read_meta(path, _current_names(path)[2])
 
 
 def _current_names(path: str) -> tuple[str, str, str]:
     """(cells_dirname, centroids_dirname, meta_filename) of the live
     version — ONE pointer read, so the tables and their metadata can never
-    come from different versions. Every writer commits a three-token
-    pointer ("cells-vN centroids-vM meta-vK.json"); a path without one is
-    no index, or one laid out by an older release, and raises ValueError."""
-    tokens = _pointer_tokens(path)
-    if len(tokens) < 3:
-        raise ValueError(
-            f"no IVF index at {path}: expected a committed CURRENT-v* pointer "
-            f"naming cells, centroids and meta, found {tokens or 'none'}; "
-            "rebuild the index with ivf_save (CLI: ann-build)"
-        )
-    return tokens[0], tokens[1], tokens[2]
-
-
-def index_exists(path: str) -> bool:
-    """True when a committed pointer lives at ``path``."""
-    return bool(_pointer_tokens(path))
+    come from different versions. A path without a committed pointer
+    naming all three is no IVF index, or one laid out by an older release,
+    and raises ValueError."""
+    names = resolve(path, _KINDS, "ivf_save (CLI: ann-build)")
+    return names["cells"], names["centroids"], names["meta"]
 
 
 def current_pair(path: str) -> tuple[str, str]:
@@ -785,160 +688,6 @@ def cells_dirname(path: str) -> str:
 def cells_location(path: str) -> str:
     """Full path of the live cells table (what spark.read should scan)."""
     return f"{path}/{cells_dirname(path)}"
-
-
-def _next_version(path: str) -> int:
-    import os
-    import re
-
-    try:
-        versions = [
-            int(m.group(2))
-            for m in (
-                re.fullmatch(r"(cells|centroids)-v(\d+)", d)
-                for d in os.listdir(path)
-            )
-            if m
-        ]
-    except OSError:
-        versions = []
-    return max(versions, default=-1) + 1
-
-
-def _flip_current(
-    path: str, cells_name: str, centroids_name: str, meta_name: str
-) -> None:
-    """Atomically point the index at the (cells, centroids, meta) triple.
-
-    Writes a NEW immutable ``CURRENT-v{K}`` pointer file (K = highest
-    existing + 1) via create-exclusive — no rename, no overwrite — so the
-    same protocol maps onto an object store: every pointer is a single
-    atomic PUT (use If-None-Match/conditional-PUT for the create-exclusive
-    guarantee there) and readers take the highest listed version. Two
-    racing writers land distinct versions and highest-wins gives
-    last-writer-wins, exactly the semantics the old os.replace flip had.
-    After a successful flip the previous-but-one pointers are pruned (the
-    immediately-previous one is kept as the grace pointer, matching the
-    grace artifact set). Pruning never
-    touches versions ABOVE this flip's own K: a concurrent flip that
-    claimed a higher version may have committed (deleting its pointer
-    would roll the index back) or may still be mid-write (its file looks
-    torn only because the racer hasn't finished) — either way it is the
-    racer's, not ours. A genuinely torn higher version from a crash is
-    cleaned by the NEXT flip, whose K lands above it."""
-    import os
-
-    content = f"{cells_name} {centroids_name} {meta_name}\n"
-    versions = _pointer_versions(path)
-    k = (versions[0] + 1) if versions else 0
-    for _ in range(1000):  # bounded: concurrent flips each bump K once
-        try:
-            with open(os.path.join(path, f"CURRENT-v{k}"), "x") as f:
-                f.write(content)
-            break
-        except FileExistsError:
-            k += 1
-    else:
-        raise OSError(
-            f"could not claim a pointer version under {path}; the already-"
-            f"written artifact set ({cells_name}, {centroids_name}, "
-            f"{meta_name}) is left unreferenced "
-            f"and will be reclaimed by the next successful rewrite's prune"
-        )
-    _prune_pointers(path, k)
-
-
-def _prune_pointers(path: str, k: int) -> None:
-    """Prune pointer files after a flip that claimed version ``k``: keep
-    ``k`` plus the highest COMMITTED older one as the grace pointer. The
-    cutoff must consider commit markers, not raw version numbers — with a
-    TORN CURRENT-v{k-1} left by a crashed flip, a numeric ``< k-1`` cutoff
-    would delete the last readable pointer and leave only the unreadable
-    torn file (exactly the crash case the protocol exists for). Torn files
-    ABOVE grace but BELOW ``k`` are removed too, so they can't become the
-    permanent top of the listing; versions above ``k`` belong to a
-    concurrent racer that claimed later — committed (deleting it would
-    roll the index back) or still mid-write (it only LOOKS torn) — and are
-    never removed here. A genuinely torn higher version from a crash is
-    cleaned by the next flip, whose ``k`` lands above it."""
-    import os
-
-    grace = None
-    for old in _pointer_versions(path):
-        if old >= k or grace is not None:
-            continue
-        if _pointer_committed(path, old):
-            grace = old
-    for old in _pointer_versions(path):
-        if old >= k or old == grace:
-            continue
-        try:
-            os.remove(os.path.join(path, f"CURRENT-v{old}"))
-        except OSError:
-            pass
-
-
-def _pointer_committed(path: str, version: int) -> bool:
-    """True when CURRENT-v{version} is fully written (trailing-newline
-    commit marker, ≥1 token)."""
-    try:
-        with open(f"{path}/CURRENT-v{version}") as f:
-            raw = f.read()
-    except OSError:
-        return False
-    return raw.endswith("\n") and bool(raw.split())
-
-
-def _referenced_names(path: str) -> set[str]:
-    """Artifact names referenced by EVERY committed pointer still present.
-    Prune keep-sets union this in so a concurrent
-    flip that committed a HIGHER pointer version between our flip and our
-    prune keeps its cells/centroids/meta dirs — without it, the slower
-    writer's explicit live+grace keep-set would reclaim the faster
-    writer's committed artifacts and leave its surviving pointer dangling.
-
-    Scope: this protects COMMITTED racers only. A rewrite that has written
-    artifact dirs but not yet flipped its pointer is invisible here (and
-    _next_version can hand two concurrent rebuilds the same artifact
-    version) — index REWRITES therefore carry the single-writer contract
-    ivf_compact states; the commit-level protection below is what makes a
-    violated contract degrade to last-writer-wins on the POINTER rather
-    than a deleted live index."""
-    import os
-
-    names: set[str] = set()
-    for v in _pointer_versions(path):
-        if _pointer_committed(path, v):
-            try:
-                with open(f"{path}/CURRENT-v{v}") as f:
-                    names.update(f.read().split())
-            except OSError:
-                pass
-    return names
-
-
-def _prune_versions(path: str, keep: set[str]) -> None:
-    """Remove managed artifacts (versioned cells/centroids dirs and meta
-    files) not in ``keep``. Callers pass the EXPLICIT
-    set of names the live and grace versions reference, so an aborted
-    rebuild's orphan tables are reclaimed here and a kept cells version
-    always keeps its paired centroids and metadata; every pointer still on
-    disk is additionally honored via ``_referenced_names`` (racer safety)."""
-    keep = keep | _referenced_names(path)
-    import os
-    import re
-    import shutil
-
-    for d in os.listdir(path):
-        if d in keep:
-            continue
-        if re.fullmatch(r"(cells|centroids)-v(\d+)", d):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        elif re.fullmatch(r"meta-v(\d+)\.json", d):
-            try:
-                os.remove(os.path.join(path, d))
-            except OSError:
-                pass
 
 
 def _dir_has_data_files(location: str) -> bool:
@@ -1014,7 +763,7 @@ def ivf_load(spark, path: str) -> tuple[DataFrame, DataFrame]:
     # one pointer read for both tables AND the metadata: a rebuild flipping
     # CURRENT mid-load must not mix artifacts from two versions
     cells_name, centroids_name, meta_name = _current_names(path)
-    schema_json = _meta_named(path, meta_name).get("cells_schema")
+    schema_json = read_meta(path, meta_name).get("cells_schema")
     centroids = spark.read.parquet(f"{path}/{centroids_name}")
     cells = _read_cells(spark, f"{path}/{cells_name}", schema_json).withColumn(
         "cid", F.col("cid").cast("long")
@@ -1051,7 +800,7 @@ def ivf_append(
     # one pointer read: the centroids used for assignment, the metadata,
     # and the cells dir appended into must all belong to the same version
     name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(path, meta_name)
+    meta = read_meta(path, meta_name)
     id_col = id_col or meta.get("id_col", "vec_id")
     vec_col = vec_col or meta.get("vec_col", "embedding")
     assign_k = assign_k or meta.get("assign_k") or 1
@@ -1098,7 +847,7 @@ def ivf_delete(spark, path: str, ids: DataFrame) -> int:
     ivf_append, and on an object store prefer the lakehouse's own
     DELETE/MERGE. Returns rows removed."""
     live_name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(path, meta_name)
+    meta = read_meta(path, meta_name)
     cells = _read_cells(
         spark, f"{path}/{live_name}", meta.get("cells_schema")
     ).withColumn("cid", F.col("cid").cast("long"))
@@ -1111,7 +860,7 @@ def ivf_delete(spark, path: str, ids: DataFrame) -> int:
     remain = cells.filter(F.col("cid").isin(list(affected))).join(
         ids.select(id_col), id_col, "left_anti"
     )
-    version = _next_version(path)
+    version = next_version(path, _KINDS)
     new_name = f"cells-v{version}"
     # rewritten (possibly now-empty) partitions land in the new version...
     remain.repartition(F.col("cid")).write.mode("overwrite").partitionBy(
@@ -1123,8 +872,7 @@ def ivf_delete(spark, path: str, ids: DataFrame) -> int:
         f"{path}/{live_name}", f"{path}/{new_name}", skip_cids=affected
     )
     # centroids/meta are untouched: the flip carries the live names forward
-    _flip_current(path, new_name, centroids_name, meta_name)
-    _prune_versions(path, {new_name, live_name, centroids_name, meta_name})
+    publish(path, [new_name, centroids_name, meta_name], _KINDS)
     return removed
 
 
@@ -1152,8 +900,8 @@ def ivf_compact(spark, path: str) -> int:
     """Rewrite the cells table dropping duplicate (cid, id) rows left by
     re-appended batches (ivf_append's at-least-once caveat) and merging the
     small files appends accrete. The deduped table lands in a NEW cells
-    version and the CURRENT pointer flips atomically (versioned-layout
-    note above): concurrent READERS keep resolving the old directory —
+    version and the CURRENT pointer flips atomically (commit.py's
+    versioned-layout note): concurrent READERS keep resolving the old directory —
     which stays on disk as the grace copy until the next rewrite — so no
     reader ever hits a missing table mid-swap. A crash before the flip
     leaves the old version live; the half-built version is unreferenced
@@ -1169,7 +917,7 @@ def ivf_compact(spark, path: str) -> int:
     staging read and the flip would be silently discarded. Serialize them
     (e.g. compact from the same scheduler that owns the append cadence)."""
     live_name, centroids_name, meta_name = _current_names(path)
-    meta = _meta_named(path, meta_name)
+    meta = read_meta(path, meta_name)
     cells = _read_cells(
         spark, f"{path}/{live_name}", meta.get("cells_schema")
     ).withColumn("cid", F.col("cid").cast("long"))
@@ -1177,7 +925,7 @@ def ivf_compact(spark, path: str) -> int:
     # writer contract (ivf_save/ivf_append): data columns are (id, vector),
     # partition col cid is appended last at read → columns[0] is the id col
     deduped = cells.dropDuplicates(["cid", cells.columns[0]])
-    version = _next_version(path)
+    version = next_version(path, _KINDS)
     new_name = f"cells-v{version}"
     deduped.repartition(F.col("cid")).write.mode("overwrite").partitionBy(
         "cid"
@@ -1186,8 +934,7 @@ def ivf_compact(spark, path: str) -> int:
     # inference, so a compact that EMPTIES the table (data-less dir) still
     # verifies cleanly — and does so independent of the pointer state
     after = spark.read.schema(cells.schema).parquet(f"{path}/{new_name}").count()
-    _flip_current(path, new_name, centroids_name, meta_name)
-    _prune_versions(path, {new_name, live_name, centroids_name, meta_name})
+    publish(path, [new_name, centroids_name, meta_name], _KINDS)
     return before - after
 
 
@@ -1355,48 +1102,3 @@ def ivf_recall_estimate(
         "sampled": row["sampled"],
     }
 
-
-def lsh_model(
-    corpus: DataFrame,
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 10,
-    vec_col: str = "embedding",
-):
-    """Fit a seeded BucketedRandomProjectionLSH on L2-normalized vectors.
-    Returns (model, transformed_corpus) with a `features` ml-vector column.
-
-    Defaults tuned on the 64-dim fixtures: 10 hash tables gives recall@10 =
-    1.0 vs exact top-k for every bucket_length in [0.5, 2.0] (3 tables gave
-    ~0.5-0.9). More tables = more candidate-union work per query, the usual
-    LSH recall/cost dial."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    prepared = corpus.withColumn(
-        "features", array_to_vector(l2_normalize(F.col(vec_col)).cast("array<double>"))
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    return lsh.fit(prepared), prepared
-
-
-def lsh_nn(model, prepared: DataFrame, query_vec, k: int = 10, id_col: str = "vec_id") -> DataFrame:
-    """Approx top-k via LSH; cosine similarity recovered from the euclidean
-    distance on the unit sphere: cos = 1 - d²/2."""
-    import numpy as np
-    from pyspark.ml.linalg import Vectors
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    nrm = np.sqrt((q * q).sum())
-    if nrm > 0:
-        q = q / nrm
-    res = model.approxNearestNeighbors(prepared, Vectors.dense(q), k)
-    return res.select(
-        F.col(id_col),
-        F.round(1.0 - F.col("distCol") * F.col("distCol") / 2.0, 6).alias("score"),
-    )

@@ -50,6 +50,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectrekker_spark.commit import write_text_atomic
+
 MAX_K = 30
 # per-byte population counts for bits_set (256-entry lookup, built once)
 _POPCOUNT8 = np.array(
@@ -558,7 +560,8 @@ def bloom_save(bloom: BloomFilter, path: str) -> None:
     old meta silently paired with new words, which could yield false
     NEGATIVES (positions computed mod old-m against bits set mod new-m),
     the one error direction a decontamination gate must not have. The new
-    meta is staged and os.replace'd so the marker itself appears whole."""
+    meta goes through commit.write_text_atomic so the marker itself
+    appears whole."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -583,10 +586,7 @@ def bloom_save(bloom: BloomFilter, path: str) -> None:
         "n_items": bloom.n_items,
         "attrs": bloom.attrs,
     }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)
+    write_text_atomic(meta_path, json.dumps(meta))
 
 
 def bloom_load(path: str) -> BloomFilter:

@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 from collections import Counter, defaultdict
 from dataclasses import dataclass, field
 
@@ -52,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectrekker_spark.commit import write_text_atomic
 from vectrekker_spark.functions.tokenize import BPE_ISH_PATTERN
 
 _MODEL_VERSION = 1
@@ -318,23 +318,15 @@ def bpe_stats(
 
 
 def bpe_save(model: BPEModel, path: str) -> None:
-    """Atomic single-file JSON save (temp + os.replace): a torn write can
-    never read back as a truncated merge list."""
+    """Atomic single-file JSON save (commit.write_text_atomic): a torn
+    write can never read back as a truncated merge list."""
     payload = {
         "version": model.version,
         "pattern": model.pattern,
         "merges": [[a, b] for a, b in model.merges],
     }
-    d = os.path.dirname(os.path.abspath(path)) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".bpe.tmp")
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(payload, f)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    write_text_atomic(path, json.dumps(payload))
 
 
 def bpe_load(path: str) -> BPEModel:

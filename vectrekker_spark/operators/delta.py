@@ -458,10 +458,3 @@ def read_partitioned_table(spark, path: str) -> DataFrame:
     """Read a bucketed table written by merge_upsert_partitioned, hiding the
     internal __bucket column."""
     return spark.read.parquet(path).drop("__bucket")
-
-
-def write_state(df: DataFrame, path: str, key: str, ts_col: str) -> None:
-    """Persist the (key, ts) state table. Overwrite of a compact table —
-    the batch analog of the reference's per-file SQLite write-back, committed
-    once per run *after* the sink write (at-least-once ordering)."""
-    df.select(F.col(key), F.col(ts_col)).write.mode("overwrite").parquet(path)

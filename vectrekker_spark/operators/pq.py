@@ -32,13 +32,27 @@ Metric: cosine via inner-product ADC over l2-normalized vectors (the
 module-wide convention — ivf_build normalizes the same way). Scores are
 round-6 like knn_join, ties broken by vec_id ascending, so results are
 deterministic and oracle-comparable.
+
+Persistence (pq_save, ivfpq_save and their load/append/compact): each
+save writes versioned artifacts and commits them through the CURRENT-v{K}
+pointer of vectrekker_spark/commit.py, the protocol the IVF index uses.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectrekker_spark.commit import (
+    artifact_version,
+    next_version,
+    publish,
+    read_meta,
+    resolve,
+    write_meta,
+)
 from vectrekker_spark.functions.vector import l2_normalize
 
 
@@ -64,18 +78,25 @@ def _codebooks_np(codebooks: DataFrame):
     return arr
 
 
-def _collect_query_vectors(
-    queries: DataFrame, qid_col: str, qvec_col: str, max_queries: int,
-    dim: int, fn: str,
+def _query_luts(
+    queries: DataFrame, cb, qid_col: str, qvec_col: str, max_queries: int,
+    fn: str, rotation=None,
 ):
-    """Bounded query collect shared by the three search entry points:
-    NULL-id / NULL-vector query rows are DROPPED (the corpus side's
-    NULL-is-never-a-neighbor rule — one junk row must not kill the job,
-    r14s3 review), each vector is validated against the index dim, and
-    the result is (qids, qs (n, dim) float64) — possibly n = 0, which
+    """Query side shared by the three ADC searches → (qids, lut).
+
+    A bounded collect: NULL-id / NULL-vector query rows are DROPPED (the
+    corpus side's NULL-is-never-a-neighbor rule — one junk row must not
+    kill the job), and each vector is validated against the index dim.
+    The vectors are l2-normalized and, for codes encoded under an OPQ
+    ``rotation``, rotated into the codes' space (probing and the refine
+    arm stay in original space — the rotation preserves cosine). Then the
+    inner-product lookup table ``lut[q, j, c] = q_j · c_jc``, so
+    ``ADC(q, x) = Σ_j lut[q, j, codes_j]``. ``qids`` may be empty, which
     callers turn into an empty result frame."""
     import numpy as np
 
+    m, _, dsub = cb.shape
+    dim = m * dsub
     qrows = (
         queries.where(
             F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull()
@@ -105,7 +126,11 @@ def _collect_query_vectors(
         qids.append(r[qid_col])
         vecs.append(v)
     qs = np.asarray(vecs) if vecs else np.zeros((0, dim))
-    return qids, qs
+    norms = np.linalg.norm(qs, axis=1, keepdims=True)
+    np.divide(qs, norms, out=qs, where=norms > 0)
+    if rotation is not None:
+        qs = qs @ np.asarray(rotation, dtype=np.float64)
+    return qids, np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
 
 
 def _empty_result(queries: DataFrame, codes: DataFrame, qid_col: str,
@@ -290,19 +315,13 @@ def pq_search(
     import numpy as np
     import pandas as pd
 
-    cb = _codebooks_np(codebooks)
-    m, kk, dsub = cb.shape
-    qids, qs = _collect_query_vectors(
-        queries, qid_col, qvec_col, max_queries, m * dsub, "pq_search"
+    qids, lut = _query_luts(
+        queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
+        "pq_search", rotation,
     )
     if not qids:
         return _empty_result(queries, codes, qid_col, id_col)
-    norms = np.linalg.norm(qs, axis=1, keepdims=True)
-    np.divide(qs, norms, out=qs, where=norms > 0)
-    if rotation is not None:
-        qs = qs @ np.asarray(rotation, dtype=np.float64)
-    # inner-product LUT: lut[q, j, c] = q_j · c_jc ; ADC(q, x) = Σ_j lut[q, j, codes_j]
-    lut = np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
+    m = lut.shape[1]
     n_q = len(qids)
 
     id_type = codes.select(id_col).schema[0].dataType.simpleString()
@@ -381,63 +400,34 @@ def pq_search(
     )
 
 
-def pq_save(
-    codebooks: DataFrame,
-    codes: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    rotation=None,
+# --------------------------------------------------------------------------
+# Persistence: versioned artifacts published through commit.py's pointer.
+# Codes are MEANINGLESS under a codebook of different geometry or without
+# the OPQ rotation they were encoded under, and a silent mismatch would not
+# error — it would return confidently wrong neighbors. So every artifact
+# of a save is written under a NEW version and one pointer flip makes the
+# set live together; the meta pins the geometry and loads refuse a
+# codebook that does not match it.
+
+_PQ_KINDS = ("codebooks", "codes", "rotation", "meta")
+_IVFPQ_KINDS = ("codebooks", "centroids", "codes", "rotation", "meta")
+_PQ_REBUILD = "pq_save (CLI: pq-build)"
+_IVFPQ_REBUILD = "ivfpq_save (CLI: ivfpq-build)"
+
+
+def _save_index(
+    path: str, kinds, codebooks: DataFrame, tables: dict, rotation, extra: dict
 ) -> dict:
-    """Persist a PQ index: {path}/codebooks-v{N}.parquet +
-    {path}/codes-v{N}.parquet + pq_meta.json pinning the geometry
-    (m, nbits, dsub, dim, id_col) and the live version N.
-
-    The meta file exists for the same reason the image-dedup band index
-    pins its band count: codes are MEANINGLESS under a codebook with
-    different geometry, and a silent mismatch would not error — it would
-    return confidently wrong neighbors. pq_load refuses mismatches and
-    torn meta loudly. Meta is written temp + os.replace (atomic), LAST,
-    and artifacts are VERSIONED (the ivfpq_save protocol): a crash
-    mid-save leaves the previous version live (or no index) — an
-    in-place overwrite would let a crashed RE-save pair the old meta
-    with half-new artifacts of identical geometry, the exact silent
-    mismatch this file exists to prevent (r14s3 review). The previous
-    committed version is kept for one save (readers may be mid-scan);
-    older and never-committed (torn) versions are pruned."""
-    import json
-    import os
-    import re
-    import shutil
-
+    """Write one new version of a PQ-family index — the codebooks, each
+    ``tables`` entry (kind → DataFrameWriter), the optional OPQ rotation
+    and a meta pinning the geometry (m, nbits, dsub, dim) plus ``extra`` —
+    then publish it with one pointer flip (commit.py). Returns the meta
+    with the new ``version``."""
     import numpy as np
 
     cb = _codebooks_np(codebooks)
     m, k, dsub = cb.shape
-    os.makedirs(path, exist_ok=True)
-    meta_path = os.path.join(path, "pq_meta.json")
-    prev_committed = None
-    if os.path.exists(meta_path):
-        try:
-            with open(meta_path) as f:
-                prev_committed = json.load(f).get("version")
-        except (json.JSONDecodeError, OSError):
-            prev_committed = None  # torn meta: nothing committed to keep
-    # next version from the artifact LISTING (never repeats even after a
-    # torn save)
-    versions = [
-        int(mm.group(2))
-        for d in os.listdir(path)
-        for mm in [re.fullmatch(
-            r"(codes|codebooks|rotation)-v(\d+)\.parquet", d)]
-        if mm
-    ]
-    version = max(versions, default=-1) + 1
-    codebooks.write.mode("overwrite").parquet(
-        os.path.join(path, f"codebooks-v{version}.parquet")
-    )
-    codes.write.mode("overwrite").parquet(
-        os.path.join(path, f"codes-v{version}.parquet")
-    )
+    writers = {"codebooks": codebooks.write, **tables}
     if rotation is not None:
         R = np.asarray(rotation, dtype=np.float64)
         if R.shape != (m * dsub, m * dsub):
@@ -445,67 +435,41 @@ def pq_save(
                 f"rotation shape {R.shape} does not match the codebook "
                 f"dim {m * dsub}"
             )
-        codebooks.sparkSession.createDataFrame(
+        writers["rotation"] = codebooks.sparkSession.createDataFrame(
             [(i, [float(v) for v in R[i]]) for i in range(len(R))],
             "i int, r array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, f"rotation-v{version}.parquet")
-        )
+        ).coalesce(1).write
+    os.makedirs(path, exist_ok=True)
+    version = next_version(path, kinds)
+    names = []
+    for kind, writer in writers.items():
+        names.append(f"{kind}-v{version}")
+        writer.mode("overwrite").parquet(os.path.join(path, names[-1]))
     meta = {
-        "version": int(version),
         "m": int(m),
         "nbits": int(k).bit_length() - 1,
         "dsub": int(dsub),
         "dim": int(m * dsub),
-        "id_col": id_col,
+        **extra,
         "rotated": rotation is not None,
     }
-    tmp = os.path.join(path, "pq_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)
-    # prune: keep the NEW version and the previously COMMITTED one
-    # (grace for mid-scan readers); torn never-committed versions go
-    # regardless of their number (the ivfpq_save fix applies here too)
-    keep = {version} | ({prev_committed} if prev_committed is not None else set())
-    for d in os.listdir(path):
-        mm = re.fullmatch(r"(codes|codebooks|rotation)-v(\d+)\.parquet", d)
-        if mm and int(mm.group(2)) not in keep:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    return meta
+    names.append(f"meta-v{version}.json")
+    write_meta(path, names[-1], meta)
+    publish(path, names, kinds)
+    return {"version": version, **meta}
 
 
-def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
-    """(codebooks, codes, meta) for a pq_save'd index; validates that the
-    persisted codebook grid matches the pinned geometry and raises a
-    remediation-naming ValueError on torn/missing/mismatched meta."""
-    import json
-    import os
+def _load_index(spark, path: str, kinds, rebuild: str):
+    """(artifact names, meta, codebooks) of the live version — ONE pointer
+    read, so every table comes from the same commit. ``meta["version"]``
+    is the live codes version. Refuses a codebook grid or rotation table
+    that does not match the pinned geometry."""
+    import numpy as np
 
-    meta_path = os.path.join(path, "pq_meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no committed PQ index at {path} (pq_meta.json absent — an "
-            "interrupted pq_save leaves no meta by design; re-run pq_save)"
-        )
-    with open(meta_path) as f:
-        try:
-            meta = json.load(f)
-        except json.JSONDecodeError as exc:
-            raise ValueError(
-                f"PQ meta at {meta_path} is corrupt ({exc}); re-run "
-                "pq_save to rewrite the index atomically"
-            ) from exc
-    v = meta.get("version")
-    if v is None:
-        raise ValueError(
-            f"PQ meta at {meta_path} names no artifact version (an index "
-            "saved by an older release); re-run pq_save to rebuild it"
-        )
-    suffix = f"-v{v}"
-    codebooks = spark.read.parquet(
-        os.path.join(path, f"codebooks{suffix}.parquet")
-    )
+    names = resolve(path, [k for k in kinds if k != "rotation"], rebuild)
+    meta = read_meta(path, names["meta"])
+    meta["version"] = artifact_version(names["codes"])
+    codebooks = spark.read.parquet(os.path.join(path, names["codebooks"]))
     cb = _codebooks_np(codebooks)
     if cb.shape != (meta["m"], 1 << meta["nbits"], meta["dsub"]):
         raise ValueError(
@@ -513,12 +477,9 @@ def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
             f"(m={meta['m']}, nbits={meta['nbits']}, dsub={meta['dsub']}) "
             "— the codes are not interpretable; rebuild the index"
         )
-    codes = spark.read.parquet(os.path.join(path, f"codes{suffix}.parquet"))
     if meta.get("rotated"):
-        import numpy as np
-
         rrows = spark.read.parquet(
-            os.path.join(path, f"rotation{suffix}.parquet")
+            os.path.join(path, names["rotation"])
         ).collect()
         R = np.asarray(
             [r["r"] for r in sorted(rrows, key=lambda r: r["i"])],
@@ -529,7 +490,38 @@ def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
                 f"rotation table shape {R.shape} does not match the pinned "
                 f"dim {meta['dim']} — rebuild the index"
             )
+        # the ndarray rides the returned meta dict (never JSON-serialized
+        # — the json meta only records the flag)
         meta["rotation_matrix"] = R
+    return names, meta, codebooks
+
+
+def pq_save(
+    codebooks: DataFrame,
+    codes: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    rotation=None,
+) -> dict:
+    """Persist a PQ index: ``codebooks-v{N}``, ``codes-v{N}``, the OPQ
+    ``rotation-v{N}`` when given, and ``meta-v{N}.json`` pinning the
+    geometry (m, nbits, dsub, dim), id_col and the rotated flag — all
+    committed by one pointer flip (commit.py's versioned layout). A crash
+    mid-save leaves the previous version live (or no index); the previous
+    version stays on disk for one more save (readers may be mid-scan).
+    Returns the meta with the new ``version``."""
+    return _save_index(
+        path, _PQ_KINDS, codebooks, {"codes": codes.write}, rotation,
+        {"id_col": id_col},
+    )
+
+
+def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
+    """(codebooks, codes, meta) for a pq_save'd index; raises a
+    remediation-naming ValueError when ``path`` holds no committed PQ
+    index or its codebook grid does not match the pinned geometry."""
+    names, meta, codebooks = _load_index(spark, path, _PQ_KINDS, _PQ_REBUILD)
+    codes = spark.read.parquet(os.path.join(path, names["codes"]))
     return codebooks, codes, meta
 
 
@@ -566,28 +558,16 @@ def ivfpq_search(
     Scoring shape: (qid, cid) probes → assignment join → per-query
     candidate code rows → one Arrow pass computing ADC from the qid's
     LUT (LUTs broadcast as one numpy block) → per-query top-k window."""
-    import numpy as np
-    import pandas as pd
-
     from vectrekker_spark.operators.ann import assign_centroids
 
-    cb = _codebooks_np(codebooks)
-    m, kk, dsub = cb.shape
-    qids, qs = _collect_query_vectors(
-        queries, qid_col, qvec_col, max_queries, m * dsub, "ivfpq_search"
+    # OPQ codes: LUTs in the rotated space, probing below in ORIGINAL
+    # space against the contractually-unrotated centroids
+    qids, lut = _query_luts(
+        queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
+        "ivfpq_search", rotation,
     )
     if not qids:
         return _empty_result(queries, codes, qid_col, id_col)
-    norms = np.linalg.norm(qs, axis=1, keepdims=True)
-    np.divide(qs, norms, out=qs, where=norms > 0)
-    if rotation is not None:
-        # codes encoded under an OPQ rotation need the LUTs in the
-        # rotated space; probing below stays in ORIGINAL space against
-        # the contractually-unrotated centroids (same three-space
-        # agreement as pq_search/ivfpq_search_cells — r14s3 review: this
-        # entry point previously had no way to search OPQ codes)
-        qs = qs @ np.asarray(rotation, dtype=np.float64)
-    lut = np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
     qpos = {q: i for i, q in enumerate(qids)}
 
     # probe: each query's n_probe nearest cells (reuses the corpus-side
@@ -709,30 +689,6 @@ def _adc_rank(
 # Persisted IVF∘PQ: cid-partitioned codes + pinned-codebook appends
 
 
-_IVFPQ_META = "ivfpq_meta.json"
-
-
-def _ivfpq_meta_read(path: str) -> dict:
-    import json
-    import os
-
-    meta_path = os.path.join(path, _IVFPQ_META)
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no committed IVF-PQ index at {path} ({_IVFPQ_META} absent — "
-            "an interrupted ivfpq_save leaves no meta by design; re-run "
-            "ivfpq_save)"
-        )
-    with open(meta_path) as f:
-        try:
-            return json.load(f)
-        except Exception as exc:  # torn local write
-            raise ValueError(
-                f"IVF-PQ meta at {meta_path} is corrupt ({exc}); re-run "
-                "ivfpq_save to rewrite the index atomically"
-            ) from exc
-
-
 def ivfpq_save(
     path: str,
     codebooks: DataFrame,
@@ -745,24 +701,23 @@ def ivfpq_save(
 ) -> dict:
     """Persist an IVF∘PQ index with **cid-partitioned code storage**:
 
-    - ``{path}/codebooks-v{N}.parquet`` + ``centroids-v{N}.parquet`` — tiny.
+    - ``{path}/codebooks-v{N}`` + ``centroids-v{N}`` — tiny.
     - ``{path}/codes-v{N}/cid=.../`` — (id, codes) rows partitioned by
       their coarse cell, so a search's probed cells become parquet
       partition pruning (the ivf_save inverted-list layout applied to PQ
       codes; at 100 TB this is the difference between scanning 16 B/vector
       of the WHOLE corpus and 16 B/vector of n_probe/√N of it).
-    - ``{path}/ivfpq_meta.json`` — geometry (m, nbits, dsub, dim), id_col,
-      assign_k, and the live version N. Written temp + os.replace LAST, so
-      the meta file IS the commit pointer: a crash mid-save leaves the old
-      version live (or no index), never a torn one. Same argument as
-      pq_save; for object stores without rename, use the lakehouse's own
-      atomic table swap (operators/ann.py's rename-free CURRENT-v{K}
-      protocol is the heavy-duty local blueprint).
+    - ``{path}/meta-v{N}.json`` — geometry (m, nbits, dsub, dim), id_col,
+      assign_k and the rotated flag.
+
+    One pointer flip commits the set (commit.py's versioned layout): a
+    crash mid-save leaves the old version live (or no index), never a torn
+    one, and the previous version stays on disk for one more rewrite.
 
     ``repartition(cid)`` before the write: one task per cell → one file
     per cell, not n_tasks × n_cells small files (the ivf_save argument).
     Single-writer contract: serialize saves/appends against each other;
-    readers are always safe (they resolve one committed meta).
+    readers are always safe (they resolve one committed pointer).
 
     ``rotation``: an OPQ orthogonal matrix (opq_train) pinned WITH the
     index. Space contract: centroids stay in ORIGINAL space (rotation
@@ -773,140 +728,41 @@ def ivfpq_save(
     uninterpretable without it as without their codebooks, hence it
     versions and commits with them.
     """
-    import json
-    import os
-
-    import re
-
-    import numpy as np
-
-    cb = _codebooks_np(codebooks)
-    m, k, dsub = cb.shape
-    os.makedirs(path, exist_ok=True)
-    # the previously COMMITTED version (from the meta, read BEFORE the
-    # flip) is what grace pruning must protect — the highest LISTED
-    # version may be a torn, never-committed save (r14s3 review: pruning
-    # relative to the listing deleted the live version's files while the
-    # grace copy it kept was the torn one)
-    prev_committed = None
-    try:
-        prev_committed = _ivfpq_meta_read(path).get("version")
-    except ValueError:
-        prev_committed = None  # absent/torn meta: nothing committed
-    # next version comes from the artifact LISTING, not the meta file —
-    # a save must HEAL a torn meta (version numbers still never repeat:
-    # the committed artifacts of every prior save are listed here)
-    versions = [
-        int(mm.group(2))
-        for d in os.listdir(path)
-        for mm in [re.fullmatch(
-            r"(codes|codebooks|centroids|rotation)-v(\d+)(\.parquet)?", d)]
-        if mm
-    ]
-    version = max(versions, default=-1) + 1
-    codebooks.write.mode("overwrite").parquet(
-        os.path.join(path, f"codebooks-v{version}.parquet")
-    )
-    centroids.write.mode("overwrite").parquet(
-        os.path.join(path, f"centroids-v{version}.parquet")
-    )
-    if rotation is not None:
-        R = np.asarray(rotation, dtype=np.float64)
-        if R.shape != (m * dsub, m * dsub):
-            raise ValueError(
-                f"rotation shape {R.shape} does not match the codebook "
-                f"dim {m * dsub}"
-            )
-        spark = codebooks.sparkSession
-        spark.createDataFrame(
-            [(i, [float(v) for v in R[i]]) for i in range(len(R))],
-            "i int, r array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, f"rotation-v{version}.parquet")
-        )
     cells = assign.select(id_col, "cid").join(codes, id_col).select(
         "cid", id_col, "codes"
     )
-    cells.repartition(F.col("cid")).write.mode("overwrite").partitionBy(
-        "cid"
-    ).parquet(os.path.join(path, f"codes-v{version}"))
-    meta = {
-        "version": int(version),
-        "m": int(m),
-        "nbits": int(k).bit_length() - 1,
-        "dsub": int(dsub),
-        "dim": int(m * dsub),
-        "id_col": id_col,
-        "assign_k": int(assign_k),
-        "rotated": rotation is not None,
-    }
-    tmp = os.path.join(path, _IVFPQ_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, _IVFPQ_META))
-    # prune: keep the NEW version and the previously COMMITTED one
-    # (readers of that meta may still be mid-scan — the ivf_compact
-    # grace rule); every other listed version is either older than the
-    # grace window or a torn never-committed save, and both go
-    import shutil
-
-    keep = {version} | (
-        {prev_committed} if prev_committed is not None else set()
+    return _save_index(
+        path, _IVFPQ_KINDS, codebooks,
+        {
+            "centroids": centroids.write,
+            "codes": cells.repartition(F.col("cid")).write.partitionBy("cid"),
+        },
+        rotation,
+        {"id_col": id_col, "assign_k": int(assign_k)},
     )
-    for d in os.listdir(path):
-        mm = re.fullmatch(
-            r"(codes|codebooks|centroids|rotation)-v(\d+)(\.parquet)?", d)
-        if mm and int(mm.group(2)) not in keep:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    return meta
+
+
+def _ivfpq_open(spark, path: str):
+    """(artifact names, codebooks, centroids, codes, meta) of the live
+    version — one pointer read for every table."""
+    names, meta, codebooks = _load_index(
+        spark, path, _IVFPQ_KINDS, _IVFPQ_REBUILD
+    )
+    centroids = spark.read.parquet(os.path.join(path, names["centroids"]))
+    # partition discovery types cid as int; cast back to long so loaded
+    # plans match in-memory ones schema-for-schema (the ivf_load rule)
+    codes = spark.read.parquet(os.path.join(path, names["codes"])).withColumn(
+        "cid", F.col("cid").cast("long")
+    )
+    return names, codebooks, centroids, codes, meta
 
 
 def ivfpq_load(spark, path: str):
-    """(codebooks, centroids, codes, meta) of the live version — ONE meta
-    read, so the three tables always come from the same committed save.
+    """(codebooks, centroids, codes, meta) of the live version — ONE
+    pointer read, so the tables always come from the same committed save.
     Validates the codebook grid against the pinned geometry (codes are
     uninterpretable under a foreign codebook — the pq_load refusal)."""
-    import os
-
-    meta = _ivfpq_meta_read(path)
-    v = meta["version"]
-    codebooks = spark.read.parquet(
-        os.path.join(path, f"codebooks-v{v}.parquet")
-    )
-    cb = _codebooks_np(codebooks)
-    if cb.shape != (meta["m"], 1 << meta["nbits"], meta["dsub"]):
-        raise ValueError(
-            f"codebook grid {cb.shape} does not match the pinned geometry "
-            f"(m={meta['m']}, nbits={meta['nbits']}, dsub={meta['dsub']}) "
-            "— the codes are not interpretable; rebuild the index"
-        )
-    centroids = spark.read.parquet(
-        os.path.join(path, f"centroids-v{v}.parquet")
-    )
-    # partition discovery types cid as int; cast back to long so loaded
-    # plans match in-memory ones schema-for-schema (the ivf_load rule)
-    codes = spark.read.parquet(os.path.join(path, f"codes-v{v}")).withColumn(
-        "cid", F.col("cid").cast("long")
-    )
-    if meta.get("rotated"):
-        import numpy as np
-
-        rrows = spark.read.parquet(
-            os.path.join(path, f"rotation-v{v}.parquet")
-        ).collect()
-        R = np.asarray(
-            [r["r"] for r in sorted(rrows, key=lambda r: r["i"])],
-            dtype=np.float64,
-        )
-        if R.shape != (meta["dim"], meta["dim"]):
-            raise ValueError(
-                f"rotation table shape {R.shape} does not match the pinned "
-                f"dim {meta['dim']} — rebuild the index"
-            )
-        # the ndarray rides the returned meta dict (never JSON-serialized
-        # — the json meta only records the flag)
-        meta["rotation_matrix"] = R
-    return codebooks, centroids, codes, meta
+    return _ivfpq_open(spark, path)[1:]
 
 
 def ivfpq_append(
@@ -928,12 +784,10 @@ def ivfpq_append(
     identical codes, so results are unaffected. Codebooks/centroids drift
     as the corpus grows — re-run the full build when recall degrades.
     Single-writer contract as ivfpq_save."""
-    import os
-
     from vectrekker_spark.operators.ann import assign_centroids
 
     spark = new_corpus.sparkSession
-    codebooks, centroids, _, meta = ivfpq_load(spark, path)
+    names, codebooks, centroids, _, meta = _ivfpq_open(spark, path)
     id_col = id_col or meta["id_col"]
     assign_k = assign_k or meta.get("assign_k") or 1
     probe = (
@@ -965,7 +819,7 @@ def ivfpq_append(
     )
     cells.repartition(F.col("cid")).write.mode("append").partitionBy(
         "cid"
-    ).parquet(os.path.join(path, f"codes-v{meta['version']}"))
+    ).parquet(os.path.join(path, names["codes"]))
 
 
 def ivfpq_search_cells(
@@ -992,30 +846,17 @@ def ivfpq_search_cells(
     Semantics ≡ ivfpq_search over the same (codebooks, centroids,
     assignment, codes) — pinned row-for-row in tests; duplicates from
     re-appended batches collapse in the (qid, id) dedupe."""
-    import numpy as np
-
     from vectrekker_spark.operators.ann import assign_centroids
 
     spark = queries.sparkSession
     codebooks, centroids, codes, meta = ivfpq_load(spark, path)
     id_col = meta["id_col"]
-    cb = _codebooks_np(codebooks)
-    m, kk, dsub = cb.shape
-    qids, qs = _collect_query_vectors(
-        queries, qid_col, qvec_col, max_queries, m * dsub,
-        "ivfpq_search_cells",
+    qids, lut = _query_luts(
+        queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
+        "ivfpq_search_cells", meta.get("rotation_matrix"),
     )
     if not qids:
         return _empty_result(queries, codes, qid_col, id_col)
-    norms = np.linalg.norm(qs, axis=1, keepdims=True)
-    np.divide(qs, norms, out=qs, where=norms > 0)
-    if meta.get("rotation_matrix") is not None:
-        # LUTs must live in the codes' (rotated) space; probing below
-        # stays in original space against the unrotated centroids, and
-        # the refine arm compares original corpus to original queries —
-        # all three agree because the rotation preserves cosine
-        qs = qs @ meta["rotation_matrix"]
-    lut = np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
     qpos = {q: i for i, q in enumerate(qids)}
 
     # probe only the ELIGIBLE queries (the set qids/LUTs were built
@@ -1234,45 +1075,21 @@ def ivfpq_compact(spark, path: str) -> int:
     """Rewrite the code table dropping duplicate (cid, id) rows left by
     re-appended batches (ivfpq_append's at-least-once caveat) and merging
     the small files appends accrete — the ivf_compact contract for the
-    PQ code table. The deduped codes land in a NEW version together with
-    copies of the live codebooks/centroids/rotation (tiny by
-    construction), and the meta pointer flips atomically, so concurrent
-    readers keep resolving the previous committed version (kept as the
-    grace copy; older versions prune). Duplicate rows carry identical
-    codes, so search results never change — pinned in tests. Returns
-    rows removed. Single-writer contract as ivfpq_save/append."""
-    import json
-    import os
-    import shutil
-
-    codebooks, centroids, codes, meta = ivfpq_load(spark, path)
-    id_col = meta["id_col"]
+    PQ code table. Only a NEW codes version is written; the pointer flip
+    carries the live codebooks, centroids, rotation and meta names
+    forward, so concurrent readers keep resolving the previous version
+    (kept as the grace copy; older codes versions prune). Duplicate rows
+    carry identical codes, so search results never change — pinned in
+    tests. Returns rows removed. Single-writer contract as
+    ivfpq_save/append."""
+    names, _, _, codes, meta = _ivfpq_open(spark, path)
     before = codes.count()
-    deduped = codes.dropDuplicates(["cid", id_col])
+    deduped = codes.dropDuplicates(["cid", meta["id_col"]])
     removed = before - deduped.count()
-    v_old, v_new = meta["version"], meta["version"] + 1
+    new_codes = f"codes-v{next_version(path, _IVFPQ_KINDS)}"
     deduped.repartition(F.col("cid")).write.mode("overwrite").partitionBy(
         "cid"
-    ).parquet(os.path.join(path, f"codes-v{v_new}"))
-    for name in ("codebooks", "centroids") + (
-        ("rotation",) if meta.get("rotated") else ()
-    ):
-        spark.read.parquet(
-            os.path.join(path, f"{name}-v{v_old}.parquet")
-        ).write.mode("overwrite").parquet(
-            os.path.join(path, f"{name}-v{v_new}.parquet")
-        )
-    new_meta = {k: v for k, v in meta.items() if k != "rotation_matrix"}
-    new_meta["version"] = v_new
-    tmp = os.path.join(path, _IVFPQ_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f)
-    os.replace(tmp, os.path.join(path, _IVFPQ_META))
-    import re
-
-    for d in os.listdir(path):
-        mm = re.fullmatch(
-            r"(codes|codebooks|centroids|rotation)-v(\d+)(\.parquet)?", d)
-        if mm and int(mm.group(2)) < v_new - 1:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    ).parquet(os.path.join(path, new_codes))
+    names["codes"] = new_codes
+    publish(path, names.values(), _IVFPQ_KINDS)
     return removed

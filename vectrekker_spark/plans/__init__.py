@@ -59,10 +59,6 @@ def scan_count(df: DataFrame) -> int:
     return len(re.findall(r"^\(\d+\) Scan ", formatted_plan(df), re.MULTILINE))
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def partition_filters(df: DataFrame) -> list[str]:
     """The PartitionFilters entries of every file scan in the plan —
     partition-pruning check for partitioned tables (e.g. the IVF cell

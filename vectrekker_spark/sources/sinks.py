@@ -110,14 +110,16 @@ def write_manifest(spark, path: str, fmt: str = "parquet") -> dict:
     `input_file_name()` (parquet answers from footers, no data read).
     Returns the totals. Excludes `_`-prefixed files (incl. this manifest),
     so re-running is idempotent. The manifest itself is written locally
-    (temp file + rename, so a crash never leaves a truncated manifest) —
-    same local-FS idiom as `_atomic_replace`; on an object store, write the
-    returned totals through the store's own API."""
+    (commit.write_text_atomic: temp file + rename, so a crash never leaves
+    a truncated manifest); on an object store, write the returned totals
+    through the store's own API."""
     import json as _json
     import os as _os
     import urllib.parse as _up
 
     from pyspark.sql import functions as F
+
+    from vectrekker_spark.commit import write_text_atomic
 
     df = spark.read.format(fmt).load(path)
     per_file = (
@@ -143,13 +145,10 @@ def write_manifest(spark, path: str, fmt: str = "parquet") -> dict:
         "bytes": sum(e["bytes"] or 0 for e in entries),
         "format": fmt,
     }
-    final = _os.path.join(path, "_manifest.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        for e in entries:
-            f.write(_json.dumps(e) + "\n")
-        f.write(_json.dumps(totals) + "\n")
-    _os.replace(tmp, final)
+    write_text_atomic(
+        _os.path.join(path, "_manifest.json"),
+        "".join(_json.dumps(e) + "\n" for e in [*entries, totals]),
+    )
     return totals
 
 
