@@ -213,6 +213,10 @@ def test_write_text_atomic_replaces_whole_or_not_at_all(tmp_path, monkeypatch):
     target = tmp_path / "meta.json"
     write_text_atomic(str(target), '{"v": 1}')
     assert target.read_text() == '{"v": 1}'
+    plain = tmp_path / "plain.json"
+    plain.write_text("{}")  # the mode a plain open gives
+    assert target.stat().st_mode == plain.stat().st_mode
+    plain.unlink()
     write_text_atomic(str(target), '{"v": 2}')
     assert target.read_text() == '{"v": 2}'
 

@@ -41,7 +41,7 @@ import json
 import os
 import re
 import shutil
-import tempfile
+import uuid
 from collections.abc import Iterable
 
 _POINTER = re.compile(r"CURRENT-v(\d+)")
@@ -271,15 +271,19 @@ def publish(path: str, names: Iterable[str], kinds: Iterable[str]) -> None:
 
 
 def write_text_atomic(path: str, text: str) -> None:
-    """Replace ``path`` with ``text`` atomically: the text goes to a temp
-    file in the target's directory, then ``os.replace`` swaps it in, so a
-    reader sees the old file or the new one, never a torn write. The temp
-    file is removed when anything fails."""
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(os.path.abspath(path)), suffix=".tmp"
+    """Replace ``path`` with ``text`` atomically: the text goes to a
+    uniquely named temp file in the target's directory, then
+    ``os.replace`` swaps it in, so a reader sees the old file or the new
+    one, never a torn write. The temp file is removed when anything fails.
+    It is created exclusively (``mkstemp``'s guarantee) but with the
+    process umask's mode rather than ``mkstemp``'s 0600, so the file keeps
+    the permissions a plain ``open`` would give its readers."""
+    tmp = os.path.join(
+        os.path.dirname(os.path.abspath(path)),
+        f".{os.path.basename(path)}.{uuid.uuid4().hex}.tmp",
     )
     try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
+        with open(tmp, "x", encoding="utf-8") as f:
             f.write(text)
         os.replace(tmp, path)
     finally:
