@@ -237,8 +237,15 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     q = spark.createDataFrame(
         sc.parallelize(rows, 2).map(bump), "qid long, qvec array<double>"
     )
-    jsc = spark._jsc
-    persisted_before = set(jsc.getPersistentRDDs().keySet().toArray())
+
+    def persisted_ids():
+        # ids from SparkContext's weak-value registry: getPersistentRDDs()
+        # hands back a JVM map of strong RDD wrappers, and that copy kept
+        # the checkpointed probes reachable for seconds after `del res`
+        ids = spark._jsc.sc().persistentRdds().keySet().mkString(",")
+        return {int(i) for i in ids.split(",") if i}
+
+    persisted_before = persisted_ids()
     cache_was_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
     res = ivf_search_cells(q, lc, cells, k=4, n_probe=2)
     got = sorted(tuple(r) for r in res.collect())
@@ -258,7 +265,7 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     for _ in range(100):
         gc.collect()
         spark._jvm.System.gc()
-        new = set(jsc.getPersistentRDDs().keySet().toArray()) - persisted_before
+        new = persisted_ids() - persisted_before
         if not new:
             break
         time.sleep(0.1)
