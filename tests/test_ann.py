@@ -350,14 +350,15 @@ def test_ivf_cells_probe_prunes_partitions(spark, em, tmp_path):
     # the cell scan carries a static cid predicate → only probed partitions read
     assert pf and any("IN" in f or "in(" in f for f in pf), pf
 
-    # past the prune cap the static filter is skipped — Catalyst then prunes
-    # DYNAMICALLY off the probes join (the scale path for huge query batches)
-    res_nocap = ivf_search_cells(
-        _queries(em), lc, cells, k=K, n_probe=3, prune_max_cells=0
+    # a many-cell probe (every cell) still filters statically on the
+    # collected cids — they are bounded by the centroid count — and ranks
+    # exactly like the in-memory search over the same index
+    res_all = ivf_search_cells(_queries(em), lc, cells, k=K, n_probe=10)
+    pf_all = [f for f in partition_filters(res_all) if "cid" in f]
+    assert pf_all and any("IN" in f or "in(" in f for f in pf_all), pf_all
+    assert _rows(res_all) == _rows(
+        ivf_search(_queries(em), em, centroids, assign, k=K, n_probe=10)
     )
-    pf_nocap = [f for f in partition_filters(res_nocap) if "cid" in f]
-    assert pf_nocap and any("dynamicpruning" in f for f in pf_nocap), pf_nocap
-    assert _rows(res_nocap) == _rows(res)
 
 
 @pytest.mark.slow  # index-lifecycle QA tail (pytest.ini)

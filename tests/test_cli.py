@@ -423,7 +423,8 @@ def test_profile_command(tmp_path, capsys, spark, sf_dir):
     out = capsys.readouterr().out
     assert rc == 0
     assert "doc_id" in out and "text" in out and "column" in out
-    prof = json.load(open(out_json))
+    with open(out_json) as f:
+        prof = json.load(f)
     assert {p["column"] for p in prof} == {"doc_id", "text"}
     assert all(p["n_rows"] > 0 for p in prof)
 

@@ -1,10 +1,13 @@
-"""The versioned-pointer commit protocol (vectrekker_spark/commit.py) that
-every persisted vector index (IVF, PQ, IVF-PQ) publishes through, and the
-atomic text write of the JSON sidecars. Spark-free: plain files and dirs."""
+"""The directory commits of vectrekker_spark/commit.py: the versioned
+pointer every persisted vector index (IVF, PQ, IVF-PQ) and the quota ledger
+publish through, the atomic text write of the JSON sidecars, the table
+swap, the staged index append and the compact claim. Spark-free: plain
+files and dirs, with a stand-in for the DataFrame writer."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -231,3 +234,183 @@ def test_write_text_atomic_replaces_whole_or_not_at_all(tmp_path, monkeypatch):
         write_text_atomic(str(target), '{"v": 3}')
     assert target.read_text() == '{"v": 2}'
     assert os.listdir(tmp_path) == ["meta.json"]
+
+
+class _Frame:
+    """Stands in for a DataFrame where commit.py writes one:
+    ``.write.mode("overwrite").parquet(path)`` writes one part file per
+    row id plus the committer's _SUCCESS marker."""
+
+    def __init__(self, ids):
+        self.ids = list(ids)
+
+    @property
+    def write(self):
+        return self
+
+    def mode(self, mode):
+        assert mode == "overwrite"
+        return self
+
+    def parquet(self, path):
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        _append(path, self.ids)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def _append(path, ids):
+    os.makedirs(path, exist_ok=True)
+    for i in ids:
+        with open(os.path.join(path, f"part-{i}.parquet"), "w") as f:
+            f.write(str(i))
+
+
+def _ids(path):
+    """Row ids a parquet reader would see: the non-hidden part files."""
+    return {
+        int(n[len("part-"):-len(".parquet")])
+        for n in os.listdir(path)
+        if not n.startswith(("_", "."))
+    }
+
+
+def _fail_on_call(monkeypatch, target, name, n):
+    """Make ``target.name`` raise on its n-th call (a crash at that step)."""
+    real = getattr(target, name)
+    calls = []
+
+    def wrapped(*a, **k):
+        calls.append(a)
+        if len(calls) == n:
+            raise OSError(f"crash at {name} call {n}")
+        return real(*a, **k)
+
+    monkeypatch.setattr(target, name, wrapped)
+
+
+def test_crash_between_swap_renames_heals_to_old_table(tmp_path, monkeypatch):
+    """A crash after live → old sibling but before staged → live leaves no
+    live table; heal_swap (and every later swap, which heals first)
+    restores the old one. The bucket form, heal_swaps, does the same for
+    every child of a table dir."""
+    table = str(tmp_path / "state")
+    commit.atomic_replace(_Frame([1, 2]), table)
+    _fail_on_call(monkeypatch, commit.os, "rename", 2)
+    with pytest.raises(OSError, match="crash at rename"):
+        commit.atomic_replace(_Frame([3]), table)
+    monkeypatch.undo()
+    assert not os.path.exists(table)
+    assert os.path.exists(commit.swap_old_path(table))
+    commit.heal_swap(table)
+    assert _ids(table) == {1, 2}
+
+    bucket = str(tmp_path / "index" / "__bucket=3")
+    _append(bucket, [7])
+    _fail_on_call(monkeypatch, commit.os, "rename", 2)
+    with pytest.raises(OSError, match="crash at rename"):
+        commit.swap_in(str(tmp_path / "staged"), bucket)
+    monkeypatch.undo()
+    assert commit.heal_swaps(str(tmp_path / "index")) == []
+    assert _ids(bucket) == {7}
+
+
+def test_crash_after_swap_leaves_new_table_readable(tmp_path, monkeypatch):
+    """A crash once both renames landed (deleting the old copy) leaves the
+    new table live; the old copy is hidden debris that heal_swaps hands
+    back for deletion and the next swap sweeps."""
+    table = str(tmp_path / "state")
+    commit.atomic_replace(_Frame([1, 2]), table)
+    old = commit.swap_old_path(table)
+    real_rmtree = shutil.rmtree
+
+    def crash_deleting_old(path, *a, **k):
+        if path == old and os.path.exists(path):
+            raise OSError("crash deleting the old copy")
+        return real_rmtree(path, *a, **k)
+
+    monkeypatch.setattr(commit.shutil, "rmtree", crash_deleting_old)
+    with pytest.raises(OSError, match="crash deleting"):
+        commit.atomic_replace(_Frame([3]), table)
+    monkeypatch.undo()
+    assert _ids(table) == {3}
+    assert _ids(old) == {1, 2}
+    assert commit.heal_swaps(str(tmp_path)) == [old]
+    assert _ids(table) == {3}  # debris is never healed over a live table
+    commit.atomic_replace(_Frame([4]), table)
+    assert _ids(table) == {4} and not os.path.exists(old)
+
+
+@pytest.mark.parametrize(
+    "crash",
+    ["before_docs_append", "after_docs_append", "mid_move", "after_move"],
+)
+def test_staged_append_crash_keeps_index_subset_of_docs(tmp_path, monkeypatch, crash):
+    """Killed before the docs append, after it, mid-move or after the last
+    move, the index is a subset of the docs; a redelivery on the same stage
+    name completes the append."""
+    corpus = str(tmp_path)
+    docs, index = str(tmp_path / "docs"), str(tmp_path / "bands")
+    _append(docs, [1, 2])
+    _append(index, [1, 2])
+    new = [3, 4, 5]
+
+    def append_docs():
+        if crash == "before_docs_append":
+            raise OSError("crash before the docs append")
+        _append(docs, new)
+
+    if crash == "after_docs_append":
+        _fail_on_call(monkeypatch, commit.os, "replace", 1)
+    elif crash == "mid_move":
+        _fail_on_call(monkeypatch, commit.os, "replace", 2)
+    elif crash == "after_move":
+        _fail_on_call(monkeypatch, commit.shutil, "rmtree", 1)
+    with pytest.raises(OSError, match="crash"):
+        commit.staged_append(corpus, ".bands_stage_0", _Frame(new), index, append_docs)
+    monkeypatch.undo()
+    assert _ids(index) <= _ids(docs)
+    assert _ids(index) >= {1, 2}
+    if crash == "mid_move":
+        assert len(_ids(index) - {1, 2}) == 1  # one part file moved, whole
+
+    commit.staged_append(
+        corpus, ".bands_stage_0", _Frame(new), index, lambda: _append(docs, new)
+    )
+    assert _ids(index) == _ids(docs) == {1, 2, 3, 4, 5}
+    assert not os.path.exists(tmp_path / ".bands_stage_0")
+
+
+def test_compact_claim_and_ingest_refusal_are_exclusive(tmp_path):
+    """One claim at a time; while it is held, ingest refuses at batch start
+    and at the staged append's write boundary (before the docs append),
+    and a second compact fails without releasing the first's claim.
+    ``compacting`` sweeps stale stage dirs and releases on every exit."""
+    corpus = str(tmp_path)
+    marker = commit.claim_compact(corpus)
+    with pytest.raises(RuntimeError, match="compact already in progress"):
+        commit.claim_compact(corpus)
+    with pytest.raises(RuntimeError, match="compact already in progress"):
+        with commit.compacting(corpus):
+            pass
+    with pytest.raises(RuntimeError, match="compact in progress"):
+        commit.refuse_if_compacting(corpus)
+    appended = []
+    with pytest.raises(RuntimeError, match="compact in progress"):
+        commit.staged_append(
+            corpus, ".bands_stage_1", _Frame([1]), str(tmp_path / "bands"),
+            lambda: appended.append(1),
+        )
+    assert appended == [] and os.path.exists(marker)
+    os.remove(marker)
+    commit.refuse_if_compacting(corpus)  # released: no-op
+
+    os.makedirs(tmp_path / ".bands_stage_7")
+    with pytest.raises(ValueError, match="body failed"):
+        with commit.compacting(corpus, stale_stage=".bands_stage_"):
+            assert not os.path.exists(tmp_path / ".bands_stage_7")
+            with pytest.raises(RuntimeError, match="compact in progress"):
+                commit.refuse_if_compacting(corpus)
+            raise ValueError("body failed")
+    assert not os.path.exists(marker)
+    commit.claim_compact(corpus)  # free to claim again

@@ -58,12 +58,24 @@ def test_only_touched_buckets_rewritten(spark, tmp_path):
     assert len(touched) == 1  # one key → one bucket rewritten, 15 untouched
 
 
+def _debris(path):
+    """Hidden dirs a merge leaves until its cleanup: staging and the
+    swapped-out old bucket copies."""
+    return [
+        d for d in os.listdir(path)
+        if d.startswith(".staging_") or d.endswith(".__swap_old")
+    ]
+
+
 def test_mid_swap_crash_restores_trashed_bucket(spark, tmp_path):
     # Simulate a merge that died BETWEEN its two renames: the live bucket dir
-    # was moved to trash but the staged dir was never promoted. The trash dir
-    # now holds the ONLY copy of that bucket's rows — the next merge must
-    # restore it before sweeping debris, or those rows are lost forever.
+    # was moved to its hidden old sibling but the staged dir was never
+    # promoted. The old sibling now holds the ONLY copy of that bucket's
+    # rows — the next merge must restore it before sweeping debris, or those
+    # rows are lost forever.
     import shutil
+
+    from vectrekker_spark.commit import swap_old_path
 
     path = str(tmp_path / "table")
     base = spark.createDataFrame(
@@ -74,8 +86,7 @@ def test_mid_swap_crash_restores_trashed_bucket(spark, tmp_path):
 
     bucket_dirs = [d for d in os.listdir(path) if d.startswith("__bucket=")]
     victim = bucket_dirs[0]
-    b = victim.split("=", 1)[1]
-    os.rename(os.path.join(path, victim), os.path.join(path, f".trash_{b}_deadrun"))
+    os.rename(os.path.join(path, victim), swap_old_path(os.path.join(path, victim)))
     # the dead run also left a staging dir (contents irrelevant — swept)
     os.makedirs(os.path.join(path, ".staging_deadrun", victim))
 
@@ -85,13 +96,13 @@ def test_mid_swap_crash_restores_trashed_bucket(spark, tmp_path):
     out = {r["id"]: r["v"] for r in read_partitioned_table(spark, path).collect()}
     expected[5] = "NEW5"
     assert out == expected  # every pre-crash row survived
-    assert not [d for d in os.listdir(path) if d.startswith((".trash_", ".staging_"))]
+    assert not _debris(path)
     shutil.rmtree(path)
 
 
 def test_crash_between_commit_and_cleanup_is_recoverable(spark, tmp_path, monkeypatch):
-    # Kill the merge after the per-bucket swaps but before trash/staging
-    # cleanup: the table must still read the MERGED values (trash dirs are
+    # Kill the merge after the per-bucket swaps but before old-copy/staging
+    # cleanup: the table must still read the MERGED values (old copies are
     # dot-prefixed → invisible to parquet discovery) and a re-run of the same
     # merge must succeed and converge to the same state.
     import vectrekker_spark.operators.delta as delta_mod
@@ -117,8 +128,7 @@ def test_crash_between_commit_and_cleanup_is_recoverable(spark, tmp_path, monkey
     out = {r["id"]: r["v"] for r in read_partitioned_table(spark, path).collect()}
     assert out[5] == "NEW5" and out[999] == "NEW999" and out[6] == "v6"
     assert len(out) == 201
-    leftovers = [d for d in os.listdir(path) if d.startswith((".trash_", ".staging_"))]
-    assert leftovers  # the crash really did leave debris behind
+    assert _debris(path)  # the crash really did leave debris behind
 
     # re-runnable: the at-least-once retry merges cleanly and sweeps the
     # crashed run's debris
@@ -126,7 +136,7 @@ def test_crash_between_commit_and_cleanup_is_recoverable(spark, tmp_path, monkey
     merge_upsert_partitioned(spark, path, upd, key="id", n_buckets=16)
     out2 = {r["id"]: r["v"] for r in read_partitioned_table(spark, path).collect()}
     assert out2 == out
-    assert not [d for d in os.listdir(path) if d.startswith((".trash_", ".staging_"))]
+    assert not _debris(path)
 
 # QA tail: excluded from the default run (see pytest.ini header)
 pytestmark = pytest.mark.slow

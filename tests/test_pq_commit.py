@@ -99,3 +99,30 @@ def test_pre_pointer_pq_layouts_raise_naming_the_rebuild_verb(
     }))
     with pytest.raises(ValueError, match=rf"\(CLI: {verb}\)"):
         load(spark, str(path))
+
+
+def test_ivfpq_search_and_append_collect_codebooks_once(spark, tmp_path, monkeypatch):
+    """The loader's geometry check collects the codebooks; a search (for
+    its LUTs) and an append (for the encode) reuse that grid instead of
+    collecting the table again."""
+    corpus, cb, _ = _opq_index_inputs(spark)
+    centroids, assign = ivf_build(corpus, n_centroids=4)
+    path = str(tmp_path / "ivfpq")
+    ivfpq_save(path, cb, centroids, assign, pq_encode(corpus, cb))
+    q = corpus.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    frame = type(corpus)  # the concrete DataFrame class whose collect runs
+    real = frame.collect
+    reads = []
+
+    def counting_collect(self):
+        if self.columns == ["subspace", "code", "cvec"]:
+            reads.append(1)
+        return real(self)
+
+    monkeypatch.setattr(frame, "collect", counting_collect)
+    assert ivfpq_search_cells(q, path, k=3, n_probe=2).count() == 9
+    assert len(reads) == 1
+    ivfpq_append(corpus.where(F.col("vec_id") < 4), path)
+    assert len(reads) == 2

@@ -242,16 +242,16 @@ def test_exact_dedup_dup_only_batch_commits_bloom_heal(spark, tmp_path):
 
 
 def test_atomic_replace_heals_crashed_swap(spark, tmp_path):
-    """_heal_swap restores the displaced table after a crash between the
+    """heal_swap restores the displaced table after a crash between the
     two renames; the upsert stream sees the accumulated corpus, not an
     empty base."""
     import os
 
-    from vectrekker_spark.pipeline import _atomic_replace, _heal_swap
+    from vectrekker_spark.commit import atomic_replace, heal_swap
 
     target = str(tmp_path / "tbl")
     spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(target)
-    _atomic_replace(
+    atomic_replace(
         spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
         target,
     )
@@ -259,7 +259,7 @@ def test_atomic_replace_heals_crashed_swap(spark, tmp_path):
     # simulate the crash window: target renamed away, new never moved in
     os.rename(target, str(tmp_path / ".tbl.__swap_old"))
     assert not os.path.exists(target)
-    _heal_swap(target)
+    heal_swap(target)
     assert spark.read.parquet(target).count() == 2
 
 

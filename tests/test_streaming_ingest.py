@@ -7,6 +7,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from tests.helpers import rows_of
+from vectrekker_spark.commit import pointer_tokens
 from vectrekker_spark.queries.pipeline import d08_session_window
 from vectrekker_spark.streaming.jobs import (
     read_events_stream,
@@ -14,6 +15,15 @@ from vectrekker_spark.streaming.jobs import (
     session_counts,
     streaming_index_pipeline,
 )
+
+
+def _tear(pointer):
+    """Rewrite a CURRENT-v{K} pointer without its commit newline — the
+    state a crash mid-flip leaves on a plain filesystem."""
+    with open(pointer) as f:
+        raw = f.read()
+    with open(pointer, "w") as f:
+        f.write(raw.rstrip("\n"))
 
 
 def test_streaming_index_pipeline_exactly_once(spark, tmp_path):
@@ -645,9 +655,9 @@ def test_streaming_quota_lifecycle(spark, tmp_path):
 
 
 def test_streaming_quota_torn_ledger_heals_from_docs(spark, tmp_path):
-    """A counts version without _SUCCESS is invisible; with NO committed
-    ledger at all the job recounts the docs table — quotas never
-    overshoot even when every ledger write was torn."""
+    """A counts version no committed pointer names is invisible; with NO
+    committed ledger pointer at all the job recounts the docs table —
+    quotas never overshoot even when every ledger commit was torn."""
     import os
     import shutil
 
@@ -672,12 +682,11 @@ def test_streaming_quota_torn_ledger_heals_from_docs(spark, tmp_path):
 
     write_batch("b1", [(1, "hot", "a"), (2, "hot", "b")])
     run("c1")
-    # tear EVERY ledger version (simulate crash before any commit marker)
+    # tear EVERY ledger pointer (a crash mid-flip: no commit newline)
     for name in os.listdir(corpus):
-        if name.startswith("counts_v"):
-            marker = os.path.join(corpus, name, "_SUCCESS")
-            if os.path.exists(marker):
-                os.remove(marker)
+        if name.startswith("CURRENT-v"):
+            _tear(os.path.join(corpus, name))
+    assert pointer_tokens(corpus) == []
     write_batch("b2", [(3, "hot", "c"), (4, "hot", "d")])
     run("c2")
     n_hot = (
@@ -712,23 +721,17 @@ def test_streaming_quota_heal_commits_even_with_no_admissions(spark, tmp_path):
             strata_col="source", id_col="doc_id",
         ).awaitTermination()
 
-    def committed_versions():
-        return sorted(
-            name for name in os.listdir(corpus)
-            if name.startswith("counts_v")
-            and os.path.exists(os.path.join(corpus, name, "_SUCCESS"))
-        )
-
     write_batch("b1", [(1, "hot", "a")])
     run("c1")
-    # tear every committed ledger version AND the bloom
-    for name in committed_versions():
-        os.remove(os.path.join(corpus, name, "_SUCCESS"))
+    # remove every ledger pointer AND the bloom
+    for name in os.listdir(corpus):
+        if name.startswith("CURRENT-v"):
+            os.remove(os.path.join(corpus, name))
     os.remove(f"{corpus}/bloom/meta.json")
     # quota-full batch: admits nothing, but must COMMIT the healed state
     write_batch("b2", [(2, "hot", "b")])
     run("c2")
-    assert committed_versions(), "healed ledger was not committed"
+    assert pointer_tokens(corpus), "healed ledger was not committed"
     from vectrekker_spark.operators.bloom import bloom_load
 
     assert bloom_load(f"{corpus}/bloom").bits_set() > 0  # bloom healed too
@@ -765,15 +768,15 @@ def test_streaming_quota_compact_guard_and_ledger_prune(spark, tmp_path):
     contract is a create-exclusive marker, not a docstring — a concurrent
     compact fails loudly at the claim, an ingesting batch that arrives
     mid-compact fails its micro-batch instead of racing the swap, and
-    repeated compacts prune superseded counts_v{K} dirs (an idle corpus
+    repeated compacts prune superseded counts-v{N} dirs (an idle corpus
     no longer accumulates ledger versions indefinitely)."""
     import os
     import re
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    from vectrekker_spark.commit import claim_compact
     from vectrekker_spark.streaming.jobs import (
-        _claim_compact,
         compact_quota_corpus,
         foreach_batch_quota,
     )
@@ -802,7 +805,7 @@ def test_streaming_quota_compact_guard_and_ledger_prune(spark, tmp_path):
         return sorted(
             int(m.group(1))
             for name in os.listdir(corpus)
-            if (m := re.fullmatch(r"counts_v(\d+)", name))
+            if (m := re.fullmatch(r"counts-v(\d+)", name))
         )
 
     # repeated compacts on an idle corpus: versions advance but superseded
@@ -820,7 +823,7 @@ def test_streaming_quota_compact_guard_and_ledger_prune(spark, tmp_path):
     assert len(ledger_versions()) <= 2, ledger_versions()
 
     # concurrent compact: the second claim fails loudly, releases nothing
-    marker = _claim_compact(corpus)
+    marker = claim_compact(corpus)
     try:
         with pytest.raises(RuntimeError, match="compact already in progress"):
             compact_quota_corpus(
@@ -853,9 +856,8 @@ def test_compact_guard_shared_across_corpora(spark, tmp_path):
     batch-start refusal helper."""
     import os
 
+    from vectrekker_spark.commit import claim_compact, refuse_if_compacting
     from vectrekker_spark.streaming.jobs import (
-        _claim_compact,
-        _refuse_if_compacting,
         compact_near_dedup_corpus,
         compact_semantic_corpus,
     )
@@ -871,21 +873,21 @@ def test_compact_guard_shared_across_corpora(spark, tmp_path):
         [(1, [0.5, 0.5])], "vec_id long, embedding array<double>"
     ).coalesce(1).write.parquet(null_dir)
 
-    marker = _claim_compact(corpus)
+    marker = claim_compact(corpus)
     try:
         with pytest.raises(RuntimeError, match="compact already in progress"):
             compact_semantic_corpus(spark, corpus)
         with pytest.raises(RuntimeError, match="compact already in progress"):
             compact_near_dedup_corpus(spark, corpus)
         with pytest.raises(RuntimeError, match="compact in progress"):
-            _refuse_if_compacting(corpus)
+            refuse_if_compacting(corpus)
         assert os.path.exists(marker)  # losers never release the claim
     finally:
         os.remove(marker)
     # after release: the semantic compact runs (and releases its own claim)
     assert compact_semantic_corpus(spark, corpus) == {"kept_removed": 0}
     assert not os.path.exists(marker)
-    _refuse_if_compacting(corpus)  # no marker → no-op
+    refuse_if_compacting(corpus)  # no marker → no-op
 
 
 def test_streaming_funnel_composition_equals_batch(spark, tmp_path):
@@ -1030,8 +1032,8 @@ def test_exact_dedup_compact_reclaims_null_text_redelivery(spark, tmp_path):
     bloom stays a valid superset, and a held claim refuses the compact."""
     import os
 
+    from vectrekker_spark.commit import claim_compact
     from vectrekker_spark.streaming.jobs import (
-        _claim_compact,
         compact_exact_corpus,
         foreach_batch_exact_dedup,
     )
@@ -1071,7 +1073,7 @@ def test_exact_dedup_compact_reclaims_null_text_redelivery(spark, tmp_path):
     assert docs.where("doc_id = 2").count() == 2
 
     # a held claim refuses the compact loudly
-    marker = _claim_compact(corpus)
+    marker = claim_compact(corpus)
     try:
         with pytest.raises(RuntimeError, match="compact already in progress"):
             compact_exact_corpus(spark, corpus, id_col="doc_id")
@@ -1109,9 +1111,10 @@ def test_write_boundary_compact_recheck_all_ingest_jobs(spark, tmp_path, monkeyp
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    from vectrekker_spark import commit
     from vectrekker_spark.streaming import jobs
 
-    real_refuse = jobs._refuse_if_compacting
+    real_refuse = commit.refuse_if_compacting
 
     def make_planting_refuse(corpus):
         state = {"calls": 0}
@@ -1120,7 +1123,7 @@ def test_write_boundary_compact_recheck_all_ingest_jobs(spark, tmp_path, monkeyp
             real_refuse(path)
             state["calls"] += 1
             if state["calls"] == 1:  # entry check passed: now claim
-                jobs._claim_compact(corpus)
+                commit.claim_compact(corpus)
 
         return planted
 
@@ -1179,7 +1182,7 @@ def test_write_boundary_compact_recheck_all_ingest_jobs(spark, tmp_path, monkeyp
             str(src / "b1")
         )
         monkeypatch.setattr(
-            jobs, "_refuse_if_compacting", make_planting_refuse(corpus)
+            commit, "refuse_if_compacting", make_planting_refuse(corpus)
         )
         stream = spark.readStream.schema(schema).parquet(str(src / "*"))
         with pytest.raises(StreamingQueryException, match="compact in progress"):
@@ -1187,15 +1190,15 @@ def test_write_boundary_compact_recheck_all_ingest_jobs(spark, tmp_path, monkeyp
         # nothing was appended under the claim
         for sub in ("docs", "kept"):
             d = os.path.join(corpus, sub)
-            assert not jobs._parquet_has_data(d), (name, sub)
+            assert not commit.parquet_has_data(d), (name, sub)
         # after release + restore, the retried batch lands
-        os.remove(os.path.join(corpus, jobs._COMPACT_MARKER))
-        monkeypatch.setattr(jobs, "_refuse_if_compacting", real_refuse)
+        os.remove(os.path.join(corpus, commit.COMPACT_MARKER))
+        monkeypatch.setattr(commit, "refuse_if_compacting", real_refuse)
         start(
             stream, corpus, str(tmp_path / f"ck2_{name}")
         ).awaitTermination()
         wrote = any(
-            jobs._parquet_has_data(os.path.join(corpus, sub))
+            commit.parquet_has_data(os.path.join(corpus, sub))
             for sub in ("docs", "kept")
         )
         assert wrote, name

@@ -1,5 +1,24 @@
-"""One commit protocol for every persisted vector index (IVF, PQ, IVF-PQ),
-plus the atomic single-file text write the JSON sidecars use.
+"""One module for every directory commit in the package: how a directory
+(or a file) becomes live, and how a crash between the steps is healed.
+
+- **Versioned pointer** — every persisted vector index (IVF, PQ, IVF-PQ)
+  and the streaming quota ledger (``counts-v<N>``) publish through an
+  immutable ``CURRENT-v{K}`` pointer (below).
+- **Table swap** — a table rewritten whole (the pipeline state, the upsert
+  stream's target, the compacts, ``compact_parquet``) and each touched
+  bucket of ``merge_upsert_partitioned``: the new copy is written to a
+  hidden sibling, then ``swap_in`` renames live → hidden old sibling and
+  staged → live; ``heal_swap`` restores the old copy when a crash between
+  the two renames left the live path missing.
+- **Staged append** — the near-dedup band index and the paragraph-hash
+  index: ``staged_append`` writes the index rows to a hidden stage dir,
+  re-checks the compact claim, runs the docs append, then moves the part
+  files in, so every crash window leaves the index a subset of the docs.
+- **Compact claim** — a create-exclusive ``_COMPACT_IN_PROGRESS`` marker
+  (``claim_compact`` / ``compacting``) that the streaming ingest jobs
+  refuse to write under (``refuse_if_compacting``).
+- ``parquet_has_data`` (a dir with a committed data file) and
+  ``write_text_atomic`` (single-file replace for JSON sidecars).
 
 Versioned layout
 ----------------
@@ -37,12 +56,13 @@ to a broken index.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import uuid
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable, Iterator
 
 _POINTER = re.compile(r"CURRENT-v(\d+)")
 _ARTIFACT = re.compile(r"([a-z]+)-v(\d+)(?:\.[a-z]+)?")
@@ -289,3 +309,175 @@ def write_text_atomic(path: str, text: str) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+# --------------------------------------------------------------------------
+# Table swap: a directory rewritten whole, or one bucket of a partitioned
+# table. POSIX has no atomic directory exchange, so the swap is two
+# same-filesystem renames; the only unprotected window is between them (no
+# data copy, microseconds) and ``heal_swap`` closes it.
+
+_SWAP_OLD = ".__swap_old"
+
+
+def swap_old_path(path: str) -> str:
+    """The hidden sibling (``.<name>.__swap_old``) that holds the displaced
+    live copy during a swap; dot-prefixed, so parquet readers skip it."""
+    head, tail = os.path.split(path.rstrip("/"))
+    return os.path.join(head, f".{tail}{_SWAP_OLD}")
+
+
+def heal_swap(path: str) -> None:
+    """Recover a crash between ``swap_in``'s two renames: the live path is
+    missing but the displaced copy is still at its hidden sibling — rename
+    it back, so readers see the pre-swap state (a swap either fully
+    replaced or fully did not)."""
+    old = swap_old_path(path)
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+
+
+def heal_swaps(parent: str) -> list[str]:
+    """``heal_swap`` every child of ``parent`` with a hidden old sibling;
+    returns the old siblings that remain — each one's live path exists, so
+    they are debris of completed swaps, safe to delete."""
+    left = []
+    for name in os.listdir(parent):
+        if name.startswith(".") and name.endswith(_SWAP_OLD):
+            heal_swap(os.path.join(parent, name[1 : -len(_SWAP_OLD)]))
+            if os.path.exists(os.path.join(parent, name)):
+                left.append(os.path.join(parent, name))
+    return left
+
+
+def swap_in(staged: str | None, path: str) -> str:
+    """Make the fully written dir ``staged`` live at ``path``: rename the
+    live copy to its hidden old sibling, then ``staged`` → ``path``
+    (``staged=None`` retires the live copy: an emptied bucket). Heals an
+    earlier interrupted swap first. Returns the old sibling, which the
+    caller deletes once every swap of its commit has landed."""
+    heal_swap(path)
+    old = swap_old_path(path)
+    shutil.rmtree(old, ignore_errors=True)  # debris of a completed swap
+    if os.path.exists(path):
+        os.rename(path, old)
+    if staged is not None:
+        os.rename(staged, path)
+    return old
+
+
+def atomic_replace(df, path: str) -> None:
+    """Write-then-swap: write the DataFrame ``df`` to a hidden sibling of
+    ``path`` (same filesystem), then ``swap_in`` it and delete the old
+    copy. The frame may lazily read ``path`` itself — the write never
+    touches the live files, which stay until the swap — and a crash
+    before the swap leaves the old table, after it the new one."""
+    head, tail = os.path.split(path.rstrip("/"))
+    os.makedirs(head or ".", exist_ok=True)
+    heal_swap(path)
+    new = os.path.join(head, f".{tail}.__swap_new_{uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(new)
+    shutil.rmtree(swap_in(new, path), ignore_errors=True)
+
+
+# --------------------------------------------------------------------------
+# Streaming corpora: committed-data check, staged index append, compact claim
+
+
+def parquet_has_data(path: str) -> bool:
+    """True iff ``path`` is a parquet dir with at least one committed data
+    file. Bare existence is not enough: a crash during the FIRST append
+    leaves only _temporary/, and a later schema-inferring read of that
+    data-less dir raises — the reader must treat it as absent."""
+    if not os.path.isdir(path):
+        return False
+    return any(not name.startswith(("_", ".")) for name in os.listdir(path))
+
+
+COMPACT_MARKER = "_COMPACT_IN_PROGRESS"
+
+
+def claim_compact(corpus_path: str) -> str:
+    """Create-exclusive marker claiming a streaming corpus for a compact.
+    A second concurrent compact fails loudly here instead of both racing
+    the swap, and the ingest jobs refuse to write while the marker exists
+    (``refuse_if_compacting``). The marker names its owner so a crashed
+    compact's stale claim is diagnosable (delete the file to release).
+    Returns the marker path."""
+    marker = os.path.join(corpus_path, COMPACT_MARKER)
+    try:
+        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        raise RuntimeError(
+            f"compact already in progress for {corpus_path!r} "
+            f"(marker {marker}); if the previous compact crashed, delete "
+            "the marker file to release the claim"
+        ) from None
+    with os.fdopen(fd, "w") as f:
+        f.write(f"pid={os.getpid()}\n")
+    return marker
+
+
+def refuse_if_compacting(corpus_path: str) -> None:
+    """Ingest guard, checked at batch start and again at the write
+    boundary: fail the micro-batch loudly rather than race a running
+    compact's swap (the checkpoint retries it after the claim is
+    released)."""
+    if os.path.exists(os.path.join(corpus_path, COMPACT_MARKER)):
+        raise RuntimeError(
+            f"compact in progress for {corpus_path!r} — refusing to "
+            f"ingest concurrently (see {COMPACT_MARKER} marker)"
+        )
+
+
+@contextlib.contextmanager
+def compacting(corpus_path: str, stale_stage: str | None = None) -> Iterator[None]:
+    """Hold the compact claim for the ``with`` body and release it on
+    every exit. ``stale_stage`` names the prefix of a ``staged_append``
+    stage dir: those left by crashed batches are swept under the claim
+    (anything they carried is re-derived on redelivery or by the
+    compact)."""
+    marker = claim_compact(corpus_path)
+    try:
+        if stale_stage is not None:
+            for name in os.listdir(corpus_path):
+                if name.startswith(stale_stage):
+                    shutil.rmtree(
+                        os.path.join(corpus_path, name), ignore_errors=True
+                    )
+        yield
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(marker)  # externally released: keep the real error
+
+
+def staged_append(
+    corpus_path: str,
+    stage_name: str,
+    index_rows,
+    index_path: str,
+    append_docs: Callable[[], None],
+) -> None:
+    """Append the DataFrame ``index_rows`` to the index at ``index_path``
+    after ``append_docs()`` has appended their documents — docs visible
+    first, index second, so an index entry never exists without its doc.
+
+    The index rows are written to the hidden stage dir
+    ``{corpus_path}/{stage_name}`` BEFORE the docs append: they are
+    usually derived from a plan that reads the docs table, and Spark
+    recaches every cached plan whose input is written, so staging keeps
+    every job on the pre-append listing and leaves only a file move after
+    it. The compact claim is re-checked between the stage write and the
+    docs append. Every crash window — before the docs append, between it
+    and the move, or mid-move (each moved part file is complete) — leaves
+    the index a subset of the docs; the owning compact sweeps the stale
+    stage dir."""
+    stage = os.path.join(corpus_path, stage_name)
+    index_rows.write.mode("overwrite").parquet(stage)
+    refuse_if_compacting(corpus_path)
+    append_docs()
+    os.makedirs(index_path, exist_ok=True)
+    for name in os.listdir(stage):
+        if not name.startswith(("_", ".")):
+            os.replace(os.path.join(stage, name), os.path.join(index_path, name))
+    shutil.rmtree(stage, ignore_errors=True)

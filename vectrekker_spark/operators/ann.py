@@ -946,7 +946,6 @@ def ivf_search_cells(
     n_probe: int = 3,
     id_col: str | None = None,
     vec_col: str | None = None,
-    prune_max_cells: int = 1024,
     corpus: DataFrame | None = None,
     rerank_factor: int = 4,
 ) -> DataFrame:
@@ -971,11 +970,11 @@ def ivf_search_cells(
     The query side is evaluated once: the probes are materialized
     (``session.truncate_lineage``; on a cluster without a checkpoint dir
     they stay a plan and the queries are read twice), and both the cid
-    collect and the cell join read that result. When the distinct probed
-    cids fit under ``prune_max_cells`` they are collected and applied as
-    an ``isin`` filter, so the cell scan statically prunes to exactly the
-    probed partitions (asserted in test_plans); past the cap every cell is
-    read and the cid equi-join restricts candidates.
+    collect and the cell join read that result. The distinct probed cids
+    (at most the centroid count, which ``_centroid_cap`` bounds) are
+    collected and applied as an ``isin`` filter, so the cell scan
+    statically prunes to exactly the probed partitions (asserted in
+    test_plans).
     The probes carry qvec, so the queries are not joined back, and the
     ranking window drops the copies of a vector multi-assigned to two probed
     cells (no dedupe exchange)."""
@@ -993,12 +992,8 @@ def ivf_search_cells(
     materialized = truncate_lineage(probes)
     if materialized is not None:
         probes = materialized
-    probed = [
-        r[0]
-        for r in probes.select("cid").distinct().limit(prune_max_cells + 1).collect()
-    ]
-    if len(probed) <= prune_max_cells:
-        cells = cells.filter(F.col("cid").isin(probed))
+    probed = [r[0] for r in probes.select("cid").distinct().collect()]
+    cells = cells.filter(F.col("cid").isin(probed))
     cands = probes.join(cells, "cid")  # (cid, qid, qvec, id, vector...)
     if not quantized:
         return _topk_by_score(cands, k, id_col, vec_col or data_cols[1], dedupe=True)

@@ -20,6 +20,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectrekker_spark.commit import heal_swaps, swap_in
+
 
 def detect_changes(
     scan: DataFrame,
@@ -353,27 +355,14 @@ def merge_upsert_partitioned(
         upd.write.mode("overwrite").partitionBy("__bucket").parquet(path)
         return sorted(r[0] for r in upd.select("__bucket").distinct().collect())
 
-    # Recover, then sweep, debris from a previous crashed run (single-writer
-    # table). A merge that died between its live→trash rename and the
-    # staged→live promotion leaves a bucket with NO live dir but a trash
-    # copy — that trash dir holds the only copy of the bucket's base rows,
-    # so restore it before sweeping (pre-merge state; the at-least-once
-    # retry re-merges it to the committed result). This also covers the
-    # emptied-bucket case: restoring then re-running the same merge deletes
-    # the rows again. Only after restoration is deleting debris safe.
-    for d in os.listdir(path):
-        if d.startswith(".trash_"):
-            b_str = d.split("_", 2)[1]
-            live = os.path.join(path, f"__bucket={b_str}")
-            if not os.path.exists(live):
-                os.rename(os.path.join(path, d), live)
-    _cleanup_dirs(
-        [
-            os.path.join(path, d)
-            for d in os.listdir(path)
-            if d.startswith((".trash_", ".staging_"))
-        ]
-    )
+    # Heal, then sweep, debris from a previous crashed run (single-writer
+    # table): a bucket whose swap died between its two renames has its
+    # base rows only in the hidden old sibling — commit.heal_swaps restores
+    # it (pre-merge state; the at-least-once retry re-merges it, and
+    # re-deletes an emptied bucket's rows). Only the completed swaps' old
+    # copies and staging dirs are left, and only those are deleted.
+    staging_dirs = [d for d in os.listdir(path) if d.startswith(".staging_")]
+    _cleanup_dirs(heal_swaps(path) + [os.path.join(path, d) for d in staging_dirs])
 
     groups = None
     if group_col:
@@ -408,45 +397,35 @@ def merge_upsert_partitioned(
         merged = base_subset.join(groups, group_col, "left_anti").unionByName(upd)
     else:
         merged = merge_upsert(base_subset, upd, key)
-    # Stage-then-swap commit (the _atomic_replace pattern, per bucket):
+    # Stage-then-swap commit, per bucket (commit.swap_in):
     # 1. write the merged buckets to a dot-prefixed staging dir inside the
     #    table (same filesystem → rename works; hidden from parquet readers).
     #    Writing to staging — not over the live dirs — also means the plan
     #    never overwrites its own input, so no lineage break is needed.
-    # 2. per touched bucket: rename live → dot-prefixed trash, staging → live.
-    #    A bucket whose rows were all deleted simply has no staged dir.
-    # 3. only after every swap: delete trash + staging.
+    # 2. per touched bucket: swap the staged dir in (live → hidden old
+    #    sibling, staged → live); an emptied bucket has no staged dir, so
+    #    its live dir is only retired.
+    # 3. only after every swap: delete the old copies + staging.
     # A crash before any swap leaves the table untouched; a crash between
-    # swap and cleanup leaves only invisible trash dirs — the table stays
-    # readable and the merge re-runnable. The unavoidable non-atomic window
-    # is the two renames of step 2 (POSIX has no atomic dir exchange); it is
-    # per-bucket, contains no data copy (microseconds wide), and a crash
-    # inside it is healed by the trash-restore recovery at the next merge's
-    # start — the trashed dir is the bucket's only copy and is restored,
-    # never swept, when its live dir is missing.
+    # swap and cleanup leaves only hidden dirs — the table stays readable
+    # and the merge re-runnable; a crash inside one bucket's swap is
+    # healed at the next merge's start.
     staging = os.path.join(path, f".staging_{uuid.uuid4().hex}")
     merged.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
-    staged_buckets = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staging)
-        if d.startswith("__bucket=")
-    }
-    trash: list[str] = []
+    staged = set(os.listdir(staging))
+    old = []
     for b in buckets:
-        live = os.path.join(path, f"__bucket={b}")
-        if os.path.exists(live):
-            t = os.path.join(path, f".trash_{b}_{uuid.uuid4().hex}")
-            os.rename(live, t)
-            trash.append(t)
-        if b in staged_buckets:
-            os.rename(os.path.join(staging, f"__bucket={b}"), live)
-    _cleanup_dirs(trash + [staging])
+        name = f"__bucket={b}"
+        src = os.path.join(staging, name) if name in staged else None
+        old.append(swap_in(src, os.path.join(path, name)))
+    _cleanup_dirs(old + [staging])
     return sorted(buckets)
 
 
 def _cleanup_dirs(paths: list[str]) -> None:
-    """Post-commit removal of trash/staging dirs (all dot-prefixed, invisible
-    to readers). Separate function so tests can crash-inject here."""
+    """Post-commit removal of old-copy/staging dirs (all dot-prefixed,
+    invisible to readers). Separate function so tests can crash-inject
+    here."""
     import shutil
 
     for p in paths:

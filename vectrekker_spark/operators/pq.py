@@ -238,10 +238,14 @@ def pq_encode(
     ids by L2 over the normalized subvectors, ties to the lowest code
     (numpy argmin). NULL vectors drop (nothing to encode — the NULL-is-
     never-a-neighbor rule). One narrow Arrow map, codebooks broadcast."""
+    return _encode_grid(corpus, _codebooks_np(codebooks), id_col, vec_col)
+
+
+def _encode_grid(corpus: DataFrame, cb, id_col: str, vec_col: str) -> DataFrame:
+    """pq_encode under an already collected (m, k, dsub) codebook grid."""
     import numpy as np
     import pandas as pd
 
-    cb = _codebooks_np(codebooks)  # (m, k, dsub)
     m, k, dsub = cb.shape
     # ||x - c||² = ||x||² - 2x·c + ||c||²; per-subspace argmin needs only
     # the cross and centroid-norm terms
@@ -460,10 +464,12 @@ def _save_index(
 
 
 def _load_index(spark, path: str, kinds, rebuild: str):
-    """(artifact names, meta, codebooks) of the live version — ONE pointer
-    read, so every table comes from the same commit. ``meta["version"]``
-    is the live codes version. Refuses a codebook grid or rotation table
-    that does not match the pinned geometry."""
+    """(artifact names, meta, codebooks, codebook grid) of the live
+    version — ONE pointer read, so every table comes from the same
+    commit. ``meta["version"]`` is the live codes version. Refuses a
+    codebook grid or rotation table that does not match the pinned
+    geometry; the validated (m, k, dsub) grid is returned so a search or
+    an append does not collect the codebooks again."""
     import numpy as np
 
     names = resolve(path, [k for k in kinds if k != "rotation"], rebuild)
@@ -493,7 +499,7 @@ def _load_index(spark, path: str, kinds, rebuild: str):
         # the ndarray rides the returned meta dict (never JSON-serialized
         # — the json meta only records the flag)
         meta["rotation_matrix"] = R
-    return names, meta, codebooks
+    return names, meta, codebooks, cb
 
 
 def pq_save(
@@ -520,7 +526,7 @@ def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """(codebooks, codes, meta) for a pq_save'd index; raises a
     remediation-naming ValueError when ``path`` holds no committed PQ
     index or its codebook grid does not match the pinned geometry."""
-    names, meta, codebooks = _load_index(spark, path, _PQ_KINDS, _PQ_REBUILD)
+    names, meta, codebooks, _ = _load_index(spark, path, _PQ_KINDS, _PQ_REBUILD)
     codes = spark.read.parquet(os.path.join(path, names["codes"]))
     return codebooks, codes, meta
 
@@ -743,9 +749,9 @@ def ivfpq_save(
 
 
 def _ivfpq_open(spark, path: str):
-    """(artifact names, codebooks, centroids, codes, meta) of the live
-    version — one pointer read for every table."""
-    names, meta, codebooks = _load_index(
+    """(artifact names, codebooks, centroids, codes, meta, codebook grid)
+    of the live version — one pointer read for every table."""
+    names, meta, codebooks, cb = _load_index(
         spark, path, _IVFPQ_KINDS, _IVFPQ_REBUILD
     )
     centroids = spark.read.parquet(os.path.join(path, names["centroids"]))
@@ -754,7 +760,7 @@ def _ivfpq_open(spark, path: str):
     codes = spark.read.parquet(os.path.join(path, names["codes"])).withColumn(
         "cid", F.col("cid").cast("long")
     )
-    return names, codebooks, centroids, codes, meta
+    return names, codebooks, centroids, codes, meta, cb
 
 
 def ivfpq_load(spark, path: str):
@@ -762,7 +768,7 @@ def ivfpq_load(spark, path: str):
     pointer read, so the tables always come from the same committed save.
     Validates the codebook grid against the pinned geometry (codes are
     uninterpretable under a foreign codebook — the pq_load refusal)."""
-    return _ivfpq_open(spark, path)[1:]
+    return _ivfpq_open(spark, path)[1:5]
 
 
 def ivfpq_append(
@@ -787,7 +793,7 @@ def ivfpq_append(
     from vectrekker_spark.operators.ann import assign_centroids
 
     spark = new_corpus.sparkSession
-    names, codebooks, centroids, _, meta = _ivfpq_open(spark, path)
+    names, _, centroids, _, meta, cb = _ivfpq_open(spark, path)
     id_col = id_col or meta["id_col"]
     assign_k = assign_k or meta.get("assign_k") or 1
     probe = (
@@ -813,7 +819,7 @@ def ivfpq_append(
         enc_src = rotate_vectors(
             new_corpus, meta["rotation_matrix"], vec_col=vec_col
         )
-    codes = pq_encode(enc_src, codebooks, id_col=id_col, vec_col=vec_col)
+    codes = _encode_grid(enc_src, cb, id_col, vec_col)
     cells = assign.select(id_col, "cid").join(codes, id_col).select(
         "cid", id_col, "codes"
     )
@@ -833,15 +839,12 @@ def ivfpq_search_cells(
     qvec_col: str = "qvec",
     vec_col: str = "embedding",
     max_queries: int = 10_000,
-    prune_max_cells: int = 1024,
 ) -> DataFrame:
-    """ivfpq_search against a saved (ivfpq_save) index: the probed cids
-    are collected (bounded by ``prune_max_cells`` — the ivf_search_cells
-    idiom) and applied as an ``isin`` filter on the partitioned code
-    scan, so the plan statically prunes to exactly the probed cells'
+    """ivfpq_search against a saved (ivfpq_save) index: the distinct
+    probed cids (at most the centroid count) are collected and applied as
+    an ``isin`` filter on the partitioned code scan (the ivf_search_cells
+    idiom), so the plan statically prunes to exactly the probed cells'
     parquet partitions instead of joining the whole assignment table.
-    Past the cap the filter is skipped and the per-query cid equi-join
-    alone restricts candidates.
 
     Semantics ≡ ivfpq_search over the same (codebooks, centroids,
     assignment, codes) — pinned row-for-row in tests; duplicates from
@@ -849,10 +852,10 @@ def ivfpq_search_cells(
     from vectrekker_spark.operators.ann import assign_centroids
 
     spark = queries.sparkSession
-    codebooks, centroids, codes, meta = ivfpq_load(spark, path)
+    _, _, centroids, codes, meta, cb = _ivfpq_open(spark, path)
     id_col = meta["id_col"]
     qids, lut = _query_luts(
-        queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
+        queries, cb, qid_col, qvec_col, max_queries,
         "ivfpq_search_cells", meta.get("rotation_matrix"),
     )
     if not qids:
@@ -872,13 +875,8 @@ def ivfpq_search_cells(
         centroids,
         assign_k=n_probe,
     ).select(F.col("vec_id").alias(qid_col), "cid")
-    probed = [
-        r[0]
-        for r in probes.select("cid").distinct()
-        .limit(prune_max_cells + 1).collect()
-    ]
-    if len(probed) <= prune_max_cells:
-        codes = codes.filter(F.col("cid").isin(probed))
+    probed = [r[0] for r in probes.select("cid").distinct().collect()]
+    codes = codes.filter(F.col("cid").isin(probed))
     cand = (
         F.broadcast(probes)
         .join(codes, "cid")
@@ -1082,7 +1080,7 @@ def ivfpq_compact(spark, path: str) -> int:
     carry identical codes, so search results never change — pinned in
     tests. Returns rows removed. Single-writer contract as
     ivfpq_save/append."""
-    names, _, _, codes, meta = _ivfpq_open(spark, path)
+    names, _, _, codes, meta, _ = _ivfpq_open(spark, path)
     before = codes.count()
     deduped = codes.dropDuplicates(["cid", meta["id_col"]])
     removed = before - deduped.count()

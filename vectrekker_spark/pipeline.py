@@ -20,21 +20,25 @@ Reference semantics preserved (`vectrekker/main.py`):
 - index rows are (id=path, embedding, metadata={}) (`:185`)
 
 On a lakehouse the two MERGEs are Delta `MERGE INTO`; on plain parquet we
-read-merge-rewrite via a temp dir + atomic rename (never overwrite a path
-that is also an input of the running plan).
+read-merge-rewrite through commit.py: the state is written to a hidden
+sibling and swapped in (`commit.atomic_replace`), the index buckets are
+staged inside the table and swapped per bucket — a path that is also an
+input of the running plan is never overwritten.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# _atomic_replace stays a module attribute that run_pipeline looks up at
+# call time, so a tracer can wrap it (perfbench/spans.py)
+from vectrekker_spark.commit import atomic_replace as _atomic_replace
+from vectrekker_spark.commit import heal_swap
 from vectrekker_spark.functions.tokenize import gate_token_count
 from vectrekker_spark.operators.chunk import chunk_text
 from vectrekker_spark.operators.delta import detect_changes_versioned, merge_upsert
@@ -105,51 +109,13 @@ def _ensure_delta_index(spark: SparkSession, path: str) -> None:
         _delta_append(spark.createDataFrame([], INDEX_SCHEMA), path)
 
 
-def _swap_old_path(path: str) -> str:
-    head, tail = os.path.split(path.rstrip("/"))
-    return os.path.join(head, f".{tail}.__swap_old")
-
-
-def _heal_swap(path: str) -> None:
-    """Recover a crash between _atomic_replace's two renames: the target
-    is missing but the displaced previous table is still at its hidden
-    sibling — rename it back so readers see the pre-swap state (the swap
-    never commits halfway; it either fully replaced or fully didn't)."""
-    old = _swap_old_path(path)
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-
-
 def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    _heal_swap(path)
+    heal_swap(path)
     if os.path.exists(path):
         # the known schema skips the footer-inference job and null-fills
         # columns an older table lacks (a pre-versioning state's embed_version)
         return spark.read.schema(schema).parquet(path)
     return local_frame(spark, [], schema)
-
-
-def _atomic_replace(df: DataFrame, path: str) -> None:
-    """Write df to a hidden SIBLING dir (same filesystem), then swap via
-    two atomic renames. Required because the merged frame lazily reads
-    the old `path` (writing in place would clobber the plan's own input),
-    and the swap must be crash-safe: the old rmtree-then-move protocol
-    staged in /tmp, so the move was often a long cross-device recursive
-    copy with the target ALREADY DELETED — a crash there silently lost
-    the whole accumulated table and the next batch rebuilt from empty
-    (r14s3 review). Now the only unprotected window is between two
-    same-filesystem renames (microseconds), and _heal_swap recovers it."""
-    head, tail = os.path.split(path.rstrip("/"))
-    os.makedirs(head or ".", exist_ok=True)
-    _heal_swap(path)
-    new = os.path.join(head, f".{tail}.__swap_new_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(new)
-    old = _swap_old_path(path)
-    shutil.rmtree(old, ignore_errors=True)  # leftover of a completed swap
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(new, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, int]:

@@ -162,7 +162,7 @@ def compact_parquet(
     import math
     import os as _os
 
-    from vectrekker_spark.pipeline import _atomic_replace
+    from vectrekker_spark.commit import atomic_replace
 
     df = spark.read.parquet(path)
     size_b = sum(
@@ -176,5 +176,5 @@ def compact_parquet(
         if sort_col
         else df.repartition(n_files)
     )
-    _atomic_replace(out, path)
+    atomic_replace(out, path)
     return n_files

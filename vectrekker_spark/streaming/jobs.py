@@ -1,4 +1,4 @@
-"""Structured Streaming surface (SURVEY.md §2.2 ST1–ST5).
+"""Structured Streaming surface (SURVEY.md §2.2 ST1–ST12).
 
 The reference achieves "streaming" by re-running a cron job hourly and
 diffing mtimes against SQLite (`README.md:27,36`; `vectrekker/main.py:
@@ -11,16 +11,31 @@ diffing mtimes against SQLite (`README.md:27,36`; `vectrekker/main.py:
 - ST5: `foreachBatch` + idempotent MERGE = the reference's
   upsert-then-mark-state ordering, per micro-batch.
 - ST6: stream-stream interval join with watermark-bounded state.
+- ST7–ST12: corpus ingestion with dedup against ALL history, one job per
+  family — near (MinHash band index), exact (content bloom), semantic
+  (fixed quantizer, cid-partitioned kept table), per-stratum quota
+  (versioned ledger), URL (exact keyed on the normalized URL) and
+  paragraph (paragraph-hash index) — each with a compact that reclaims
+  its at-least-once redelivery debris.
 
-All builders return unstarted DataFrames/writers so tests can attach
-`trigger(availableNow=True)` and a temp checkpoint.
+The window/dedup/join builders return unstarted DataFrames so tests can
+attach `trigger(availableNow=True)` and a temp checkpoint. The
+`foreach_batch_*` jobs start their query themselves (`_start_batches`:
+availableNow on the given checkpoint); the five corpus-ingest families
+share one micro-batch shell (`_ingest`) and the compacts one claimed
+dedupe-and-swap step (`_dedupe_table` under `commit.compacting`). Every
+directory commit — table swap, staged index append, compact claim,
+ledger pointer — is `vectrekker_spark/commit.py`'s.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectrekker_spark import commit
 from vectrekker_spark.functions.time import epoch_ms, normalize_event_ts
 
 
@@ -31,7 +46,6 @@ def _stream_profile(stage: str, batch_id: int, slices: dict[str, float]) -> None
     anything is tuned). Slice attribution follows the action boundaries,
     so lazy work bills to the first action that materializes it."""
     import json
-    import os
     import sys
 
     if not os.environ.get("SPARK_GRAFT_STREAM_PROFILE"):
@@ -267,6 +281,69 @@ def streaming_index_pipeline(
     return foreach_batch_upsert(rows, index_path, key="id", checkpoint=checkpoint)
 
 
+def _start_batches(stream: DataFrame, do_batch, checkpoint: str):
+    """Start ``stream`` running ``do_batch(batch_df, batch_id)`` on each
+    micro-batch: drain what is available now, then stop. The checkpoint
+    makes a micro-batch that failed a redelivery on the next start.
+    Returns the started query."""
+    return (
+        stream.writeStream.foreachBatch(do_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _ingest(stream: DataFrame, corpus_path: str, checkpoint: str, body, prepare=None):
+    """The micro-batch shell of the corpus-ingest jobs (near, semantic,
+    exact, paragraph, quota): skip an empty batch, refuse while a compact
+    holds the claim, persist the prepared batch (``prepare(batch_df)``,
+    default the batch itself), run ``body(spark, batch, batch_id)`` and
+    unpersist the batch on every exit. Each body re-checks the claim at
+    its own write boundary. Returns the started query."""
+
+    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        commit.refuse_if_compacting(corpus_path)
+        batch = (prepare(batch_df) if prepare else batch_df).persist()
+        try:
+            body(batch_df.sparkSession, batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    return _start_batches(stream, do_batch, checkpoint)
+
+
+def _dedupe_table(spark: SparkSession, path: str, dedup, on_clean=None) -> int:
+    """The compacts' per-table step, run under the compact claim: rewrite
+    the table at ``path`` as ``dedup(table)`` when that removes rows
+    (``commit.atomic_replace``), then drop the session's cached file
+    listing of the swapped path, which a same-session reader (the ingest
+    stream's next batch) would otherwise still see. ``on_clean(clean)``
+    runs before the swap, while the old files still back the lineage.
+    Returns the removed-row count; a table with no committed data (never
+    written, or its first append crashed) removes nothing."""
+    if not commit.parquet_has_data(path):
+        return 0
+    df = spark.read.parquet(path).persist()
+    clean = None
+    try:
+        before = df.count()
+        clean = dedup(df).persist()
+        removed = before - clean.count()
+        if on_clean is not None:
+            on_clean(clean)
+        if removed:
+            commit.atomic_replace(clean, path)
+            spark.catalog.refreshByPath(path)
+        return removed
+    finally:
+        if clean is not None:
+            clean.unpersist()
+        df.unpersist()
+
+
 def foreach_batch_ann_append(
     stream: DataFrame,
     ivf_path: str,
@@ -303,12 +380,7 @@ def foreach_batch_ann_append(
             vec_col=vc,
         )
 
-    return (
-        stream.writeStream.foreachBatch(do_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, do_append, checkpoint)
 
 
 def foreach_batch_upsert(
@@ -318,34 +390,27 @@ def foreach_batch_upsert(
     reference's upsert-then-state ordering (`vectrekker/main.py:185-188`)
     with the checkpoint as the state. Returns the started query."""
     from vectrekker_spark.operators.delta import merge_upsert
-    from vectrekker_spark.pipeline import _atomic_replace, _heal_swap, _read_or_empty
 
     def do_merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # heal a crashed swap BEFORE the existence check: without it a
         # crash mid-replace read as "no target" and the stream silently
         # rebuilt from one micro-batch (r14s3 review)
-        _heal_swap(target_path)
+        commit.heal_swap(target_path)
         base = (
             spark.read.parquet(target_path)
-            if __import__("os").path.exists(target_path)
+            if os.path.exists(target_path)
             else batch_df.limit(0)
         )
         # persist: merge_upsert's auto probe + the merged write both read
         # the batch; without this the source batch recomputes per action
         batch_df.persist()
         try:
-            merged = merge_upsert(base, batch_df, key=key)
-            _atomic_replace(merged, target_path)
+            commit.atomic_replace(merge_upsert(base, batch_df, key=key), target_path)
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, do_merge, checkpoint)
 
 
 def foreach_batch_near_dedup(
@@ -381,8 +446,6 @@ def foreach_batch_near_dedup(
     foreach_batch_ann_append, and an exact-dedup compact over the docs
     table reclaims them. Returns the started query.
     """
-    import os
-
     from vectrekker_spark.operators.dedup import (
         band_hashes,
         minhash_dedup_against,
@@ -393,12 +456,7 @@ def foreach_batch_near_dedup(
     docs_path = os.path.join(corpus_path, "docs")
     bands_path = os.path.join(corpus_path, "bands")
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        spark = batch_df.sparkSession
-        batch = batch_df.persist()
+    def body(spark: SparkSession, batch: DataFrame, batch_id: int) -> None:
         # sign the batch ONCE: the persisted band table feeds the in-batch
         # self-dedup, the history check, and the survivor index append —
         # without it each step re-ran the signature kernel over the same
@@ -420,9 +478,9 @@ def foreach_batch_near_dedup(
             losers = pairs.select(F.col("r_id").alias(id_col)).distinct()
             fresh = batch.join(losers, id_col, "left_anti")
             # 2. against history, via the persisted band index
-            # (_parquet_has_data: a torn FIRST bands append must read as
+            # (parquet_has_data: a torn FIRST bands append must read as
             # absent or redelivery wedges on schema inference — r12)
-            if _parquet_has_data(bands_path):
+            if commit.parquet_has_data(bands_path):
                 dup = minhash_dedup_against(
                     fresh,
                     spark.read.parquet(docs_path),
@@ -444,49 +502,24 @@ def foreach_batch_near_dedup(
             # against its own write)
             fresh = fresh.persist()
             try:
-                # STAGE the survivor bands BEFORE the docs append (the
-                # ST12 protocol): fresh's lineage reads docs_path (the
-                # history verification), and appending to docs RECACHES
-                # every cached plan that reads it — the bands append would
-                # silently re-run the whole dedup pipeline against the
-                # mutated listing (same result here, ~2× the dominant
-                # cost; r14s3 review). Staged dot-dir is invisible to
-                # bands_path readers until moved, so the visibility order
-                # (docs first, bands second — crash degrades to
-                # under-dedup, healed by compact) is unchanged.
-                stage = os.path.join(corpus_path, f".bands_stage_{batch_id}")
-                batch_bands.join(
-                    fresh.select(id_col), id_col, "left_semi"
-                ).write.mode("overwrite").parquet(stage)
-                # re-check the claim at the write boundary (the quota-job
-                # idiom): a compact that claimed AFTER this batch's entry
-                # check would otherwise race its stage-then-swap against
-                # the whole compute duration of the appends below
-                _refuse_if_compacting(corpus_path)
-                fresh.write.mode("append").parquet(docs_path)
-                os.makedirs(bands_path, exist_ok=True)
-                for name in os.listdir(stage):
-                    if name.startswith(("_", ".")):
-                        continue
-                    os.replace(
-                        os.path.join(stage, name),
-                        os.path.join(bands_path, name),
-                    )
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
+                # fresh's lineage reads docs_path (the history
+                # verification), so the survivor bands are staged before
+                # the docs append and moved in after it (the ST12 protocol;
+                # r14s3 review: an unstaged bands append re-ran the whole
+                # dedup against the mutated listing)
+                commit.staged_append(
+                    corpus_path,
+                    f".bands_stage_{batch_id}",
+                    batch_bands.join(fresh.select(id_col), id_col, "left_semi"),
+                    bands_path,
+                    lambda: fresh.write.mode("append").parquet(docs_path),
+                )
             finally:
                 fresh.unpersist()
         finally:
             batch_bands.unpersist()
-            batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest(stream, corpus_path, checkpoint, body)
 
 
 def compact_near_dedup_corpus(
@@ -496,8 +529,9 @@ def compact_near_dedup_corpus(
     duplicates: drop repeated ids from ``{corpus_path}/docs`` (redelivered
     rows are byte-identical payloads — any survivor is THE row) and
     repeated (id, band, band_hash) rows from the band index, rewriting
-    both tables with the stage-then-swap used everywhere else. Returns
-    removed-row counts. Single-writer contract via the shared
+    both tables with the stage-then-swap used everywhere else (a table
+    with no committed data yet is skipped). Returns removed-row counts.
+    Single-writer contract via the shared
     create-exclusive _COMPACT_IN_PROGRESS marker: a concurrent compact
     fails loudly at the claim, and an ingesting micro-batch checks the
     marker at batch START and again at its WRITE boundary, failing (the
@@ -506,44 +540,19 @@ def compact_near_dedup_corpus(
     BETWEEN its two checks when the compact claims — that window is
     narrow but not zero, so "don't start a compact under a live ingest
     stream" remains the operator-side contract."""
-    import contextlib
-    import os
-
-    from vectrekker_spark.pipeline import _atomic_replace
-
-    marker = _claim_compact(corpus_path)
-    # sweep stale band stage dirs (crash windows before their move step —
-    # the ST12 sweep rule); anything they carried is re-derived on
+    # stale band stage dirs (crash windows before their move step) are
+    # swept under the claim; anything they carried is re-derived on
     # redelivery
-    import glob
-    import shutil
-
-    for stale in glob.glob(os.path.join(corpus_path, ".bands_stage_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    out: dict[str, int] = {}
-    try:
-        for name, dedup in (
-            ("docs", lambda df: df.dropDuplicates([id_col])),
-            ("bands", lambda df: df.distinct()),
-        ):
-            path = os.path.join(corpus_path, name)
-            df = spark.read.parquet(path).persist()
-            try:
-                before = df.count()
-                clean = dedup(df)
-                removed = before - clean.count()
-                if removed:
-                    _atomic_replace(clean, path)
-                    # same-session readers hold a cached file listing of
-                    # the swapped directory (the compact_quota lesson)
-                    spark.catalog.refreshByPath(path)
-                out[f"{name}_removed"] = removed
-            finally:
-                df.unpersist()
-        return out
-    finally:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(marker)
+    with commit.compacting(corpus_path, stale_stage=".bands_stage_"):
+        return {
+            f"{name}_removed": _dedupe_table(
+                spark, os.path.join(corpus_path, name), dedup
+            )
+            for name, dedup in (
+                ("docs", lambda df: df.dropDuplicates([id_col])),
+                ("bands", lambda df: df.distinct()),
+            )
+        }
 
 
 def compact_exact_corpus(
@@ -560,30 +569,15 @@ def compact_exact_corpus(
     stays correct by the ST8 invariant (false positives cost verification
     work, never correctness). Same enforced single-writer claim as the
     sibling compacts."""
-    import contextlib
-    import os
-
-    from vectrekker_spark.pipeline import _atomic_replace
-
     docs_path = os.path.join(corpus_path, "docs")
-    if not _parquet_has_data(docs_path):
+    if not commit.parquet_has_data(docs_path):
         return {"docs_removed": 0}
-    marker = _claim_compact(corpus_path)
-    df = None
-    try:
-        df = spark.read.parquet(docs_path).persist()
-        before = df.count()
-        clean = df.dropDuplicates([id_col])
-        removed = before - clean.count()
-        if removed:
-            _atomic_replace(clean, docs_path)
-            spark.catalog.refreshByPath(docs_path)
-        return {"docs_removed": removed}
-    finally:
-        if df is not None:
-            df.unpersist()
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(marker)
+    with commit.compacting(corpus_path):
+        return {
+            "docs_removed": _dedupe_table(
+                spark, docs_path, lambda df: df.dropDuplicates([id_col])
+            )
+        }
 
 
 def foreach_batch_semantic_dedup(
@@ -636,7 +630,7 @@ def foreach_batch_semantic_dedup(
     semantic_dedup_against contract) — with that, the accumulated kept
     table equals a one-shot semantic_dedup over everything ingested.
     """
-    import os
+    import time as _time
 
     from vectrekker_spark.operators.ann import ivf_centroids
     from vectrekker_spark.operators.semdedup import semantic_dedup_against
@@ -644,107 +638,91 @@ def foreach_batch_semantic_dedup(
     cent_path = os.path.join(corpus_path, "centroids")
     kept_path = os.path.join(corpus_path, "kept")
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        spark = batch_df.sparkSession
-        batch = batch_df.persist()
+    def body(spark: SparkSession, batch: DataFrame, batch_id: int) -> None:
         _prof: dict[str, float] = {}
         _t = _time.monotonic()
-        try:
-            scorable = batch.where(F.col(vec_col).isNotNull())
-            cents = None
-            if os.path.exists(cent_path):
-                try:
-                    cents = spark.read.parquet(cent_path)
-                    cents.limit(1).collect()  # force schema + a committed file
-                except Exception:
-                    # torn save (crash mid-write of the first quantizer):
-                    # treat as absent and refit below. Safe: the write
-                    # order guarantees no kept rows were decided under the
-                    # torn quantizer.
-                    cents = None
-            if cents is None:
-                if scorable.isEmpty():
-                    # nothing to fit against or score; null-vector rows
-                    # append verbatim (kept, cid NULL) and the quantizer
-                    # waits for the first scorable batch
-                    _refuse_if_compacting(corpus_path)  # re-check at write
-                    batch.withColumn("cid", F.lit(None).cast("long")).write.mode(
-                        "append"
-                    ).partitionBy("cid").parquet(kept_path)
-                    return
-                # √(eventual corpus), capped by what this batch can fit
-                k = n_clusters or max(
-                    1,
-                    min(int(expected_total ** 0.5), scorable.count()),
-                )
-                # lloyd (r15): driver-side seeded fit — one collect job on
-                # the √N-small quantizer sample instead of ~25 MLlib jobs
-                # per stream start (measured 10.3 s → <1 s at sf1)
-                cents = ivf_centroids(
-                    scorable, n_centroids=k, id_col=id_col, vec_col=vec_col,
-                    method="lloyd",
-                )
-                # quantizer FIRST: a crash after this write, before any
-                # kept append, redelivers into the same fixed cells
-                cents.write.mode("overwrite").parquet(cent_path)
-                cents = spark.read.parquet(cent_path)
-            hist = None
-            # _parquet_has_data, not os.path.exists: a crash mid FIRST
-            # kept append leaves only _temporary/ and every redelivery
-            # would wedge on an uninferable-schema read (r14s3 review)
-            if _parquet_has_data(kept_path):
-                # cast: partition-column type inference can narrow the
-                # directory-encoded cid to int; the kernel contract is long
-                hist = spark.read.parquet(kept_path).where(
-                    F.col("cid").isNotNull()
-                ).select(
-                    id_col, F.col("cid").cast("long").alias("cid"), vec_col
-                )
-            else:
-                id_t = dict(batch.dtypes)[id_col]
-                vec_t = dict(batch.dtypes)[vec_col]
-                hist = spark.createDataFrame(
-                    [], f"`{id_col}` {id_t}, cid long, `{vec_col}` {vec_t}"
-                )
-            _prof["t_quantizer_and_history_plan"] = _time.monotonic() - _t
-            _t = _time.monotonic()
-            dec = semantic_dedup_against(
-                batch, None, cents,
-                threshold=threshold, id_col=id_col, vec_col=vec_col,
-                max_cluster_rows=max_cluster_rows, kept_assigned=hist,
-            ).persist()
-            assign_cache = getattr(dec, "_cached_assign", None)
+        scorable = batch.where(F.col(vec_col).isNotNull())
+        cents = None
+        if os.path.exists(cent_path):
             try:
-                survivors = batch.join(
-                    dec.where(F.col("keep")).select(id_col, "cid"),
-                    id_col, "inner",
-                )
-                # re-check the claim at the write boundary (quota idiom):
-                # a compact claiming mid-batch must not race the append
-                _refuse_if_compacting(corpus_path)
-                survivors.write.mode("append").partitionBy("cid").parquet(
-                    kept_path
-                )
-                _prof["t_decide_and_append"] = _time.monotonic() - _t
-                _stream_profile("semantic_dedup", batch_id, _prof)
-            finally:
-                dec.unpersist()
-                if assign_cache is not None:
-                    assign_cache.unpersist()
+                cents = spark.read.parquet(cent_path)
+                cents.limit(1).collect()  # force schema + a committed file
+            except Exception:
+                # torn save (crash mid-write of the first quantizer):
+                # treat as absent and refit below. Safe: the write
+                # order guarantees no kept rows were decided under the
+                # torn quantizer.
+                cents = None
+        if cents is None:
+            if scorable.isEmpty():
+                # nothing to fit against or score; null-vector rows
+                # append verbatim (kept, cid NULL) and the quantizer
+                # waits for the first scorable batch
+                commit.refuse_if_compacting(corpus_path)  # re-check at write
+                batch.withColumn("cid", F.lit(None).cast("long")).write.mode(
+                    "append"
+                ).partitionBy("cid").parquet(kept_path)
+                return
+            # √(eventual corpus), capped by what this batch can fit
+            k = n_clusters or max(
+                1,
+                min(int(expected_total ** 0.5), scorable.count()),
+            )
+            # lloyd (r15): driver-side seeded fit — one collect job on
+            # the √N-small quantizer sample instead of ~25 MLlib jobs
+            # per stream start (measured 10.3 s → <1 s at sf1)
+            cents = ivf_centroids(
+                scorable, n_centroids=k, id_col=id_col, vec_col=vec_col,
+                method="lloyd",
+            )
+            # quantizer FIRST: a crash after this write, before any
+            # kept append, redelivers into the same fixed cells
+            cents.write.mode("overwrite").parquet(cent_path)
+            cents = spark.read.parquet(cent_path)
+        # parquet_has_data, not os.path.exists: a crash mid FIRST kept
+        # append leaves only _temporary/ and every redelivery would wedge
+        # on an uninferable-schema read (r14s3 review)
+        if commit.parquet_has_data(kept_path):
+            # cast: partition-column type inference can narrow the
+            # directory-encoded cid to int; the kernel contract is long
+            hist = spark.read.parquet(kept_path).where(
+                F.col("cid").isNotNull()
+            ).select(
+                id_col, F.col("cid").cast("long").alias("cid"), vec_col
+            )
+        else:
+            id_t = dict(batch.dtypes)[id_col]
+            vec_t = dict(batch.dtypes)[vec_col]
+            hist = spark.createDataFrame(
+                [], f"`{id_col}` {id_t}, cid long, `{vec_col}` {vec_t}"
+            )
+        _prof["t_quantizer_and_history_plan"] = _time.monotonic() - _t
+        _t = _time.monotonic()
+        dec = semantic_dedup_against(
+            batch, None, cents,
+            threshold=threshold, id_col=id_col, vec_col=vec_col,
+            max_cluster_rows=max_cluster_rows, kept_assigned=hist,
+        ).persist()
+        assign_cache = getattr(dec, "_cached_assign", None)
+        try:
+            survivors = batch.join(
+                dec.where(F.col("keep")).select(id_col, "cid"),
+                id_col, "inner",
+            )
+            # re-check the claim at the write boundary (quota idiom):
+            # a compact claiming mid-batch must not race the append
+            commit.refuse_if_compacting(corpus_path)
+            survivors.write.mode("append").partitionBy("cid").parquet(
+                kept_path
+            )
+            _prof["t_decide_and_append"] = _time.monotonic() - _t
+            _stream_profile("semantic_dedup", batch_id, _prof)
         finally:
-            batch.unpersist()
+            dec.unpersist()
+            if assign_cache is not None:
+                assign_cache.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest(stream, corpus_path, checkpoint, body)
 
 
 def compact_semantic_corpus(
@@ -761,35 +739,17 @@ def compact_semantic_corpus(
     at batch start and at their write boundary (see compact_quota_corpus
     for the protocol and the residual mid-flight window, which remains
     the operator-side "no compact under a live stream" contract)."""
-    import contextlib
-    import os
-
-    from vectrekker_spark.pipeline import _atomic_replace
-
     null_dir = os.path.join(
         corpus_path, "kept", "cid=__HIVE_DEFAULT_PARTITION__"
     )
     if not os.path.exists(null_dir):
         return {"kept_removed": 0}
-    marker = _claim_compact(corpus_path)
-    df = None
-    try:
-        df = spark.read.parquet(null_dir).persist()
-        before = df.count()
-        clean = df.dropDuplicates([id_col])
-        removed = before - clean.count()
-        if removed:
-            _atomic_replace(clean, null_dir)
-            # same-session readers otherwise race the FileStatusCache
-            # into the pre-compact listing (the sibling compacts' rule —
-            # this one had omitted it, r14s3 review)
-            spark.catalog.refreshByPath(null_dir)
-        return {"kept_removed": removed}
-    finally:
-        if df is not None:
-            df.unpersist()
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(marker)
+    with commit.compacting(corpus_path):
+        return {
+            "kept_removed": _dedupe_table(
+                spark, null_dir, lambda df: df.dropDuplicates([id_col])
+            )
+        }
 
 
 def foreach_batch_exact_dedup(
@@ -830,7 +790,7 @@ def foreach_batch_exact_dedup(
     (the id-distinct compact), the same effective-idempotence contract
     as the ST7 docs table. Returns the started query.
     """
-    import os
+    import time as _time
 
     from vectrekker_spark.operators.bloom import bloom_add, bloom_load, bloom_save
     from vectrekker_spark.operators.dedup import (
@@ -842,105 +802,90 @@ def foreach_batch_exact_dedup(
     docs_path = os.path.join(corpus_path, "docs")
     bloom_path = os.path.join(corpus_path, "bloom")
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        spark = batch_df.sparkSession
-        batch = batch_df.persist()
+    def body(spark: SparkSession, batch: DataFrame, batch_id: int) -> None:
         _prof: dict[str, float] = {}
         _t = _time.monotonic()
-        try:
-            keepers = exact_dedup_map(
-                batch, text_col=text_col, id_col=id_col
-            ).select(F.col("keep_id").alias(id_col))
-            fresh = batch.join(keepers, id_col, "left_semi")
-            bloom = None
-            # _parquet_has_data, not os.path.exists: a crash mid FIRST
-            # docs append leaves only _temporary/ and existence alone
-            # would send every redelivery into an uninferable-schema read
-            # — wedged forever (the bands/quota rule; r14s3 review)
-            have_docs = _parquet_has_data(docs_path)
-            if have_docs:
-                try:
-                    bloom = bloom_load(bloom_path)
-                except ValueError:
-                    bloom = None  # torn save: verified plain join, heal below
-                fresh = exact_dedup_against(
-                    fresh,
-                    spark.read.parquet(docs_path),
-                    text_col=text_col,
-                    history_bloom=bloom,
-                )
-            _prof["t_plan_and_bloom_load"] = _time.monotonic() - _t
-            _t = _time.monotonic()
-            fresh = fresh.persist()
-            probe = getattr(fresh, "_cached_probe", None)
+        keepers = exact_dedup_map(
+            batch, text_col=text_col, id_col=id_col
+        ).select(F.col("keep_id").alias(id_col))
+        fresh = batch.join(keepers, id_col, "left_semi")
+        bloom = None
+        # parquet_has_data, not os.path.exists: a crash mid FIRST docs
+        # append leaves only _temporary/ and existence alone would send
+        # every redelivery into an uninferable-schema read — wedged
+        # forever (the bands/quota rule; r14s3 review)
+        have_docs = commit.parquet_has_data(docs_path)
+        if have_docs:
             try:
-                if fresh.isEmpty():
-                    _prof["t_dedup_materialize"] = _time.monotonic() - _t
-                    _t = _time.monotonic()
-                    # COMMIT the torn-bloom heal even when every row was a
-                    # duplicate: without this a dup-heavy stream re-derives
-                    # from full history on every batch (the quota
-                    # empty-admit rule; r14s3 review)
-                    if have_docs and bloom is None:
-                        _refuse_if_compacting(corpus_path)
-                        bloom_save(
-                            content_bloom(
-                                spark.read.parquet(docs_path)
-                                .select(id_col, text_col),
-                                text_col=text_col,
-                                fpp=fpp,
-                                expected=expected_total,
-                            ),
-                            bloom_path,
-                        )
-                    _prof["t_bloom_heal"] = _time.monotonic() - _t
-                    _stream_profile("exact_dedup", batch_id, _prof)
-                    return
+                bloom = bloom_load(bloom_path)
+            except ValueError:
+                bloom = None  # torn save: verified plain join, heal below
+            fresh = exact_dedup_against(
+                fresh,
+                spark.read.parquet(docs_path),
+                text_col=text_col,
+                history_bloom=bloom,
+            )
+        _prof["t_plan_and_bloom_load"] = _time.monotonic() - _t
+        _t = _time.monotonic()
+        fresh = fresh.persist()
+        probe = getattr(fresh, "_cached_probe", None)
+        try:
+            if fresh.isEmpty():
                 _prof["t_dedup_materialize"] = _time.monotonic() - _t
                 _t = _time.monotonic()
-                if bloom is None:
-                    # first batch, or healing a torn bloom: (re)build over
-                    # history + survivors, sized for the eventual corpus
-                    seed = fresh.select(id_col, text_col)
-                    if have_docs:
-                        seed = (
+                # COMMIT the torn-bloom heal even when every row was a
+                # duplicate: without this a dup-heavy stream re-derives
+                # from full history on every batch (the quota
+                # empty-admit rule; r14s3 review)
+                if have_docs and bloom is None:
+                    commit.refuse_if_compacting(corpus_path)
+                    bloom_save(
+                        content_bloom(
                             spark.read.parquet(docs_path)
-                            .select(id_col, text_col)
-                            .unionByName(seed)
-                        )
-                    bloom = content_bloom(
-                        seed, text_col=text_col, fpp=fpp, expected=expected_total
+                            .select(id_col, text_col),
+                            text_col=text_col,
+                            fpp=fpp,
+                            expected=expected_total,
+                        ),
+                        bloom_path,
                     )
-                else:
-                    bloom = bloom_add(bloom, fresh, text_col)
-                # re-check the claim at the write boundary (quota idiom):
-                # a compact claiming mid-batch must not race the writes
-                _refuse_if_compacting(corpus_path)
-                # bloom FIRST, docs second (the superset invariant above)
-                bloom_save(bloom, bloom_path)
-                _prof["t_bloom_fold_save"] = _time.monotonic() - _t
-                _t = _time.monotonic()
-                fresh.write.mode("append").parquet(docs_path)
-                _prof["t_docs_append"] = _time.monotonic() - _t
+                _prof["t_bloom_heal"] = _time.monotonic() - _t
                 _stream_profile("exact_dedup", batch_id, _prof)
-            finally:
-                if probe is not None:
-                    probe.unpersist()
-                fresh.unpersist()
+                return
+            _prof["t_dedup_materialize"] = _time.monotonic() - _t
+            _t = _time.monotonic()
+            if bloom is None:
+                # first batch, or healing a torn bloom: (re)build over
+                # history + survivors, sized for the eventual corpus
+                seed = fresh.select(id_col, text_col)
+                if have_docs:
+                    seed = (
+                        spark.read.parquet(docs_path)
+                        .select(id_col, text_col)
+                        .unionByName(seed)
+                    )
+                bloom = content_bloom(
+                    seed, text_col=text_col, fpp=fpp, expected=expected_total
+                )
+            else:
+                bloom = bloom_add(bloom, fresh, text_col)
+            # re-check the claim at the write boundary (quota idiom):
+            # a compact claiming mid-batch must not race the writes
+            commit.refuse_if_compacting(corpus_path)
+            # bloom FIRST, docs second (the superset invariant above)
+            bloom_save(bloom, bloom_path)
+            _prof["t_bloom_fold_save"] = _time.monotonic() - _t
+            _t = _time.monotonic()
+            fresh.write.mode("append").parquet(docs_path)
+            _prof["t_docs_append"] = _time.monotonic() - _t
+            _stream_profile("exact_dedup", batch_id, _prof)
         finally:
-            batch.unpersist()
+            if probe is not None:
+                probe.unpersist()
+            fresh.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _ingest(stream, corpus_path, checkpoint, body)
 
 
 def foreach_batch_url_dedup(
@@ -1030,8 +975,6 @@ def foreach_batch_para_dedup(
        ``compact_para_corpus`` rebuilds the index from docs and sweeps
        stale stage dirs to heal. Returns the started query.
     """
-    import os
-
     from vectrekker_spark.operators.paradedup import (
         dedup_paragraphs,
         dedup_paragraphs_against,
@@ -1047,89 +990,58 @@ def foreach_batch_para_dedup(
     docs_path = os.path.join(corpus_path, "docs")
     hashes_path = os.path.join(corpus_path, "para_hashes")
 
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        spark = batch_df.sparkSession
-        batch = batch_df.where(F.col(id_col).isNotNull()).persist()
-        try:
-            if _parquet_has_data(docs_path):
-                existing = spark.read.parquet(docs_path).select(id_col)
-                fresh = batch.join(existing, id_col, "left_anti")
-            else:
-                fresh = batch
-            if _parquet_has_data(hashes_path):
-                out = dedup_paragraphs_against(
-                    fresh,
-                    spark.read.parquet(hashes_path),
-                    id_col=id_col,
-                    text_col=text_col,
-                    min_chars=min_chars,
-                    out_col="__pd_out",
-                )
-            else:
-                out = dedup_paragraphs(
-                    fresh,
-                    id_col=id_col,
-                    text_col=text_col,
-                    min_chars=min_chars,
-                    out_col="__pd_out",
-                )
-            kept = (
-                out.withColumn(text_col, F.col("__pd_out"))
-                .drop("__pd_out", "paras_dropped")
-                .where(
-                    F.col(text_col).isNull() | (F.length(F.col(text_col)) > 0)
-                )
-                .persist()
+    def body(spark: SparkSession, batch: DataFrame, batch_id: int) -> None:
+        if commit.parquet_has_data(docs_path):
+            existing = spark.read.parquet(docs_path).select(id_col)
+            fresh = batch.join(existing, id_col, "left_anti")
+        else:
+            fresh = batch
+        if commit.parquet_has_data(hashes_path):
+            out = dedup_paragraphs_against(
+                fresh,
+                spark.read.parquet(hashes_path),
+                id_col=id_col,
+                text_col=text_col,
+                min_chars=min_chars,
+                out_col="__pd_out",
             )
-            try:
-                if kept.isEmpty():
-                    return
-                new_hashes = paragraph_hashes(
+        else:
+            out = dedup_paragraphs(
+                fresh,
+                id_col=id_col,
+                text_col=text_col,
+                min_chars=min_chars,
+                out_col="__pd_out",
+            )
+        kept = (
+            out.withColumn(text_col, F.col("__pd_out"))
+            .drop("__pd_out", "paras_dropped")
+            .where(F.col(text_col).isNull() | (F.length(F.col(text_col)) > 0))
+            .persist()
+        )
+        try:
+            if kept.isEmpty():
+                return
+            # kept and its hashes read docs_path (the id guard), so the
+            # hashes are staged before the docs append: an append would
+            # otherwise recache the guard against the mutated listing and
+            # empty the batch (found by the streaming fuzzer's first para
+            # campaign: the index stopped growing after batch 1)
+            commit.staged_append(
+                corpus_path,
+                f".hashes_stage_{batch_id}",
+                paragraph_hashes(
                     kept, id_col=id_col, text_col=text_col, min_chars=min_chars
-                )
-                # STAGE the hash files to a hidden dir BEFORE the docs
-                # append. Both kept and new_hashes read docs_path (the id
-                # guard), and Spark's cache manager RECACHES any cached
-                # plan whose inputs you write to — an append to docs_path
-                # re-executes the guard against the mutated listing and
-                # empties the batch (found by the streaming fuzzer's
-                # first para campaign: the index stopped growing after
-                # batch 1). Staging runs every job over the PRE-append
-                # listings; the post-append step is a pure file move.
-                stage = os.path.join(
-                    corpus_path, f".hashes_stage_{batch_id}"
-                )
-                new_hashes.write.mode("overwrite").parquet(stage)
-                # re-check the claim at the write boundary (quota idiom)
-                _refuse_if_compacting(corpus_path)
-                # VISIBILITY order: docs first, hashes second (the
-                # content-safety inversion documented above) — the staged
-                # dot-dir is invisible to hashes_path readers until moved
-                kept.write.mode("append").parquet(docs_path)
-                os.makedirs(hashes_path, exist_ok=True)
-                for name in os.listdir(stage):
-                    if name.startswith(("_", ".")):
-                        continue
-                    os.replace(
-                        os.path.join(stage, name),
-                        os.path.join(hashes_path, name),
-                    )
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
-            finally:
-                kept.unpersist()
+                ),
+                hashes_path,
+                lambda: kept.write.mode("append").parquet(docs_path),
+            )
         finally:
-            batch.unpersist()
+            kept.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        stream, corpus_path, checkpoint, body,
+        prepare=lambda df: df.where(F.col(id_col).isNotNull()),
     )
 
 
@@ -1146,149 +1058,56 @@ def compact_para_corpus(
     any duplicate-id doc rows. Same enforced single-writer claim +
     stage-then-swap as the sibling compacts; ingest batches racing the
     claim fail loudly and retry after release."""
-    import contextlib
-    import os
-
     from vectrekker_spark.operators.paradedup import paragraph_hashes
-    from vectrekker_spark.pipeline import _atomic_replace
-
-    import glob
-    import shutil
 
     docs_path = os.path.join(corpus_path, "docs")
     hashes_path = os.path.join(corpus_path, "para_hashes")
-    if not _parquet_has_data(docs_path):
+    if not commit.parquet_has_data(docs_path):
         return {"docs_removed": 0, "index_hashes": 0}
-    marker = _claim_compact(corpus_path)
-    # sweep stale hash stage dirs (crash windows before their move step);
-    # the rebuild below re-derives anything they carried from docs
-    for stale in glob.glob(os.path.join(corpus_path, ".hashes_stage_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    df = None
-    try:
-        df = spark.read.parquet(docs_path).persist()
-        before = df.count()
-        clean = df.dropDuplicates([id_col])
-        removed = before - clean.count()
-        if removed:
-            _atomic_replace(clean, docs_path)
-            spark.catalog.refreshByPath(docs_path)
-            df.unpersist()
-            df = spark.read.parquet(docs_path).persist()
-        rebuilt = paragraph_hashes(
-            df, id_col=id_col, text_col=text_col, min_chars=min_chars
+    # stale hash stage dirs are swept under the claim; the rebuild below
+    # re-derives anything they carried from docs
+    with commit.compacting(corpus_path, stale_stage=".hashes_stage_"):
+        removed = _dedupe_table(
+            spark, docs_path, lambda df: df.dropDuplicates([id_col])
         )
-        n = rebuilt.count()
-        _atomic_replace(rebuilt, hashes_path)
-        spark.catalog.refreshByPath(hashes_path)
+        docs = spark.read.parquet(docs_path).persist()
+        try:
+            rebuilt = paragraph_hashes(
+                docs, id_col=id_col, text_col=text_col, min_chars=min_chars
+            )
+            n = rebuilt.count()
+            commit.atomic_replace(rebuilt, hashes_path)
+            spark.catalog.refreshByPath(hashes_path)
+        finally:
+            docs.unpersist()
         return {"docs_removed": removed, "index_hashes": n}
-    finally:
-        if df is not None:
-            df.unpersist()
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(marker)
 
 
-def _parquet_has_data(path: str) -> bool:
-    """True iff ``path`` is a parquet dir with at least one committed data
-    file. Bare existence is not enough: a crash during the FIRST append
-    leaves only _temporary/, and a later schema-inferring read of that
-    data-less dir raises — the reader must treat it as absent."""
-    import os
-
-    if not os.path.isdir(path):
-        return False
-    return any(
-        not name.startswith(("_", ".")) for name in os.listdir(path)
+def _stratum_counts(docs: DataFrame, strata_col: str) -> DataFrame:
+    """The quota ledger's (stratum, used) rows counted from docs."""
+    return (
+        docs.groupBy(F.col(strata_col).alias("stratum"))
+        .count()
+        .select("stratum", F.col("count").cast("long").alias("used"))
     )
 
 
-def _read_quota_counts(spark: SparkSession, corpus_path: str):
-    """(counts DataFrame or None, highest valid version int). Versioned
-    ledger dirs ``counts_v{K}``; a version is committed iff Spark's
-    _SUCCESS marker exists (written last by the parquet committer), so a
-    torn write is invisible and the previous version stays live — the
-    CURRENT-v{K} highest-wins idiom with the committer's own marker."""
-    import os
-    import re
-
-    best, best_v = None, -1
-    if os.path.isdir(corpus_path):
-        for name in os.listdir(corpus_path):
-            m = re.fullmatch(r"counts_v(\d+)", name)
-            if not m:
-                continue
-            d = os.path.join(corpus_path, name)
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                continue  # torn write: never read, wait for the next save
-            v = int(m.group(1))
-            if v > best_v:
-                best, best_v = d, v
-    if best is None:
-        return None, -1
-    return spark.read.parquet(best), best_v
+def _read_ledger(spark: SparkSession, corpus_path: str) -> DataFrame | None:
+    """The committed quota ledger (the ``counts-v<N>`` the corpus's
+    ``CURRENT-v{K}`` pointer names), or None when no pointer is committed
+    (first write torn, or a corpus from before the pointer)."""
+    tokens = commit.pointer_tokens(corpus_path)
+    return spark.read.parquet(os.path.join(corpus_path, tokens[0])) if tokens else None
 
 
-def _prune_quota_ledger(corpus_path: str, version: int) -> None:
-    """Keep the just-written current ledger (version+1) plus the previous
-    committed version as the grace copy; remove everything older. Shared
-    by the stream's save_counts and compact_quota_corpus — without the
-    compact-side call, repeated compacts on an idle corpus accumulated
-    superseded counts_v{K} dirs indefinitely."""
-    import os
-    import re
-    import shutil
-
-    for name in os.listdir(corpus_path):
-        m = re.fullmatch(r"counts_v(\d+)", name)
-        if m and int(m.group(1)) < version:
-            shutil.rmtree(os.path.join(corpus_path, name), ignore_errors=True)
-
-
-_COMPACT_MARKER = "_COMPACT_IN_PROGRESS"
-
-
-def _compact_marker_path(corpus_path: str) -> str:
-    import os
-
-    return os.path.join(corpus_path, _COMPACT_MARKER)
-
-
-def _claim_compact(corpus_path: str) -> str:
-    """Create-exclusive marker claiming a streaming corpus for a compact
-    (shared by the near-dedup/semantic/quota compacts). A second
-    concurrent compact fails loudly here instead of both racing the
-    stage-then-swap, and the ingest jobs' do_batch refuses to run while
-    the marker exists. The marker names its owner so a crashed compact's
-    stale claim is diagnosable (delete the file to release)."""
-    import os
-
-    marker = _compact_marker_path(corpus_path)
-    try:
-        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"compact already in progress for {corpus_path!r} "
-            f"(marker {marker}); if the previous compact crashed, delete "
-            "the marker file to release the claim"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write(f"pid={os.getpid()}\n")
-    return marker
-
-
-def _refuse_if_compacting(corpus_path: str) -> None:
-    """Batch-start guard for the streaming ingest jobs: fail the
-    micro-batch loudly rather than race a running compact's
-    stage-then-swap (single-writer contract, enforced); the checkpoint
-    retries the batch after the compact releases its claim."""
-    import os
-
-    if os.path.exists(_compact_marker_path(corpus_path)):
-        raise RuntimeError(
-            f"compact in progress for {corpus_path!r} — refusing to "
-            "ingest concurrently (see _COMPACT_IN_PROGRESS marker)"
-        )
+def _save_ledger(counts: DataFrame, corpus_path: str) -> None:
+    """Write the next ``counts-v<N>`` and commit it by a pointer flip; the
+    previous version stays as the grace copy, older ones are pruned."""
+    name = f"counts-v{commit.next_version(corpus_path, ['counts'])}"
+    counts.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(corpus_path, name)
+    )
+    commit.publish(corpus_path, [name], ["counts"])
 
 
 def foreach_batch_quota(
@@ -1318,9 +1137,10 @@ def foreach_batch_quota(
 
     Write order and crash windows — quota can only UNDERSHOOT, never
     overshoot, and docs can only gain reclaimable duplicates:
-    ledger first (``counts_v{K+1}``, committed by the parquet _SUCCESS
-    marker — a torn write is invisible and the previous version stays
-    live), bloom second, docs append last. A crash between them leaves
+    ledger first (the next ``counts-v<N>``, committed by a flip of the
+    corpus's ``CURRENT-v{K}`` pointer — commit.py's versioned layout: a
+    torn write is never pointed at and the previous version stays live),
+    bloom second, docs append last. A crash between them leaves
     the ledger overcharged (bounded by one batch; the safe direction for
     a contamination-style cap) and/or the bloom a superset of docs — a
     redelivered row is then either dropped (in docs) or re-admitted with
@@ -1330,8 +1150,6 @@ def foreach_batch_quota(
     batch and is REBUILT from docs + admissions (the ST8 heal). Returns
     the started query.
     """
-    import os
-
     from vectrekker_spark.operators.bloom import (
         bloom_add,
         bloom_build,
@@ -1346,116 +1164,97 @@ def foreach_batch_quota(
     # one reusable expression; column resolution binds at use site
     id_as_str = F.col(id_col).cast("string")
 
-    def save_counts(counts_df: DataFrame, version: int) -> None:
-        counts_dir = os.path.join(corpus_path, f"counts_v{version + 1}")
-        counts_df.coalesce(1).write.mode("overwrite").parquet(counts_dir)
-        _prune_quota_ledger(corpus_path, version)
-
-    def do_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _refuse_if_compacting(corpus_path)
-        spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates([id_col]).persist()
-        try:
-            # a crash during the very FIRST docs append leaves a dir with
-            # only _temporary — existence alone would send the next batch
-            # into an uninferable-schema read and wedge the stream
-            have_docs = _parquet_has_data(docs_path)
-            bloom = None
-            fresh = batch
-            if have_docs:
-                try:
-                    bloom = bloom_load(bloom_path)
-                except ValueError:
-                    bloom = None  # torn save: verified plain join, heal below
-                docs_ids = spark.read.parquet(docs_path).select(id_col)
-                if bloom is not None:
-                    flagged = might_contain(
-                        batch, id_as_str, bloom, out_col="__maybe"
-                    )
-                    maybe_ids = flagged.filter(F.col("__maybe")).select(id_col)
-                    # history scanned narrow under the broadcast maybe-set;
-                    # definite-new rows never touch it
-                    hits = docs_ids.join(F.broadcast(maybe_ids), id_col, "left_semi")
-                    fresh = (
-                        flagged.join(F.broadcast(hits), id_col, "left_anti")
-                        .drop("__maybe")
-                    )
-                else:
-                    fresh = batch.join(docs_ids, id_col, "left_anti")
-            counts, version = _read_quota_counts(spark, corpus_path)
-            healed_ledger = False
-            if counts is None and have_docs:
-                # no committed ledger (first write torn, or pre-ledger
-                # corpus): heal by recounting the docs table once
-                docs_df = spark.read.parquet(docs_path)
-                counts = (
-                    docs_df.groupBy(F.col(strata_col).alias("stratum"))
-                    .count()
-                    .select("stratum", F.col("count").cast("long").alias("used"))
-                )
-                healed_ledger = True
-            admitted = admit_per_stratum(
-                fresh, counts, cap,
-                strata_col=strata_col, id_col=id_col, seed=seed,
-            ).persist()
+    def body(spark: SparkSession, batch: DataFrame, batch_id: int) -> None:
+        # a crash during the very FIRST docs append leaves a dir with
+        # only _temporary — existence alone would send the next batch
+        # into an uninferable-schema read and wedge the stream
+        have_docs = commit.parquet_has_data(docs_path)
+        bloom = None
+        fresh = batch
+        if have_docs:
             try:
-                if admitted.isEmpty():
-                    # nothing to admit, but COMMIT any healing this batch
-                    # performed — otherwise a torn ledger/bloom on a
-                    # quota-full stream would be re-derived from the FULL
-                    # docs history on every subsequent batch, breaking the
-                    # "heals by ONE recount" contract
-                    _refuse_if_compacting(corpus_path)  # re-check at write
-                    if healed_ledger:
-                        save_counts(counts, version)
-                    if bloom is None and have_docs:
-                        bloom_save(
-                            bloom_build(
-                                spark.read.parquet(docs_path)
-                                .select(id_as_str.alias("__id")),
-                                "__id", fpp=fpp, expected=expected_total,
-                            ),
-                            bloom_path,
-                        )
-                    return
-                # re-check the claim at the write boundary: a compact
-                # that started AFTER this batch's entry check would
-                # otherwise interleave its swap with the writes below
-                # (narrows the race window; see the docstring for the
-                # residual operator-side contract)
-                _refuse_if_compacting(corpus_path)
-                # 1. ledger (quota can only undershoot after a crash)
-                new_counts = merge_counts(counts, admitted, strata_col=strata_col)
-                save_counts(new_counts, version)
-                # 2. bloom (superset-of-docs invariant, the ST8 order)
-                if bloom is None:
-                    seed_ids = admitted.select(id_as_str.alias("__id"))
-                    if have_docs:
-                        seed_ids = (
+                bloom = bloom_load(bloom_path)
+            except ValueError:
+                bloom = None  # torn save: verified plain join, heal below
+            docs_ids = spark.read.parquet(docs_path).select(id_col)
+            if bloom is not None:
+                flagged = might_contain(
+                    batch, id_as_str, bloom, out_col="__maybe"
+                )
+                maybe_ids = flagged.filter(F.col("__maybe")).select(id_col)
+                # history scanned narrow under the broadcast maybe-set;
+                # definite-new rows never touch it
+                hits = docs_ids.join(F.broadcast(maybe_ids), id_col, "left_semi")
+                fresh = (
+                    flagged.join(F.broadcast(hits), id_col, "left_anti")
+                    .drop("__maybe")
+                )
+            else:
+                fresh = batch.join(docs_ids, id_col, "left_anti")
+        counts = _read_ledger(spark, corpus_path)
+        healed_ledger = False
+        if counts is None and have_docs:
+            # no committed ledger (first write torn, or pre-ledger
+            # corpus): heal by recounting the docs table once
+            counts = _stratum_counts(spark.read.parquet(docs_path), strata_col)
+            healed_ledger = True
+        admitted = admit_per_stratum(
+            fresh, counts, cap,
+            strata_col=strata_col, id_col=id_col, seed=seed,
+        ).persist()
+        try:
+            if admitted.isEmpty():
+                # nothing to admit, but COMMIT any healing this batch
+                # performed — otherwise a torn ledger/bloom on a
+                # quota-full stream would be re-derived from the FULL
+                # docs history on every subsequent batch, breaking the
+                # "heals by ONE recount" contract
+                commit.refuse_if_compacting(corpus_path)  # re-check at write
+                if healed_ledger:
+                    _save_ledger(counts, corpus_path)
+                if bloom is None and have_docs:
+                    bloom_save(
+                        bloom_build(
                             spark.read.parquet(docs_path)
-                            .select(id_as_str.alias("__id"))
-                            .unionByName(seed_ids)
-                        )
-                    bloom = bloom_build(
-                        seed_ids, "__id", fpp=fpp, expected=expected_total
+                            .select(id_as_str.alias("__id")),
+                            "__id", fpp=fpp, expected=expected_total,
+                        ),
+                        bloom_path,
                     )
-                else:
-                    bloom = bloom_add(bloom, admitted, id_as_str)
-                bloom_save(bloom, bloom_path)
-                # 3. data last
-                admitted.write.mode("append").parquet(docs_path)
-            finally:
-                admitted.unpersist()
+                return
+            # re-check the claim at the write boundary: a compact
+            # that started AFTER this batch's entry check would
+            # otherwise interleave its swap with the writes below
+            # (narrows the race window; see the docstring for the
+            # residual operator-side contract)
+            commit.refuse_if_compacting(corpus_path)
+            # 1. ledger (quota can only undershoot after a crash)
+            _save_ledger(
+                merge_counts(counts, admitted, strata_col=strata_col), corpus_path
+            )
+            # 2. bloom (superset-of-docs invariant, the ST8 order)
+            if bloom is None:
+                seed_ids = admitted.select(id_as_str.alias("__id"))
+                if have_docs:
+                    seed_ids = (
+                        spark.read.parquet(docs_path)
+                        .select(id_as_str.alias("__id"))
+                        .unionByName(seed_ids)
+                    )
+                bloom = bloom_build(
+                    seed_ids, "__id", fpp=fpp, expected=expected_total
+                )
+            else:
+                bloom = bloom_add(bloom, admitted, id_as_str)
+            bloom_save(bloom, bloom_path)
+            # 3. data last
+            admitted.write.mode("append").parquet(docs_path)
         finally:
-            batch.unpersist()
+            admitted.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(do_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest(
+        stream, corpus_path, checkpoint, body,
+        prepare=lambda df: df.dropDuplicates([id_col]),
     )
 
 
@@ -1469,8 +1268,10 @@ def compact_quota_corpus(
     docs rows (at-least-once redelivery in the bloom-torn window) and
     rewrite the ledger to the TRUE per-stratum counts (healing any
     overcharge from a counts-written/docs-crashed window — quota capacity
-    comes back). Stage-then-swap on the docs table; the new ledger commits
-    as the next counts version.
+    comes back; when that window hit the FIRST batch, docs holds no
+    committed data and the true ledger is empty). Write-then-swap on the
+    docs table; the new ledger commits as the next ``counts-v<N>`` by a
+    pointer flip.
 
     Single-writer contract, enforced via a create-exclusive
     ``_COMPACT_IN_PROGRESS`` marker claiming the corpus for the compact's
@@ -1485,64 +1286,37 @@ def compact_quota_corpus(
     "don't start a compact under a live ingest stream" remains the
     operator-side contract. A compact that crashes leaves a stale claim;
     the error message names the marker file to delete."""
-    import os
-
-    from vectrekker_spark.pipeline import _atomic_replace
-
     docs_path = os.path.join(corpus_path, "docs")
-    if not _parquet_has_data(docs_path):
+    if not (commit.parquet_has_data(docs_path) or commit.pointer_tokens(corpus_path)):
         return {"docs_removed": 0, "ledger_delta": 0}
-    marker = _claim_compact(corpus_path)
-    df = None
-    clean = None
-    try:
-        # the read runs INSIDE the claimed region: a failure here (racing
-        # writer swapped the dir, corrupt footer) must release the marker
-        # in the finally, not leave a stale claim wedging the corpus
-        df = spark.read.parquet(docs_path).persist()
-        before = df.count()
-        clean = df.dropDuplicates([id_col]).persist()
-        removed = before - clean.count()
-        # EVERYTHING that reads lineage rooted at the old docs files runs
-        # BEFORE the swap: after _atomic_replace deletes them, a cache
-        # eviction/executor loss would recompute `clean` against a deleted
-        # listing (FileNotFound) and leave the compact half-applied with
-        # the overcharged ledger it exists to heal. The true ledger is one
-        # tiny row per stratum — collect it now, write it from memory.
-        # (Also NOT a re-read of the swapped path: that raced the
-        # FileStatusCache into the pre-compact listing — found by the
-        # lifecycle test when the freed quota slot never came back.)
-        true_agg = (
-            clean.groupBy(F.col(strata_col).alias("stratum"))
-            .count()
-            .select("stratum", F.col("count").cast("long").alias("used"))
+    with commit.compacting(corpus_path):
+        old = _read_ledger(spark, corpus_path)
+        # a docs table with no committed data (its first append crashed
+        # after the ledger commit) has the empty ledger as its true one
+        true = [[], old.schema if old is not None else None]
+
+        def collect_ledger(clean: DataFrame) -> None:
+            # runs BEFORE the swap: after it deletes the old docs files, a
+            # cache eviction/executor loss would recompute `clean` against
+            # a deleted listing (FileNotFound) and leave the compact
+            # half-applied with the overcharged ledger it exists to heal.
+            # The true ledger is one tiny row per stratum — collect it now,
+            # write it from memory. (Also NOT a re-read of the swapped
+            # path: that raced the FileStatusCache into the pre-compact
+            # listing — found by the lifecycle test when the freed quota
+            # slot never came back.)
+            agg = _stratum_counts(clean, strata_col)
+            true[:] = [agg.collect(), agg.schema]
+
+        removed = _dedupe_table(
+            spark, docs_path, lambda df: df.dropDuplicates([id_col]),
+            on_clean=collect_ledger,
         )
-        ledger_schema = true_agg.schema  # keeps the stratum column's type
-        true_rows = true_agg.collect()
-        old, version = _read_quota_counts(spark, corpus_path)
+        rows, schema = true
         drift = 0
         if old is not None:
             drift = int(old.agg(F.sum("used")).first()[0] or 0) - sum(
-                int(r["used"]) for r in true_rows
+                int(r["used"]) for r in rows
             )
-        if removed:
-            _atomic_replace(clean, docs_path)
-            # out-of-band directory swap: drop the session's cached file
-            # listing for the path, or a same-session reader (the
-            # ingesting stream's next batch) can see the OLD file set
-            spark.catalog.refreshByPath(docs_path)
-        counts_dir = os.path.join(corpus_path, f"counts_v{version + 1}")
-        spark.createDataFrame(
-            true_rows, ledger_schema
-        ).coalesce(1).write.mode("overwrite").parquet(counts_dir)
-        _prune_quota_ledger(corpus_path, version)
+        _save_ledger(spark.createDataFrame(rows, schema), corpus_path)
         return {"docs_removed": removed, "ledger_delta": drift}
-    finally:
-        if clean is not None:
-            clean.unpersist()
-        if df is not None:
-            df.unpersist()
-        try:
-            os.remove(marker)
-        except FileNotFoundError:
-            pass  # externally released; don't mask the real error
