@@ -206,7 +206,8 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     # A Python-RDD query frame (what createDataFrame(list) plans) costs a
     # Python task per read: the probes are materialized once, so the cid
     # collect and the final plan do not re-read the queries. The
-    # materialized probes are released with the returned frame.
+    # materialized probes are released with the returned frame. IVF-PQ
+    # runs the same probe step after its LUT collect: two reads.
     import gc
     import time
 
@@ -217,6 +218,7 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
         ivf_save,
         ivf_search_cells,
     )
+    from vectrekker_spark.operators.pq import ivfpq_save, ivfpq_search_cells, pq_encode
 
     corpus = spark.range(60).select(
         F.col("id").alias("vec_id"),
@@ -226,6 +228,13 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     path = str(tmp_path / "ivf")
     ivf_save(centroids, assign, corpus, path, assign_k=2)
     lc, cells = ivf_load(spark, path)
+    # a 1-bit codebook per dimension: m=3 subspaces of one dim, 2 codes each
+    cb = spark.createDataFrame(
+        [(j, c, [v]) for j in range(3) for c, v in enumerate((-0.5, 0.5))],
+        "subspace int, code int, cvec array<double>",
+    )
+    pq_path = str(tmp_path / "ivfpq")
+    ivfpq_save(pq_path, cb, centroids, assign, pq_encode(corpus, cb), assign_k=2)
     rows = [(i, [float(i % 3) - 1.0, 1.0 - i / 7, 0.5]) for i in range(7)]
     sc = spark.sparkContext
     reads = sc.accumulator(0)
@@ -245,6 +254,17 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
         ids = spark._jsc.sc().persistentRdds().keySet().mkString(",")
         return {int(i) for i in ids.split(",") if i}
 
+    def assert_released(persisted_before):
+        new = None
+        for _ in range(100):
+            gc.collect()
+            spark._jvm.System.gc()
+            new = persisted_ids() - persisted_before
+            if not new:
+                break
+            time.sleep(0.1)
+        assert not new, new
+
     persisted_before = persisted_ids()
     cache_was_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
     res = ivf_search_cells(q, lc, cells, k=4, n_probe=2)
@@ -261,15 +281,15 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     assert got == want and len({r[0] for r in got}) == len(rows)
 
     del res
-    new = None
-    for _ in range(100):
-        gc.collect()
-        spark._jvm.System.gc()
-        new = persisted_ids() - persisted_before
-        if not new:
-            break
-        time.sleep(0.1)
-    assert not new, new
+    assert_released(persisted_before)
+
+    persisted_before, reads_before = persisted_ids(), reads.value
+    res = ivfpq_search_cells(q, pq_path, k=4, n_probe=2)
+    got = res.collect()
+    assert reads.value - reads_before == 2 * len(rows)
+    assert len({r["qid"] for r in got}) == len(rows)
+    del res
+    assert_released(persisted_before)
     if cache_was_empty:
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

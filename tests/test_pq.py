@@ -188,48 +188,55 @@ def test_pq_save_load_roundtrip_and_guards(spark, em, pq, tmp_path):
         pq_load(spark, path)
 
 
-def test_ivfpq_full_probe_equals_pq_search(spark, em, pq):
-    """With n_probe = n_centroids the candidate set is the whole corpus,
-    so IVF∘PQ must EQUAL plain pq_search row-for-row — the composition
-    adds pruning, never different scoring."""
+def _qframe(em, n, qid="qid", qvec="qvec"):
+    return em.where(F.col("vec_id") < n).select(
+        F.col("vec_id").alias(qid), F.col("embedding").alias(qvec)
+    )
+
+
+def test_ivfpq_full_probe_equals_pq_search(spark, em, pq, tmp_path):
+    """With n_probe = n_centroids the candidate set is the whole index,
+    so the persisted IVF∘PQ search must EQUAL plain pq_search row-for-row,
+    ADC and refined — the composition adds pruning, never different
+    scoring. The index is multi-assigned, so every vector is a candidate
+    twice and the ranking window must count it once."""
     from vectrekker_spark.operators.ann import ivf_build
-    from vectrekker_spark.operators.pq import ivfpq_search
+    from vectrekker_spark.operators.pq import ivfpq_save, ivfpq_search_cells
 
     cb, codes = pq
-    centroids, assign = ivf_build(em, n_centroids=10, assign_k=1)
-    q = em.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    full = sorted(map(tuple, ivfpq_search(
-        q, codes, cb, centroids, assign, k=7, n_probe=10
-    ).collect()))
-    plain = sorted(map(tuple, pq_search(q, codes, cb, k=7).collect()))
-    assert full == plain
+    centroids, assign = ivf_build(em, n_centroids=10, assign_k=2)
+    path = str(tmp_path / "ivfpq")
+    meta = ivfpq_save(path, cb, centroids, assign, codes, assign_k=2)
+    assert meta["version"] == 0 and meta["dim"] == 64
+    q = _qframe(em, 8)
+    full = ivfpq_search_cells(q, path, k=7, n_probe=10)
+    assert dict(full.dtypes)["rank"] == "bigint"
+    plain = pq_search(q, codes, cb, k=7)
+    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, plain.collect()))
+    full_r = ivfpq_search_cells(q, path, k=5, n_probe=10, refine=3, corpus=em)
+    plain_r = pq_search(q, codes, cb, k=5, refine=3, corpus=em)
+    assert sorted(map(tuple, full_r.collect())) == sorted(map(tuple, plain_r.collect()))
 
 
-def test_ivfpq_prunes_and_recalls(spark, em, pq):
+def test_ivfpq_prunes_and_recalls(spark, em, pq, tmp_path):
     """Partial probe: every result must come from a probed cell, and
     recall@10 vs exact stays useful (measured 0.68 ADC / 0.97 refined
     at n_probe=6/10 with multi-assign 2 on the near-random fixture —
     pruning cost ~0 here because multi-assign covers the loss; gate 0.45)."""
     from vectrekker_spark.operators.ann import assign_centroids, ivf_build
-    from vectrekker_spark.operators.pq import ivfpq_search
+    from vectrekker_spark.operators.pq import ivfpq_save, ivfpq_search_cells
 
     cb, codes = pq
     centroids, assign = ivf_build(em, n_centroids=10, assign_k=2)
-    q = em.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    res = ivfpq_search(
-        q, codes, cb, centroids, assign, k=10, n_probe=6
-    ).collect()
+    path = str(tmp_path / "ivfpq")
+    ivfpq_save(path, cb, centroids, assign, codes, assign_k=2)
+    q = _qframe(em, 20)
+    res = ivfpq_search_cells(q, path, k=10, n_probe=6).collect()
     # every hit's cell ∈ its query's probed cells
     probed = {
-        (r["vec_id"], r["cid"])
+        (r["qid"], r["cid"])
         for r in assign_centroids(
-            q.select(F.col("qid").alias("vec_id"),
-                     F.col("qvec").alias("embedding")),
-            centroids, assign_k=6,
+            q, centroids, assign_k=6, id_col="qid", vec_col="qvec"
         ).collect()
     }
     member = {}
@@ -238,90 +245,47 @@ def test_ivfpq_prunes_and_recalls(spark, em, pq):
     for r in res:
         assert any((r["qid"], c) in probed for c in member[r["vec_id"]]), r
 
-    exact = {}
-    for r in knn_join(q, em, k=10).collect():
-        exact.setdefault(r["qid"], set()).add(r["vec_id"])
-    got = {}
-    for r in res:
-        got.setdefault(r["qid"], set()).add(r["vec_id"])
-    rec = sum(len(got.get(x, set()) & exact[x]) for x in exact) / (
-        10 * len(exact)
-    )
+    exact = knn_join(q, em, k=10)
+    rec = _recall_at(spark.createDataFrame(res), exact)
     assert rec >= 0.45, rec
 
     # refined variant returns exact cosine and can only improve
-    ref = ivfpq_search(
-        q, codes, cb, centroids, assign, k=10, n_probe=6, refine=5, corpus=em
-    ).collect()
-    gotr = {}
-    for r in ref:
-        gotr.setdefault(r["qid"], set()).add(r["vec_id"])
-    recr = sum(len(gotr.get(x, set()) & exact[x]) for x in exact) / (
-        10 * len(exact)
-    )
-    assert recr >= rec - 1e-9
+    ref = ivfpq_search_cells(q, path, k=10, n_probe=6, refine=5, corpus=em)
+    assert _recall_at(ref, exact) >= rec - 1e-9
 
 
-def test_ivfpq_nondefault_column_names(spark, em, pq):
-    """Advisor r13: the probe step used to pass the CALLER's id/vec names
-    to assign_centroids (which only knows the codes table's columns) —
-    non-default names raised a missing-column AnalysisException. Renamed
-    everything end-to-end; results must equal the default-named run."""
+def test_ivfpq_nondefault_column_names(spark, em, pq, tmp_path):
+    """Advisor r13: the probe step once passed the CALLER's id/vec names
+    where only the codes table's columns exist — non-default names raised
+    a missing-column AnalysisException. Renamed everything end-to-end
+    (index id, query id/vector, refine corpus); results must equal the
+    default-named run."""
     from vectrekker_spark.operators.ann import ivf_build
-    from vectrekker_spark.operators.pq import ivfpq_search, pq_encode
-
-    cb, _ = pq
-    centroids, assign = ivf_build(em, n_centroids=10, assign_k=1)
-    em2 = em.select(F.col("vec_id").alias("doc_id"),
-                    F.col("embedding").alias("emb"))
-    codes2 = pq_encode(em2, cb, id_col="doc_id", vec_col="emb")
-    assign2 = assign.select(F.col("vec_id").alias("doc_id"), "cid")
-    q2 = em.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    got = sorted(map(tuple, ivfpq_search(
-        q2, codes2, cb, centroids, assign2, k=7, n_probe=10,
-        qid_col="query_id", qvec_col="qv", id_col="doc_id", vec_col="emb",
-    ).collect()))
-    q = em.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    want = sorted(map(tuple, ivfpq_search(
-        q, pq[1], cb, centroids, assign, k=7, n_probe=10
-    ).collect()))
-    assert got == want
-
-
-def test_ivfpq_save_search_cells_equals_in_memory(spark, em, pq, tmp_path):
-    """The persisted, partition-pruned search must equal the in-memory
-    assignment-join form row-for-row on the same artifacts."""
-    from vectrekker_spark.operators.ann import ivf_build
-    from vectrekker_spark.operators.pq import (
-        ivfpq_save,
-        ivfpq_search,
-        ivfpq_search_cells,
-    )
+    from vectrekker_spark.operators.pq import ivfpq_save, ivfpq_search_cells
 
     cb, codes = pq
     centroids, assign = ivf_build(em, n_centroids=10, assign_k=1)
-    path = str(tmp_path / "ivfpq")
-    meta = ivfpq_save(path, cb, centroids, assign, codes)
-    assert meta["version"] == 0 and meta["dim"] == 64
-
-    q = em.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    em2 = em.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("emb"))
+    renamed = str(tmp_path / "renamed")
+    ivfpq_save(
+        renamed, cb, centroids,
+        assign.select(F.col("vec_id").alias("doc_id"), "cid"),
+        pq_encode(em2, cb, id_col="doc_id", vec_col="emb"),
+        id_col="doc_id",
     )
-    disk = sorted(map(tuple, ivfpq_search_cells(
-        q, path, k=7, n_probe=4).collect()))
-    mem = sorted(map(tuple, ivfpq_search(
-        q, codes, cb, centroids, assign, k=7, n_probe=4).collect()))
-    assert disk == mem
-    # refine arm too
-    disk_r = sorted(map(tuple, ivfpq_search_cells(
-        q, path, k=5, n_probe=4, refine=3, corpus=em).collect()))
-    mem_r = sorted(map(tuple, ivfpq_search(
-        q, codes, cb, centroids, assign, k=5, n_probe=4, refine=3,
-        corpus=em).collect()))
-    assert disk_r == mem_r
+    default = str(tmp_path / "default")
+    ivfpq_save(default, cb, centroids, assign, codes)
+    q2 = _qframe(em, 5, qid="query_id", qvec="qv")
+    for refine, corpus2, corpus in ((0, None, None), (3, em2, em)):
+        got = ivfpq_search_cells(
+            q2, renamed, k=7, n_probe=4, refine=refine, corpus=corpus2,
+            qid_col="query_id", qvec_col="qv", vec_col="emb",
+        )
+        assert got.columns == ["query_id", "doc_id", "score", "rank"]
+        want = ivfpq_search_cells(
+            _qframe(em, 5), default, k=7, n_probe=4, refine=refine, corpus=corpus
+        )
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_ivfpq_search_cells_plan_prunes_partitions(spark, em, pq, tmp_path):
@@ -847,18 +811,15 @@ def test_ivfpq_save_grace_protects_committed_not_torn(spark, pq, tmp_path):
     assert meta2["version"] == 2 and codes2.count() == 10
 
 
-def test_ivfpq_search_accepts_rotation(spark, pq):
-    """The in-memory ivfpq_search can search OPQ-rotated codes: with
-    full probing and the rotation passed, results equal pq_search with
-    the same rotation (the composition-equivalence contract)."""
-    import numpy as np
-
+def test_ivfpq_search_accepts_rotation(spark, tmp_path):
+    """A saved OPQ-rotated IVF∘PQ index applies its stored rotation to
+    the LUTs: with full probing, results equal pq_search over the same
+    codes with the same rotation (the composition-equivalence contract)."""
     from vectrekker_spark.operators.ann import ivf_build
     from vectrekker_spark.operators.pq import (
-        ivfpq_search,
+        ivfpq_save,
+        ivfpq_search_cells,
         opq_train,
-        pq_encode,
-        pq_search,
         rotate_vectors,
     )
 
@@ -867,14 +828,14 @@ def test_ivfpq_search_accepts_rotation(spark, pq):
     R, cb_r = opq_train(sub, m=16, nbits=4, iters=2, kmeans_iters=5)
     codes_r = pq_encode(rotate_vectors(sub, R), cb_r)
     centroids, assign = ivf_build(sub, n_centroids=3)
+    path = str(tmp_path / "opq")
+    ivfpq_save(path, cb_r, centroids, assign, codes_r, rotation=R)
     q = sub.limit(4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     a = sorted(
         (r["qid"], r["rank"], r["vec_id"])
-        for r in ivfpq_search(
-            q, codes_r, cb_r, centroids, assign, k=5, n_probe=3, rotation=R
-        ).collect()
+        for r in ivfpq_search_cells(q, path, k=5, n_probe=3).collect()
     )
     b = sorted(
         (r["qid"], r["rank"], r["vec_id"])
@@ -882,6 +843,7 @@ def test_ivfpq_search_accepts_rotation(spark, pq):
     )
     assert a == b
     sub.unpersist()
+
 
 # QA tail: excluded from the default run (see pytest.ini header)
 pytestmark = pytest.mark.slow

@@ -156,92 +156,6 @@ def test_auto_route_over_cap_matches_blas_end_to_end(planted):
     assert r == e
 
 
-def test_generic_simjoin_byte_budget_auto_routes(planted):
-    # the expression router's broadcast guard is byte-aware too: a true
-    # self-join past the BYTE budget (row cap untouched) auto-routes to the
-    # bucketed kernel instead of building an oversized broadcast
-    import warnings
-
-    from vectrekker_spark.operators.knn import release, similarity_join
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        out = similarity_join(
-            planted, planted, 0.95,
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-            max_broadcast_bytes=DIM * 8 * 2,
-        )
-    assert out.count() >= 15
-    release(out)
-
-
-def test_generic_simjoin_guard_raises_on_oversized_right(planted):
-    # The ambiguous middle keeps the raise: a cross-dataset join
-    # (ordered_pairs=False) has no bucketed self-join equivalent, so the
-    # router must not silently switch semantics. Same for non-cosine.
-    from vectrekker_spark.operators.knn import similarity_join
-
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        similarity_join(
-            planted, planted, threshold=0.9,
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-            ordered_pairs=False, max_broadcast_rows=10,
-        ).count()
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        similarity_join(
-            planted, planted, threshold=0.5, metric="l2",
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-            max_broadcast_rows=10,
-        ).count()
-
-
-def test_generic_simjoin_auto_routes_to_bucketed_over_cap(planted):
-    # Self-join cosine past the broadcast cap falls through to the LSH
-    # kernel with NO caller changes — same pair set as the exact join on
-    # the planted ≥0.99-cosine dups (see the recall caveat on the planted
-    # fixture) and a warning flags the sub-0.95-threshold approximation.
-    import warnings
-
-    from vectrekker_spark.operators.knn import similarity_join, similarity_join_blas
-
-    exact = similarity_join_blas(
-        planted, planted, threshold=0.95,
-        left_id="vec_id", left_vec="embedding",
-        right_id="vec_id", right_vec="embedding",
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # threshold ≥ 0.95 must NOT warn
-        routed = similarity_join(
-            planted, planted, threshold=0.95,
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-            max_broadcast_rows=10,
-        )
-    key = lambda df: sorted((r["l_id"], r["r_id"], r["score"]) for r in df.collect())
-    assert key(routed) == key(exact)
-    with pytest.warns(UserWarning, match="recall"):
-        similarity_join(
-            planted, planted, threshold=0.90,
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-            max_broadcast_rows=10,
-        )
-
-
-def test_generic_simjoin_within_cap_finds_planted(planted):
-    from vectrekker_spark.operators.knn import similarity_join
-
-    out = similarity_join(
-        planted, planted, threshold=0.95,
-        left_id="vec_id", left_vec="embedding",
-        right_id="vec_id", right_vec="embedding",
-    )
-    assert out.count() >= 15
-
-
 def test_blas_guard_allows_exact_cap(planted):
     n = planted.count()
     out = similarity_join_blas(
@@ -300,23 +214,6 @@ def test_blas_tiled_kernel_matches_untiled(planted, monkeypatch):
     assert sorted(map(tuple, tiled.collect())) == d
 
 
-def test_similarity_join_release_unpersists(planted):
-    from vectrekker_spark.operators.knn import release, similarity_join
-
-    out = similarity_join(
-        planted, planted, threshold=0.95,
-        left_id="vec_id", left_vec="embedding",
-        right_id="vec_id", right_vec="embedding",
-    )
-    assert out.count() >= 15
-    cached = out._cached_right
-    assert cached.storageLevel.useMemory  # held while the plan may re-run
-    release(out)
-    assert not cached.storageLevel.useMemory
-    release(out)  # idempotent; plain DataFrames are a no-op too
-    release(planted)
-
-
 def test_auto_route_null_first_vector(spark):
     # a NULL vector in row 0 must not crash the bucketed-route dim probe
     from vectrekker_spark.operators.knn import similarity_join_self_auto
@@ -350,27 +247,6 @@ def test_blas_route_tolerates_null_vectors(spark):
     df = spark.createDataFrame(rows, schema="vec_id long, embedding array<double>")
     out = similarity_join_self_auto(df, 0.999, "vec_id", "embedding")  # blas route
     assert out.count() > 0
-
-
-def test_similarity_join_cross_frame_past_cap_raises(spark):
-    # ordered_pairs=True with DISTINCT frames must not auto-route: the
-    # bucketed self-join kernel would silently drop the left-side filter
-    import pytest
-    from pyspark.sql import functions as F
-
-    from vectrekker_spark.operators.knn import similarity_join
-
-    df = spark.range(30).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.rand(seed=1), F.rand(seed=2)).alias("embedding"),
-    )
-    left = df.filter(F.col("vec_id") < 10)
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        similarity_join(
-            left, df, threshold=0.5, ordered_pairs=True, max_broadcast_rows=5,
-            left_id="vec_id", left_vec="embedding",
-            right_id="vec_id", right_vec="embedding",
-        )
 
 
 def test_blas_left_repartitions_only_when_compute_bound(spark):

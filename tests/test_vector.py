@@ -5,7 +5,7 @@ import math
 from pyspark.sql import functions as F
 
 from vectrekker_spark.functions.vector import cosine_sim, dim_ok, l2_normalize, norm
-from vectrekker_spark.operators.knn import knn_join, similarity_join, topk_nn
+from vectrekker_spark.operators.knn import knn_join, similarity_join_self_auto, topk_nn
 
 
 def test_l2_normalize_zero_vector_no_nan(spark):
@@ -139,10 +139,7 @@ def test_similarity_join_ordering_and_threshold(spark):
         [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    out = similarity_join(
-        df, df, threshold=0.9,
-        left_id="vec_id", left_vec="embedding", right_id="vec_id", right_vec="embedding",
-    ).collect()
+    out = similarity_join_self_auto(df, 0.9, "vec_id", "embedding").collect()
     assert len(out) == 1
     r = out[0]
     assert (r["l_id"], r["r_id"]) == (1, 2) and r["score"] > 0.99

@@ -294,8 +294,8 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
     rotation = None
     try:
         # assign_k=2: the ann-build boundary-recall default — a vector near
-        # a cell edge is findable from either side; duplicates collapse in
-        # the search's (qid, id) dedupe
+        # a cell edge is findable from either side; the search's ranking
+        # window counts its duplicate hits once
         centroids, assign = ivf_build(
             index, n_centroids=n_cells, id_col="id", vec_col="embedding",
             assign_k=2,

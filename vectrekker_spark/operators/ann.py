@@ -24,7 +24,6 @@ from vectrekker_spark.commit import (
     write_meta,
 )
 from vectrekker_spark.functions.vector import l2_normalize
-from vectrekker_spark.operators.knn import knn_join
 from vectrekker_spark.session import local_frame, truncate_lineage
 
 _MAX_CENTROIDS = 200_000
@@ -394,17 +393,33 @@ def _lloyd_fit(X, k: int, max_iter: int = 20, tol: float = 1e-4, seed: int = 42)
     return C
 
 
+def _rank_top(
+    scored: DataFrame, k: int, id_col: str, dedupe: bool = False, qid_col: str = "qid"
+) -> DataFrame:
+    """Each query's top-k of (qid, id, score) rows, ranked with the (score
+    desc, id asc) tie-break the d10 oracle depends on bit-for-bit; ``rank``
+    is a long. One definition, shared by the IVF and the PQ searches, so the
+    contract can't drift between them. ``dedupe=True`` drops repeated hits
+    in the same window (a vector multi-assigned to two probed cells, a
+    re-appended code row): they tie on (score, id), so ``dense_rank`` counts
+    them once and ``lag(id)`` keeps the first."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(qid_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
+    rank = F.dense_rank() if dedupe else F.row_number()
+    scored = scored.withColumn("rank", rank.over(w).cast("long"))
+    keep = F.col("rank") <= k
+    if dedupe:
+        scored = scored.withColumn("__prev", F.lag(id_col).over(w))
+        keep &= ~F.col("__prev").eqNullSafe(F.col(id_col))
+    return scored.filter(keep).select(qid_col, id_col, "score", "rank")
+
+
 def _topk_by_score(
     cands: DataFrame, k: int, id_col: str, vec_col: str, dedupe: bool = False
 ) -> DataFrame:
-    """Shared final stage of every candidate-set search here: round-6 cosine
-    against qvec, rank per query with the (score desc, id asc) tie-break the
-    d10 oracle depends on bit-for-bit, keep top-k. One definition so the
-    contract can't drift between the search paths. ``dedupe=True`` drops the
-    copies of a multi-assigned vector in the same window: they tie on (score,
-    id), so ``dense_rank`` counts them once and ``lag(id)`` keeps the first."""
-    from pyspark.sql import Window
-
+    """Final stage of every IVF search here: round-6 cosine against qvec,
+    then ``_rank_top``."""
     from vectrekker_spark.functions.vector import cosine_sim
 
     scored = cands.select(
@@ -412,14 +427,7 @@ def _topk_by_score(
         F.col(id_col),
         F.round(cosine_sim(vec_col, "qvec"), 6).alias("score"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    rank = F.dense_rank() if dedupe else F.row_number()
-    scored = scored.withColumn("rank", rank.over(w).cast("long"))
-    keep = F.col("rank") <= k
-    if dedupe:
-        scored = scored.withColumn("__prev", F.lag(id_col).over(w))
-        keep &= ~F.col("__prev").eqNullSafe(F.col(id_col))
-    return scored.filter(keep).select("qid", id_col, "score", "rank")
+    return _rank_top(scored, k, id_col, dedupe)
 
 
 def _probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
@@ -437,11 +445,42 @@ def _probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> Data
     w = Window.partitionBy("qid").orderBy(s.desc(), F.col("cid").asc())
     cents = F.broadcast(centroids.select("cid", "cvec").where(F.col("cvec").isNotNull()))
     return (
-        queries.select("qid", "qvec").where(F.col("qvec").isNotNull()).crossJoin(cents)
+        queries.select("qid", "qvec")
+        .where(F.col("qid").isNotNull() & F.col("qvec").isNotNull())
+        .crossJoin(cents)
         .select("qid", "qvec", "cid", F.row_number().over(w).alias("__rn"))
         .where(F.col("__rn") <= n_probe)
         .drop("__rn")
     )
+
+
+def _probe_pruned(
+    queries: DataFrame, centroids: DataFrame, cells: DataFrame, n_probe: int
+) -> DataFrame:
+    """(cid, qid, qvec, cell columns...): every query joined to the rows of
+    its ``n_probe`` nearest cells — the probe step of both saved-index
+    searches (ivf_search_cells, pq.ivfpq_search_cells).
+
+    The centroids are checked first against ``_centroid_cap`` by one
+    aggregate. The query side is evaluated once: the ``_probe_cells``
+    probes are materialized (``session.truncate_lineage``; on a cluster
+    without a checkpoint dir they stay a plan and the queries are read
+    twice), and both the cid collect and the cell join read that result.
+    The distinct probed cids (at most the centroid count, which
+    ``_centroid_cap`` bounds) are collected and applied as an ``isin``
+    filter, so the cell scan statically prunes to exactly the probed
+    partitions (asserted in test_ann)."""
+    n, dim = centroids.where(F.col("cvec").isNotNull()).select(
+        F.count(F.lit(1)), F.max(F.size("cvec"))
+    ).first()
+    _centroid_cap(dim or 0, n=n)
+    probes = _probe_cells(queries, centroids, n_probe)
+    # a Python-RDD query frame costs a Python task per read
+    materialized = truncate_lineage(probes)
+    if materialized is not None:
+        probes = materialized
+    probed = [r[0] for r in probes.select("cid").distinct().collect()]
+    return probes.join(cells.filter(F.col("cid").isin(probed)), "cid")
 
 
 def ivf_search(
@@ -453,95 +492,25 @@ def ivf_search(
     n_probe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_via: str = "blas",
-    unique_assignment: bool = False,
 ) -> DataFrame:
     """Probe the n_probe nearest cells per query, brute-force within them.
 
     Candidate set is only the probed cells' vectors — the crossJoin blowup
     never happens. Returns (qid, vec_id, score, rank).
 
-    unique_assignment=True declares the index was built with assign_k=1
-    (each corpus vector lives in exactly one cell), which makes the
-    candidate (qid, id) pairs unique by construction and lets the search
-    skip its dedup exchange — one fewer shuffle on every probe. Leave False
-    for multi-assigned indexes, where the same pair can surface via two
-    probed cells and the dedup is load-bearing.
-
-    probe_via="blas" (default): probe selection reuses assign_centroids
-    (same round-6/cid-asc tie contract as knn_join), so an arbitrarily
-    large query batch streams against the broadcast centroids instead of
-    being broadcast itself — the scale path for bulk kNN-join workloads.
-    probe_via="expr": ``_probe_cells``, the pure-JVM broadcast crossJoin +
-    window ivf_search_cells probes with (identical tie contract) — no Python
-    worker round-trip and no driver collect, faster for SMALL interactive
-    query batches (the reference's `search` CLI shape,
-    vectrekker/main.py:162-167). A partial WindowGroupLimit keeps each map
-    partition's top n_probe per qid before the shuffle, but the
-    |queries| × |centroids| scoring grows with the batch: bulk joins want
-    "blas"."""
-    if probe_via == "expr":
-        probes = _probe_cells(queries, centroids, n_probe).select("qid", "cid")
-    else:
-        probes = assign_centroids(
-            queries, centroids, assign_k=n_probe, id_col="qid", vec_col="qvec"
-        )
-    cand_ids = probes.join(assignments, "cid").select("qid", id_col)
-    if not unique_assignment:
-        cand_ids = cand_ids.distinct()
-    cands = cand_ids.join(corpus, id_col).join(
-        queries, "qid"
-    )  # (qid, vec_id, embedding, qvec) — only probed-cell rows survive
-    return _topk_by_score(cands, k, id_col, vec_col)
-
-
-def quantized_rerank_knn(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    coarse_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-stage kNN: int8 coarse search, full-precision re-rank.
-
-    Stage 1 scans the 4×-smaller quantized corpus (operators/quantize) for
-    each query's top coarse_factor·k candidates — at 100 TB this is the scan
-    whose IO the quantization exists to cut. Stage 2 joins only those
-    candidates back to the full-precision vectors and re-ranks to the final
-    top-k, so the reported scores are exact. Recall loss is bounded by the
-    int8 rounding error (~1e-3 cosine on 64-dim fixtures) against a
-    coarse_factor× headroom — measured ≥0.95 recall@10 at coarse_factor=4.
-
-    Returns (qid, id_col, score, rank) with exact full-precision scores.
-    """
-    from vectrekker_spark.operators.quantize import dequantize_int8, quantize_int8
-
-    deq = dequantize_int8(
-        quantize_int8(corpus.select(id_col, vec_col), vec_col=vec_col)
-    ).select(id_col, F.col("embedding_deq").alias(vec_col))
-    coarse = knn_join(
-        queries, deq, k=k * coarse_factor, id_col=id_col, vec_col=vec_col
-    ).select("qid", F.col("vec_id").alias(id_col))
-    return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
-
-
-def _exact_rerank(
-    coarse_ids: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Stage 2 of every quantized search: join the coarse survivors (qid,
-    id) back to the full-precision corpus vectors and re-rank to the final
-    top-k — returned scores are exact. Shared so the re-rank contract can't
-    drift between quantized_rerank_knn and ivf_search_cells."""
-    cands = coarse_ids.join(corpus.select(id_col, vec_col), id_col).join(
-        queries, "qid"
+    ``_probe_cells`` picks the cells in the JVM (a broadcast crossJoin and
+    a per-qid window: no Python worker, no driver collect); its
+    |queries| × |centroids| scoring suits the query batches every caller
+    sends (the reference's `search` shape, vectrekker/main.py:162-167). The
+    probes carry qvec, so the queries are not joined back, and the ranking
+    window drops the copies of a vector multi-assigned to two probed
+    cells."""
+    cands = (
+        _probe_cells(queries, centroids, n_probe)
+        .join(assignments.select("cid", id_col), "cid")
+        .join(corpus.select(id_col, vec_col), id_col)
     )
-    return _topk_by_score(cands, k, id_col, vec_col)
+    return _topk_by_score(cands, k, id_col, vec_col, dedupe=True)
 
 
 # IVF artifacts: cells-v{N} (partitioned by cid), centroids-v{N} and
@@ -965,36 +934,14 @@ def ivf_search_cells(
     returned scores are exact — the FAISS-style IVF-SQ8 shape where the 4×
     probe-I/O cut pays for a k·factor-row join.
 
-    Runs in the JVM: ``_probe_cells`` picks the cells against the broadcast
-    centroids, checked first against ``_centroid_cap`` by one aggregate.
-    The query side is evaluated once: the probes are materialized
-    (``session.truncate_lineage``; on a cluster without a checkpoint dir
-    they stay a plan and the queries are read twice), and both the cid
-    collect and the cell join read that result. The distinct probed cids
-    (at most the centroid count, which ``_centroid_cap`` bounds) are
-    collected and applied as an ``isin`` filter, so the cell scan
-    statically prunes to exactly the probed partitions (asserted in
-    test_plans).
-    The probes carry qvec, so the queries are not joined back, and the
-    ranking window drops the copies of a vector multi-assigned to two probed
-    cells (no dedupe exchange)."""
+    Runs in the JVM: ``_probe_pruned`` reads the queries once and scans
+    only the probed cells' partitions. The probes carry qvec, so the
+    queries are not joined back, and the ranking window drops the copies of
+    a vector multi-assigned to two probed cells (no dedupe exchange)."""
     data_cols = [c for c in cells.columns if c != "cid"]
     quantized = _cells_quantized(cells)
     id_col = id_col or data_cols[0]
-    n, dim = centroids.where(F.col("cvec").isNotNull()).select(
-        F.count(F.lit(1)), F.max(F.size("cvec"))
-    ).first()
-    _centroid_cap(dim or 0, n=n)
-    probes = _probe_cells(queries, centroids, n_probe)
-    # one query-side pass: the cid collect and the final plan both read the
-    # materialized probes instead of re-evaluating the queries (a Python-RDD
-    # query frame costs a Python task per read)
-    materialized = truncate_lineage(probes)
-    if materialized is not None:
-        probes = materialized
-    probed = [r[0] for r in probes.select("cid").distinct().collect()]
-    cells = cells.filter(F.col("cid").isin(probed))
-    cands = probes.join(cells, "cid")  # (cid, qid, qvec, id, vector...)
+    cands = _probe_pruned(queries, centroids, cells, n_probe)  # (cid, qid, qvec, id, vector...)
     if not quantized:
         return _topk_by_score(cands, k, id_col, vec_col or data_cols[1], dedupe=True)
     from vectrekker_spark.operators.quantize import dequantize_int8
@@ -1014,10 +961,12 @@ def ivf_search_cells(
                 f"{len(arrays)} candidate array columns: {arrays}"
             )
         vec_col = arrays[0]
+    # the survivors join back to the full-precision vectors: exact scores
     coarse = _topk_by_score(
         deq, k * rerank_factor, id_col, "__deq", dedupe=True
     ).select("qid", id_col)
-    return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
+    exact = coarse.join(corpus.select(id_col, vec_col), id_col).join(queries, "qid")
+    return _topk_by_score(exact, k, id_col, vec_col)
 
 
 def ivf_recall_estimate(

@@ -311,35 +311,8 @@ def similarity_join_self_auto(
             max_collect_bytes=max_exact_bytes,
             probed_dim=dim,  # don't pay the probe job twice
         )
-    return _bucketed_self_fallback(
-        df, threshold, id_col, vec_col, caller="similarity_join_self_auto"
-    )
-
-
-def _bucketed_self_fallback(
-    df: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    caller: str = "similarity_join",
-) -> DataFrame:
-    """Shared past-the-cap route (similarity_join_self_auto and the
-    similarity_join router): null-safe dim probe + bucketed self-join —
-    one definition so the two routers can't drift. ``caller`` names the
-    public entry point in errors, so a failure is attributed to the API the
-    user actually called."""
-    probe = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("d"))
-        .first()
-    )
-    if probe is None:
-        raise ValueError(
-            f"{caller}: no non-null {vec_col!r} vectors to "
-            "derive the dimension from on the bucketed fallback path"
-        )
     return similarity_join_bucketed(
-        df, threshold, int(probe["d"]), id_col=id_col, vec_col=vec_col
+        df, threshold, dim, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -469,146 +442,3 @@ def similarity_join_bucketed(
         .applyInPandas(bucket_pairs, schema=f"l_id {id_t}, r_id {id_t}, score double")
         .distinct()
     )
-
-
-def similarity_join(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float,
-    metric: str = "cosine",
-    left_id: str = "l_id",
-    left_vec: str = "l_vec",
-    right_id: str = "r_id",
-    right_vec: str = "r_vec",
-    ordered_pairs: bool = True,
-    max_broadcast_rows: int = 1_000_000,
-    max_broadcast_bytes: int = 512 << 20,
-) -> DataFrame:
-    """All pairs within threshold (embedding-space near-dup, L6).
-
-    Matching semantics per metric: cosine/dot keep pairs with score >=
-    threshold; l2 keeps pairs with DISTANCE <= threshold (smaller is nearer).
-
-    `ordered_pairs=True` is the self-join mode (emit each unordered pair once
-    via l_id < r_id); pass False when left and right are distinct datasets,
-    otherwise cross-dataset matches where l_id >= r_id would be lost.
-
-    Broadcasts the right side; the threshold filter runs inside the same
-    codegen stage as the score, so non-matching pairs are never materialized.
-    The broadcast is guarded the same way as similarity_join_blas: a
-    LIMIT-bounded probe bounds the build at ``max_broadcast_rows`` AND at
-    the row allowance ``max_broadcast_bytes`` implies for the probed vector
-    dimension (rows × dim × 8) — so a high-dim embedding column trips (or
-    auto-routes) at the same executor-memory footprint a low-dim one would
-    — instead of OOMing executors.
-
-    Past the guard the router AUTO-ROUTES when it safely can: a TRUE
-    self-join — the SAME DataFrame object passed as both ``left`` and
-    ``right``, with MATCHING id/vec column names on both sides,
-    ``ordered_pairs=True``, and the cosine metric — falls through to
-    ``similarity_join_bucketed``, the LSH route with no driver-side
-    collect, same (l_id, r_id, score) contract and bit-identical scores (a
-    warning notes the recall approximation for thresholds below ~0.95; see
-    that operator's recall math). Everything else still raises: distinct
-    frames (even lineage-equal ones — the bucketed kernel would silently
-    drop a left-side filter), a cross-COLUMN join over one frame
-    (title_vec vs body_vec has no self-join equivalent), a cross-dataset
-    join (ordered_pairs=False), or a non-cosine metric have no safe
-    bucketed equivalent here — those callers must pre-bucket explicitly.
-    """
-    l = left.select(F.col(left_id).alias("l_id"), F.col(left_vec).alias("l_vec"))
-    r = right.select(
-        F.col(right_id).alias("r_id"), F.col(right_vec).alias("r_vec")
-    ).persist()  # the guard probe materializes this; the broadcast build
-    # then reads the cached rows instead of recomputing the right side's
-    # lineage a second time. Bounded by the cap below (≤1M rows). The
-    # returned plan is lazy and still needs it, so it is NOT unpersisted
-    # here — the cached side is tracked on the result (``_cached_right``)
-    # and long-lived drivers call ``release(result)`` once the result is
-    # consumed, so repeated calls don't accumulate cached blocks.
-    r_cached = r  # keep the persisted handle; r is rebound below
-    dim_row = r.filter(F.col("r_vec").isNotNull()).select(
-        F.size("r_vec").alias("d")
-    ).first()
-    allowed = max_broadcast_rows
-    if dim_row is not None:
-        if int(dim_row["d"]) <= 0:
-            r.unpersist()
-            raise ValueError(
-                "similarity_join: zero-dimension vectors cannot be scored "
-                f"(probed {right_vec!r} size {int(dim_row['d'])})"
-            )
-        allowed = min(
-            max_broadcast_rows,
-            max(1, max_broadcast_bytes // (int(dim_row["d"]) * 8)),
-        )
-    if r.limit(allowed + 1).count() > allowed:
-        r.unpersist()
-        # TRUE self-join only (left is right): routing a filtered-left /
-        # full-right call (ordered_pairs=True but distinct frames) through
-        # the self-join kernel would silently return pairs the caller's
-        # left-side filter excluded — that ambiguous shape keeps raising.
-        if (
-            ordered_pairs
-            and metric == "cosine"
-            and left is right
-            and left_id == right_id
-            and left_vec == right_vec
-        ):
-            # same-object AND same-column: a cross-column join over one
-            # frame (title_vec vs body_vec) has no self-join equivalent
-            import warnings
-
-            if threshold < 0.95:
-                warnings.warn(
-                    "similarity_join: routed past the broadcast cap to the "
-                    f"LSH-bucketed kernel; at threshold={threshold} recall "
-                    "is approximate (see similarity_join_bucketed's recall "
-                    "math) — call a concrete variant to control exactness.",
-                    stacklevel=2,
-                )
-            return _bucketed_self_fallback(right, threshold, right_id, right_vec)
-        raise ValueError(
-            f"similarity_join: right side exceeds the broadcast cap "
-            f"({allowed} rows = min(max_broadcast_rows={max_broadcast_rows}, "
-            f"max_broadcast_bytes={max_broadcast_bytes} at the probed "
-            "dim)); broadcasting it would OOM executors. "
-            "Auto-routing applies only to a TRUE self-join (the SAME "
-            "DataFrame object as left and right, matching id/vec column "
-            "names on both sides, ordered_pairs=True, cosine metric); no "
-            "bucketed equivalent exists for distinct frames, cross-column "
-            "joins over one frame, cross-dataset (ordered_pairs=False), or "
-            "non-cosine joins. "
-            "Bucket first (similarity_join_bucketed / LSH / IVF) and join "
-            "per bucket, or raise the cap deliberately."
-        )
-    if metric == "cosine":
-        # per-side norms once, not per pair (same operand order as per-pair)
-        l = l.withColumn("__ln", norm("l_vec"))
-        r = r.withColumn("__rn", norm("r_vec"))
-        score = F.round(
-            dot(F.col("l_vec"), F.col("r_vec")) / (F.col("__ln") * F.col("__rn")), 6
-        )
-    else:
-        score = F.round(_score(metric, F.col("l_vec"), F.col("r_vec")), 6)
-    cond = F.col("l_id") < F.col("r_id") if ordered_pairs else F.lit(True)
-    pairs = l.join(F.broadcast(r), cond)
-    keep = F.col("score") <= threshold if metric == "l2" else F.col("score") >= threshold
-    out = (
-        pairs.withColumn("score", score)
-        .filter(keep)
-        .select("l_id", "r_id", "score")
-    )
-    out._cached_right = r_cached  # cleanup handle for release()
-    return out
-
-
-def release(result: DataFrame) -> None:
-    """Unpersist the cached right side a ``similarity_join`` result holds.
-
-    Call after the result has been consumed (collected/written); a no-op on
-    DataFrames with nothing tracked. Mirrors CurationResult.unpersist() —
-    the repo's idiom for caller-controlled cache lifecycle."""
-    cached = getattr(result, "_cached_right", None)
-    if cached is not None:
-        cached.unpersist()

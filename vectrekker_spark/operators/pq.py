@@ -25,8 +25,9 @@ Spark shapes (designed for the 1000-executor case):
   partition scores its rows with numpy gathers. The float corpus is
   never read — that is the entire point — unless `refine` > 0, which
   joins the ADC top-(k·refine) candidates back to the true vectors for
-  an exact rerank (the standard recall repair, same idiom as
-  quantized_rerank_knn).
+  an exact rerank (the standard recall repair). Two searches: pq_search
+  scans every code, ivfpq_search_cells only a saved IVF∘PQ index's
+  probed cells; both end in one refine-and-rank tail (_refine_rank).
 
 Metric: cosine via inner-product ADC over l2-normalized vectors (the
 module-wide convention — ivf_build normalizes the same way). Scores are
@@ -53,7 +54,8 @@ from vectrekker_spark.commit import (
     resolve,
     write_meta,
 )
-from vectrekker_spark.functions.vector import l2_normalize
+from vectrekker_spark.functions.vector import cosine_sim, l2_normalize
+from vectrekker_spark.operators.ann import _probe_pruned, _rank_top, assign_centroids
 
 
 def _codebooks_np(codebooks: DataFrame):
@@ -82,7 +84,7 @@ def _query_luts(
     queries: DataFrame, cb, qid_col: str, qvec_col: str, max_queries: int,
     fn: str, rotation=None,
 ):
-    """Query side shared by the three ADC searches → (qids, lut).
+    """Query side shared by both ADC searches → (qids, lut).
 
     A bounded collect: NULL-id / NULL-vector query rows are DROPPED (the
     corpus side's NULL-is-never-a-neighbor rule — one junk row must not
@@ -141,7 +143,7 @@ def _empty_result(queries: DataFrame, codes: DataFrame, qid_col: str,
     return queries.sparkSession.createDataFrame(
         [],
         f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, "
-        f"score double, rank int",
+        f"score double, rank long",
     )
 
 
@@ -366,42 +368,43 @@ def pq_search(
     partials = codes.mapInPandas(
         gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
     )
-    from pyspark.sql import Window
+    return _refine_rank(
+        partials, k, refine, corpus, queries, qid_col, qvec_col, id_col, vec_col
+    )
 
+
+def _refine_rank(
+    scored: DataFrame,
+    k: int,
+    refine: int,
+    corpus: DataFrame | None,
+    queries: DataFrame,
+    qid_col: str,
+    qvec_col: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Shared tail of both ADC searches over (qid, id, score) rows: with
+    ``refine`` > 0 keep each query's ADC top-(k·refine) and re-score those
+    candidates exactly against the float ``corpus`` (round-6 cosine, the
+    knn_join contract), then rank the per-query top-k. Both windows are
+    ann._rank_top's deduping one, so the repeated hits of a re-appended or
+    multi-assigned code row count once."""
     if refine > 0:
         if corpus is None:
             raise ValueError("refine > 0 needs the float `corpus` to rerank")
-        from vectrekker_spark.functions.vector import cosine_sim
-
-        w0 = Window.partitionBy(qid_col).orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        cands = (
-            partials.withColumn("__r", F.row_number().over(w0))
-            .where(F.col("__r") <= take)
-            .drop("__r", "score")
-        )
-        qdf = queries.select(qid_col, qvec_col)
-        exact = (
-            cands.join(corpus.select(id_col, vec_col), id_col)
-            .join(F.broadcast(qdf), qid_col)
+        top = _rank_top(scored, k * refine, id_col, dedupe=True, qid_col=qid_col)
+        scored = (
+            top.select(qid_col, id_col)
+            .join(corpus.select(id_col, vec_col), id_col)
+            .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
             .select(
                 qid_col,
                 id_col,
-                F.round(
-                    cosine_sim(F.col(vec_col), F.col(qvec_col)), 6
-                ).alias("score"),
+                F.round(cosine_sim(F.col(vec_col), F.col(qvec_col)), 6).alias("score"),
             )
         )
-        partials = exact
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "score", "rank")
-    )
+    return _rank_top(scored, k, id_col, dedupe=True, qid_col=qid_col)
 
 
 # --------------------------------------------------------------------------
@@ -531,166 +534,6 @@ def pq_load(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     return codebooks, codes, meta
 
 
-def ivfpq_search(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: DataFrame,
-    centroids: DataFrame,
-    assign: DataFrame,
-    k: int = 10,
-    n_probe: int = 8,
-    refine: int = 0,
-    corpus: DataFrame | None = None,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
-    rotation=None,
-) -> DataFrame:
-    """IVF∘PQ — the standard billion-scale ANN composition (FAISS's
-    IVFPQ): the coarse quantizer prunes WHICH cells a query reads
-    (operators/ann.py's centroids + assignment table), PQ shrinks WHAT
-    it reads there (this module's codes). A query touches only its
-    ``n_probe`` cells' code rows — with cid-partitioned code storage
-    that is partition pruning on top of the 16-32× byte shrink.
-
-    Semantics: with ``n_probe`` ≥ the centroid count the candidate set
-    is the whole corpus and the result EQUALS pq_search (tested — the
-    composition adds pruning, never different scoring); smaller n_probe
-    trades recall exactly like ivf_search does. ``refine`` reranks the
-    ADC top-(k·refine) against true vectors (exact round-6 cosine out).
-
-    Scoring shape: (qid, cid) probes → assignment join → per-query
-    candidate code rows → one Arrow pass computing ADC from the qid's
-    LUT (LUTs broadcast as one numpy block) → per-query top-k window."""
-    from vectrekker_spark.operators.ann import assign_centroids
-
-    # OPQ codes: LUTs in the rotated space, probing below in ORIGINAL
-    # space against the contractually-unrotated centroids
-    qids, lut = _query_luts(
-        queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
-        "ivfpq_search", rotation,
-    )
-    if not qids:
-        return _empty_result(queries, codes, qid_col, id_col)
-    qpos = {q: i for i, q in enumerate(qids)}
-
-    # probe: each query's n_probe nearest cells (reuses the corpus-side
-    # assignment kernel — queries ARE a tiny corpus here). Alias to the
-    # kernel's DEFAULT column names: the caller's id_col/vec_col name the
-    # CODES table's columns, which assign_centroids never sees (advisor
-    # r13: passing them through broke non-default names).
-    # probe only the ELIGIBLE queries (the set qids/LUTs were built
-    # from): a NULL-id query row would otherwise reach the ADC pass and
-    # miss the qpos lookup
-    elig = queries.where(
-        F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull()
-    )
-    probes = assign_centroids(
-        elig.select(
-            F.col(qid_col).alias("vec_id"), F.col(qvec_col).alias("embedding")
-        ),
-        centroids,
-        assign_k=n_probe,
-    ).select(F.col("vec_id").alias(qid_col), "cid")
-    cand = (
-        F.broadcast(probes)
-        .join(assign.select(id_col, "cid"), "cid")
-        .select(qid_col, id_col)
-        # multi-assigned vectors (ivf_build assign_k > 1) can land in two
-        # probed cells of the SAME query — distinct, or the rank window
-        # counts them twice
-        .distinct()
-        .join(codes, id_col)
-    )
-
-    return _adc_rank(
-        cand, lut, qpos, k=k, refine=refine, corpus=corpus,
-        queries=queries, qid_col=qid_col, qvec_col=qvec_col,
-        id_col=id_col, vec_col=vec_col,
-    )
-
-
-def _adc_rank(
-    cand: DataFrame,
-    lut,
-    qpos: dict,
-    k: int,
-    refine: int,
-    corpus: DataFrame | None,
-    queries: DataFrame,
-    qid_col: str,
-    qvec_col: str,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared tail of the IVF∘PQ searches: score (qid, id, codes)
-    candidate rows by ADC from each qid's LUT row (one Arrow pass, the
-    LUT block broadcast), rank per query with the (score desc, id asc)
-    window, optionally exact-rerank the top-(k·refine) against the float
-    corpus."""
-    import numpy as np
-    import pandas as pd
-
-    m = lut.shape[1]
-    qid_type = cand.select(qid_col).schema[0].dataType.simpleString()
-    id_type = cand.select(id_col).schema[0].dataType.simpleString()
-    take = k * refine if refine > 0 else k
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["codes"]])
-            qi = np.asarray([qpos[q] for q in pdf[qid_col]])
-            s = np.zeros(len(pdf))
-            for j in range(m):
-                s += lut[qi, j, c[:, j]]
-            yield pd.DataFrame(
-                {
-                    qid_col: pdf[qid_col].values,
-                    id_col: pdf[id_col].values,
-                    "score": np.round(s, 6),
-                }
-            )
-
-    scored = cand.select(qid_col, id_col, "codes").mapInPandas(
-        gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    if refine > 0:
-        if corpus is None:
-            raise ValueError("refine > 0 needs the float `corpus` to rerank")
-        from vectrekker_spark.functions.vector import cosine_sim
-
-        cands_top = (
-            scored.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= take)
-            .drop("__r", "score")
-        )
-        scored = (
-            cands_top.join(corpus.select(id_col, vec_col), id_col)
-            .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
-            .select(
-                qid_col,
-                id_col,
-                F.round(cosine_sim(F.col(vec_col), F.col(qvec_col)), 6).alias(
-                    "score"
-                ),
-            )
-        )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "score", "rank")
-    )
-
-
 # --------------------------------------------------------------------------
 # Persisted IVF∘PQ: cid-partitioned codes + pinned-codebook appends
 
@@ -786,12 +629,10 @@ def ivfpq_append(
     history is never re-encoded (the ivf_append contract applied to PQ).
 
     At-least-once caveat: re-appending the same ids duplicates rows;
-    searches dedupe candidates by (qid, id) and duplicate rows carry
-    identical codes, so results are unaffected. Codebooks/centroids drift
+    the search's ranking window counts the duplicate hits once (they carry
+    identical codes), so results are unaffected. Codebooks/centroids drift
     as the corpus grows — re-run the full build when recall degrades.
     Single-writer contract as ivfpq_save."""
-    from vectrekker_spark.operators.ann import assign_centroids
-
     spark = new_corpus.sparkSession
     names, _, centroids, _, meta, cb = _ivfpq_open(spark, path)
     id_col = id_col or meta["id_col"]
@@ -840,16 +681,25 @@ def ivfpq_search_cells(
     vec_col: str = "embedding",
     max_queries: int = 10_000,
 ) -> DataFrame:
-    """ivfpq_search against a saved (ivfpq_save) index: the distinct
-    probed cids (at most the centroid count) are collected and applied as
-    an ``isin`` filter on the partitioned code scan (the ivf_search_cells
-    idiom), so the plan statically prunes to exactly the probed cells'
-    parquet partitions instead of joining the whole assignment table.
+    """IVF∘PQ — the standard billion-scale ANN composition (FAISS's
+    IVFPQ) over a saved (ivfpq_save) index: the coarse quantizer prunes
+    WHICH cells a query reads, PQ shrinks WHAT it reads there.
 
-    Semantics ≡ ivfpq_search over the same (codebooks, centroids,
-    assignment, codes) — pinned row-for-row in tests; duplicates from
-    re-appended batches collapse in the (qid, id) dedupe."""
-    from vectrekker_spark.operators.ann import assign_centroids
+    The probe step is ivf_search_cells' (ann._probe_pruned): after the
+    LUT collect the queries are read once more, and the code scan prunes
+    statically to exactly the probed cells' parquet partitions. Each
+    candidate is scored by ADC from its qid's LUT row (one Arrow pass, the
+    LUT block shipped with the task), then ``_refine_rank`` ranks it; its
+    window drops the duplicates a multi-assigned vector or a re-appended
+    batch leaves (no dedupe exchange). An OPQ index's stored rotation
+    applies to the LUTs; probing and the refine arm stay in original
+    space (the rotation preserves cosine).
+
+    Semantics: with ``n_probe`` ≥ the centroid count the candidate set is
+    the whole index and the result EQUALS pq_search over the same codes
+    (tested); a smaller n_probe trades recall like ivf_search does."""
+    import numpy as np
+    import pandas as pd
 
     spark = queries.sparkSession
     _, _, centroids, codes, meta, cb = _ivfpq_open(spark, path)
@@ -861,31 +711,35 @@ def ivfpq_search_cells(
     if not qids:
         return _empty_result(queries, codes, qid_col, id_col)
     qpos = {q: i for i, q in enumerate(qids)}
+    m = lut.shape[1]
+    cand = _probe_pruned(
+        queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec")),
+        centroids, codes, n_probe,
+    ).select(F.col("qid").alias(qid_col), id_col, "codes")
 
-    # probe only the ELIGIBLE queries (the set qids/LUTs were built
-    # from): a NULL-id query row would otherwise reach the ADC pass and
-    # miss the qpos lookup
-    elig = queries.where(
-        F.col(qid_col).isNotNull() & F.col(qvec_col).isNotNull()
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            c = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["codes"]])
+            qi = np.asarray([qpos[q] for q in pdf[qid_col]])
+            s = np.zeros(len(pdf))
+            for j in range(m):
+                s += lut[qi, j, c[:, j]]
+            yield pd.DataFrame(
+                {
+                    qid_col: pdf[qid_col].values,
+                    id_col: pdf[id_col].values,
+                    "score": np.round(s, 6),
+                }
+            )
+
+    qid_type, id_type = (f.dataType.simpleString() for f in cand.schema.fields[:2])
+    scored = cand.mapInPandas(
+        gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
     )
-    probes = assign_centroids(
-        elig.select(
-            F.col(qid_col).alias("vec_id"), F.col(qvec_col).alias("embedding")
-        ),
-        centroids,
-        assign_k=n_probe,
-    ).select(F.col("vec_id").alias(qid_col), "cid")
-    probed = [r[0] for r in probes.select("cid").distinct().collect()]
-    codes = codes.filter(F.col("cid").isin(probed))
-    cand = (
-        F.broadcast(probes)
-        .join(codes, "cid")
-        .dropDuplicates([qid_col, id_col])
-    )
-    return _adc_rank(
-        cand, lut, qpos, k=k, refine=refine, corpus=corpus,
-        queries=queries, qid_col=qid_col, qvec_col=qvec_col,
-        id_col=id_col, vec_col=vec_col,
+    return _refine_rank(
+        scored, k, refine, corpus, queries, qid_col, qvec_col, id_col, vec_col
     )
 
 

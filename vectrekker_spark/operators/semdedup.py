@@ -2,7 +2,7 @@
 path for "drop documents whose embeddings near-duplicate another's".
 
 The exact similarity join (queries/vector.py q28 / operators/knn.py
-similarity_join) scores PAIRS: correct, but the candidate set is corpus² and
+similarity_join_blas) scores PAIRS: correct, but the candidate set is corpus² and
 even the LSH-bucketed route materializes every qualifying pair. For corpus
 curation the question is cheaper than the pair list: per document, "is there
 an earlier-kept document this close to me?" — a keep/drop DECISION. The
@@ -10,8 +10,8 @@ SemDeDup recipe (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
 web-scale through semantic deduplication") bounds that decision with a
 coarse clustering: k-means the embeddings, then compare ONLY within a
 cluster. Recall is bounded by the clustering (a near-dup pair straddling a
-cell boundary is missed — the paper accepts this; q28/similarity_join stays
-the exact tool), cost drops from O(N²) to Σ O(|cell|·kept).
+cell boundary is missed — the paper accepts this; q28/similarity_join_blas
+stays the exact tool), cost drops from O(N²) to Σ O(|cell|·kept).
 
 Scale shape:
 - Centroids: ~√N rows BY CONSTRUCTION, broadcast once
@@ -211,7 +211,6 @@ def semantic_dedup_decisions(
         # a user-persisted centroids table that reads as empty (or all-NULL
         # cvec) would make assign_centroids return an EMPTY frame and the
         # semi-join silently delete every scorable row — fail loudly instead
-        # (the similarity_join "no non-null vectors" precedent)
         if not centroids.where(F.col("cvec").isNotNull()).limit(1).count():
             raise ValueError(
                 "semantic_dedup: the supplied centroids frame has no non-null "

@@ -338,7 +338,7 @@ def release(result: DataFrame) -> None:
 
     Call after the scores have been consumed (collected/written); a no-op on
     DataFrames with nothing tracked — same caller-controlled cache lifecycle
-    idiom as operators/knn.release."""
+    idiom as operators/spandedup.release."""
     cached = getattr(result, "_cached_base", None)
     if cached is not None:
         cached.unpersist()

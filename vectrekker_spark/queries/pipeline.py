@@ -230,16 +230,9 @@ def d10_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     queries = em.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    # probe_via="expr": the registry query is the reference's interactive
-    # `search` shape (5 query vectors) — the JVM probe window avoids the
-    # Python-worker round-trip + centroid collect per run; bulk joins keep
-    # the default blas path. unique_assignment: the stride build is
-    # assign_k=1, so the candidate dedup exchange is skippable. Together
-    # 0.81 → 0.55 s at sf0.1 (results verified identical).
-    return ivf_search(
-        queries, em, centroids, assign, k=10, n_probe=3,
-        probe_via="expr", unique_assignment=True,
-    ).orderBy("qid", "rank")
+    return ivf_search(queries, em, centroids, assign, k=10, n_probe=3).orderBy(
+        "qid", "rank"
+    )
 
 
 # Mirrors d10's deterministic stride-IVF pipeline stage by stage:
