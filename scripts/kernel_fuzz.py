@@ -487,9 +487,9 @@ class VecMetrics:
         j = a.join(b, F.col("a.vec_id") + 1 == F.col("b.vec_id"))
         return j.select(
             F.col("a.vec_id").alias("l_id"),
-            F.round(cosine_sim(F.col("a.embedding"), F.col("b.embedding")), 6).alias("cos"),
-            F.round(dot(F.col("a.embedding"), F.col("b.embedding")), 6).alias("dp"),
-            F.round(l2_dist(F.col("a.embedding"), F.col("b.embedding")), 6).alias("l2"),
+            F.round(cosine_sim("a.embedding", "b.embedding"), 6).alias("cos"),
+            F.round(dot("a.embedding", "b.embedding"), 6).alias("dp"),
+            F.round(l2_dist("a.embedding", "b.embedding"), 6).alias("l2"),
         )
 
     @staticmethod

@@ -207,7 +207,8 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     # Python task per read: the probes are materialized once, so the cid
     # collect and the final plan do not re-read the queries. The
     # materialized probes are released with the returned frame. IVF-PQ
-    # runs the same probe step after its LUT collect: two reads.
+    # runs the same probe step after its LUT collect: two reads, with or
+    # without refine. The IVF-SQ8 exact re-rank adds no read.
     import gc
     import time
 
@@ -283,15 +284,113 @@ def test_ivf_search_cells_reads_queries_once_and_releases_probes(spark, tmp_path
     del res
     assert_released(persisted_before)
 
+    # IVF-PQ: the LUT collect, then the probes — its refine arm takes the
+    # query vectors from the probes, so refine adds no read
+    for refine in (0, 2):
+        persisted_before, reads_before = persisted_ids(), reads.value
+        res = ivfpq_search_cells(q, pq_path, k=4, n_probe=2, refine=refine, corpus=corpus)
+        got = res.collect()
+        assert reads.value - reads_before == 2 * len(rows), refine
+        assert len({r["qid"] for r in got}) == len(rows)
+        del res
+        assert_released(persisted_before)
+
+    # the IVF-SQ8 exact re-rank reads the queries once as well
+    sq_path = str(tmp_path / "ivfsq")
+    ivf_save(centroids, assign, corpus, sq_path, assign_k=2, quantize=True)
+    sq_cents, sq_cells = ivf_load(spark, sq_path)
     persisted_before, reads_before = persisted_ids(), reads.value
-    res = ivfpq_search_cells(q, pq_path, k=4, n_probe=2)
+    res = ivf_search_cells(q, sq_cents, sq_cells, k=4, n_probe=2, corpus=corpus)
     got = res.collect()
-    assert reads.value - reads_before == 2 * len(rows)
+    assert reads.value - reads_before == len(rows)
     assert len({r["qid"] for r in got}) == len(rows)
     del res
     assert_released(persisted_before)
     if cache_was_empty:
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _small_ivf(spark, tmp_path, n=60, n_centroids=6):
+    from vectrekker_spark.operators.ann import ivf_load, ivf_save
+
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id"), F.lit(0.5)).alias("embedding"),
+    )
+    centroids, assign = ivf_build(corpus, n_centroids=n_centroids, method="stride")
+    path = str(tmp_path / "ivf")
+    ivf_save(centroids, assign, corpus, path)
+    lc, cells = ivf_load(spark, path)
+    return corpus, centroids, assign, lc, cells
+
+
+def _local_queries(spark, n=5):
+    from vectrekker_spark.session import local_frame
+
+    rows = [(i, [float(i % 3) - 1.0, 1.0 - i / 7, 0.5]) for i in range(n)]
+    return local_frame(spark, rows, "qid long, qvec array<double>")
+
+
+def test_ivf_search_cells_reads_centroids_once(spark, tmp_path):
+    # No size-guard job ahead of the probe: a Python-RDD centroid frame is
+    # read once, by the materialized probes.
+    from vectrekker_spark.operators.ann import ivf_search_cells
+
+    corpus, centroids, _, lc, cells = _small_ivf(spark, tmp_path)
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def bump(r):
+        reads.add(1)
+        return r
+
+    rows = [tuple(r) for r in lc.collect()]
+    cents = spark.createDataFrame(
+        sc.parallelize(rows, 2).map(bump), "cid long, cvec array<double>"
+    )
+    q = _local_queries(spark)
+    got = _rows(ivf_search_cells(q, cents, cells, k=4, n_probe=2))
+    assert reads.value == len(rows)
+    assert got == _rows(ivf_search_cells(q, lc, cells, k=4, n_probe=2))
+
+
+def test_ivf_search_cells_over_centroid_cap_matches_ivf_search(spark, tmp_path, monkeypatch):
+    # _centroid_cap bounds driver collects only; a probe over a centroid
+    # table past it still searches, with ivf_search's rows
+    from vectrekker_spark.operators import ann
+
+    corpus, centroids, assign, lc, cells = _small_ivf(spark, tmp_path)
+    monkeypatch.setattr(ann, "_MAX_CENTROID_BYTES", 3 * 8 * 2)  # 2 rows at dim 3
+    with pytest.raises(ValueError, match="max_centroid_bytes"):
+        ann._centroid_cap(3, n=6)
+    q = _local_queries(spark)
+    got = _rows(ann.ivf_search_cells(q, lc, cells, k=4, n_probe=2))
+    assert got and got == _rows(ivf_search(q, corpus, centroids, assign, k=4, n_probe=2))
+
+
+def test_probe_broadcasts_no_centroids_without_broadcast_threshold(spark, tmp_path):
+    # no broadcast hint: with autoBroadcastJoinThreshold=-1 the planner
+    # gathers no centroid table to the driver, and the rows do not change
+    import contextlib
+
+    from vectrekker_spark.operators.ann import _probe_cells, ivf_search_cells
+
+    @contextlib.contextmanager
+    def conf(key, value):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    _, _, _, lc, cells = _small_ivf(spark, tmp_path)
+    q = _local_queries(spark)
+    want = _rows(ivf_search_cells(q, lc, cells, k=4, n_probe=2))
+    with conf("spark.sql.autoBroadcastJoinThreshold", "-1"):
+        plan = _probe_cells(q, lc, 2)._jdf.queryExecution().executedPlan().toString()
+        assert "Broadcast" not in plan, plan
+        assert _rows(ivf_search_cells(q, lc, cells, k=4, n_probe=2)) == want
 
 
 def test_assign_centroids_byte_budget(spark):

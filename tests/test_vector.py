@@ -31,6 +31,109 @@ def test_norm_and_cosine(spark):
     assert abs(rows[2]["na"] - math.sqrt(2)) < 1e-12
 
 
+def _lambda_oracles():
+    """The vector functions as Python-lambda higher-order functions: the
+    same in-order double accumulation, built node by node."""
+    d = "double"
+
+    def dot(a, b):
+        prod = F.zip_with(a, b, lambda x, y: x.cast(d) * y.cast(d))
+        return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
+
+    def norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast(d) * x.cast(d)))
+
+    def l2(a, b):
+        diff = lambda x, y: (x.cast(d) - y.cast(d)) * (x.cast(d) - y.cast(d))  # noqa: E731
+        return F.sqrt(F.aggregate(F.zip_with(a, b, diff), F.lit(0.0), lambda acc, v: acc + v))
+
+    def unit(a):
+        n = norm(a)
+        scaled = F.transform(a, lambda x: x.cast(d) / n)
+        return F.when(n == 0.0, a.cast("array<double>")).otherwise(scaled)
+
+    return {
+        "dot": dot, "norm": norm, "cosine_sim": lambda a, b: dot(a, b) / (norm(a) * norm(b)),
+        "l2_dist": l2, "l2_normalize": unit,
+    }
+
+
+def test_vector_functions_equal_lambda_forms_bit_for_bit(spark):
+    # Each function, as a Column (and as selectExpr text where a *_sql
+    # builder exists), equals its lambda
+    # form bit for bit: float and double arrays, a NULL array, a NULL
+    # element, a zero vector and mismatched dims, over a qualified name
+    # (t.f), a dotted name (`x.y`) and a name with a space.
+    import random
+
+    from vectrekker_spark.functions import vector as V
+
+    rng = random.Random(7)
+    def vec():
+        return [rng.uniform(-1, 1) for _ in range(48)]
+
+    rows = [(i, vec(), vec()) for i in range(40)]
+    rows += [
+        (40, None, [1.0, 2.0]),
+        (41, [1.0, None, 2.0], [0.5, 0.5, 0.5]),
+        (42, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+        (43, [1.0, 2.0], [1.0, 2.0, 3.0]),
+        (44, [3.0, 4.0], None),
+    ]
+    df = spark.createDataFrame(rows, "id long, f array<float>, `x.y` array<double>").withColumn(
+        "my vec", F.col("`x.y`")
+    ).alias("t")
+    oracle = _lambda_oracles()
+    got = {}
+    for a, b in [("t.f", "`x.y`"), ("my vec", "t.f"), ("`x.y`", "my vec")]:
+        ca, cb = F.col(a), F.col(b)
+        want = df.select(
+            "id",
+            *(oracle[n](ca, cb).alias(n) for n in ("dot", "cosine_sim", "l2_dist")),
+            *(oracle[n](ca).alias(n) for n in ("norm", "l2_normalize")),
+        ).collect()
+        cols = df.select(
+            "id",
+            *(getattr(V, n)(a, b).alias(n) for n in ("dot", "cosine_sim", "l2_dist")),
+            *(getattr(V, n)(a).alias(n) for n in ("norm", "l2_normalize")),
+        ).collect()
+        text = df.selectExpr(
+            "id",
+            f"{V.dot_sql(a, b)} AS dot",
+            f"{V.cosine_sql(a, b)} AS cosine_sim",
+            f"{V.l2_dist_sql(a, b)} AS l2_dist",
+            f"{V.norm_sql(a)} AS norm",
+        ).collect()
+        assert cols == want, (a, b)
+        assert text == [r[:-1] for r in want], (a, b)
+        got[a] = {r["id"]: r for r in cols}
+    edge = got["t.f"]
+    assert edge[40]["norm"] is None and edge[41]["dot"] is None and edge[43]["l2_dist"] is None
+    assert edge[42]["l2_normalize"] == [0.0, 0.0, 0.0] and edge[42]["cosine_sim"] is None
+
+
+def test_cosine_sim_builds_in_three_py4j_round_trips(spark):
+    # one F.expr parse, not a py4j call per lambda node
+    from py4j.clientserver import ClientServerConnection
+
+    from vectrekker_spark.functions.vector import cosine_sim as build
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    build("a", "b")  # warm any lazily resolved JVM handles
+    ClientServerConnection.send_command = counted
+    try:
+        build("a", "b")
+    finally:
+        ClientServerConnection.send_command = send
+    assert 0 < len(calls) <= 3, len(calls)
+
+
 def test_dim_ok(spark):
     df = spark.createDataFrame([(1, [1.0] * 4), (2, [1.0] * 3)], "id long, v array<double>")
     ok = {r["id"]: r["ok"] for r in df.select("id", dim_ok("v", 4).alias("ok")).collect()}

@@ -12,6 +12,8 @@ index commits through commit.py's versioned pointer.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,7 +25,7 @@ from vectrekker_spark.commit import (
     resolve,
     write_meta,
 )
-from vectrekker_spark.functions.vector import l2_normalize
+from vectrekker_spark.functions.vector import cosine_sql, l2_normalize, sql_name
 from vectrekker_spark.session import local_frame, truncate_lineage
 
 _MAX_CENTROIDS = 200_000
@@ -37,8 +39,8 @@ def _centroid_cap(
     n: int = 0,
 ) -> int:
     """Row allowance ``min(max_centroids, max_centroid_bytes // (dim × 8))``
-    for a collected or broadcast table of dim-wide vectors (assign_centroids,
-    ivf_search_cells, the Lloyd sample of ivf_centroids); raises when ``n``
+    for a driver-collected table of dim-wide vectors (assign_centroids, the
+    Lloyd sample of ivf_centroids, semdedup's centroids); raises when ``n``
     centroids exceed it. ``max_centroid_bytes`` defaults to the module's
     ``_MAX_CENTROID_BYTES`` as it reads at call time."""
     if max_centroid_bytes is None:
@@ -296,7 +298,7 @@ def ivf_centroids(
         # the n_centroids==1 branch above) is that unscorable rows are
         # simply ignored (r14s3 review)
         prepared = corpus.where(F.col(vec_col).isNotNull()).withColumn(
-            "features", array_to_vector(l2_normalize(F.col(vec_col)).cast("array<double>"))
+            "features", array_to_vector(l2_normalize(vec_col).cast("array<double>"))
         )
         model = KMeans(k=n_centroids, seed=42, maxIter=20).fit(prepared)
         rows = [
@@ -402,17 +404,18 @@ def _rank_top(
     contract can't drift between them. ``dedupe=True`` drops repeated hits
     in the same window (a vector multi-assigned to two probed cells, a
     re-appended code row): they tie on (score, id), so ``dense_rank`` counts
-    them once and ``lag(id)`` keeps the first."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(F.col("score").desc(), F.col(id_col).asc())
-    rank = F.dense_rank() if dedupe else F.row_number()
-    scored = scored.withColumn("rank", rank.over(w).cast("long"))
-    keep = F.col("rank") <= k
-    if dedupe:
-        scored = scored.withColumn("__prev", F.lag(id_col).over(w))
-        keep &= ~F.col("__prev").eqNullSafe(F.col(id_col))
-    return scored.filter(keep).select(qid_col, id_col, "score", "rank")
+    them once and ``lag(id)`` keeps the first. The window is one SQL
+    projection (classic PySpark re-analyses the plan on every op)."""
+    qid, vid = sql_name(qid_col), sql_name(id_col)
+    w = f"OVER (PARTITION BY {qid} ORDER BY score DESC, {vid} ASC)"
+    rank = "dense_rank" if dedupe else "row_number"
+    cols = [qid, vid, "score", f"CAST({rank}() {w} AS BIGINT) AS rank"]
+    keep = f"rank <= {int(k)}"
+    if not dedupe:
+        return scored.selectExpr(*cols).where(keep)
+    cols.append(f"lag({vid}) {w} AS __prev")
+    keep += f" AND NOT (__prev <=> {vid})"
+    return scored.selectExpr(*cols).where(keep).drop("__prev")
 
 
 def _topk_by_score(
@@ -420,67 +423,51 @@ def _topk_by_score(
 ) -> DataFrame:
     """Final stage of every IVF search here: round-6 cosine against qvec,
     then ``_rank_top``."""
-    from vectrekker_spark.functions.vector import cosine_sim
-
-    scored = cands.select(
-        "qid",
-        F.col(id_col),
-        F.round(cosine_sim(vec_col, "qvec"), 6).alias("score"),
+    scored = cands.selectExpr(
+        "qid", sql_name(id_col), f"ROUND({cosine_sql(vec_col, 'qvec')}, 6) AS score"
     )
     return _rank_top(scored, k, id_col, dedupe)
 
 
 def _probe_cells(queries: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
-    """(qid, qvec, cid): each query's ``n_probe`` nearest centroids by a
-    broadcast crossJoin and one per-qid ``row_number() <= n_probe`` window,
-    in the JVM, with assign_centroids' contract (round-6 cosine, cid asc on
-    ties, NULLs dropped, a zero vector scores 0). Carrying qvec spares the
-    caller a join back to the queries."""
-    from pyspark.sql import Window
-
-    from vectrekker_spark.functions.vector import cosine_sim
-
+    """(qid, qvec, cid, __probe): each query's ``n_probe`` nearest
+    centroids (``__probe`` their 1-based rank) by a crossJoin and one per-qid
+    window, in the JVM, with assign_centroids' contract (round-6 cosine, cid
+    asc on ties, NULLs dropped, a zero vector scores 0). The ``__probe = 1``
+    rows carry each query's vector once, so callers never join back to the
+    queries. No broadcast hint: the planner broadcasts the centroids only
+    under ``spark.sql.autoBroadcastJoinThreshold`` and otherwise plans a
+    non-broadcast cross join, so the driver never gathers more."""
     # a zero norm makes the cosine NULL; assign_centroids scores it 0
-    s = F.coalesce(F.round(cosine_sim("cvec", "qvec"), 6), F.lit(0.0))
-    w = Window.partitionBy("qid").orderBy(s.desc(), F.col("cid").asc())
-    cents = F.broadcast(centroids.select("cid", "cvec").where(F.col("cvec").isNotNull()))
-    return (
-        queries.select("qid", "qvec")
-        .where(F.col("qid").isNotNull() & F.col("qvec").isNotNull())
-        .crossJoin(cents)
-        .select("qid", "qvec", "cid", F.row_number().over(w).alias("__rn"))
-        .where(F.col("__rn") <= n_probe)
-        .drop("__rn")
-    )
+    s = f"COALESCE(ROUND({cosine_sql('cvec', 'qvec')}, 6), 0.0D)"
+    probes = queries.selectExpr("qid", "qvec").where("qid IS NOT NULL AND qvec IS NOT NULL")
+    cents = centroids.selectExpr("cid", "cvec").where("cvec IS NOT NULL")
+    w = f"OVER (PARTITION BY qid ORDER BY {s} DESC, cid ASC)"
+    return probes.crossJoin(cents).selectExpr(
+        "qid", "qvec", "cid", f"row_number() {w} AS __probe"
+    ).where(f"__probe <= {int(n_probe)}")
 
 
 def _probe_pruned(
     queries: DataFrame, centroids: DataFrame, cells: DataFrame, n_probe: int
-) -> DataFrame:
-    """(cid, qid, qvec, cell columns...): every query joined to the rows of
-    its ``n_probe`` nearest cells — the probe step of both saved-index
-    searches (ivf_search_cells, pq.ivfpq_search_cells).
-
-    The centroids are checked first against ``_centroid_cap`` by one
-    aggregate. The query side is evaluated once: the ``_probe_cells``
-    probes are materialized (``session.truncate_lineage``; on a cluster
-    without a checkpoint dir they stay a plan and the queries are read
-    twice), and both the cid collect and the cell join read that result.
-    The distinct probed cids (at most the centroid count, which
-    ``_centroid_cap`` bounds) are collected and applied as an ``isin``
-    filter, so the cell scan statically prunes to exactly the probed
-    partitions (asserted in test_ann)."""
-    n, dim = centroids.where(F.col("cvec").isNotNull()).select(
-        F.count(F.lit(1)), F.max(F.size("cvec"))
-    ).first()
-    _centroid_cap(dim or 0, n=n)
+) -> tuple[DataFrame, Callable[[], DataFrame]]:
+    """(candidates, qvecs) — the probe step of both saved-index searches
+    (ivf_search_cells, pq.ivfpq_search_cells): (cid, qid, qvec, __probe, cell
+    columns...) rows joining every query to its ``n_probe`` nearest cells,
+    and a builder of (qid, qvec) once per query, for a re-rank. The
+    ``_probe_cells`` probes are materialized (``session.truncate_lineage``;
+    on a cluster without a checkpoint dir they stay a plan), so the cid
+    collect, the cell join and ``qvecs()`` read the queries once. The collected probed cids
+    (at most the centroid count) become a static ``cid IN`` filter, so the
+    cell scan reads only the probed partitions (asserted in test_ann)."""
     probes = _probe_cells(queries, centroids, n_probe)
     # a Python-RDD query frame costs a Python task per read
     materialized = truncate_lineage(probes)
     if materialized is not None:
         probes = materialized
-    probed = [r[0] for r in probes.select("cid").distinct().collect()]
-    return probes.join(cells.filter(F.col("cid").isin(probed)), "cid")
+    probed = probes.selectExpr("collect_set(cid)").collect()[0][0]
+    cands = probes.join(cells.where(F.col("cid").isin(probed)), "cid")
+    return cands, lambda: probes.where("__probe = 1").selectExpr("qid", "qvec")
 
 
 def ivf_search(
@@ -498,8 +485,8 @@ def ivf_search(
     Candidate set is only the probed cells' vectors — the crossJoin blowup
     never happens. Returns (qid, vec_id, score, rank).
 
-    ``_probe_cells`` picks the cells in the JVM (a broadcast crossJoin and
-    a per-qid window: no Python worker, no driver collect); its
+    ``_probe_cells`` picks the cells in the JVM (a crossJoin and a per-qid
+    window: no Python worker, no driver collect); its
     |queries| × |centroids| scoring suits the query batches every caller
     sends (the reference's `search` shape, vectrekker/main.py:162-167). The
     probes carry qvec, so the queries are not joined back, and the ranking
@@ -936,12 +923,13 @@ def ivf_search_cells(
 
     Runs in the JVM: ``_probe_pruned`` reads the queries once and scans
     only the probed cells' partitions. The probes carry qvec, so the
-    queries are not joined back, and the ranking window drops the copies of
-    a vector multi-assigned to two probed cells (no dedupe exchange)."""
+    queries are not joined back (the exact re-rank takes its query vectors
+    from the probes too), and the ranking window drops the copies of a
+    vector multi-assigned to two probed cells (no dedupe exchange)."""
     data_cols = [c for c in cells.columns if c != "cid"]
     quantized = _cells_quantized(cells)
     id_col = id_col or data_cols[0]
-    cands = _probe_pruned(queries, centroids, cells, n_probe)  # (cid, qid, qvec, id, vector...)
+    cands, qvecs = _probe_pruned(queries, centroids, cells, n_probe)
     if not quantized:
         return _topk_by_score(cands, k, id_col, vec_col or data_cols[1], dedupe=True)
     from vectrekker_spark.operators.quantize import dequantize_int8
@@ -965,7 +953,7 @@ def ivf_search_cells(
     coarse = _topk_by_score(
         deq, k * rerank_factor, id_col, "__deq", dedupe=True
     ).select("qid", id_col)
-    exact = coarse.join(corpus.select(id_col, vec_col), id_col).join(queries, "qid")
+    exact = coarse.join(corpus.select(id_col, vec_col), id_col).join(qvecs(), "qid")
     return _topk_by_score(exact, k, id_col, vec_col)
 
 

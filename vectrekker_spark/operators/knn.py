@@ -23,13 +23,12 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectrekker_spark.functions.vector import cosine_sim, dot, l2_dist, norm
+from vectrekker_spark.functions.vector import cosine_sql, dot_sql, l2_dist_sql, norm_sql, sql_name
 
-
-_METRICS = {"cosine": cosine_sim, "dot": dot, "l2": l2_dist}
+_METRICS = {"cosine": cosine_sql, "dot": dot_sql, "l2": l2_dist_sql}
 
 # Pairwise-score tile budget for similarity_join_bucketed's kernel: rows are
 # processed in tiles of ~this many matrix entries (~128 MB of float64), so a
@@ -44,17 +43,10 @@ _TILE_ENTRIES = 16 << 20
 _SCORE_TILE_ENTRIES = 2 << 20
 
 
-def _score(metric: str, a, b):
+def _score_sql(metric: str, a: str, b: str) -> str:
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
     return _METRICS[metric](a, b)
-
-
-def _best_first(metric: str, id_col: str) -> list:
-    """Ranking order: best score first (smallest l2 distance), a NULL score
-    after every real one, ties by id ascending."""
-    s = F.col("score")
-    return [s.asc_nulls_last() if metric == "l2" else s.desc_nulls_last(), F.col(id_col).asc()]
 
 
 def topk_nn(
@@ -66,22 +58,25 @@ def topk_nn(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors of one query vector. Ties broken by id ascending
-    so results are total-ordered (hash-match requirement).
+    so results are total-ordered (hash-match requirement); a NULL score
+    ranks after every real one.
 
     Dimension mismatch fails fast: zip_with null-pads silently otherwise and
     every score comes back null (the engine analog of the reference's fixed
     index dimension, vectrekker/main.py:165)."""
+    score = _score_sql(metric, vec_col, "__q")
     probe = corpus.select(F.size(vec_col).alias("d")).limit(1).collect()
     if probe and probe[0]["d"] != len(query_vec):
         raise ValueError(
             f"query vector dim {len(query_vec)} != corpus dim {probe[0]['d']}"
         )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = corpus.select(
-        F.col(id_col),
-        F.round(_score(metric, F.col(vec_col), q), 6).alias("score"),
+    q = F.array(*[F.lit(float(x)) for x in query_vec]).alias("__q")
+    scored = corpus.select(id_col, vec_col, q).selectExpr(
+        sql_name(id_col), f"ROUND({score}, 6) AS score"
     )
-    return scored.orderBy(*_best_first(metric, id_col)).limit(k)
+    s = F.col("score")
+    best = s.asc_nulls_last() if metric == "l2" else s.desc_nulls_last()
+    return scored.orderBy(best, F.col(id_col).asc()).limit(k)
 
 
 def knn_join(
@@ -103,21 +98,26 @@ def knn_join(
     final dot/(‖a‖·‖b‖) matches the naive per-pair form bit-exactly because
     the operand order is identical. Ranking is one window (no pandas heap);
     its per-partition partial top-k is lost for k > 1000 (module docstring).
+    The plan is SQL text in a handful of DataFrame ops: classic PySpark
+    re-analyses the whole plan on every op.
     """
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec"))
+    score = _score_sql(metric, "emb", "qvec")
+    c = [f"{sql_name(id_col)} AS vec_id", f"{sql_name(vec_col)} AS emb"]
+    q = [f"{sql_name(qid_col)} AS qid", f"{sql_name(qvec_col)} AS qvec"]
     if metric == "cosine":
-        c, q = c.withColumn("__cn", norm("emb")), q.withColumn("__qn", norm("qvec"))
-        score = dot(F.col("emb"), F.col("qvec")) / (F.col("__cn") * F.col("__qn"))
-    else:
-        score = _score(metric, F.col("emb"), F.col("qvec"))
+        c.append(f"{norm_sql(vec_col)} AS __cn")
+        q.append(f"{norm_sql(qvec_col)} AS __qn")
+        score = f"({dot_sql('emb', 'qvec')}) / (__cn * __qn)"
+    best = "ASC" if metric == "l2" else "DESC"
     # broadcast nested-loop over the small query side, map-side only
-    scored = c.join(F.broadcast(q)).select("qid", "vec_id", F.round(score, 6).alias("score"))
-    w = Window.partitionBy("qid").orderBy(*_best_first(metric, "vec_id"))
+    scored = corpus.selectExpr(*c).join(F.broadcast(queries.selectExpr(*q)))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "score", "rank")
+        scored.selectExpr("qid", "vec_id", f"ROUND({score}, 6) AS score")
+        .selectExpr(
+            "qid", "vec_id", "score", "CAST(row_number() OVER (PARTITION BY qid ORDER BY "
+            f"score {best} NULLS LAST, vec_id ASC) AS BIGINT) AS rank",
+        )
+        .where(f"rank <= {int(k)}")
     )
 
 

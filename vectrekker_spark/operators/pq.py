@@ -42,6 +42,7 @@ pointer of vectrekker_spark/commit.py, the protocol the IVF index uses.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -182,7 +183,7 @@ def pq_train(
         raise ValueError(f"dim {d} is not divisible by m={m} subspaces")
     dsub = d // m
     base = corpus.where(F.col(vec_col).isNotNull()).select(
-        l2_normalize(F.col(vec_col)).alias("__v")
+        l2_normalize(vec_col).alias("__v")
     )
     if sample_fraction < 1.0:
         base = base.sample(fraction=sample_fraction, seed=seed)
@@ -369,7 +370,8 @@ def pq_search(
         gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
     )
     return _refine_rank(
-        partials, k, refine, corpus, queries, qid_col, qvec_col, id_col, vec_col
+        partials, k, refine, corpus, lambda: queries.select(qid_col, qvec_col),
+        qid_col, qvec_col, id_col, vec_col,
     )
 
 
@@ -378,7 +380,7 @@ def _refine_rank(
     k: int,
     refine: int,
     corpus: DataFrame | None,
-    queries: DataFrame,
+    qvecs: Callable[[], DataFrame],
     qid_col: str,
     qvec_col: str,
     id_col: str,
@@ -386,8 +388,9 @@ def _refine_rank(
 ) -> DataFrame:
     """Shared tail of both ADC searches over (qid, id, score) rows: with
     ``refine`` > 0 keep each query's ADC top-(k·refine) and re-score those
-    candidates exactly against the float ``corpus`` (round-6 cosine, the
-    knn_join contract), then rank the per-query top-k. Both windows are
+    candidates exactly against the float ``corpus`` and the (qid_col,
+    qvec_col) frame ``qvecs()`` builds (round-6 cosine, the knn_join
+    contract), then rank the per-query top-k. Both windows are
     ann._rank_top's deduping one, so the repeated hits of a re-appended or
     multi-assigned code row count once."""
     if refine > 0:
@@ -397,11 +400,11 @@ def _refine_rank(
         scored = (
             top.select(qid_col, id_col)
             .join(corpus.select(id_col, vec_col), id_col)
-            .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
+            .join(F.broadcast(qvecs()), qid_col)
             .select(
                 qid_col,
                 id_col,
-                F.round(cosine_sim(F.col(vec_col), F.col(qvec_col)), 6).alias("score"),
+                F.round(cosine_sim(vec_col, qvec_col), 6).alias("score"),
             )
         )
     return _rank_top(scored, k, id_col, dedupe=True, qid_col=qid_col)
@@ -686,7 +689,8 @@ def ivfpq_search_cells(
     WHICH cells a query reads, PQ shrinks WHAT it reads there.
 
     The probe step is ivf_search_cells' (ann._probe_pruned): after the
-    LUT collect the queries are read once more, and the code scan prunes
+    LUT collect the queries are read once more (the refine arm takes its
+    query vectors from the probes), and the code scan prunes
     statically to exactly the probed cells' parquet partitions. Each
     candidate is scored by ADC from its qid's LUT row (one Arrow pass, the
     LUT block shipped with the task), then ``_refine_rank`` ranks it; its
@@ -712,10 +716,11 @@ def ivfpq_search_cells(
         return _empty_result(queries, codes, qid_col, id_col)
     qpos = {q: i for i, q in enumerate(qids)}
     m = lut.shape[1]
-    cand = _probe_pruned(
+    cand, qvecs = _probe_pruned(
         queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec")),
         centroids, codes, n_probe,
-    ).select(F.col("qid").alias(qid_col), id_col, "codes")
+    )
+    cand = cand.select(F.col("qid").alias(qid_col), id_col, "codes")
 
     def gen(batches):
         for pdf in batches:
@@ -739,7 +744,8 @@ def ivfpq_search_cells(
         gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
     )
     return _refine_rank(
-        scored, k, refine, corpus, queries, qid_col, qvec_col, id_col, vec_col
+        scored, k, refine, corpus, lambda: qvecs().toDF(qid_col, qvec_col),
+        qid_col, qvec_col, id_col, vec_col,
     )
 
 
@@ -866,7 +872,7 @@ def opq_train(
     k = 1 << nbits
     rows = (
         corpus.where(F.col(vec_col).isNotNull())
-        .select(l2_normalize(F.col(vec_col)).alias("__v"))
+        .select(l2_normalize(vec_col).alias("__v"))
         .limit(max_rows + 1)
         .collect()
     )

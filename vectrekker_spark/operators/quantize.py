@@ -7,23 +7,19 @@ cuts it 4× with bounded reconstruction error: each vector stores
 (scale = max|x|/127, int8 codes), dequantizes as code·scale, and cosine
 rankings survive (error per component ≤ scale/2 ≈ max|x|/254).
 
-Pure Catalyst expressions (aggregate/transform) — no UDF, no shuffle; the
-quantize/dequantize pair composes with every vector operator in this repo
-(exact kNN over dequantized vectors, IVF coarse search over codes). The
-standard scale path: coarse-search int8, re-rank the top candidates with
-the full-precision vectors.
+Pure Catalyst expressions (aggregate/transform, as SQL text) — no UDF, no
+shuffle; the quantize/dequantize pair composes with every vector operator
+in this repo (exact kNN over dequantized vectors, IVF coarse search over
+codes). The standard scale path: coarse-search int8, re-rank the top
+candidates with the full-precision vectors.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _absmax(vec: Column) -> Column:
-    return F.aggregate(
-        vec, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
-    )
+from vectrekker_spark.functions.vector import sql_name
 
 
 def quantize_int8(
@@ -34,30 +30,18 @@ def quantize_int8(
     scale = max|x|/127; codes = round(x/scale) ∈ [-127, 127]. All-zero
     vectors get scale 0 and all-zero codes (dequantizes to zero exactly).
     """
-    scale = _absmax(F.col(vec_col)) / F.lit(127.0)
-    df = df.withColumn(f"{out_col}_scale", scale)
-    codes = F.when(
-        F.col(f"{out_col}_scale") == 0.0,
-        F.transform(F.col(vec_col), lambda x: F.lit(0).cast("tinyint")),
-    ).otherwise(
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") / F.col(f"{out_col}_scale")).cast(
-                "tinyint"
-            ),
-        )
-    )
-    return df.withColumn(out_col, codes)
+    v, s = sql_name(vec_col), sql_name(f"{out_col}_scale")
+    absmax = f"aggregate({v}, 0.0D, (__acc, __x) -> greatest(__acc, abs(CAST(__x AS DOUBLE))))"
+    df = df.withColumn(f"{out_col}_scale", F.expr(f"{absmax} / 127.0D"))
+    return df.withColumn(out_col, F.expr(
+        f"CASE WHEN {s} = 0.0D THEN transform({v}, __x -> CAST(0 AS TINYINT)) "
+        f"ELSE transform({v}, __x -> CAST(ROUND(CAST(__x AS DOUBLE) / {s}) AS TINYINT)) END"
+    ))
 
 
 def dequantize_int8(
     df: DataFrame, qvec_col: str = "qvec", out_col: str = "embedding_deq"
 ) -> DataFrame:
     """Reconstruct array<double> from (codes, scale)."""
-    return df.withColumn(
-        out_col,
-        F.transform(
-            F.col(qvec_col),
-            lambda c: c.cast("double") * F.col(f"{qvec_col}_scale"),
-        ),
-    )
+    c, s = sql_name(qvec_col), sql_name(f"{qvec_col}_scale")
+    return df.withColumn(out_col, F.expr(f"transform({c}, __c -> CAST(__c AS DOUBLE) * {s})"))

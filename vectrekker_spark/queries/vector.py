@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vectrekker_spark.functions.vector import dot, l2_dist, norm
+from vectrekker_spark.functions.vector import dot, l2_dist, norm, sumsq_sql
 from vectrekker_spark.operators.knn import knn_join, similarity_join_blas
 from vectrekker_spark.queries import QuerySpec
 from vectrekker_spark.queries.util import (
@@ -184,9 +184,7 @@ def q21_vector_metrics(spark: SparkSession, sf: str) -> DataFrame:
     # threshold that would be a fact broadcast).
     serial = small_local(sf, "embeddings")
     em = tb1(spark, sf, "embeddings") if serial else tbp(spark, sf, "embeddings")
-    nsq = lambda c: F.aggregate(  # noqa: E731 - sum of squares, in-order
-        F.col(c), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-    )
+    nsq = lambda c: F.expr(sumsq_sql(c))  # noqa: E731 - sum of squares, in-order
     base = em.select(
         "vec_id",
         F.size("embedding").cast("long").alias("dim"),
