@@ -231,11 +231,11 @@ def bench_interleaved(sf_dir: str):
 
 
 def ann_recall_at_10(sf_dir: str) -> float:
-    """Recall@10 of the kmeans IVF build (25 cells, multi-assign 2) at
-    n_probe=8 vs exact brute force, over the first 10 query vectors —
-    untimed quality metric. Measured 0.90 on the sf0.1 fixture (target
-    ≥ 0.8, SURVEY.md §2.2 V5); see ivf_build docstring for the
-    multi-assignment recall/cost tradeoff."""
+    """Recall@10 of the default IVF build (driver-side k-means, 25 cells,
+    multi-assign 2) at n_probe=8 vs exact brute force, over the first 10
+    query vectors — untimed quality metric. Measured 0.90 on the sf0.1
+    fixture (target ≥ 0.8, SURVEY.md §2.2 V5); see ivf_build docstring for
+    the multi-assignment recall/cost tradeoff."""
     from pyspark.sql import functions as F
 
     from vectrekker_spark.operators.ann import ivf_build, ivf_search

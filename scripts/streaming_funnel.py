@@ -175,8 +175,7 @@ def main() -> int:
         t0 = time.time()
         k = max(1, int(len(s1_ids) ** 0.5))
         cents = ivf_centroids(
-            stage1, n_centroids=k, id_col="doc_id", vec_col="embedding",
-            method="lloyd",
+            stage1, n_centroids=k, id_col="doc_id", vec_col="embedding"
         )
         cents.write.parquet(os.path.join(corpus2, "centroids"))
         cents = spark.read.parquet(os.path.join(corpus2, "centroids"))

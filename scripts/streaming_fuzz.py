@@ -310,7 +310,6 @@ def trial_semantic(spark, rng, work):
     cents = ivf_centroids(
         feed.where(F.col("embedding").isNotNull()),
         n_centroids=n_cells, id_col="vec_id", vec_col="embedding",
-        method="lloyd",
     )
     cents.write.parquet(os.path.join(corpus, "centroids"))
     cents = spark.read.parquet(os.path.join(corpus, "centroids"))

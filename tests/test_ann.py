@@ -61,10 +61,10 @@ def test_ivf_default_recall_meets_declared_bar(spark, em):
 
 def test_ivf_kmeans_low_probe_recall(spark, em):
     exact = _exact(spark, em)
-    centroids, assign = ivf_build(em, n_centroids=10, method="kmeans")
+    centroids, assign = ivf_build(em, n_centroids=10)
     approx = ivf_search(_queries(em), em, centroids, assign, k=K, n_probe=3).collect()
     recall = _recall(approx, exact)
-    assert recall >= 0.6, f"kmeans-IVF n_probe=3 recall@{K} = {recall}"
+    assert recall >= 0.6, f"default-IVF n_probe=3 recall@{K} = {recall}"
 
 
 def test_ivf_stride_sanity_recall(spark, em):
@@ -580,7 +580,7 @@ def test_ivf_search_cells_infers_columns_from_schema(spark, tmp_path):
     )
     centroids, assign = ivf_build(
         corpus.withColumn("n", F.monotonically_increasing_id()),
-        n_centroids=2, method="kmeans", id_col="id",
+        n_centroids=2, id_col="id",
     )
     path = str(tmp_path / "ivf")
     ivf_save(centroids, assign, corpus, path, id_col="id")
@@ -770,9 +770,7 @@ def test_ivf_quantized_rerank_infers_nondefault_vec_col(spark, tmp_path):
         [(i, [float(i == j) for j in range(4)]) for i in range(4)],
         "vec_id long, vec array<double>",
     )
-    centroids, assign = ivf_build(
-        corpus, n_centroids=2, method="kmeans", vec_col="vec"
-    )
+    centroids, assign = ivf_build(corpus, n_centroids=2, vec_col="vec")
     path = str(tmp_path / "q8")
     ivf_save(centroids, assign, corpus, path, vec_col="vec", quantize=True)
     lc, cells = ivf_load(spark, path)
@@ -1172,12 +1170,26 @@ def test_similarity_join_rejects_zero_dim_vectors(spark):
         similarity_join_self_auto(df, 0.5, "vec_id", "embedding")
 
 
-# --- method="lloyd": the r15 driver-side quantizer fit ---------------------
-# Replaces the distributed MLlib fit on the auto path (guide §5: the coarse
-# quantizer is √N-small by construction, so fitting it is driver-scale
-# work). These pin the properties the switch was validated on: recall
-# parity with the MLlib fit, layout invariance (which MLlib does NOT
-# have), determinism, the k ≤ n clamp, and the no-scorable-rows guard.
+# --- method="lloyd": the driver-side quantizer fit -------------------------
+# The coarse quantizer is √N-small by construction, so fitting it is
+# driver-scale work; ann._lloyd_fit is also the PQ and OPQ fit. These pin
+# recall, layout invariance, determinism, the k ≤ n clamp, the
+# no-scorable-rows guard and the method check.
+
+
+def test_ivf_centroids_rejects_unknown_method(spark):
+    from vectrekker_spark.operators.ann import ivf_centroids
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    # "kmeans" named the deleted MLlib fit; no name falls through to stride
+    for method in ("kmeans", "Lloyd", ""):
+        for k in (1, 2):
+            with pytest.raises(ValueError, match="unknown method"):
+                ivf_centroids(df, n_centroids=k, method=method)
+    with pytest.raises(ValueError, match="unknown method"):
+        ivf_build(df, n_centroids=2, method="kmeans")
 
 
 def test_ivf_lloyd_recall_meets_declared_bar(spark, em):
@@ -1219,14 +1231,18 @@ def test_ivf_lloyd_sample_is_byte_budgeted(spark, monkeypatch):
         r.vec_id
         for r in df.orderBy(F.xxhash64("vec_id"), "vec_id").limit(budget_rows).collect()
     )
+    def unit(vs):
+        X = np.asarray(vs, dtype=np.float64)
+        return X / np.sqrt((X * X).sum(axis=1))[:, None]
+
     want = [
         (cid, [float(x) for x in c])
-        for cid, c in enumerate(ann._lloyd_fit([rows[i][1] for i in prefix], k))
+        for cid, c in enumerate(ann._lloyd_fit(unit([rows[i][1] for i in prefix]), k))
     ]
     assert len(prefix) == budget_rows
     assert got == want
     # the budget is what shaped the fit: the whole corpus fits elsewhere
-    full = ann._lloyd_fit([v for _, v in rows], k)
+    full = ann._lloyd_fit(unit([v for _, v in rows]), k)
     assert [c for _, c in want] != [[float(x) for x in c] for c in full]
 
 

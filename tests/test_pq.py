@@ -28,7 +28,7 @@ def em(spark):
 
 @pytest.fixture(scope="module")
 def pq(spark, em):
-    cb = pq_train(em, m=16, nbits=6, sample_fraction=1.0).cache()
+    cb = pq_train(em, m=16, nbits=6).cache()
     codes = pq_encode(em, cb).cache()
     codes.count()
     yield cb, codes
@@ -134,6 +134,75 @@ def test_refined_scores_are_exact_cosine(spark, em, pq):
         if r["vec_id"] in got
     }
     assert got == want
+
+
+def test_refined_search_reads_python_rdd_queries_once(spark, em, pq):
+    """The LUT collect is the only read of the caller's query frame: the
+    refine arm scores against a local frame of the collected rows, with
+    the original vectors and column types, so its exact scores do not
+    change."""
+    cb, codes = pq
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def bump(r):
+        reads.add(1)
+        return r
+
+    local = em.where(F.col("vec_id") < 7).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    rows = [tuple(r) for r in local.collect()]
+    q = spark.createDataFrame(sc.parallelize(rows, 2).map(bump), local.schema)
+    for refine in (0, 2):
+        before = reads.value
+        got = sorted(map(tuple, pq_search(
+            q, codes, cb, k=5, refine=refine, corpus=em
+        ).collect()))
+        assert reads.value - before == len(rows), refine
+        assert got == sorted(map(tuple, pq_search(
+            local, codes, cb, k=5, refine=refine, corpus=em
+        ).collect()))
+
+
+def test_pq_train_is_partition_layout_invariant(spark, em, pq):
+    cb, _ = pq
+    again = pq_train(em.repartition(7), m=16, nbits=6)
+    assert np.array_equal(_codebooks_np(cb), _codebooks_np(again))
+
+
+def _unit_rows(x):
+    return x / np.linalg.norm(x, axis=1, keepdims=True)
+
+
+def test_pq_train_pads_degenerate_subspaces(spark):
+    """A zero dimension (one distinct point in its subspace) and a corpus
+    with fewer rows than 2^nbits both give a full, finite (m, 2^nbits,
+    dsub) grid: a subspace with fewer than k distinct points takes those
+    points, cycled, so its quantization is exact."""
+    g = np.random.default_rng(17)
+    zero_dim = g.standard_normal((40, 8))
+    zero_dim[:, 0] = 0.0
+    nbits = 4
+    # (vectors, m, the subspaces with fewer than 2^nbits distinct points)
+    for x, m, flat in ((zero_dim, 8, [0]), (zero_dim[:5], 4, range(4))):
+        k, dsub = 1 << nbits, x.shape[1] // m
+        corpus = spark.createDataFrame(
+            [(i, v.tolist()) for i, v in enumerate(x)],
+            "vec_id long, embedding array<double>",
+        )
+        cb = pq_train(corpus, m=m, nbits=nbits)
+        grid = _codebooks_np(cb)
+        assert grid.shape == (m, k, dsub) and np.isfinite(grid).all()
+        codes = {r.vec_id: list(r.codes) for r in pq_encode(corpus, cb).collect()}
+        xs = _unit_rows(x).reshape(len(x), m, dsub)
+        for j in flat:
+            distinct = np.unique(xs[:, j, :], axis=0)
+            assert len(distinct) < k
+            # the distinct points, sorted, cycled up to k
+            assert np.array_equal(grid[j], distinct[np.arange(k) % len(distinct)])
+            recon = np.asarray([grid[j, codes[i][j]] for i in range(len(x))])
+            assert np.allclose(recon, xs[:, j, :], rtol=0, atol=1e-12)
 
 
 def test_search_query_cap(spark, em, pq):

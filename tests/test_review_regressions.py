@@ -278,7 +278,7 @@ def test_ivf_centroids_kmeans_ignores_null_vectors(spark):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, None), (4, [0.5, 0.5])],
         "vec_id long, embedding array<double>",
     )
-    cents = ivf_centroids(df, n_centroids=2, method="kmeans")
+    cents = ivf_centroids(df, n_centroids=2)
     assert cents.count() == 2
 
 

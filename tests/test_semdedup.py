@@ -440,5 +440,5 @@ def test_ivf_centroids_k1_skips_null_vectors(spark):
     from vectrekker_spark.operators.ann import ivf_centroids
 
     df = _mk(spark, [(1, None), (2, _unit([1.0, 2.0]))])
-    rows = ivf_centroids(df, n_centroids=1, method="kmeans").collect()
+    rows = ivf_centroids(df, n_centroids=1).collect()
     assert len(rows) == 1 and rows[0]["cvec"] is not None

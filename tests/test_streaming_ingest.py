@@ -972,8 +972,7 @@ def test_streaming_funnel_composition_equals_batch(spark, tmp_path):
     corpus2 = str(tmp_path / "c2")
     os.makedirs(corpus2)
     cents = ivf_centroids(
-        stage1, n_centroids=4, id_col="doc_id", vec_col="embedding",
-        method="kmeans",
+        stage1, n_centroids=4, id_col="doc_id", vec_col="embedding"
     )
     cents.write.parquet(f"{corpus2}/centroids")
     cents = spark.read.parquet(f"{corpus2}/centroids")

@@ -220,29 +220,32 @@ def cmd_search(args: argparse.Namespace) -> int:
     return 0
 
 
+def _fit_pq_codebooks(index, args: argparse.Namespace):
+    """(rotation, codebooks, frame to encode) for pq-build / ivfpq-build:
+    the codebooks fit on a ``--sample`` fraction of ``index``; with
+    ``--opq`` an OPQ rotation is learned first (rotation is None without
+    it) and the codes are encoded from the rotated vectors."""
+    from vectrekker_spark.operators.pq import opq_train, pq_train, rotate_vectors
+
+    fit_src = (
+        index.sample(fraction=args.sample, seed=42) if args.sample < 1.0 else index
+    )
+    if args.opq:
+        rotation, cb = opq_train(fit_src, m=args.m, nbits=args.nbits)
+        return rotation, cb, rotate_vectors(index, rotation)
+    return None, pq_train(fit_src, m=args.m, nbits=args.nbits), index
+
+
 def cmd_pq_build(args: argparse.Namespace) -> int:
     """Persisted product-quantization index over the vector index
     (operators/pq): train codebooks, encode to m-byte codes, save with
     geometry-pinned meta. Search with `search --pq DIR`."""
-    from vectrekker_spark.operators.pq import pq_encode, pq_load, pq_save, pq_train
+    from vectrekker_spark.operators.pq import pq_encode, pq_load, pq_save
 
     spark = _spark()
     index = spark.read.parquet(args.index).select("id", "embedding")
-    rotation = None
     try:
-        if args.opq:
-            from vectrekker_spark.operators.pq import opq_train, rotate_vectors
-
-            fit_src = (
-                index.sample(fraction=args.sample, seed=42)
-                if args.sample < 1.0 else index
-            )
-            rotation, cb = opq_train(fit_src, m=args.m, nbits=args.nbits)
-            enc_src = rotate_vectors(index, rotation)
-        else:
-            cb = pq_train(index, m=args.m, nbits=args.nbits,
-                          sample_fraction=args.sample)
-            enc_src = index
+        rotation, cb, enc_src = _fit_pq_codebooks(index, args)
     except ValueError as e:
         print(f"error: {e}")
         return 2
@@ -271,7 +274,6 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
         ivfpq_load,
         ivfpq_save,
         pq_encode,
-        pq_train,
     )
 
     spark = _spark()
@@ -291,7 +293,6 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
 
     n_rows = index.count()
     n_cells = max(2, min(64, int(n_rows ** 0.5)))
-    rotation = None
     try:
         # assign_k=2: the ann-build boundary-recall default — a vector near
         # a cell edge is findable from either side; the search's ranking
@@ -300,19 +301,7 @@ def cmd_ivfpq_build(args: argparse.Namespace) -> int:
             index, n_centroids=n_cells, id_col="id", vec_col="embedding",
             assign_k=2,
         )
-        if args.opq:
-            from vectrekker_spark.operators.pq import opq_train, rotate_vectors
-
-            fit_src = (
-                index.sample(fraction=args.sample, seed=42)
-                if args.sample < 1.0 else index
-            )
-            rotation, cb = opq_train(fit_src, m=args.m, nbits=args.nbits)
-            enc_src = rotate_vectors(index, rotation)
-        else:
-            cb = pq_train(index, m=args.m, nbits=args.nbits,
-                          sample_fraction=args.sample)
-            enc_src = index
+        rotation, cb, enc_src = _fit_pq_codebooks(index, args)
     except ValueError as e:
         print(f"error: {e}")
         return 2

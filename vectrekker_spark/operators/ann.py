@@ -25,7 +25,7 @@ from vectrekker_spark.commit import (
     resolve,
     write_meta,
 )
-from vectrekker_spark.functions.vector import cosine_sql, l2_normalize, sql_name
+from vectrekker_spark.functions.vector import cosine_sql, sql_name
 from vectrekker_spark.session import local_frame, truncate_lineage
 
 _MAX_CENTROIDS = 200_000
@@ -194,17 +194,13 @@ def ivf_build(
 ) -> tuple[DataFrame, DataFrame]:
     """Build IVF centroids + assignments.
 
-    method="lloyd" (default since r15): seeded driver-side k-means++/Lloyd
-    on a capped deterministic sample of L2-normalized vectors — same cell
-    quality as MLlib (bench recall@10 0.90, equal to the MLlib fit's
-    published number) at a fraction of the cost (one TakeOrdered collect vs
-    ~25 scheduler-bound MLlib jobs: 6-13 s → <0.5 s on the 2k-vector
-    fixture), and partition-layout-INVARIANT (a pure function of the
-    (id, vec) set up to the sample cap), which MLlib's per-partition
-    k-means|| init is not. method="kmeans": seeded MLlib KMeans, kept for
-    cross-checking the distributed fit. method="stride": every ⌈N/k⌉-th id
-    as centroid — fully deterministic across engines/versions, used by the
-    bench/registry query d10 so BENCH numbers never shift with the solver.
+    method="lloyd" (default): seeded driver-side k-means++/Lloyd
+    (``_lloyd_fit``) on a capped deterministic sample of L2-normalized
+    vectors — one TakeOrdered collect, bench recall@10 0.90, and
+    partition-layout-INVARIANT (a pure function of the (id, vec) set up to
+    the sample cap). method="stride": every ⌈N/k⌉-th id as centroid —
+    fully deterministic across engines/versions, used by the bench/registry
+    query d10 so BENCH numbers never shift with the solver.
 
     assign_k > 1 = multi-assignment: each corpus vector is indexed into its
     assign_k nearest cells. Index grows ×assign_k but boundary vectors stop
@@ -239,25 +235,30 @@ def ivf_centroids(
     would otherwise pay ivf_build's eager assign_centroids collect +
     broadcast twice. Semantics identical to ivf_build's centroid arm.
 
-    method="lloyd" (default, r15 optimization — guide §5: the coarse
-    quantizer is √N-small BY CONSTRUCTION, so fitting it is driver-scale
-    work; MLlib's distributed fit was ~25 scheduler-bound jobs for ~0.2 s
-    of numpy): a LIMIT-1 probe reads the vector dimension, then ONE
-    TakeOrdered job collects a deterministic sample — the scorable rows
-    with the lowest ``xxhash64(id)``, as many as ``_centroid_cap(dim)``
-    allows (the same 512 MiB byte budget as every other driver collect in
-    this module: 43,690 rows at dim 1536, 200k at dim ≤ 335), i.e. every
-    row when the corpus fits under the cap — then seeded k-means++ init +
-    Lloyd iterations run in numpy on the driver over the id-sorted
-    sample. The fit is a pure function of the sampled (id, vec)
-    SET: partition-layout-invariant (tested), unlike MLlib k-means||,
-    whose per-partition init moves cell boundaries under a re-layout.
+    method="lloyd" (default; the coarse quantizer is √N-small BY
+    CONSTRUCTION, so fitting it is driver-scale work): a LIMIT-1 probe
+    reads the vector dimension, then ONE TakeOrdered job collects a
+    deterministic sample — the scorable rows with the lowest
+    ``xxhash64(id)``, as many as ``_centroid_cap(dim)`` allows (the same
+    512 MiB byte budget as every other driver collect in this module:
+    43,690 rows at dim 1536, 200k at dim ≤ 335), i.e. every row when the
+    corpus fits under the cap — then the id-sorted sample is L2-normalized
+    and fit by ``_lloyd_fit`` on the driver. The fit is a pure function of
+    the sampled (id, vec) SET: partition-layout-invariant (tested).
     ``n_centroids`` is clamped to the sample size (k ≤ n points).
+    method="stride" is ivf_build's deterministic stride pick; any other
+    method raises ValueError.
 
-    ``n_centroids=1`` skips the fit entirely (with a single cell every
-    vector co-assigns regardless of the centroid's value): the min-id
-    row's vector stands in, deterministic across partition layouts."""
-    if n_centroids == 1 and method in ("kmeans", "lloyd"):
+    ``n_centroids=1`` skips the Lloyd fit entirely (with a single cell
+    every vector co-assigns regardless of the centroid's value): the
+    min-id row's vector stands in, deterministic across partition
+    layouts."""
+    if method not in ("lloyd", "stride"):
+        raise ValueError(
+            f"ivf_centroids: unknown method {method!r} "
+            "(expected 'lloyd' or 'stride')"
+        )
+    if n_centroids == 1 and method == "lloyd":
         one = (
             corpus.where(F.col(vec_col).isNotNull())
             .orderBy(F.col(id_col))
@@ -286,24 +287,9 @@ def ivf_centroids(
         # id-ascending order makes the fit independent of partition layout
         sample = sample.sort_values("__id", kind="stable")
         X = np.asarray(list(sample["__vec"]), dtype=np.float64)
-        C = _lloyd_fit(X, n_centroids)
+        norms = np.sqrt((X * X).sum(axis=1))
+        C = _lloyd_fit(X / np.where(norms == 0.0, 1.0, norms)[:, None], n_centroids)
         rows = [(i, [float(x) for x in c]) for i, c in enumerate(C)]
-        return local_frame(corpus.sparkSession, rows, "cid long, cvec array<double>")
-    if method == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        # NULL vectors drop before the fit — MLlib KMeans throws on a null
-        # feature vector, while the module contract (assign_centroids,
-        # the n_centroids==1 branch above) is that unscorable rows are
-        # simply ignored (r14s3 review)
-        prepared = corpus.where(F.col(vec_col).isNotNull()).withColumn(
-            "features", array_to_vector(l2_normalize(vec_col).cast("array<double>"))
-        )
-        model = KMeans(k=n_centroids, seed=42, maxIter=20).fit(prepared)
-        rows = [
-            (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-        ]
         return local_frame(corpus.sparkSession, rows, "cid long, cvec array<double>")
     n = corpus.count()
     stride = max(n // n_centroids, 1)
@@ -319,20 +305,20 @@ def ivf_centroids(
 
 
 def _lloyd_fit(X, k: int, max_iter: int = 20, tol: float = 1e-4, seed: int = 42):
-    """Seeded k-means++ init + Lloyd iterations in numpy, mirroring the
-    MLlib fit's shape (L2-normalize first, euclidean assignment, centers =
-    unnormalized means, maxIter 20, movement tolerance 1e-4). Deterministic
-    for a fixed row ORDER of ``X`` (callers pass an id-sorted sample, so
-    the fit is a pure function of the sampled (id, vec) set). Ties in the
-    assignment go to the lowest cid (argmin first-occurrence). Empty cells
-    are reseeded to the point currently farthest from its center —
-    deterministic, and it keeps exactly k distinct centers whenever the
-    data has k distinct points. ``k`` is clamped to len(X)."""
+    """The package's one k-means: seeded k-means++ init + Lloyd iterations
+    in numpy on the driver (euclidean assignment, centers = plain means,
+    stop when no center moves more than ``tol``). IVF (ivf_centroids)
+    L2-normalizes its sample first; PQ and OPQ (operators/pq.py) fit raw
+    subvectors, which must not be renormalized. Deterministic for a fixed
+    row ORDER of ``X`` (callers pass a sorted sample, so the fit is a pure
+    function of the sampled set). Ties in the assignment go to the lowest
+    cid (argmin first-occurrence). Empty cells are reseeded to the point
+    currently farthest from its center — deterministic, and it keeps
+    exactly k distinct centers whenever the data has k distinct points.
+    ``k`` is clamped to len(X)."""
     import numpy as np
 
     X = np.ascontiguousarray(np.asarray(X, dtype=np.float64))
-    norms = np.sqrt((X * X).sum(axis=1))
-    X = X / np.where(norms == 0.0, 1.0, norms)[:, None]
     n, dim = X.shape
     k = max(1, min(k, n))
     rng = np.random.default_rng(seed)

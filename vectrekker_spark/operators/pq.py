@@ -14,9 +14,11 @@ scores against every subcentroid once (an m × 2^nbits lookup table),
 then a vector's approximate score is m table lookups summed.
 
 Spark shapes (designed for the 1000-executor case):
-- TRAIN on a sample (`sample_fraction`): m independent MLlib k-means
-  fits over sliced subvectors — the standard practice; codebooks are
-  tiny (m × 2^nbits × d/m doubles) by construction.
+- TRAIN on the driver: one job collects a deterministic, byte-capped
+  sample of the normalized corpus, then m seeded k-means fits (ann's one
+  k-means core, `_lloyd_fit`) run over its sliced subvectors — the
+  standard practice; codebooks are tiny (m × 2^nbits × d/m doubles) by
+  construction.
 - ENCODE is a narrow Arrow map: codebooks broadcast as one numpy array,
   each batch does m BLAS distance computations + argmin. No shuffle; the
   code table is the only thing written (m bytes + id per vector).
@@ -56,7 +58,14 @@ from vectrekker_spark.commit import (
     write_meta,
 )
 from vectrekker_spark.functions.vector import cosine_sim, l2_normalize
-from vectrekker_spark.operators.ann import _probe_pruned, _rank_top, assign_centroids
+from vectrekker_spark.operators.ann import (
+    _centroid_cap,
+    _lloyd_fit,
+    _probe_pruned,
+    _rank_top,
+    assign_centroids,
+)
+from vectrekker_spark.session import local_frame
 
 
 def _codebooks_np(codebooks: DataFrame):
@@ -85,7 +94,7 @@ def _query_luts(
     queries: DataFrame, cb, qid_col: str, qvec_col: str, max_queries: int,
     fn: str, rotation=None,
 ):
-    """Query side shared by both ADC searches → (qids, lut).
+    """Query side shared by both ADC searches → (rows, lut).
 
     A bounded collect: NULL-id / NULL-vector query rows are DROPPED (the
     corpus side's NULL-is-never-a-neighbor rule — one junk row must not
@@ -94,8 +103,9 @@ def _query_luts(
     ``rotation``, rotated into the codes' space (probing and the refine
     arm stay in original space — the rotation preserves cosine). Then the
     inner-product lookup table ``lut[q, j, c] = q_j · c_jc``, so
-    ``ADC(q, x) = Σ_j lut[q, j, codes_j]``. ``qids`` may be empty, which
-    callers turn into an empty result frame."""
+    ``ADC(q, x) = Σ_j lut[q, j, codes_j]``. ``rows`` are the kept (qid,
+    qvec) rows as collected — original vectors, the refine arm's input —
+    and may be empty, which callers turn into an empty result frame."""
     import numpy as np
 
     m, _, dsub = cb.shape
@@ -113,7 +123,7 @@ def _query_luts(
             f"{fn} collected more than max_queries={max_queries} "
             "queries — batch them"
         )
-    qids, vecs = [], []
+    kept, vecs = [], []
     for r in qrows:
         try:
             v = np.asarray(r[qvec_col], dtype=np.float64)
@@ -126,14 +136,14 @@ def _query_luts(
                 f"{fn}: query {r[qid_col]!r} has {v.shape} — the index "
                 f"holds {dim}-dim vectors"
             )
-        qids.append(r[qid_col])
+        kept.append(r)
         vecs.append(v)
     qs = np.asarray(vecs) if vecs else np.zeros((0, dim))
     norms = np.linalg.norm(qs, axis=1, keepdims=True)
     np.divide(qs, norms, out=qs, where=norms > 0)
     if rotation is not None:
         qs = qs @ np.asarray(rotation, dtype=np.float64)
-    return qids, np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
+    return kept, np.einsum("qjd,jcd->qjc", qs.reshape(len(qs), m, dsub), cb)
 
 
 def _empty_result(queries: DataFrame, codes: DataFrame, qid_col: str,
@@ -153,23 +163,22 @@ def pq_train(
     m: int = 8,
     nbits: int = 8,
     vec_col: str = "embedding",
-    sample_fraction: float = 1.0,
     seed: int = 42,
     max_iter: int = 20,
 ) -> DataFrame:
     """Fit PQ codebooks → (subspace, code, cvec) rows, m × 2^nbits total.
 
     The vector dim must divide by ``m`` (subspaces must tile the space).
-    Training runs m independent k-means fits over F.slice'd subvectors of
-    the (optionally sampled) l2-normalized corpus — at 100 TB pass
-    ``sample_fraction`` small enough that the fit input is ~millions of
-    rows; codebook quality saturates long before that."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    A LIMIT-1 probe reads the dim; then ONE job collects the
+    l2-normalized vectors with the lowest hash, as many as
+    ``ann._centroid_cap(dim)`` allows (every vector when the corpus fits
+    under the cap), and the m subspaces are fit on the driver with seeds
+    ``seed + j`` (``_fit_codebooks``). The sample and its order are a
+    pure function of the vector multiset, so the codebooks do not depend
+    on partition layout. To train on less, pre-sample the corpus
+    (``df.sample``)."""
     if m < 1 or nbits < 1 or nbits > 12:
         raise ValueError(f"need m >= 1 and 1 <= nbits <= 12, got {m=} {nbits=}")
-    k = 1 << nbits
     probe = (
         corpus.where(F.col(vec_col).isNotNull())
         .select(F.size(vec_col).alias("d"))
@@ -181,54 +190,77 @@ def pq_train(
     d = probe[0]["d"]
     if d % m != 0:
         raise ValueError(f"dim {d} is not divisible by m={m} subspaces")
-    dsub = d // m
-    base = corpus.where(F.col(vec_col).isNotNull()).select(
-        l2_normalize(vec_col).alias("__v")
+    x = _unit_sample(corpus, vec_col, _centroid_cap(d))
+    return _grid_frame(
+        corpus.sparkSession, _fit_codebooks(x, m, 1 << nbits, seed, max_iter)
     )
-    if sample_fraction < 1.0:
-        base = base.sample(fraction=sample_fraction, seed=seed)
-    base = base.cache()
-    try:
-        spark = corpus.sparkSession
-        out = None
-        for j in range(m):
-            arrays = base.select(
-                F.slice("__v", j * dsub + 1, dsub).cast("array<double>")
-                .alias("sv")
-            )
-            # MLlib k-means hard-fails (ArrayIndexOutOfBounds, not a clean
-            # error) when a subspace has fewer than k DISTINCT points —
-            # tiny or degenerate-subspace corpora (e.g. a constant
-            # dimension). Detect that case EXPLICITLY up front instead of
-            # a blanket except around the fit: a transient executor loss
-            # or OOM must propagate, not silently degrade the codebooks
-            # (r14s3 review). The bounded limit(k+1) probe early-outs.
-            distinct_rows = arrays.distinct().limit(k + 1).collect()
-            if len(distinct_rows) >= k:
-                model = KMeans(k=k, seed=seed + j, maxIter=max_iter).fit(
-                    arrays.select(array_to_vector("sv").alias("features"))
-                )
-                centers = [
-                    [float(x) for x in c] for c in model.clusterCenters()
-                ]
-            else:
-                # fall back to the distinct subvectors themselves, sorted
-                # (deterministic — the limit returned ALL of them since
-                # there are < k), cycled up to k; duplicate centroids are
-                # harmless (argmin ties take the lowest code) and the
-                # quantization on such data is exact
-                distinct = sorted(tuple(r["sv"]) for r in distinct_rows)
-                centers = [
-                    list(distinct[i % len(distinct)]) for i in range(k)
-                ]
-            rows = [(j, c, center) for c, center in enumerate(centers)]
-            part = spark.createDataFrame(
-                rows, "subspace int, code int, cvec array<double>"
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-    finally:
-        base.unpersist()
+
+
+def _unit_sample(corpus: DataFrame, vec_col: str, n: int):
+    """Up to ``n`` l2-normalized non-NULL vectors of ``corpus`` as a
+    lexicographically sorted (rows, dim) float64 array. One TakeOrdered
+    job keeps the rows with the lowest xxhash64 of the normalized vector
+    (the PQ trainers have no id column to key on), so which rows are kept
+    and their order are a pure function of the vector multiset —
+    partition-layout invariant."""
+    import numpy as np
+
+    pdf = (
+        corpus.where(F.col(vec_col).isNotNull())
+        .select(l2_normalize(vec_col).alias("__v"))
+        .orderBy(F.xxhash64("__v"), "__v")
+        .limit(n)
+        .toPandas()
+    )
+    if pdf.empty:
+        return np.zeros((0, 0))
+    x = np.asarray(list(pdf["__v"]), dtype=np.float64)
+    return x[np.lexsort(x.T[::-1])]
+
+
+def _fit_codebooks(x, m: int, k: int, seed: int, max_iter: int):
+    """(m, k, dsub) codebook grid for the rows of ``x``: subspace j's raw
+    subvectors are fit by ann._lloyd_fit with seed ``seed + j`` (never
+    renormalized — PQ quantizes slices of the unit vector). A subspace
+    with fewer than k distinct points (a tiny corpus, a constant
+    dimension) takes those points instead, sorted and cycled up to k:
+    duplicate centroids are harmless (argmin ties take the lowest code)
+    and the quantization on such data is exact."""
+    import numpy as np
+
+    dsub = x.shape[1] // m
+    grid = np.empty((m, k, dsub))
+    for j in range(m):
+        sub = np.ascontiguousarray(x[:, j * dsub:(j + 1) * dsub])
+        distinct = np.unique(sub, axis=0)
+        if len(distinct) < k:
+            grid[j] = distinct[np.arange(k) % len(distinct)]
+        else:
+            grid[j] = _lloyd_fit(sub, k, max_iter=max_iter, seed=seed + j)
+    return grid
+
+
+def _grid_frame(spark, grid) -> DataFrame:
+    """An (m, k, dsub) codebook grid as (subspace, code, cvec) rows."""
+    m, k, _ = grid.shape
+    rows = [(j, c, grid[j, c].tolist()) for j in range(m) for c in range(k)]
+    return local_frame(spark, rows, "subspace int, code int, cvec array<double>")
+
+
+def _nearest_codes(xs, cb, cb_sq):
+    """(n, m) int16 codes of subvectors ``xs`` (n, m, dsub): per subspace
+    the nearest centroid of ``cb`` (m, k, dsub) by L2, ties to the lowest
+    code. ``cb_sq`` is the (m, k) centroid squared norms —
+    ||x - c||² = ||x||² - 2x·c + ||c||², and the argmin needs only the
+    last two terms."""
+    import numpy as np
+
+    m = cb.shape[0]
+    codes = np.empty((len(xs), m), dtype=np.int16)
+    for j in range(m):
+        dist = cb_sq[j][None, :] - 2.0 * (xs[:, j, :] @ cb[j].T)
+        codes[:, j] = np.argmin(dist, axis=1)
+    return codes
 
 
 def pq_encode(
@@ -250,8 +282,6 @@ def _encode_grid(corpus: DataFrame, cb, id_col: str, vec_col: str) -> DataFrame:
     import pandas as pd
 
     m, k, dsub = cb.shape
-    # ||x - c||² = ||x||² - 2x·c + ||c||²; per-subspace argmin needs only
-    # the cross and centroid-norm terms
     cb_sq = (cb ** 2).sum(axis=2)  # (m, k)
 
     id_field = corpus.select(id_col).schema[0]
@@ -270,12 +300,7 @@ def _encode_grid(corpus: DataFrame, cb, id_col: str, vec_col: str) -> DataFrame:
             x = np.asarray([np.asarray(v, dtype=np.float64) for v in sub[vec_col]])
             norms = np.linalg.norm(x, axis=1, keepdims=True)
             np.divide(x, norms, out=x, where=norms > 0)
-            xs = x.reshape(len(sub), m, dsub)
-            codes = np.empty((len(sub), m), dtype=np.int16)
-            for j in range(m):
-                cross = xs[:, j, :] @ cb[j].T  # (n, k)
-                dist = cb_sq[j][None, :] - 2.0 * cross
-                codes[:, j] = np.argmin(dist, axis=1)
+            codes = _nearest_codes(x.reshape(len(sub), m, dsub), cb, cb_sq)
             yield pd.DataFrame(
                 {id_col: sub[id_col].values, "codes": list(codes)}
             )
@@ -322,12 +347,13 @@ def pq_search(
     import numpy as np
     import pandas as pd
 
-    qids, lut = _query_luts(
+    qrows, lut = _query_luts(
         queries, _codebooks_np(codebooks), qid_col, qvec_col, max_queries,
         "pq_search", rotation,
     )
-    if not qids:
+    if not qrows:
         return _empty_result(queries, codes, qid_col, id_col)
+    qids = [r[0] for r in qrows]
     m = lut.shape[1]
     n_q = len(qids)
 
@@ -369,8 +395,11 @@ def pq_search(
     partials = codes.mapInPandas(
         gen, schema=f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, score double"
     )
+    # the refine arm reads the collected rows, not the caller's frame again
+    qschema = queries.select(qid_col, qvec_col).schema
     return _refine_rank(
-        partials, k, refine, corpus, lambda: queries.select(qid_col, qvec_col),
+        partials, k, refine, corpus,
+        lambda: local_frame(queries.sparkSession, qrows, qschema),
         qid_col, qvec_col, id_col, vec_col,
     )
 
@@ -708,13 +737,13 @@ def ivfpq_search_cells(
     spark = queries.sparkSession
     _, _, centroids, codes, meta, cb = _ivfpq_open(spark, path)
     id_col = meta["id_col"]
-    qids, lut = _query_luts(
+    qrows, lut = _query_luts(
         queries, cb, qid_col, qvec_col, max_queries,
         "ivfpq_search_cells", meta.get("rotation_matrix"),
     )
-    if not qids:
+    if not qrows:
         return _empty_result(queries, codes, qid_col, id_col)
-    qpos = {q: i for i, q in enumerate(qids)}
+    qpos = {r[0]: i for i, r in enumerate(qrows)}
     m = lut.shape[1]
     cand, qvecs = _probe_pruned(
         queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec")),
@@ -794,46 +823,6 @@ def rotate_vectors(
     return df.mapInPandas(gen, schema=schema)
 
 
-def _kmeans_np(x, k: int, seed: int, iters: int = 15):
-    """Deterministic seeded Lloyd's k-means (kmeans++-style greedy
-    farthest-point init) for the driver-side OPQ fit — dsub is small and
-    the sample is capped, so numpy is faster than m MLlib jobs per OPQ
-    iteration. Duplicate/degenerate data cycles distinct points (the
-    pq_train fallback argument); empty clusters re-seed to the point
-    farthest from its center."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    n = len(x)
-    centers = np.empty((k, x.shape[1]))
-    centers[0] = x[rng.integers(n)]
-    d2 = ((x - centers[0]) ** 2).sum(axis=1)
-    for i in range(1, k):
-        j = int(np.argmax(d2))  # deterministic farthest-point
-        centers[i] = x[j]
-        d2 = np.minimum(d2, ((x - centers[i]) ** 2).sum(axis=1))
-    # distances via ||x||² - 2x·c + ||c||² (the pq_encode BLAS form):
-    # the broadcast (n, k, dsub) cube form allocated ~3.3 GB per pass at
-    # opq_train's documented defaults (r14s3 review)
-    x_sq = (x ** 2).sum(axis=1, keepdims=True)  # (n, 1), constant
-
-    def _dists(c):
-        return x_sq - 2.0 * (x @ c.T) + (c ** 2).sum(axis=1)[None, :]
-
-    for _ in range(iters):
-        d = _dists(centers)
-        a = np.argmin(d, axis=1)
-        for c in range(k):
-            mask = a == c
-            if mask.any():
-                centers[c] = x[mask].mean(axis=0)
-            else:
-                far = int(np.argmax(d[np.arange(n), a]))
-                centers[c] = x[far]
-    d = _dists(centers)
-    return centers, np.argmin(d, axis=1)
-
-
 def opq_train(
     corpus: DataFrame,
     m: int = 8,
@@ -857,8 +846,10 @@ def opq_train(
     collect-guard idiom — raises past ``max_rows``; rotation quality
     saturates at ~100k rows): fit per-subspace k-means on X·R,
     reconstruct, update R by orthogonal Procrustes (SVD of Xᵀ·X̂ — the
-    closed form). Deterministic: the sample is sorted before the fit and
-    every k-means is seeded.
+    closed form). The per-subspace fits are pq_train's (``_fit_codebooks``:
+    ann._lloyd_fit with ``kmeans_iters`` as its max_iter, the same
+    padding of degenerate subspaces). Deterministic: the sample is sorted
+    before the fit and every k-means is seeded.
 
     Returns ``(rotation ndarray d×d, codebooks DataFrame)`` — the
     codebooks live in ROTATED space, so every downstream call composes
@@ -869,64 +860,35 @@ def opq_train(
 
     if m < 1 or nbits < 1 or nbits > 12:
         raise ValueError(f"need m >= 1 and 1 <= nbits <= 12, got {m=} {nbits=}")
-    k = 1 << nbits
-    rows = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(l2_normalize(vec_col).alias("__v"))
-        .limit(max_rows + 1)
-        .collect()
-    )
-    if len(rows) > max_rows:
+    x = _unit_sample(corpus, vec_col, max_rows + 1)
+    if len(x) > max_rows:
         raise ValueError(
             f"opq_train: sample exceeds max_rows={max_rows}; the rotation "
             "fit is driver-side by design — pre-sample the corpus "
             "(df.sample) or raise the cap deliberately."
         )
-    if not rows:
+    if not len(x):
         raise ValueError("opq_train: corpus has no non-NULL vectors")
-    x = np.asarray(sorted(tuple(r["__v"]) for r in rows), dtype=np.float64)
-    d = x.shape[1]
+    n, d = x.shape
     if d % m != 0:
         raise ValueError(f"dim {d} is not divisible by m={m} subspaces")
-    dsub = d // m
-    kk = min(k, len(x))  # k-means cannot exceed the sample size
     # seeded RANDOM orthogonal init (QR of a gaussian), not identity: for
     # axis-aligned anisotropic data the identity is a fixed point of the
     # alternation (codebooks reconstruct axis-aligned, Procrustes returns
     # identity) — exactly the inputs the rotation exists to fix (Ge et
     # al.'s non-parametric init)
-    q0, _ = np.linalg.qr(np.random.default_rng(seed).standard_normal((d, d)))
-    R = q0
-    centers = None
+    R, _ = np.linalg.qr(np.random.default_rng(seed).standard_normal((d, d)))
     for it in range(iters + 1):  # final pass refits codebooks only
         xr = x @ R
-        centers = np.zeros((m, k, dsub))
-        recon = np.empty_like(xr)
-        for j in range(m):
-            sub = xr[:, j * dsub:(j + 1) * dsub]
-            cj, aj = _kmeans_np(
-                np.ascontiguousarray(sub), kk,
-                seed=seed + 1000 * it + j, iters=kmeans_iters,
-            )
-            centers[j, :kk] = cj
-            if kk < k:  # cycle (the pq_train degenerate fallback)
-                for extra in range(kk, k):
-                    centers[j, extra] = cj[extra % kk]
-            recon[:, j * dsub:(j + 1) * dsub] = cj[aj]
+        cb = _fit_codebooks(xr, m, 1 << nbits, seed + 1000 * it, kmeans_iters)
         if it == iters:
             break
+        xs = xr.reshape(n, m, d // m)
+        codes = _nearest_codes(xs, cb, (cb ** 2).sum(axis=2))
+        recon = cb[np.arange(m), codes].reshape(n, d)
         u, _, vt = np.linalg.svd(x.T @ recon)
         R = u @ vt
-    spark = corpus.sparkSession
-    rows_out = [
-        (j, c, [float(v) for v in centers[j, c]])
-        for j in range(m)
-        for c in range(k)
-    ]
-    codebooks = spark.createDataFrame(
-        rows_out, "subspace int, code int, cvec array<double>"
-    )
-    return R, codebooks
+    return R, _grid_frame(corpus.sparkSession, cb)
 
 
 def ivfpq_compact(spark, path: str) -> int:

@@ -192,19 +192,14 @@ def semantic_dedup_decisions(
         else:
             # centroids-only builder: ivf_build would additionally run (and
             # discard) a full assignment pass, collecting + broadcasting the
-            # centroid matrix a second time
-            # method="lloyd" (r15, guide §5): driver-side seeded
-            # k-means++/Lloyd on the capped id-sorted sample — one collect
-            # job instead of ~25 scheduler-bound MLlib jobs, and the fit is
-            # partition-layout-INVARIANT up to the sample cap (MLlib's
-            # k-means|| init samples per partition, so a re-layout could
-            # move cell boundaries)
+            # centroid matrix a second time. The fit is driver-side seeded
+            # k-means++/Lloyd on the capped id-sorted sample: one collect
+            # job, partition-layout-INVARIANT up to the sample cap
             centroids = ivf_centroids(
                 corpus.where(F.col(vec_col).isNotNull()),
                 n_centroids=n_clusters,
                 id_col=id_col,
                 vec_col=vec_col,
-                method="lloyd",
             )
             assigned = None
     elif isinstance(centroids, DataFrame):
